@@ -481,16 +481,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HEADLINE simhash signatures: the production 64-bit width (four
     16-bit band columns — the join key layout of the banded Hamming
     dedup). A 16-bit signature saturates by pigeonhole at ≥10^6 docs;
-    the demo-width variant survives test-pinned only
-    (dedup.simhash_signatures; its registry demo was pruned in r4)."""
+    the 16-bit width survives only as dedup.simhash_signatures, pinned
+    by its unit tests."""
     return dedup.simhash64_bands(_docs_spread(spark, sf_dir))
-
-
-def q_simhash16_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash (DEMO width — saturates at corpus scale; kept as
-    the minimal oracle-transparent illustration of the bit-vote
-    construction, never for production dedup)."""
-    return dedup.simhash_signatures(_docs_spread(spark, sf_dir))
 
 
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2164,19 +2157,6 @@ def q_extract_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return metrics.extraction_eval(ext, expected_extraction(spark, sf_dir))
 
 
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return metrics.pricing_summary(
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    )
-
-
-def q_orders_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
-    return metrics.orders_by_region(
-        rd("orders"), rd("customer"), rd("nation"), rd("region")
-    )
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return q_extract(spark, "/root/testdata/sf0.001")
@@ -2306,8 +2286,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_hourly": q_events_hourly,
         "events_sessions": q_events_sessions,
         "chunk_texts": q_chunk_texts,
-        "pricing_summary": q_pricing_summary,
-        "orders_by_region": q_orders_by_region,
         "extract": q_extract,
         "extract_markdown": q_extract_markdown,
         "warc_roundtrip": q_warc_roundtrip,
@@ -4460,25 +4438,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
                    CAST(0 AS DOUBLE) AS mean_edit,
                    0 AS max_edit
             FROM e
-        """,
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_base_price,
-                   COUNT(*) AS count_order,
-                   MAX(l_shipdate) AS latest_ship
-            FROM lineitem GROUP BY l_returnflag, l_linestatus
-        """,
-        "orders_by_region": """
-            SELECT r_name,
-                   COUNT(*) AS n_orders,
-                   CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total_price,
-                   COUNT(DISTINCT o_custkey) AS n_customers
-            FROM orders
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            GROUP BY r_name
         """,
         "lsh_recall": f"""
             {_MINHASH},

@@ -31,7 +31,7 @@ def materialize(df) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
 
     import __spark_entry__ as entrymod
@@ -69,127 +69,7 @@ def main() -> None:
 
     # -- headline operator queries (one timed run each) -----------------
     qs = entrymod.queries()
-    headline = [
-        "pdf_text",
-        "pdf_meta",
-        "pdf_columns",
-        "mixed_extract",
-        "extract_markdown",
-        "warc_roundtrip",
-        "kv_scan",
-        "bloom_seen",
-        "facade_rec_only",
-        "tables",
-        "layout_regions",
-        "dedup_exact",
-        "dedup_minhash",
-        "dedup_lsh_pairs",
-        "dedup_jaccard_top",
-        "dedup_lines",
-        "span_dedup",
-        "url_dedup",
-        "domain_blocklist",
-        "latest_snapshot",
-        "decontaminate",
-        "host_quota",
-        "pack_chunks",
-        "chunk_texts",
-        "crawl_diff",
-        "canonical_link",
-        "robots_policy",
-        "robots_txt",
-        "sitemap_discovery",
-        "sitemap_frontier",
-        "crawl_frontier",
-        "crawl_delays",
-        "fetch_schedule",
-        "change_rate",
-        "lm_buckets",
-        "dsir_weights",
-        "nb_classify",
-        "lang_rebalance",
-        "host_boiler",
-        "document_outline",
-        "heading_paths",
-        "split_assign",
-        "host_skew",
-        "count_min",
-        "fetch_waves",
-        "vocab_topk",
-        "phrase_search",
-        "ngram_counts",
-        "inverted_index",
-        "tfidf_keywords",
-        "bpe_merges",
-        "bpe_vocab",
-        "bpe_encode",
-        "bpe_apply",
-        "pretrain_pack",
-        "png_decode",
-        "png_resize",
-        "gif_pixels",
-        "gif_frames",
-        "jpeg_pixels",
-        "pcm_samples",
-        "kmeans_assign",
-        "bm25",
-        "blocklist",
-        "page_meta",
-        "kie_pairs",
-        "list_items",
-        "dedup_clusters",
-        "dedup_keep_best",
-        "dedup_simhash",
-        "dedup_simhash_pairs",
-        "sim_topk",
-        "ann_lsh",
-        "ann_ivf",
-        "emb_near_dup",
-        "semdedup",
-        "span_eval",
-        "table_eval",
-        "token_stats",
-        "quality",
-        "langid",
-        "length_quantiles",
-        "script_stats",
-        "fingerprints",
-        "repetition",
-        "gopher_rules",
-        "redact_pii",
-        "events_hourly",
-        "events_sessions",
-        "media_decode",
-        "media_features",
-        "audio_meta",
-        "video_meta",
-        "frame_sample",
-        "host_graph",
-        "anchor_texts",
-        "pagerank",
-        "hits",
-        "pipeline_clean",
-        "pipeline_funnel",
-        "corpus_report",
-        "pricing_summary",
-        "orders_by_region",
-        # full-registry completeness: every queries() entry gets a
-        # benched time (lineage included since it went oracle-backed —
-        # it re-runs extraction, so it costs ~the extract row)
-        "lineage",
-        "links",
-        "pipeline_dedup",
-        "extract_eval",
-        "media_pages",
-        "union_sample",
-        "extract_lang_stats",
-        "topk_hosts",
-        "extract_blocks",
-        "layout_summary",
-        "simhash_clusters",
-        "lsh_recall",
-        "shingle_diversity",
-    ]
+    headline = [name for name in qs if name != "extract"]
     per_query: dict[str, float] = {"extract": round(extract_sec, 3)}
     for name in headline:
         best = None

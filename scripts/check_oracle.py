@@ -8,17 +8,15 @@ Usage: python scripts/check_oracle.py [sf_dir] [only_query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+TABLES = "events documents embeddings".split()
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -28,6 +26,31 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype(str)
     df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
+
+
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> str:
+    """The gate's verdict on a Spark result vs its oracle: "ok", or
+    "FAIL <reason>" naming the first difference found."""
+    a, b = normalize(sdf), normalize(odf)
+    if list(a.columns) != list(b.columns):
+        return f"FAIL columns {list(a.columns)} vs {list(b.columns)}"
+    if len(a) != len(b):
+        return f"FAIL rows {len(a)} vs {len(b)}"
+    # the gate hashes raw values, so an int64-vs-float64 column is a
+    # hash mismatch even when values are equal — compare dtype KINDS
+    kind_bad = [
+        c
+        for c in a.columns
+        if a[c].dtype.kind != b[c].dtype.kind
+        and {a[c].dtype.kind, b[c].dtype.kind} <= {"i", "u", "f"}
+    ]
+    if kind_bad:
+        return f"FAIL dtype kinds {kind_bad}"
+    try:
+        pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
+    except AssertionError as ex:
+        return "FAIL " + str(ex).splitlines()[0]
+    return "ok"
 
 
 def main() -> int:
@@ -56,44 +79,10 @@ def main() -> int:
             if len(sdf) == 0 and name != "dedup_lsh_pairs":
                 failures.append((name, "0 rows"))
             continue
-        odf = con.sql(oracles[name]).df()
-        a, b = normalize(sdf), normalize(odf)
-        if list(a.columns) != list(b.columns):
-            failures.append((name, f"columns {list(a.columns)} vs {list(b.columns)}"))
-            print(f"{name:>22}: FAIL columns {list(a.columns)} vs {list(b.columns)}")
-            continue
-        if len(a) != len(b):
-            failures.append((name, f"rows {len(a)} vs {len(b)}"))
-            print(f"{name:>22}: FAIL rows {len(a)} vs {len(b)}")
-            continue
-        # the driver hashes raw values, so an int64-vs-float64 column is a
-        # hash mismatch even when values are equal — compare dtype KINDS
-        kind_bad = [
-            c for c in a.columns
-            if a[c].dtype.kind != b[c].dtype.kind
-            and {a[c].dtype.kind, b[c].dtype.kind} <= {"i", "u", "f"}
-        ]
-        if kind_bad:
-            failures.append((name, f"dtype kinds differ: {kind_bad}"))
-            print(
-                f"{name:>22}: FAIL dtype kinds "
-                + str({c: (str(a[c].dtype), str(b[c].dtype)) for c in kind_bad})
-            )
-            continue
-        try:
-            pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
-            print(f"{name:>22}: OK  rows={len(a)}")
-        except AssertionError as ex:
-            msg = str(ex).splitlines()[0]
-            # show first differing row for debugging
-            neq = (a != b) & ~(a.isna() & b.isna())
-            bad = neq.any(axis=1)
-            detail = ""
-            if bad.any():
-                i = bad.idxmax()
-                detail = f" row{i} spark={a.loc[i].to_dict()} oracle={b.loc[i].to_dict()}"
-            failures.append((name, msg))
-            print(f"{name:>22}: FAIL {msg}{detail[:400]}")
+        verdict = compare(sdf, con.sql(oracles[name]).df())
+        print(f"{name:>22}: {verdict}  rows={len(sdf)}")
+        if verdict != "ok":
+            failures.append((name, verdict))
     print()
     if failures:
         print(f"{len(failures)} FAILURES: {[n for n, _ in failures]}")

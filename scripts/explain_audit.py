@@ -1,9 +1,9 @@
-"""Dump formatted physical plans for the driver queries to
+"""Dump formatted physical plans for every registry query to
 bench/PLANS.md — the reviewable evidence that each operator compiles
 to the plan you'd want at 100 TB (pruned scans, equi-joins, broadcast
 sides, partial aggregation, single Arrow stages).
 
-Usage: python scripts/explain_audit.py [sf_dir] [query ...]
+Usage: python scripts/explain_audit.py [sf_dir] [query ...]  (default: all)
 """
 
 from __future__ import annotations
@@ -14,115 +14,16 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-AUDITED = [
-    "extract",
-    "warc_roundtrip",
-    "kv_scan",
-    "bloom_seen",
-    "facade_rec_only",
-    "tables",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_lsh_pairs",
-    "dedup_jaccard_top",
-    "dedup_lines",
-    "span_dedup",
-    "dedup_simhash_pairs",
-    "url_dedup",
-    "domain_blocklist",
-    "sim_topk",
-    "ann_lsh",
-    "emb_near_dup",
-    "semdedup",
-    "token_stats",
-    "events_sessions",
-    "pipeline_clean",
-    "orders_by_region",
-    "layout_regions",
-    "media_decode",
-    "audio_meta",
-    "repetition",
-    "gopher_rules",
-    "redact_pii",
-    "host_graph",
-    "corpus_report",
-    "latest_snapshot",
-    "decontaminate",
-    "anchor_texts",
-    "host_quota",
-    "dedup_keep_best",
-    "pack_chunks",
-    "crawl_diff",
-    "host_boiler",
-    "canonical_link",
-    "robots_policy",
-    "robots_txt",
-    "sitemap_frontier",
-    "lm_buckets",
-    "lang_rebalance",
-    "document_outline",
-    "split_assign",
-    "vocab_topk",
-    "inverted_index",
-    "tfidf_keywords",
-    "bm25",
-    "blocklist",
-    "page_meta",
-    "kie_pairs",
-    "list_items",
-    "script_stats",
-    "host_skew",
-    "fetch_waves",
-    "ngram_counts",
-    "heading_paths",
-    "extract_markdown",
-    "crawl_frontier",
-    "fetch_schedule",
-    "chunk_texts",
-    "pipeline_funnel",
-    "sitemap_discovery",
-    "span_eval",
-    "table_eval",
-    "video_meta",
-    "bpe_merges",
-    "bpe_vocab",
-    "bpe_encode",
-    "bpe_apply",
-    "png_decode",
-    "png_resize",
-    "gif_pixels",
-    "gif_frames",
-    "jpeg_pixels",
-    "pcm_samples",
-    "pdf_text",
-    "pdf_meta",
-    "pdf_columns",
-    "mixed_extract",
-    "pretrain_pack",
-    "lsh_recall",
-    "lineage",
-    "kmeans_assign",
-    "ann_ivf",
-    "media_features",
-    "length_quantiles",
-    "change_rate",
-    "phrase_search",
-    "hits",
-    "count_min",
-    "dsir_weights",
-    "nb_classify",
-]
-
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = sys.argv[2:] or AUDITED
 
     import __spark_entry__ as e
     from webextract.session import get_spark
 
     spark = get_spark("explain-audit")
     qs = e.queries()
+    only = sys.argv[2:] or list(qs)
     out = [
         "# PLANS — formatted physical plans (generated by "
         "scripts/explain_audit.py)",

@@ -18,39 +18,16 @@ import sys
 import time
 
 import duckdb
-import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
-
-from check_oracle import TABLES, normalize  # noqa: E402  (sibling import)
+# sibling import (the script's directory is sys.path[0]); check_oracle
+# also puts the repo root on sys.path
+from check_oracle import TABLES, compare
 
 DEFAULT_SFS = [
     "/root/testdata/sf0.001",
     "/root/testdata/sf0.01",
     "/root/testdata/sf0.1",
 ]
-
-
-def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> str:
-    a, b = normalize(sdf), normalize(odf)
-    if list(a.columns) != list(b.columns):
-        return f"FAIL columns {list(a.columns)} vs {list(b.columns)}"
-    if len(a) != len(b):
-        return f"FAIL rows {len(a)} vs {len(b)}"
-    kind_bad = [
-        c
-        for c in a.columns
-        if a[c].dtype.kind != b[c].dtype.kind
-        and {a[c].dtype.kind, b[c].dtype.kind} <= {"i", "u", "f"}
-    ]
-    if kind_bad:
-        return f"FAIL dtype kinds {kind_bad}"
-    try:
-        pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
-    except AssertionError as ex:
-        return "FAIL " + str(ex).splitlines()[0]
-    return "ok"
 
 
 def main() -> int:

@@ -122,3 +122,16 @@ def test_fuzz_arbitrary_text(soup: str) -> None:
 )
 def test_known_subtleties(case: str) -> None:
     assert_same(case)
+
+
+def test_scanner_bug_is_not_swallowed(monkeypatch) -> None:
+    # only the scanner's own bail selects the reference parser; any
+    # other exception is a fast-path bug and must surface
+    from webextract.functions import fastscan
+
+    def broken(s, sink):
+        raise RuntimeError("scanner bug")
+
+    monkeypatch.setattr(fastscan, "_scan", broken)
+    with pytest.raises(RuntimeError, match="scanner bug"):
+        tokenize_blocks("<p>x</p>")

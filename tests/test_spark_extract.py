@@ -52,6 +52,10 @@ def test_lineage_invariants(spark, pages):
         assert row["k"] == ext.agg(F.sum("blocks_kept")).first()[0]
         assert row["m"] > 0
         assert row["parts"] <= 8
+        # the page half is extract_pages row for row, spans included
+        plain = extract_pages(salted_repartition(pages, 8))
+        assert ext.columns == plain.columns and len(ext.columns) == 8
+        assert sorted(ext.collect()) == sorted(plain.collect())
     finally:
         uni.unpersist()
 

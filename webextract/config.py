@@ -75,11 +75,6 @@ class ExtractConfig:
     # extract_pages(ar_pages, ExtractConfig(rtl_reverse=True)).
     rtl_reverse: bool = False
 
-    # partitioning defaults for the Spark plan (salted repartition on
-    # xxhash64(url) — replaces the reference's static modulo sharding,
-    # predict_system.py:149,259-270).
-    salt_buckets: int = 1024
-
     def __post_init__(self) -> None:
         if not (0.0 <= self.drop_score <= 1.0):
             raise ValueError("drop_score must be in [0,1]")

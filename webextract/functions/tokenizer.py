@@ -238,11 +238,7 @@ def tokenize_blocks(html_text: str, engine: str = "auto") -> dict[str, list]:
     sink: _BlockSink | None = None
     if engine == "auto":
         s = _BlockSink()
-        try:
-            ok = fastscan.scan(html_text, s)
-        except Exception:
-            ok = False
-        if ok:
+        if fastscan.scan(html_text, s):
             sink = s
     if sink is None:
         sink = _run_reference(html_text)

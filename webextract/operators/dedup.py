@@ -427,15 +427,6 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
 
 
-def simhash_clusters(docs: DataFrame) -> DataFrame:
-    """Docs grouped by identical simhash → (simhash, keeper, n_members)."""
-    return (
-        simhash_signatures(docs)
-        .groupBy("simhash")
-        .agg(F.min("doc_id").alias("keeper"), F.count("*").alias("n_members"))
-    )
-
-
 def line_dedup(
     docs: DataFrame, sep: str = ". ", hash_shuffle: bool = False
 ) -> DataFrame:

@@ -30,6 +30,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
 from webextract.functions.extract import extract_page
@@ -70,31 +71,13 @@ UNIFIED_SCHEMA = T.StructType(
     ]
 )
 
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), True),
-        T.StructField("urls_in", T.LongType(), True),
-        T.StructField("bytes_in", T.LongType(), True),
-        T.StructField("blocks_kept", T.LongType(), True),
-        T.StructField("extract_ms", T.DoubleType(), True),
-    ]
-)
-
-
-# Arrow output schema mirroring EXTRACTED_SCHEMA (built once; the
-# mapInArrow path constructs arrays directly — no pandas object columns,
-# which halves the per-batch ser-de cost vs mapInPandas)
-_SPAN_PA = pa.list_(
-    pa.struct(
-        [
-            ("block_id", pa.int32()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("tag", pa.string()),
-            ("score", pa.float64()),
-        ]
-    )
-)
+# Arrow twins of the Spark schemas, derived once: the mapInArrow path
+# builds arrays directly (no pandas object columns, which halves the
+# per-batch ser-de cost vs mapInPandas)
+_EXTRACTED_PA = to_arrow_schema(EXTRACTED_SCHEMA)
+_UNIFIED_PA = to_arrow_schema(UNIFIED_SCHEMA)
+_SPANS_PA = _EXTRACTED_PA.field("spans").type
+_LINEAGE_PA = list(_UNIFIED_PA)[1 + len(_EXTRACTED_PA):]
 
 
 def _spans_array(results: list[dict]) -> pa.ListArray:
@@ -117,35 +100,44 @@ def _spans_array(results: list[dict]) -> pa.ListArray:
             scores.append(sc)
         n += len(r["spans"])
         offsets.append(n)
+    fields = list(_SPANS_PA.value_type)
     struct = pa.StructArray.from_arrays(
         [
-            pa.array(b_ids, type=pa.int32()),
-            pa.array(starts, type=pa.int32()),
-            pa.array(ends, type=pa.int32()),
-            pa.array(tags, type=pa.string()),
-            pa.array(scores, type=pa.float64()),
+            pa.array(col, type=f.type)
+            for col, f in zip((b_ids, starts, ends, tags, scores), fields)
         ],
-        ["block_id", "start", "end", "tag", "score"],
+        fields=fields,
     )
-    return pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), struct)
+    return pa.ListArray.from_arrays(offsets, struct, type=_SPANS_PA)
 
 
 def _extract_record_batch(rb: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
     """One Arrow batch of (url, html) → extracted batch, all-pyarrow."""
     results = [extract_page(h, cfg) for h in rb.column(1).to_pylist()]
+    t = _EXTRACTED_PA.types  # EXTRACTED_SCHEMA order
     return pa.RecordBatch.from_arrays(
         [
             rb.column(0),
-            pa.array([r["text"] for r in results], type=pa.string()),
+            pa.array([r["text"] for r in results], type=t[1]),
             _spans_array(results),
-            pa.array([r["mean_score"] for r in results], type=pa.float64()),
-            pa.array([r["blocks_total"] for r in results], type=pa.int32()),
-            pa.array([r["blocks_kept"] for r in results], type=pa.int32()),
-            pa.array([r["bytes_in"] for r in results], type=pa.int64()),
-            pa.array([r["truncated"] for r in results], type=pa.bool_()),
+            pa.array([r["mean_score"] for r in results], type=t[3]),
+            pa.array([r["blocks_total"] for r in results], type=t[4]),
+            pa.array([r["blocks_kept"] for r in results], type=t[5]),
+            pa.array([r["bytes_in"] for r in results], type=t[6]),
+            pa.array([r["truncated"] for r in results], type=t[7]),
         ],
-        [f.name for f in EXTRACTED_SCHEMA.fields],
+        schema=_EXTRACTED_PA,
     )
+
+
+def _extract_batches(
+    batches: Iterator[pa.RecordBatch], cfg: ExtractConfig
+) -> Iterator[pa.RecordBatch]:
+    """The one extraction loop: (url, html) batches → extracted batches,
+    skipping empty input batches."""
+    for rb in batches:
+        if rb.num_rows:
+            yield _extract_record_batch(rb, cfg)
 
 
 def extract_pages(
@@ -171,9 +163,7 @@ def extract_pages(
         src = src.sortWithinPartitions(F.length("html"))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows:
-                yield _extract_record_batch(rb, cfg)
+        return _extract_batches(batches, cfg)
 
     return src.mapInArrow(run, EXTRACTED_SCHEMA)
 
@@ -195,26 +185,9 @@ def extract_pages_with_lineage(
     """Same, plus one lineage row per non-empty task partition, emitted
     inline with ``rec_type='lineage'``. Split afterwards with
     :func:`split_lineage` (persist the unified frame first if both
-    halves are consumed). mapInArrow like the pure path."""
-    page_pa = {
-        "url": pa.string(),
-        "text": pa.string(),
-        "spans": _SPAN_PA,
-        "mean_score": pa.float64(),
-        "blocks_total": pa.int32(),
-        "blocks_kept": pa.int32(),
-        "bytes_in": pa.int64(),
-        "truncated": pa.bool_(),
-    }
-    lineage_pa = {
-        "partition_id": pa.int32(),
-        "urls_in": pa.int64(),
-        "lineage_bytes_in": pa.int64(),
-        "lineage_blocks_kept": pa.int64(),
-        "extract_ms": pa.float64(),
-    }
-    lineage_names = list(lineage_pa)
-    names = [f.name for f in UNIFIED_SCHEMA.fields]
+    halves are consumed). Page rows come from the same batch loop as
+    :func:`extract_pages`, with ``rec_type='page'`` and null lineage
+    columns."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
@@ -223,35 +196,26 @@ def extract_pages_with_lineage(
         urls_in = 0
         bytes_in = 0
         blocks_kept = 0
-        any_rows = False
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            any_rows = True
-            out = _extract_record_batch(rb, cfg)
+        for out in _extract_batches(batches, cfg):
             n = out.num_rows
             urls_in += n
-            bytes_in += int(pc.sum(out.column(6)).as_py() or 0)
-            blocks_kept += int(pc.sum(out.column(5)).as_py() or 0)
-            arrays = [pa.array(["page"] * n, type=pa.string())] + list(
-                out.columns
-            ) + [pa.nulls(n, type=lineage_pa[c]) for c in lineage_names]
-            yield pa.RecordBatch.from_arrays(arrays, names)
-        if any_rows:
-            ms = (time.perf_counter() - t0) * 1000.0
-            lin_vals = {
+            bytes_in += int(pc.sum(out.column("bytes_in")).as_py() or 0)
+            blocks_kept += int(pc.sum(out.column("blocks_kept")).as_py() or 0)
+            yield pa.RecordBatch.from_arrays(
+                [pa.repeat("page", n), *out.columns]
+                + [pa.nulls(n, type=f.type) for f in _LINEAGE_PA],
+                schema=_UNIFIED_PA,
+            )
+        if urls_in:
+            lineage = {
+                "rec_type": "lineage",
                 "partition_id": pid,
                 "urls_in": urls_in,
                 "lineage_bytes_in": bytes_in,
                 "lineage_blocks_kept": blocks_kept,
-                "extract_ms": ms,
+                "extract_ms": (time.perf_counter() - t0) * 1000.0,
             }
-            arrays = (
-                [pa.array(["lineage"], type=pa.string())]
-                + [pa.nulls(1, type=t) for t in page_pa.values()]
-                + [pa.array([lin_vals[c]], type=lineage_pa[c]) for c in lineage_names]
-            )
-            yield pa.RecordBatch.from_arrays(arrays, names)
+            yield pa.RecordBatch.from_pylist([lineage], schema=_UNIFIED_PA)
 
     return pages.select("url", "html").mapInArrow(run, UNIFIED_SCHEMA)
 

@@ -1,4 +1,4 @@
-"""Corpus-level evaluation metrics + relational reporting queries.
+"""Corpus-level evaluation metrics.
 
 ``extraction_eval`` is the engine's version of the reference's metric
 stack: the pred↔gt equi-join (ppocr/metrics/det_metric.py:24-72 — ours
@@ -7,11 +7,6 @@ joins on url instead of matching polygons by IoU), exact-match rate
 (rec_metric.py:15,51 ``norm_edit_dis``) — all with Spark built-ins
 (``F.levenshtein`` is JVM-side), aggregated partial+final like the
 reference's ``combine_results`` (det_metric.py:58-69).
-
-The relational reports demonstrate the star-join strategy the engine
-uses for any dimension-enriched rollup at 100 TB: facts stream, small
-dims broadcast (no fact-side shuffle before the aggregation), money
-sums ride DECIMAL for exactness.
 """
 
 from __future__ import annotations
@@ -168,49 +163,4 @@ def table_similarity(pred: DataFrame, gold: DataFrame) -> DataFrame:
             / F.count("*").cast("double")
         ).alias("mean_similarity"),
         F.sum((F.col("dice") == 1.0).cast("int")).alias("n_perfect"),
-    )
-
-
-def pricing_summary(lineitem: DataFrame) -> DataFrame:
-    """Pricing rollup per (returnflag, linestatus): the canonical
-    full-scan partial+final aggregation. DECIMAL sums → exact,
-    order-insensitive, oracle-portable."""
-    dec = lambda c: F.col(c).cast("decimal(38,6)")  # noqa: E731
-    return lineitem.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-        F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-        F.count("*").alias("count_order"),
-        F.max("l_shipdate").alias("latest_ship"),
-    )
-
-
-def orders_by_region(
-    orders: DataFrame,
-    customer: DataFrame,
-    nation: DataFrame,
-    region: DataFrame,
-) -> DataFrame:
-    """Order volume per region: fact ⋈ broadcast dims → rollup.
-
-    The explicit ``broadcast`` on every dimension keeps the orders
-    fact table shuffle-free until the (tiny) final aggregation — the
-    star-join shape that survives a 100×-bigger fact side.
-    """
-    dims = (
-        F.broadcast(customer.select("c_custkey", "c_nationkey"))
-    )
-    nat = F.broadcast(nation.select("n_nationkey", "n_regionkey"))
-    reg = F.broadcast(region.select("r_regionkey", "r_name"))
-    return (
-        orders.join(dims, orders.o_custkey == dims.c_custkey)
-        .join(nat, F.col("c_nationkey") == nat.n_nationkey)
-        .join(reg, F.col("n_regionkey") == reg.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("total_price"),
-            F.count_distinct("o_custkey").alias("n_customers"),
-        )
     )

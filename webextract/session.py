@@ -19,9 +19,9 @@ def get_spark(
     apply (AQE on, Arrow on, UTC). ``spark.sql.shuffle.partitions``
     defaults to the core count — not 200 — per partition-sizing rule.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     master = master or f"local[{cpus}]"
-    n_shuffle = shuffle_partitions or int(cpus) if cpus.isdigit() else 32
+    n_shuffle = shuffle_partitions or (int(cpus) if cpus.isdigit() else os.cpu_count())
     b = (
         SparkSession.builder.master(master)
         .appName(app)
