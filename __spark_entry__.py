@@ -2715,9 +2715,9 @@ def oracle_sql() -> dict[str, str]:
                        FROM pw WHERE doc_id % 5 != 4 GROUP BY 1),
             probe AS (
               SELECT p.doc_id,
-                     SUM(CASE WHEN s.bits IS NOT NULL
+                     MIN(CASE WHEN s.bits IS NOT NULL
                                AND (s.bits & p.mask) = p.mask
-                         THEN 1 ELSE 0 END) = 4 AS bloom_hit
+                         THEN 1 ELSE 0 END) = 1 AS bloom_hit
               FROM pw p LEFT JOIN sketch s USING (word_idx)
               GROUP BY 1)
             SELECT doc_id % 10 AS bucket,

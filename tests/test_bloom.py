@@ -51,6 +51,18 @@ def test_merge_by_word_or_equals_union_build(spark):
     assert bad == 0
 
 
+def test_duplicate_probe_hits_and_null_keys_dropped(spark):
+    """A seen url probed twice hits on both rows (2k position rows, all
+    set); a NULL key plants no word and yields no probe row."""
+    url = "https://h1.example/doc/1"
+    null_row = spark.createDataFrame([(None,)], "url string")
+    sketch = bloom_build(_keys(spark, 0, 300).unionByName(null_row), "url", m_bits=M, k=K)
+    assert sketch.filter(F.col("word_idx").isNull() | F.col("bits").isNull()).count() == 0
+    probes = spark.createDataFrame([(url,), (url,), (None,)], "url string")
+    rows = bloom_probe(sketch, probes, "url", m_bits=M, k=K).collect()
+    assert [(r.url, r.bloom_hit) for r in rows] == [(url, True), (url, True)]
+
+
 def test_filter_row_count_bounded(spark):
     sketch = bloom_build(_keys(spark, 0, 5000), "url", m_bits=M, k=K)
     assert sketch.count() <= M // 32

@@ -39,3 +39,36 @@ def test_unknown_meta_falls_back_latin1():
 def test_total_function_never_raises():
     assert decode_html(b"\xff\xfe\x00\x01garbage") != ""
     assert decode_html(b"") == ""
+
+
+def _two_step_decode(raw: bytes) -> str:
+    """The sniff-then-decode composition of the frozen rules."""
+    cs = sniff_charset(raw)
+    if cs == "utf-8-bom":
+        return raw[3:].decode("utf-8", "replace")
+    return raw.decode(cs, "replace")
+
+
+def test_decode_equals_sniff_then_decode():
+    import random
+
+    from webextract.sources.pages import gen_fixture_pages
+
+    pages = [p["html"] for p in gen_fixture_pages()]
+    rng = random.Random(7)
+    heads = [b"", b"\xef\xbb\xbf"] + [
+        b'<meta charset="%s">' % cs
+        for cs in (b"utf-8", b"iso-8859-1", b"windows-1252", b"shift_jis", b"no-such")
+    ]
+    alphabet = b"ab<>\xc3\xa9\xe9\x93\xff\x00 "
+    for _ in range(2000):
+        n = rng.randrange(0, 64)
+        if rng.random() < 0.5:
+            body = rng.randbytes(n)
+        else:
+            body = bytes(rng.choice(alphabet) for _ in range(n))
+        pages.append(rng.choice(heads) + body)
+    pages.append(b'<meta charset="utf-8"><p>caf\xe9</p>')
+    pages.append(b"\xef\xbb\xbfcaf\xe9")
+    for raw in pages:
+        assert decode_html(raw) == _two_step_decode(raw), raw[:80]

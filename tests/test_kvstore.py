@@ -2,6 +2,7 @@
 ``ppocr/data/lmdb_dataset.py:26-151``): synth → parse roundtrip,
 range pruning, fail-loud corruption checks, on-disk store."""
 
+import os
 import struct
 
 import pytest
@@ -141,3 +142,30 @@ def test_roundtrip_property_unicode_keys_empty_values(spark):
     )
     got = {r.key: bytes(r.value) for r in parse_kv(shards).collect()}
     assert got == dict(rows)
+
+
+def test_duplicate_keys_fail_at_synth(spark):
+    df = spark.createDataFrame(
+        [("k-1", bytearray(b"a"), 0), ("k-1", bytearray(b"b"), 0), ("k-2", bytearray(b"c"), 1)],
+        "key string, val binary, id long",
+    )
+    shards = synth_kv_shards(df, F.col("key"), F.col("val"), F.col("id"))
+    for cols in (["payload"], ["shard_id", "n_records"]):
+        with pytest.raises(Exception, match="duplicate SKV key in shard 0"):
+            shards.select(*cols).collect()
+
+
+def test_manifest_published_after_every_shard_file(spark, tmp_path):
+    store = tmp_path / "kv"
+    write_kv(_fixture(spark, n=100, width=16), str(store))
+    shard_ns = [p.stat().st_mtime_ns for p in store.glob("shard-*.skv")]
+    manifest_ns = [p.stat().st_mtime_ns for p in (store / "_manifest").iterdir()]
+    assert len(shard_ns) == 7
+    assert max(shard_ns) <= min(manifest_ns)
+
+    # a shard write that fails leaves no manifest behind
+    broken = tmp_path / "broken"
+    os.makedirs(broken / "shard-000003.skv")
+    with pytest.raises(Exception, match="IsADirectoryError"):
+        write_kv(_fixture(spark, n=100, width=16), str(broken))
+    assert not (broken / "_manifest").exists()

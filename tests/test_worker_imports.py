@@ -1,0 +1,55 @@
+"""The extraction loop drops cached zip finders and imports still work.
+
+In-process, no Spark: a zip archive on ``sys.path`` stands in for
+``pyspark.zip`` on a worker's path.
+"""
+
+import sys
+import zipfile
+import zipimport
+
+import pyarrow as pa
+
+from webextract.config import DEFAULT_CONFIG
+from webextract.operators.extract import _extract_batches
+
+
+def _zip_finders() -> list[str]:
+    return [
+        p
+        for p, f in sys.path_importer_cache.items()
+        if isinstance(f, zipimport.zipimporter)
+    ]
+
+
+def test_extract_loop_drops_zip_finders_and_imports_still_work(tmp_path):
+    archive = tmp_path / "mods.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("we_zip_a.py", "VALUE = 'a'\n")
+        z.writestr("we_zip_b.py", "VALUE = 'b'\n")
+    saved_path = list(sys.path)
+    sys.path.insert(0, str(archive))
+    try:
+        import we_zip_a
+
+        assert we_zip_a.VALUE == "a"
+        assert str(archive) in _zip_finders()
+
+        rb = pa.RecordBatch.from_pydict(
+            {
+                "url": ["https://h.example/doc/1"],
+                "html": [b"<html><body><p>Some main text here.</p></body></html>"],
+            }
+        )
+        out = list(_extract_batches(iter([rb]), DEFAULT_CONFIG))
+        assert [b.num_rows for b in out] == [1]
+        assert _zip_finders() == []
+
+        import we_zip_b
+
+        assert we_zip_b.VALUE == "b"
+    finally:
+        sys.path[:] = saved_path
+        for name in ("we_zip_a", "we_zip_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(str(archive), None)

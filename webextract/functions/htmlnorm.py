@@ -27,15 +27,9 @@ _META_CHARSET = re.compile(
 )
 
 
-def sniff_charset(raw: bytes) -> str:
-    """Return the frozen charset decision for *raw* (name only)."""
-    if raw.startswith(_BOM):
-        return "utf-8-bom"
-    try:
-        raw.decode("utf-8", "strict")
-        return "utf-8"
-    except UnicodeDecodeError:
-        pass
+def _declared_charset(raw: bytes) -> str:
+    """Rules 3–4 for bytes that are not strict utf-8: a Python-known
+    META declaration, else latin-1."""
     m = _META_CHARSET.search(raw[:2048])
     if m:
         name = m.group(1).decode("ascii", "ignore").lower()
@@ -47,13 +41,27 @@ def sniff_charset(raw: bytes) -> str:
     return "latin-1"
 
 
+def sniff_charset(raw: bytes) -> str:
+    """Return the frozen charset decision for *raw* (name only)."""
+    if raw.startswith(_BOM):
+        return "utf-8-bom"
+    try:
+        raw.decode("utf-8", "strict")
+        return "utf-8"
+    except UnicodeDecodeError:
+        return _declared_charset(raw)
+
+
 def decode_html(raw: bytes) -> str:
-    """bytes → canonical unicode text (total; never raises)."""
-    cs = sniff_charset(raw)
-    if cs == "utf-8-bom":
+    """bytes → canonical unicode text (total; never raises). Applies the
+    rules of :func:`sniff_charset`, but a valid utf-8 page is decoded
+    once: rule 2's strict decode is the result."""
+    if raw.startswith(_BOM):
         return raw[len(_BOM):].decode("utf-8", "replace")
-    if cs == "utf-8":
-        # "replace", not "strict": sniff may return utf-8 from a META
-        # declaration whose bytes aren't actually valid utf-8
-        return raw.decode("utf-8", "replace")
-    return raw.decode(cs, "replace")
+    try:
+        return raw.decode("utf-8", "strict")
+    except UnicodeDecodeError:
+        pass
+    # "replace", not "strict": a META declaration may name utf-8 for
+    # bytes that aren't valid utf-8
+    return raw.decode(_declared_charset(raw), "replace")

@@ -21,7 +21,9 @@ Arrow batch → write. Design points (SURVEY.md §4):
 
 from __future__ import annotations
 
+import sys
 import time
+import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -130,11 +132,39 @@ def _extract_record_batch(rb: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBa
     )
 
 
+def _drop_zip_finders() -> None:
+    """Delete every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    Why: before each task a PySpark worker calls
+    ``importlib.invalidate_caches()`` (``setup_spark_files`` in
+    ``pyspark/worker_util.py``), and on CPython 3.11 every cached
+    ``zipimporter`` answers that by re-parsing its archive's whole
+    central directory. A warm worker caches 16 of them (12 on
+    ``pyspark.zip``, 2 on the 5,359-entry spark-core jar, 2 on py4j),
+    about 0.2 s of fixed cost per Python task on a 4-core x86 host,
+    more than the extraction itself on small partitions. With the entries
+    gone the next task's invalidation walks no zip finder; an import
+    through a dropped path builds a fresh finder from
+    ``zipimport._zip_directory_cache`` without reading the archive.
+
+    Given up: an archive already on ``sys.path`` that is rewritten in
+    place mid-session keeps its old directory listing. Spark never does
+    that to ``pyspark.zip``, its jars or ``addPyFile`` archives, which
+    arrive under new paths.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
+
+
 def _extract_batches(
     batches: Iterator[pa.RecordBatch], cfg: ExtractConfig
 ) -> Iterator[pa.RecordBatch]:
     """The one extraction loop: (url, html) batches → extracted batches,
-    skipping empty input batches."""
+    skipping empty input batches. Runs once per task partition, so it
+    also drops the worker's zip finders (:func:`_drop_zip_finders`)."""
+    _drop_zip_finders()
     for rb in batches:
         if rb.num_rows:
             yield _extract_record_batch(rb, cfg)

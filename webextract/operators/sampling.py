@@ -655,7 +655,11 @@ def bloom_positions(
     shift at 31 keeps every mask positive and the packing
     engine-portable at the cost of half the word (the filter row
     count stays ≤ m_bits/32, still negligible)."""
-    rows = df.select(
+    # NULL keys have no bit positions (md5 of NULL is NULL): they would
+    # plant a (NULL, NULL) word in a built filter and can never be
+    # probed, so they are dropped here, for build, probe and stream
+    # alike (the cm_cells rule)
+    rows = df.filter(F.col(key_col).isNotNull()).select(
         key_col,
         F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j"),
     ).select(
@@ -708,8 +712,10 @@ def bloom_probe(
     """Probe keys against a built filter → probes + ``bloom_hit``
     (true iff ALL k bits are set). A LEFT join on word_idx keeps keys
     whose words are entirely absent from the filter (guaranteed miss);
-    the hit test is ``count(bit set) == k`` per key — pure JVM bit
-    arithmetic, no Python."""
+    the hit test is ``min(bit set) == 1`` per key — pure JVM bit
+    arithmetic, no Python. A min, not ``count == k``: a key probed
+    twice has 2k position rows, all set. Probe rows with a NULL key
+    are dropped (see :func:`bloom_positions`)."""
     pos = bloom_positions(probes, key_col, k, m_bits)
     hits = (
         pos.join(sketch, "word_idx", "left")
@@ -720,7 +726,7 @@ def bloom_probe(
         )
         .groupBy(key_col)
         .agg(
-            (F.sum(F.col("bit_set").cast("int")) == F.lit(k)).alias(
+            (F.min(F.col("bit_set").cast("int")) == F.lit(1)).alias(
                 "bloom_hit"
             )
         )

@@ -98,6 +98,12 @@ def synth_kv_shards(
     ``floor(doc_id / width)``) keeps per-shard key intervals disjoint
     so range lookups prune shards (the B-tree analog); a hash
     expression still round-trips but every probe touches every shard.
+
+    Keys must be unique: a shard holding a key twice fails the job
+    through a JVM-side ``raise_error`` when the output is evaluated,
+    instead of writing a shard the parser rejects (out-of-order key) at
+    the next read. The check is per shard: it sees every duplicate when
+    equal keys always land in the same shard.
     """
     rec = kv_record(key, value)
     rows = df.select(
@@ -110,9 +116,20 @@ def synth_kv_shards(
         lambda acc, x: F.concat(acc, x["rec"]),
     )
     n = F.size("recs")
+    # a Filter, not a column: a consumer that prunes to the manifest or
+    # to the payload still runs it
+    unique = F.when(
+        F.size(F.array_distinct(F.transform("recs", lambda x: x["key"]))) != n,
+        F.raise_error(
+            F.concat(
+                F.lit("duplicate SKV key in shard "), F.col("shard_id").cast("string")
+            )
+        ),
+    ).otherwise(F.lit(True))
     return (
         rows.groupBy("shard_id")
         .agg(F.sort_array(F.collect_list("s")).alias("recs"))
+        .filter(unique)
         .select(
             "shard_id",
             F.element_at("recs", 1)["key"].alias("min_key"),
@@ -209,11 +226,10 @@ def write_kv(shards: DataFrame, path: str) -> None:
     ``shard-<id>.skv`` files + a ``_manifest`` parquet. The payload
     writes run ON EXECUTORS (``foreachPartition``) against shared
     storage — the same pattern as any Spark file sink; nothing is
-    collected to the driver."""
+    collected to the driver. The manifest is the commit point: it is
+    written only after every shard file is in place, so a failed write
+    never publishes a manifest naming missing shards."""
     os.makedirs(path, exist_ok=True)
-    shards.select(*MANIFEST_COLS).write.mode("overwrite").parquet(
-        os.path.join(path, "_manifest")
-    )
 
     def write_partition(rows) -> None:
         for r in rows:
@@ -224,6 +240,9 @@ def write_kv(shards: DataFrame, path: str) -> None:
             os.replace(tmp, fname)  # atomic publish, no torn shards
 
     shards.select("shard_id", "payload").foreachPartition(write_partition)
+    shards.select(*MANIFEST_COLS).write.mode("overwrite").parquet(
+        os.path.join(path, "_manifest")
+    )
 
 
 def read_kv(
