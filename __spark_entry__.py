@@ -480,9 +480,8 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HEADLINE simhash signatures: the production 64-bit width (four
     16-bit band columns — the join key layout of the banded Hamming
-    dedup). A 16-bit signature saturates by pigeonhole at ≥10^6 docs;
-    the 16-bit width survives only as dedup.simhash_signatures, pinned
-    by its unit tests."""
+    dedup). A 16-bit signature would saturate by pigeonhole at ≥10^6
+    docs, so no narrower width is offered."""
     return dedup.simhash64_bands(_docs_spread(spark, sf_dir))
 
 
@@ -1441,24 +1440,20 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     by position enumeration, argmax with the frozen (count desc, l, r)
     tie-break, and greedy merge application as a first-occurrence
     replace iterated to fixpoint (provably the same function as the
-    Spark fold — see operators/bpe.py). Runs the PRODUCTION "local"
-    strategy (one distributed word-frequency reduction + driver merge
-    loop over the vocabulary-sized table) — so the path a real merge
-    count would take is itself under the hash-exact gate; the
-    strategies are pytest-pinned identical."""
-    return bpe.bpe_learn(
-        _docs_spread(spark, sf_dir), n_merges=8, strategy="local"
-    )
+    Spark fold — see operators/bpe.py). Training takes the production
+    path (one distributed word-frequency reduction + driver merge loop
+    over the vocabulary-sized table), the same path a real merge count
+    takes; the collect-free rounds fallback is pytest-pinned
+    identical."""
+    return bpe.bpe_learn(_docs_spread(spark, sf_dir), n_merges=8)
 
 
 def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The symbol inventory after the 8 learned merges: top-20 symbols
     by corpus occurrence — evidences merge APPLICATION (encode side)
-    end-to-end, not just the learned merge list. Production "local"
-    training strategy (see q_bpe_merges)."""
-    return bpe.bpe_vocab(
-        _docs_spread(spark, sf_dir), n_merges=8, k=20, strategy="local"
-    )
+    end-to-end, not just the learned merge list (training as in
+    q_bpe_merges)."""
+    return bpe.bpe_vocab(_docs_spread(spark, sf_dir), n_merges=8, k=20)
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1468,11 +1463,9 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ints). The oracle reuses the unrolled learning CTEs and derives
     the word → tokenization mapping by stripping spaces from the
     trained vocabulary's symbol strings (merges only concatenate
-    adjacent symbols, so that inversion is exact). Production
-    "local" training strategy (see q_bpe_merges)."""
-    return bpe.bpe_encode(
-        _docs_spread(spark, sf_dir), n_merges=8, strategy="local"
-    )
+    adjacent symbols, so that inversion is exact). Training as in
+    q_bpe_merges."""
+    return bpe.bpe_encode(_docs_spread(spark, sf_dir), n_merges=8)
 
 
 def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1489,7 +1482,7 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_spread(spark, sf_dir)
     train = docs.filter(F.col("doc_id") % 10 == 0)
     held = docs.filter(F.col("doc_id") % 10 != 0)
-    merges, tvocab = bpe.bpe_train(train, n_merges=8, strategy="local")
+    merges, tvocab = bpe.bpe_train(train, n_merges=8)
     return bpe.bpe_apply(held, merges, vocab=tvocab)
 
 
@@ -1521,8 +1514,7 @@ def q_pretrain_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     merges, tvocab = bpe.bpe_train(
-        surv.filter(F.col("doc_id") % 10 == 0), n_merges=8,
-        strategy="local",
+        surv.filter(F.col("doc_id") % 10 == 0), n_merges=8
     )
     enc = bpe.bpe_apply(surv, merges, vocab=tvocab)
     packed = pack_chunks(enc, ctx=2048, n_shards=8, tokens_col="n_tokens")
@@ -1896,13 +1888,6 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     and byte counts are doc_id arithmetic, so the oracle states them."""
     media = multimodal.synth_mixed_media(_docs(spark, sf_dir))
     return multimodal.decode_media(media)
-
-
-def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-side magic sniff over the mixed table: png/gif payloads hit
-    their real signatures, the fake format stays 'unknown'."""
-    media = multimodal.synth_mixed_media(_docs(spark, sf_dir))
-    return multimodal.media_metadata(media).select("media_id", "n_bytes", "format")
 
 
 def q_media_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2394,29 +2379,6 @@ _BANDS_UNION = "\n    UNION ALL\n    ".join(
     )
     for b in range(dedup.LSH_BANDS)
 )
-
-
-def _simhash_sql() -> str:
-    digit_cols = ",\n      ".join(
-        f"CAST(('0x' || substr(md5(t), {p + 1}, 1)) AS INTEGER) AS d{p}"
-        for p in range(dedup.SIMHASH_HEX)
-    )
-    votes = []
-    sig_terms = []
-    for p in range(dedup.SIMHASH_HEX):
-        for shift in (3, 2, 1, 0):
-            idx = p * 4 + (3 - shift)
-            div = 1 << shift
-            votes.append(f"SUM(((d{p} // {div}) % 2) * 2 - 1) AS v{idx}")
-            sig_terms.append(f"(CASE WHEN v{idx} > 0 THEN {1 << idx} ELSE 0 END)")
-    return f"""
-WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-  d AS (SELECT doc_id,
-      {digit_cols}
-    FROM tok),
-  v AS (SELECT doc_id, {", ".join(votes)} FROM d GROUP BY doc_id)
-SELECT doc_id, CAST({" + ".join(sig_terms)} AS INTEGER) AS simhash FROM v
-"""
 
 
 def _line_dedup_cte(src: str) -> str:

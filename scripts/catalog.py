@@ -16,7 +16,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def main() -> None:
+def render() -> str:
+    """CATALOG.md's full text for the current registry."""
     import __spark_entry__ as e
 
     qs, oracles = e.queries(), e.oracle_sql()
@@ -48,8 +49,12 @@ def main() -> None:
             f"| `{name}` | {doc} ({src}) | {oracle} | "
             f"{t if t is not None else '—'} |"
         )
-    open(os.path.join(REPO, "CATALOG.md"), "w").write("\n".join(lines) + "\n")
-    print(f"wrote CATALOG.md ({len(qs)} rows)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    open(os.path.join(REPO, "CATALOG.md"), "w").write(render())
+    print("wrote CATALOG.md")
 
 
 if __name__ == "__main__":

@@ -34,7 +34,7 @@ def docs(spark):
 
 
 def _trained(docs):
-    return bpe_train(docs, 6, strategy="local")
+    return bpe_train(docs, 6)
 
 
 def test_registry_roundtrip_and_apply_parity(spark, docs, tmp_path):

@@ -7,7 +7,7 @@ pin the algorithm itself against a plain-Python Sennrich reference
 equivalence the oracle's fixpoint-replace argument relies on.
 """
 
-from hypothesis import example, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
 
@@ -282,64 +282,87 @@ def _table(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_bpe_train_strategies_agree(spark):
-    """rounds / batched / local produce identical merge tables and
-    identical trained vocabularies."""
+def _train_counting_jobs(spark, texts, n_merges):
+    """bpe_train + reading its merge table, inside one job group →
+    (merge rows in step order, Spark jobs the group ran)."""
     from webextract.operators.bpe import bpe_train
 
-    docs = _docs(spark, TRAIN + HELD)
-    arts = {
-        s: bpe_train(docs, n_merges=6, strategy=s)
-        for s in ("rounds", "batched", "local")
-    }
-    merges = {s: _table(m) for s, (m, _) in arts.items()}
-    vocabs = {s: _table(v) for s, (_, v) in arts.items()}
-    assert merges["rounds"] == merges["batched"] == merges["local"]
-    assert vocabs["rounds"] == vocabs["batched"] == vocabs["local"]
-
-
-def test_bpe_train_local_64_merges_few_spark_rounds(spark):
-    """The production-merge-count criterion: 64 merges learned with
-    the local strategy match the sequential Python reference exactly,
-    and the whole training (including materializing the merge table)
-    runs in at most 64/4 = 16 Spark jobs — the per-merge scheduler
-    round-trip is gone."""
-    from webextract.operators.bpe import bpe_train
-
-    texts = [t * 2 + " " + h for t in TRAIN for h in HELD] + [
-        "pack my box with five dozen liquor jugs",
-        "how vexingly quick daft zebras jump",
-        "sphinx of black quartz judge my vow",
-    ]
-    expected, _ = _ref_learn(texts, 64)
     sc = spark.sparkContext
-    sc.setJobGroup("bpe64", "local-strategy training")
+    group = f"bpe{n_merges}"
+    sc.setJobGroup(group, "driver-path training")
     try:
-        merges, _ = bpe_train(_docs(spark, texts), n_merges=64, strategy="local")
+        merges, _ = bpe_train(_docs(spark, texts), n_merges=n_merges)
         got = [
             (r.step, r.left_sym, r.right_sym, r.merged, r.pair_cnt)
             for r in merges.orderBy("step").collect()
         ]
     finally:
         sc.setJobGroup(None, None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("bpe64"))
-    assert got == expected
-    assert 0 < n_jobs <= 16, f"local strategy used {n_jobs} Spark jobs"
+    return got, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_bpe_train_auto_strategy_threshold(spark):
-    """strategy=None → rounds at small n_merges, local above the
-    threshold; both give reference-identical merges either way."""
-    from webextract.operators.bpe import LOCAL_MERGE_THRESHOLD, bpe_train
-
-    n = LOCAL_MERGE_THRESHOLD + 4
-    expected, _ = _ref_learn(TRAIN, n)
-    merges, _ = bpe_train(_docs(spark, TRAIN), n_merges=n)
-    got = [
-        (r.step, r.left_sym, r.right_sym, r.merged, r.pair_cnt)
-        for r in merges.orderBy("step").collect()
+def test_bpe_train_local_64_merges_few_spark_rounds(spark):
+    """The production-merge-count criterion: 64 merges learned on the
+    driver path match the sequential Python reference exactly, and the
+    whole training (including materializing the merge table) runs in
+    at most 64/4 = 16 Spark jobs — the per-merge scheduler round-trip
+    is gone."""
+    texts = [t * 2 + " " + h for t in TRAIN for h in HELD] + [
+        "pack my box with five dozen liquor jugs",
+        "how vexingly quick daft zebras jump",
+        "sphinx of black quartz judge my vow",
     ]
+    expected, _ = _ref_learn(texts, 64)
+    got, n_jobs = _train_counting_jobs(spark, texts, 64)
     assert got == expected
+    assert 0 < n_jobs <= 16, f"driver-path training used {n_jobs} Spark jobs"
+
+
+def test_bpe_train_rounds_fallback_matches_local(spark, monkeypatch):
+    """A word-frequency table larger than LOCAL_VOCAB_MAX takes the
+    collect-free rounds instead of the driver loop, and both paths
+    give the same merge table and the same trained vocabulary."""
+    from webextract.operators import bpe
+
+    calls = []
+    learn_rounds = bpe._learn_rounds
+
+    def spy(vocab, n_merges):
+        calls.append(n_merges)
+        return learn_rounds(vocab, n_merges)
+
+    monkeypatch.setattr(bpe, "_learn_rounds", spy)
+    docs = _docs(spark, TRAIN + HELD)
+    local = bpe.bpe_train(docs, n_merges=6)
+    assert calls == []
+    monkeypatch.setattr(bpe, "LOCAL_VOCAB_MAX", 2)
+    rounds = bpe.bpe_train(docs, n_merges=6)
+    assert calls == [6]
+    expected, _ = _ref_learn(TRAIN + HELD, 6)
+    assert _table(rounds[0]) == _table(local[0]) == sorted(expected)
+    assert _table(rounds[1]) == _table(local[1])
+
+
+def test_bpe_train_1000_merges_few_spark_jobs(spark):
+    """A production-sized merge count on a seeded random corpus: 1,000
+    merges match the sequential Python reference exactly, and training
+    plus reading the merge table stays within the 64-merge test's
+    16-job bound — the job count does not grow with the merge count."""
+    import random
+
+    rng = random.Random(1000)
+    texts = [
+        " ".join(
+            "".join(rng.choice("abcdefgh") for _ in range(rng.randint(2, 9)))
+            for _ in range(30)
+        )
+        for _ in range(60)
+    ]
+    expected, _ = _ref_learn(texts, 1000)
+    assert len(expected) == 1000
+    got, n_jobs = _train_counting_jobs(spark, texts, 1000)
+    assert got == expected
+    assert 0 < n_jobs <= 16, f"driver-path training used {n_jobs} Spark jobs"
 
 
 def test_bpe_artifacts_survive_parquet_roundtrip(spark, tmp_path):
@@ -364,61 +387,6 @@ def test_bpe_artifacts_survive_parquet_roundtrip(spark, tmp_path):
         ).collect()
     }
     assert direct == reloaded
-
-
-def _sim_batched(texts, n_merges, cap):
-    """Python simulation of the batched strategy over the reference
-    machinery: rounds of stats → frozen sort → _select_batch →
-    sequential application of the batch."""
-    from collections import namedtuple
-
-    from webextract.operators.bpe import _select_batch
-
-    Row = namedtuple("Row", ["l", "r", "pair_cnt"])
-    vocab = _ref_word_freq(texts)
-    out = []
-    while len(out) < n_merges:
-        stats = _ref_stats(vocab)
-        if not stats:
-            break
-        rows = [
-            Row(l, r, c)
-            for (l, r), c in sorted(
-                stats.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-            )
-        ]
-        top = rows[:cap]
-        batch = _select_batch(top, len(rows) <= cap, n_merges - len(out))
-        for b in batch:
-            out.append((len(out) + 1, b.l, b.r, b.l + b.r, b.pair_cnt))
-            vocab = _ref_merge(vocab, (b.l, b.r))
-    return out
-
-
-@given(
-    st.lists(
-        st.text(alphabet="abcd", min_size=1, max_size=6),
-        min_size=1,
-        max_size=15,
-    ),
-    st.integers(min_value=2, max_value=8),
-)
-# the self-adjacent counterexample that broke the original rule:
-# merging (c,c) creates (cc,c), which ties (d,a) at count 1 and wins
-# the frozen tie-break — pinned so the regression never depends on
-# hypothesis re-drawing it
-@example(words=["da", "ccc"], cap=2)
-@settings(max_examples=200, deadline=None)
-def test_select_batch_rule_matches_sequential(words, cap):
-    """The non-interacting-prefix batch rule is EXACT: for random
-    corpora and small fetch caps (forcing the cap-cut boundary case),
-    batched learning reproduces the sequential merge sequence
-    including every count and tie-break."""
-    texts = [" ".join(words)]
-    expected = [
-        (step, l, r, m, c) for step, l, r, m, c in _ref_learn(texts, 12)[0]
-    ]
-    assert _sim_batched(texts, 12, cap) == expected
 
 
 @given(

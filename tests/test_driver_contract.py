@@ -45,3 +45,17 @@ def test_gate_window_covers_every_unchecked_query():
 def test_all_queries_are_callables_with_docstrings():
     for name, fn in e.queries().items():
         assert callable(fn), name
+
+
+def test_catalog_is_current():
+    """CATALOG.md is generated from the registry's docstrings; a
+    docstring or registry edit must come with a regenerated catalog
+    (``python scripts/catalog.py``)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "catalog", os.path.join(REPO, "scripts", "catalog.py")
+    )
+    catalog = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(catalog)
+    assert open(os.path.join(REPO, "CATALOG.md")).read() == catalog.render()

@@ -21,10 +21,10 @@ from webextract.sources.kvstore import (
 )
 
 
-def _fixture(spark, n=100, width=16):
+def _fixture(spark, n=100, width=16, body="doc"):
     df = spark.range(n).select(
         F.format_string("page-%09d", F.col("id")).alias("key"),
-        F.encode(F.concat(F.lit("<html>doc "), F.col("id")), "UTF-8").alias("val"),
+        F.encode(F.concat(F.lit(f"<html>{body} "), F.col("id")), "UTF-8").alias("val"),
         F.col("id"),
     )
     return synth_kv_shards(
@@ -169,3 +169,37 @@ def test_manifest_published_after_every_shard_file(spark, tmp_path):
     with pytest.raises(Exception, match="IsADirectoryError"):
         write_kv(_fixture(spark, n=100, width=16), str(broken))
     assert not (broken / "_manifest").exists()
+
+
+def _store_rows(spark, store):
+    return sorted((r.key, bytes(r.value)) for r in read_kv(spark, store).collect())
+
+
+def test_failed_overwrite_leaves_old_store_intact(spark, tmp_path):
+    store = str(tmp_path / "kv")
+    write_kv(_fixture(spark, n=100, width=16), store)
+    before = _store_rows(spark, store)
+    # store B: different payloads, written in shard order by one task
+    # that fails at shard 3 (a NULL payload) after shards 0-2 are on disk
+    broken = (
+        _fixture(spark, n=100, width=16, body="B")
+        .repartition(1)
+        .sortWithinPartitions("shard_id")
+        .withColumn("payload", F.when(F.col("shard_id") != 3, F.col("payload")))
+    )
+    with pytest.raises(Exception, match="NoneType"):
+        write_kv(broken, store)
+    assert _store_rows(spark, store) == before
+
+
+def test_smaller_overwrite_keeps_only_manifest_files(spark, tmp_path):
+    store = tmp_path / "kv"
+    write_kv(_fixture(spark, n=100, width=16), str(store))
+    write_kv(_fixture(spark, n=40, width=16), str(store))
+    on_disk = {p.name for p in store.iterdir() if p.name != "_manifest"}
+    assert len(on_disk) == 3
+    manifest = spark.read.parquet(str(store / "_manifest"))
+    assert {r.file for r in manifest.collect()} == on_disk
+    assert _store_rows(spark, str(store)) == sorted(
+        (f"page-{i:09d}", f"<html>doc {i}".encode()) for i in range(40)
+    )

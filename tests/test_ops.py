@@ -124,15 +124,6 @@ def test_contamination_overlap_benchmark_broadcast(spark):
     assert "BroadcastHashJoin" in explained
 
 
-def test_simhash_identical_share_and_signature_range(spark, docs):
-    sig = dedup.simhash_signatures(docs)
-    mm = sig.agg(F.min("simhash"), F.max("simhash")).first()
-    assert 0 <= mm[0] and mm[1] < 65536
-    df = spark.createDataFrame([(1, "a b c"), (2, "a b c")], ["doc_id", "text"])
-    vals = [r["simhash"] for r in dedup.simhash_signatures(df).collect()]
-    assert vals[0] == vals[1]
-
-
 # -- similarity -------------------------------------------------------------
 
 def test_cosine_topk_self_excluded_and_ordered(spark, emb):

@@ -10,41 +10,36 @@ every decode step indexes into. Here the inventory is LEARNED from the
 corpus — the web-scale pipeline builds its tokenizer from the data it
 just cleaned.
 
-Distributed shape (the Sennrich trick, kept):
+Distributed shape (the Sennrich trick):
 - The corpus is scanned ONCE into a word-frequency table
   (``word_freq``). Everything iterative happens on that table — at
   10^12 pages the distinct-word vocabulary is ~10^7-10^8 rows, so the
   per-merge work is vocabulary-sized, not corpus-sized.
-- Each merge round is: adjacent-pair counts (explode + partial-agg
-  groupBy — one vocabulary-sized shuffle), a 1-row argmax via
-  ``orderBy().limit(1)`` (TakeOrderedAndProject — never a global
-  window), and a broadcast of that single row into a JVM higher-order
-  ``aggregate`` fold that rewrites each word's symbol string. No
-  Python UDFs anywhere; no driver-side pair tables.
+- Each distributed merge round (the large-vocabulary path below) is:
+  adjacent-pair counts (explode + partial-agg groupBy — one
+  vocabulary-sized shuffle), a 1-row argmax via ``orderBy().limit(1)``
+  (TakeOrderedAndProject — never a global window), and a broadcast of
+  that single row into a JVM higher-order ``aggregate`` fold that
+  rewrites each word's symbol string. No Python UDFs anywhere; no
+  driver-side pair tables.
 - ``localCheckpoint`` truncates lineage each round (the
   links.pagerank pattern) so the plan stays O(1) per round.
 
-Production merge counts (the round-count problem and its two fixes):
-a real tokenizer wants 3·10^4-10^5 merges, and one driver-coordinated
-Spark round per merge is days of scheduler latency no matter how big
-the cluster is. :func:`bpe_train` therefore has three strategies, all
-PROVABLY identical in output (pinned against each other and the
-plain-Python reference by pytest):
-- ``rounds``: the collect-free one-merge-per-round loop above —
-  right for small merge counts and the hash-exact oracle queries.
-- ``batched``: per round, take the longest PREFIX of the frozen-order
-  pair table that is pairwise non-interacting and strictly
-  count-dominates everything excluded, and apply the whole prefix in
-  one fold (see :func:`_select_batch` for the proof sketch). Exact,
-  but English-like corpora interact heavily in early rounds (~1.1×).
-- ``local``: ONE distributed corpus→word-frequency reduction, then
-  the merge loop runs on the driver over that VOCABULARY-sized table
-  (Zipf-bounded: ~10^7-10^8 distinct ``[a-z]+`` words even at 10^12
-  pages — single-node memory, the same table every single-node
-  tokenizer trainer holds), with incremental pair-stat maintenance;
-  encode stays fully distributed via the broadcast artifacts. This is
-  the production design point and the default above
-  ``LOCAL_MERGE_THRESHOLD`` merges: Spark rounds collapse to 1.
+Training paths (one decision, made from the input): a real tokenizer
+wants 3·10^4-10^5 merges, and one driver-coordinated Spark round per
+merge is days of scheduler latency no matter how big the cluster is.
+:func:`bpe_train` therefore checkpoints the word-frequency table once
+and reads at most ``LOCAL_VOCAB_MAX + 1`` of its rows:
+- the table fits (the production path, any merge count): the merge
+  loop runs on the driver over that vocabulary-sized table with
+  incremental pair-stat maintenance, the standard single-node trainer
+  shape — ONE Spark round however many merges; the trained vocabulary
+  is re-derived distributed by replaying the frozen merges;
+- the table does not fit (a noisy crawl's 10^8-word tail): the
+  collect-free rounds above run over the same checkpoint, one merge
+  and one driver row per round.
+Both paths give identical artifacts (pytest-pinned against each other
+and the plain-Python reference).
 
 Determinism contract (what makes the unrolled recursive-CTE oracle
 match bit-for-bit):
@@ -188,15 +183,15 @@ def _replay_merges(syms: Column, ms: Column) -> Column:
 
 
 def _learn_rounds(
-    docs: DataFrame, n_merges: int
+    vocab: DataFrame, n_merges: int
 ) -> tuple[list[DataFrame], DataFrame]:
-    """The shared training loop: → ([per-step 1-row argmax frames in
-    learning order], final vocabulary). Each round's argmax row is
-    eagerly localCheckpoint-ed (it is ONE row) so the merge-table
-    union and the next round's fold both reuse it without recomputing
-    the pair aggregation, and the vocabulary is checkpointed per round
-    to keep lineage O(1)."""
-    vocab = word_freq(docs).localCheckpoint(eager=False)
+    """The collect-free fallback over the checkpointed word-frequency
+    table ``vocab``: → ([per-step 1-row argmax frames in learning
+    order], final vocabulary). Each round's argmax row is eagerly
+    localCheckpoint-ed (it is ONE row) so the merge-table union and
+    the next round's fold both reuse it without recomputing the pair
+    aggregation, and the vocabulary is checkpointed per round to keep
+    lineage O(1)."""
     bests = []
     for _ in range(n_merges):
         best = (
@@ -214,74 +209,6 @@ _MERGES_SCHEMA = (
     "step INT, left_sym STRING, right_sym STRING, "
     "merged STRING, pair_cnt BIGINT"
 )
-
-# n_merges above this → bpe_train defaults to the local merge loop
-# (one Spark round); at or below it, the collect-free distributed
-# rounds keep the oracle queries' plans driver-collect-free.
-LOCAL_MERGE_THRESHOLD = 16
-
-# per-round argmax-prefix fetch size for the batched strategy — a
-# CONSTANT, so the per-round driver read is bounded regardless of
-# corpus size (control-plane, like a snapshot-id read; the data plane
-# never leaves the executors).
-BATCH_CAP = 64
-
-
-def _select_batch(top: list, exhausted: bool, remaining: int) -> list:
-    """The batched strategy's per-round selection: from ``top`` (pair
-    rows with ``.l/.r/.pair_cnt`` in the frozen order: count desc,
-    l asc, r asc; ``exhausted`` = the WHOLE pair table fit in the
-    fetch), pick the longest prefix that sequential learning would
-    provably pick one-by-one, capped at ``remaining``.
-
-    Why the prefix is safe (sketch): applying merge (l, r) changes
-    pair counts ONLY for pairs sharing a symbol with {l, r} (they can
-    only lose) and creates new pairs that each contain the merged
-    symbol l||r. A new pair's count is bounded by the count of an old
-    pair containing l or r — for ``l != r`` always a pair DIFFERENT
-    from the member itself ((x, l||r) needs old context x,l,r, so it
-    is bounded by (x,l); (l||r, y) by (r,y)) — i.e. by an interacting
-    pair, which sorts at or after the walk's stopping point. The one
-    exception is a SELF-ADJACENT merge (``l == r``): its application
-    to a symbol run creates pairs like (ll, l) whose only bounding
-    old pair is the member itself, so no interacting-pair boundary
-    covers them (found by the hypothesis property: corpus
-    ``da ccc`` — merging (c,c) creates (cc,c) which ties (d,a) at
-    count 1 and wins the frozen tie-break). Hence: take candidates in
-    frozen order while each is symbol-disjoint — including the merged
-    string — from all taken so far, treating a self-adjacent
-    candidate (beyond the head) as a batch-ender exactly like an
-    interacting one, then trim trailing candidates that tie the first
-    excluded pair's count; a self-adjacent HEAD is always a batch of
-    one. Every excluded or newly-created pair then has count STRICTLY
-    below every taken candidate, and taken candidates' own counts and
-    relative order are untouched by earlier batch members — so round
-    j's sequential argmax is exactly batch[j]. A batch of one is the
-    plain sequential step, the always-valid fallback.
-    """
-    first = top[0]
-    if first.l == first.r:
-        # self-adjacent head: its own application can create pairs
-        # only it bounds — nothing after it is provably safe
-        return [first]
-    take = [first]
-    used = {first.l, first.r, first.l + first.r}
-    boundary = None
-    for row in top[1:]:
-        syms = {row.l, row.r, row.l + row.r}
-        if syms & used or row.l == row.r:
-            boundary = row.pair_cnt  # first unsafe pair: stop
-            break
-        take.append(row)
-        used |= syms
-    if boundary is None and not exhausted:
-        # the fetch was cut by the cap: unseen pairs may tie the last
-        # fetched row, so treat its count as the exclusion boundary
-        boundary = top[-1].pair_cnt
-    if boundary is not None:
-        strict = [t for t in take if t.pair_cnt > boundary]
-        take = strict if strict else [top[0]]
-    return take[:remaining]
 
 
 def _merge_table(bests: list[DataFrame]) -> DataFrame:
@@ -307,53 +234,6 @@ def _merges_from_rows(docs: DataFrame, rows: list[tuple]) -> DataFrame:
     """(step, left_sym, right_sym, merged, pair_cnt) tuples → the
     merge-table DataFrame (empty input keeps the schema)."""
     return docs.sparkSession.createDataFrame(rows, _MERGES_SCHEMA)
-
-
-def _literal_merge_array(pairs: list[tuple[str, str]]):
-    """array<struct<l,r>> literal for an in-plan replay of a SMALL
-    merge batch (expression size grows with the batch — bounded by
-    BATCH_CAP; big frozen tables go through :func:`merge_table_array`
-    + broadcast instead)."""
-    return F.array(
-        *[
-            F.struct(F.lit(l).alias("l"), F.lit(r).alias("r"))
-            for l, r in pairs
-        ]
-    )
-
-
-def _learn_rounds_batched(
-    docs: DataFrame, n_merges: int, cap: int = BATCH_CAP
-) -> tuple[list[tuple], DataFrame, int]:
-    """The batched distributed strategy → (merge rows, final vocab,
-    rounds used). Per round: ONE vocabulary-sized pair aggregation,
-    a bounded (≤``cap``-row) driver read of its argmax prefix,
-    :func:`_select_batch`, then the whole batch applied in ONE
-    replay fold. Output provably identical to the sequential rounds
-    (see _select_batch)."""
-    vocab = word_freq(docs).localCheckpoint(eager=False)
-    out: list[tuple] = []
-    rounds = 0
-    while len(out) < n_merges:
-        top = (
-            _pair_counts(vocab)
-            .orderBy(F.desc("pair_cnt"), F.asc("l"), F.asc("r"))
-            .limit(cap)
-            .collect()
-        )
-        rounds += 1
-        if not top:
-            break
-        batch = _select_batch(top, len(top) < cap, n_merges - len(out))
-        for row in batch:
-            out.append(
-                (len(out) + 1, row.l, row.r, row.l + row.r, row.pair_cnt)
-            )
-        ms = _literal_merge_array([(b.l, b.r) for b in batch])
-        vocab = vocab.select(
-            _replay_merges(F.col("syms"), ms).alias("syms"), "cnt"
-        ).localCheckpoint(eager=False)
-    return out, vocab, rounds
 
 
 def _local_merge_loop(
@@ -407,18 +287,45 @@ def _local_merge_loop(
     return merges
 
 
-def _learn_local(
-    docs: DataFrame, n_merges: int
+# Driver budget of the local merge loop. Measured on 46k and 175k
+# distinct random [a-z] words of length 2-12 with 200 merges
+# (tracemalloc peak over the collected Rows plus _local_merge_loop):
+# 1.3-1.4 KB of driver Python heap per distinct word. Assuming a 1 GiB
+# driver-heap budget, 500k words take ~0.7 GB, leaving headroom for
+# longer real-corpus words; larger vocabularies take the rounds.
+LOCAL_VOCAB_MAX = 500_000
+
+
+def bpe_train(
+    docs: DataFrame, n_merges: int = 8
 ) -> tuple[DataFrame, DataFrame]:
-    """The local strategy: ONE distributed corpus→word-frequency
-    reduction (the only corpus-sized work), the merge loop on the
-    driver over that vocabulary-sized table, then the trained
-    vocabulary re-derived DISTRIBUTED by replaying the frozen merges
-    over the same checkpointed word-frequency table (a map-only job —
-    the artifact never rides through the driver)."""
+    """Train once, return BOTH tokenizer artifacts: the merge table
+    (what :func:`bpe_learn` returns) and the trained vocabulary (the
+    word-frequency table after all merges, ``(syms, cnt)``). A
+    deployment persists these two tables and tokenizes every later
+    crawl with :func:`bpe_apply` — training never reruns on held-out
+    data.
+
+    The corpus is reduced ONCE to the checkpointed word-frequency
+    table, and at most ``LOCAL_VOCAB_MAX + 1`` of its rows reach the
+    driver. If the table fits, :func:`_local_merge_loop` learns every
+    merge there (one Spark round for any merge count) and the trained
+    vocabulary is re-derived distributed by replaying the frozen
+    merges over the checkpoint — a map-only job, so the artifact never
+    rides through the driver. If it does not fit,
+    :func:`_learn_rounds` runs over the same checkpoint, one merge per
+    Spark round and one driver row per round. Both give identical
+    artifacts.
+
+    ``n_merges=0`` is legal (characters-only tokenizer): the merge
+    table comes back empty with the usual schema."""
     wf = word_freq(docs).localCheckpoint(eager=False)
-    rows = [(r["syms"], r["cnt"]) for r in wf.collect()]
-    learned = _local_merge_loop(rows, n_merges)
+    rows = wf.limit(LOCAL_VOCAB_MAX + 1).collect()
+    if len(rows) > LOCAL_VOCAB_MAX:
+        bests, vocab = _learn_rounds(wf, n_merges)
+        merges = _merge_table(bests) if bests else _merges_from_rows(docs, [])
+        return merges, vocab
+    learned = _local_merge_loop([(r["syms"], r["cnt"]) for r in rows], n_merges)
     merges = _merges_from_rows(
         docs,
         [(i, l, r, m, c) for i, (l, r, m, c) in enumerate(learned, start=1)],
@@ -430,63 +337,20 @@ def _learn_local(
     return merges, vocab
 
 
-def bpe_train(
-    docs: DataFrame, n_merges: int = 8, strategy: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Train once, return BOTH tokenizer artifacts: the merge table
-    (what :func:`bpe_learn` returns) and the trained vocabulary (the
-    word-frequency table after all merges, ``(syms, cnt)``). A
-    deployment persists these two tables and tokenizes every later
-    crawl with :func:`bpe_apply` — training never reruns on held-out
-    data.
-
-    ``strategy``: ``"rounds"`` (collect-free sequential distributed
-    rounds), ``"batched"`` (distributed rounds, non-interacting
-    argmax-prefix batches), ``"local"`` (driver merge loop over the
-    vocabulary-sized word-frequency table — ONE Spark round; the
-    production path for real merge counts). ``None`` picks ``rounds``
-    up to ``LOCAL_MERGE_THRESHOLD`` merges, ``local`` above. All
-    three produce identical artifacts (pytest-pinned against each
-    other and the plain-Python reference).
-
-    ``n_merges=0`` is legal (characters-only tokenizer): the merge
-    table comes back empty with the usual schema."""
-    if strategy is None:
-        strategy = "rounds" if n_merges <= LOCAL_MERGE_THRESHOLD else "local"
-    if strategy == "rounds":
-        bests, vocab = _learn_rounds(docs, n_merges)
-        if not bests:
-            return _merges_from_rows(docs, []), vocab
-        return _merge_table(bests), vocab
-    if strategy == "batched":
-        rows, vocab, _ = _learn_rounds_batched(docs, n_merges)
-        return _merges_from_rows(docs, rows), vocab
-    if strategy == "local":
-        return _learn_local(docs, n_merges)
-    raise ValueError(f"unknown bpe_train strategy: {strategy!r}")
-
-
-def bpe_learn(
-    docs: DataFrame, n_merges: int = 8, strategy: str | None = None
-) -> DataFrame:
+def bpe_learn(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """Learn ``n_merges`` BPE merges → (step, left_sym, right_sym,
     merged, pair_cnt), step 1-based in learning order."""
-    merges, _ = bpe_train(docs, n_merges, strategy=strategy)
+    merges, _ = bpe_train(docs, n_merges)
     return merges
 
 
-def bpe_vocab(
-    docs: DataFrame,
-    n_merges: int = 8,
-    k: int = 20,
-    strategy: str | None = None,
-) -> DataFrame:
+def bpe_vocab(docs: DataFrame, n_merges: int = 8, k: int = 20) -> DataFrame:
     """The symbol inventory AFTER ``n_merges`` learned merges:
     top-``k`` symbols by corpus occurrence → (rank, sym,
     n_occurrences). Evidences merge APPLICATION (the encode side),
     not just learning; rank ties break symbol-ascending and top-k is
     a distributed TakeOrderedAndProject."""
-    _, vocab = bpe_train(docs, n_merges, strategy=strategy)
+    _, vocab = bpe_train(docs, n_merges)
     totals = (
         vocab.select(F.explode(F.split("syms", " ")).alias("sym"), "cnt")
         .groupBy("sym")
@@ -609,9 +473,7 @@ def bpe_apply(
     )
 
 
-def bpe_encode(
-    docs: DataFrame, n_merges: int = 8, strategy: str | None = None
-) -> DataFrame:
+def bpe_encode(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """Apply the learned tokenizer to its OWN training corpus — the
     encode pass a training-data pipeline runs right after training
     (the reference analog is the per-image dict lookup in
@@ -624,5 +486,5 @@ def bpe_encode(
     ``n_merges``-merge tokenizer, and tokens_per_word — the
     hash-portable compression ratio the sampling/packing operators
     consume as a cost signal."""
-    merges, vocab = bpe_train(docs, n_merges, strategy=strategy)
+    merges, vocab = bpe_train(docs, n_merges)
     return bpe_apply(docs, merges, vocab=vocab)

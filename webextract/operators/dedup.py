@@ -11,7 +11,7 @@ Scale design (the part that matters at 10^12 docs):
  * every similarity join goes through a BUCKET KEY (hash prefix, LSH
    band, or shingle id) so the shuffle is an equi-join — never an
    O(n^2) cross product;
- * signatures are fixed-width (k mins / one 16-bit int), so the
+ * signatures are fixed-width (k mins / four 16-bit bands), so the
    signature table is tiny next to the corpus and the pair-join
    shuffles signatures, not documents;
  * all hashing is md5 (deterministic, engine-portable) — the DuckDB
@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 MINHASH_K = 8          # minhash permutations
 LSH_BANDS = 4          # bands (rows per band = MINHASH_K // LSH_BANDS)
 SHINGLE_N = 3          # words per shingle
-SIMHASH_HEX = 4        # md5 hex chars per token → 16-bit simhash
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -282,39 +281,6 @@ def contamination_overlap(
     )
 
 
-def simhash_signatures(docs: DataFrame) -> DataFrame:
-    """16-bit SimHash per doc from md5-derived token bits (DEMO width —
-    saturates by pigeonhole at ≥10^6 docs; production dedup uses
-    :func:`simhash64_bands` / :func:`simhash_near_dup_pairs`).
-
-    Per token, the first 4 md5 hex digits give 16 bits; each bit votes
-    ±1; signature bit b is set when the vote is positive. All bit math
-    is integer arithmetic on hex-digit values (conv in Spark, hex cast
-    in DuckDB) so the oracle matches exactly. Near-dups share the
-    signature → dedup is a groupBy.
-    """
-    tok = docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("t"))
-    h = F.md5(F.col("t"))
-    digits = [
-        F.conv(F.substring(h, p + 1, 1), 16, 10).cast("int") for p in range(SIMHASH_HEX)
-    ]
-    # digit d contributes 4 bits: (d>>3)&1, (d>>2)&1, (d>>1)&1, d&1
-    bit_votes = []
-    for p, d in enumerate(digits):
-        for shift in (3, 2, 1, 0):
-            bit = F.shiftright(d, shift).bitwiseAND(F.lit(1))
-            bit_votes.append((p * 4 + (3 - shift), bit))
-    aggs = [
-        F.sum(bit * 2 - 1).alias(f"v{idx}") for idx, bit in bit_votes
-    ]
-    votes = tok.groupBy("doc_id").agg(*aggs)
-    sig = None
-    for idx, _ in bit_votes:
-        term = F.when(F.col(f"v{idx}") > 0, F.lit(1 << idx)).otherwise(F.lit(0))
-        sig = term if sig is None else sig + term
-    return votes.select("doc_id", sig.cast("int").alias("simhash"))
-
-
 SIMHASH64_BANDS = 4    # 4 bands × 16 bits = 64-bit signature
 
 
@@ -325,7 +291,7 @@ def simhash64_bands(docs: DataFrame) -> DataFrame:
     saturates by pigeonhole (everything collides), while 64 bits keep
     near-dup Hamming distance meaningful. Bits come from the first 16
     md5 hex digits per token (band b = digits 4b..4b+3); each bit votes
-    ±1 over the doc's tokens exactly like :func:`simhash_signatures`.
+    ±1 over the doc's tokens and is set when its vote sum is positive.
     Bands are kept as separate ints (not one 64-bit value) so the
     banded Hamming join below is a plain equi-join key and bit 63 never
     hits signed-overflow portability issues. One shuffle (the groupBy);

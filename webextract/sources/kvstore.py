@@ -49,7 +49,9 @@ truncation at crawl scale.
 from __future__ import annotations
 
 import os
+import shutil
 import struct
+import uuid
 from typing import Iterator, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -222,27 +224,54 @@ def kv_range(shards: DataFrame, lo: str, hi: str) -> DataFrame:
 
 
 def write_kv(shards: DataFrame, path: str) -> None:
-    """Persist a synth_kv_shards output as a directory store:
-    ``shard-<id>.skv`` files + a ``_manifest`` parquet. The payload
-    writes run ON EXECUTORS (``foreachPartition``) against shared
-    storage — the same pattern as any Spark file sink; nothing is
-    collected to the driver. The manifest is the commit point: it is
-    written only after every shard file is in place, so a failed write
-    never publishes a manifest naming missing shards."""
+    """Persist a synth_kv_shards output as a directory store: one
+    ``.skv`` file per shard + a ``_manifest`` parquet whose ``file``
+    column names them. The payload writes run ON EXECUTORS
+    (``foreachPartition``) against shared storage — the same pattern as
+    any Spark file sink; nothing is collected to the driver.
+
+    The manifest is the commit point, and nothing the live manifest
+    names is touched before the new one replaces it:
+     * shard files go first. Into a directory without a manifest they
+       take the plain name ``shard-<id>.skv``; over a live store every
+       name carries a fresh write id (``shard-<id>.<write-id>.skv``);
+     * the new manifest is staged beside the live one, then swapped in
+       by two renames (a reader between them finds no manifest and
+       fails loudly);
+     * only then are the shard files no manifest names deleted: the
+       old store's, and any a failed earlier write left behind.
+    A write that fails before the swap leaves the old store exactly as
+    it was."""
+    manifest = os.path.join(path, "_manifest")
+    tag = "." + uuid.uuid4().hex[:12] if os.path.exists(manifest) else ""
     os.makedirs(path, exist_ok=True)
+    named = shards.withColumn(
+        "file", F.format_string(f"shard-%06d{tag}.skv", "shard_id")
+    )
 
     def write_partition(rows) -> None:
         for r in rows:
-            fname = os.path.join(path, f"shard-{r.shard_id:06d}.skv")
+            fname = os.path.join(path, r.file)
             tmp = fname + ".tmp"
             with open(tmp, "wb") as f:
                 f.write(bytes(r.payload))
             os.replace(tmp, fname)  # atomic publish, no torn shards
 
-    shards.select("shard_id", "payload").foreachPartition(write_partition)
-    shards.select(*MANIFEST_COLS).write.mode("overwrite").parquet(
-        os.path.join(path, "_manifest")
-    )
+    named.select("file", "payload").foreachPartition(write_partition)
+    staged, old = manifest + ".staged", manifest + ".old"
+    named.select(*MANIFEST_COLS, "file").write.mode("overwrite").parquet(staged)
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.exists(manifest):
+        os.rename(manifest, old)
+    os.rename(staged, manifest)
+    shutil.rmtree(old, ignore_errors=True)
+    keep = {
+        r.file
+        for r in shards.sparkSession.read.parquet(manifest).select("file").collect()
+    }
+    for name in os.listdir(path):
+        if name.startswith("shard-") and name not in keep:
+            os.remove(os.path.join(path, name))
 
 
 def read_kv(
@@ -261,13 +290,12 @@ def read_kv(
         manifest = manifest.filter(
             (F.col("max_key") >= F.lit(lo)) & (F.col("min_key") <= F.lit(hi))
         )
-    shard_ids = [r.shard_id for r in manifest.select("shard_id").collect()]
-    if not shard_ids:
+    files = [os.path.join(path, r.file) for r in manifest.select("file").collect()]
+    if not files:
         return spark.createDataFrame([], PARSED_SCHEMA)
-    files = [os.path.join(path, f"shard-{sid:06d}.skv") for sid in shard_ids]
     blobs = spark.read.format("binaryFile").load(files)
     shards = blobs.select(
-        F.regexp_extract(F.input_file_name(), r"shard-(\d+)\.skv", 1)
+        F.regexp_extract(F.input_file_name(), r"/shard-(\d+)[^/]*$", 1)
         .cast("long")
         .alias("shard_id"),
         F.col("content").alias("payload"),
