@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from webextract.config import ExtractConfig
 from webextract.operators.layout import (
     block_facts,
     layout_regions,
@@ -59,28 +60,45 @@ def test_table_pre_and_footer_heading(spark):
     assert h3.is_boiler is True
 
 
-def test_block_facts_agree_with_extraction(spark):
-    """Keep decisions in the layout view match extraction's kept spans
-    (same decode→tokenize→score front-end)."""
-    from webextract.operators.extract import extract_pages
+def _template_page() -> str:
     from webextract.sources.pages import _TPL_HEAD, _TPL_MID, _TPL_TAIL
 
     body = (
         "A body paragraph with plenty of words so that the scorer "
         "keeps it comfortably above the drop threshold."
     )
-    html = _TPL_HEAD + "Doc 1 from x" + _TPL_MID + body + _TPL_TAIL
-    pages = _pages(spark, [("u", html)])
-    kept_layout = {
-        r.block_id
-        for r in block_facts(pages).filter(F.col("is_kept")).collect()
-    }
-    kept_extract = {
-        s.block_id
-        for s in extract_pages(pages).select(F.explode("spans").alias("s"))
-        .select("s.block_id").collect()
-    }
-    assert kept_layout == kept_extract
+    return _TPL_HEAD + "Doc 1 from x" + _TPL_MID + body + _TPL_TAIL
+
+
+def _double_encoded_page() -> str:
+    # utf-8 bytes read as latin-1: the garbled text is long enough to be
+    # kept, the repaired 20 characters are not
+    garbled = "résumé déjà fiancée.".encode("utf-8").decode("latin-1")
+    return f"<html><body><div>{garbled}</div></body></html>"
+
+
+def test_block_facts_agree_with_extraction(spark):
+    """Keep decisions in the layout view match extraction's kept spans
+    (same prologue → tokenize → score front-end), also when the
+    prologue repairs mojibake."""
+    from webextract.operators.extract import extract_pages
+
+    for case, html, cfg in (
+        ("template", _template_page(), ExtractConfig()),
+        ("mojibake", _double_encoded_page(), ExtractConfig(fix_mojibake=True)),
+    ):
+        pages = _pages(spark, [("u", html)])
+        kept_layout = {
+            r.block_id
+            for r in block_facts(pages, cfg).filter(F.col("is_kept")).collect()
+        }
+        kept_extract = {
+            s.block_id
+            for s in extract_pages(pages, cfg)
+            .select(F.explode("spans").alias("s"))
+            .select("s.block_id").collect()
+        }
+        assert kept_layout == kept_extract, case
 
 
 def test_layout_summary_rollup(spark):

@@ -79,12 +79,14 @@ def test_whole_stage_codegen_in_jvm_paths(spark):
 
 
 def test_tables_scan_prunes_and_single_arrow_stage(spark):
-    # cell fan-out happens inside ONE MapInArrow stage (no explode
-    # shuffle); the scan reads only what page synthesis needs
-    plan = plan_of(entrymod.q_tables(spark, SF))
-    assert plan.count("MapInArrow") == 1
-    read_schema = plan.split("ReadSchema:")[-1].splitlines()[0]
-    assert "lang" not in read_schema  # pruned (synthesis needs doc_id/text/source)
+    # cell / block fan-out happens inside ONE MapInArrow stage (no
+    # explode shuffle); the scan reads only what page synthesis needs
+    for query in (entrymod.q_tables, entrymod.q_layout_regions):
+        plan = plan_of(query(spark, SF))
+        assert plan.count("MapInArrow") == 1, query.__name__
+        read_schema = plan.split("ReadSchema:")[-1].splitlines()[0]
+        # pruned (synthesis needs doc_id/text/source)
+        assert "lang" not in read_schema, query.__name__
 
 
 def test_simhash_pairs_is_banded_equi_join(spark):
@@ -219,9 +221,10 @@ def test_fetch_waves_single_corpus_exchange(spark):
 
 
 def test_kie_pairs_single_arrow_stage_no_shuffle(spark):
-    plan = plan_of(entrymod.q_kie_pairs(spark, SF))
-    assert plan.count("MapInArrow") == 1
-    assert "Exchange" not in plan
+    for query in (entrymod.q_kie_pairs, entrymod.q_list_items):
+        plan = plan_of(query(spark, SF))
+        assert plan.count("MapInArrow") == 1, query.__name__
+        assert "Exchange" not in plan, query.__name__
 
 
 def test_kmeans_round_shapes(spark):

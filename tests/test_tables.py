@@ -5,6 +5,8 @@ fan-out + oracle equivalence is covered by q:tables in the driver gate.
 
 from __future__ import annotations
 
+import pytest
+
 from webextract.functions.tables import parse_tables
 
 
@@ -233,3 +235,24 @@ def test_cell_cap_bounds_hostile_pages():
     html = "<table>" + "<tr><td>a</td><td>b</td></tr>" * (_MAX_CELLS // 2 + 10) + "</table>"
     cs = parse_tables(html)
     assert len(cs["table_id"]) == _MAX_CELLS
+
+
+def test_unparseable_marked_section_keeps_cells_before_it():
+    # html.parser raises AssertionError on ``<![foo[``; the cells parsed
+    # before the declaration stand
+    g = grid("<table><tr><td>a</td><td>b</td></tr></table><![foo[ x ]]>"
+             "<table><tr><td>c</td></tr></table>")
+    assert g == {(0, 0, 0): "a", (0, 0, 1): "b"}
+
+
+def test_parser_bug_propagates(monkeypatch):
+    # only html.parser's AssertionError is tolerated: a bug in the table
+    # state machine must not silently truncate the page
+    from webextract.functions import tables
+
+    def broken(self, data):
+        raise KeyError(data)
+
+    monkeypatch.setattr(tables._TableParser, "handle_data", broken)
+    with pytest.raises(KeyError):
+        parse_tables("<table><tr><td>x</td></tr></table>")

@@ -4,6 +4,8 @@ Direct per-operator tests — a discipline the reference lacks
 (SURVEY.md §5.3); its correctness rides on e2e goldens only.
 """
 
+import pytest
+
 from webextract.functions.tokenizer import tokenize_blocks
 
 
@@ -63,6 +65,11 @@ def test_boiler_ancestry_flag():
 def test_malformed_does_not_raise():
     b = tokenize_blocks("<div><p>one<div>two</p></div></span></p>")
     assert "one" in b["text"] and "two" in b["text"]
+    # html.parser raises AssertionError on ``<![foo[``: the blocks
+    # flushed before the declaration stand
+    page = "<body><p>kept before</p><![foo[ x ]]><p>after</p></body>"
+    for engine in ("auto", "reference"):
+        assert tokenize_blocks(page, engine)["text"][0] == "kept before"
 
 
 def test_nested_block_tags_flush():
@@ -133,3 +140,16 @@ def test_sink_spacing_voids_never_enter_stack(events):
         elif kind == "end":
             sink.endtag(tag)
     assert not any(t in _SPACING_VOID for t in sink.stack)
+
+
+def test_sink_bug_propagates_from_reference_path(monkeypatch):
+    # only html.parser's AssertionError is tolerated: a bug in the sink
+    # must not silently truncate the page
+    from webextract.functions import tokenizer
+
+    def broken(self, d):
+        raise KeyError(d)
+
+    monkeypatch.setattr(tokenizer._BlockSink, "data", broken)
+    with pytest.raises(KeyError):
+        tokenize_blocks("<body><p>text</p></body>", engine="reference")

@@ -1,4 +1,5 @@
-"""The extraction loop drops cached zip finders and imports still work.
+"""The page loop under every html operator drops cached zip finders and
+imports still work.
 
 In-process, no Spark: a zip archive on ``sys.path`` stands in for
 ``pyspark.zip`` on a worker's path.
@@ -11,7 +12,7 @@ import zipimport
 import pyarrow as pa
 
 from webextract.config import DEFAULT_CONFIG
-from webextract.operators.extract import _extract_batches
+from webextract.operators.extract import _extract_record_batch, _page_batches
 
 
 def _zip_finders() -> list[str]:
@@ -41,7 +42,11 @@ def test_extract_loop_drops_zip_finders_and_imports_still_work(tmp_path):
                 "html": [b"<html><body><p>Some main text here.</p></body></html>"],
             }
         )
-        out = list(_extract_batches(iter([rb]), DEFAULT_CONFIG))
+        out = list(
+            _page_batches(
+                iter([rb]), lambda b: _extract_record_batch(b, DEFAULT_CONFIG)
+            )
+        )
         assert [b.num_rows for b in out] == [1]
         assert _zip_finders() == []
 

@@ -18,6 +18,27 @@ from webextract.functions.scorer import score_blocks
 from webextract.functions.tokenizer import tokenize_blocks
 
 
+def page_text(raw: bytes | None, cfg: ExtractConfig) -> tuple[str, int, bool]:
+    """The one html prologue of every page operator: raw bytes →
+    ``(html_text, bytes_in, truncated)``. None reads as empty bytes,
+    bytes past ``cfg.max_html_bytes`` are cut, the rest is decoded and,
+    with ``cfg.fix_mojibake``, repaired."""
+    if raw is None:
+        raw = b""
+    bytes_in = len(raw)
+    truncated = bytes_in > cfg.max_html_bytes
+    if truncated:
+        raw = raw[: cfg.max_html_bytes]
+    html_text = decode_html(raw)
+    if cfg.fix_mojibake:
+        # classify-then-correct, the cls-stage analog (predict_cls.py):
+        # repairs double-encoded pages, leaves healthy pages untouched
+        from webextract.functions.mojibake import fix_mojibake
+
+        html_text = fix_mojibake(html_text)
+    return html_text, bytes_in, truncated
+
+
 def extract_page(raw: bytes | None, cfg: ExtractConfig) -> dict[str, Any]:
     """Extract main content from one raw html document (total function).
 
@@ -26,20 +47,7 @@ def extract_page(raw: bytes | None, cfg: ExtractConfig) -> dict[str, Any]:
     the empty result (the empty-det early-exit analog,
     predict_system.py:79-83).
     """
-    if raw is None:
-        raw = b""
-    bytes_in = len(raw)
-    truncated = False
-    if bytes_in > cfg.max_html_bytes:
-        raw = raw[: cfg.max_html_bytes]
-        truncated = True
-    html_text = decode_html(raw)
-    if cfg.fix_mojibake:
-        # classify-then-correct, the cls-stage analog (predict_cls.py):
-        # repairs double-encoded pages, leaves healthy pages untouched
-        from webextract.functions.mojibake import fix_mojibake
-
-        html_text = fix_mojibake(html_text)
+    html_text, bytes_in, truncated = page_text(raw, cfg)
     blocks = tokenize_blocks(html_text)
     if cfg.rtl_reverse:
         # per-block segment reversal BEFORE scoring/merge: lengths are

@@ -187,7 +187,9 @@ def parse_tables(html_text: str) -> dict[str, list]:
     try:
         p.feed(html_text)
         p.close()
-    except Exception:
+    except AssertionError:
+        # html.parser's only signal for an unparseable declaration
+        # (e.g. ``<![foo[``): the cells before it stand
         pass
     while p.table_stack:  # EOF with open tables
         p._close_table()

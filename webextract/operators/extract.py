@@ -16,7 +16,11 @@ Arrow batch → write. Design points (SURVEY.md §4):
  * per-partition lineage rows (the ``time_dict`` analog,
    predict_system.py:68-119) are emitted from the same UDF as extra
    rows with a discriminator column and split afterwards — no second
-   pass over the html.
+   pass over the html;
+ * the page loop is shared: :func:`_page_batches` is the one partition
+   loop and :func:`webextract.functions.extract.page_text` the one html
+   prologue of every html operator — layout, tables and KIE emit their
+   rows through :func:`map_page_rows`.
 """
 
 from __future__ import annotations
@@ -24,7 +28,7 @@ from __future__ import annotations
 import sys
 import time
 import zipimport
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -35,7 +39,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
-from webextract.functions.extract import extract_page
+from webextract.functions.extract import extract_page, page_text
 
 SPAN_TYPE = T.StructType(
     [
@@ -158,16 +162,50 @@ def _drop_zip_finders() -> None:
             del cache[path]
 
 
-def _extract_batches(
-    batches: Iterator[pa.RecordBatch], cfg: ExtractConfig
+def _page_batches(
+    batches: Iterator[pa.RecordBatch],
+    build: Callable[[pa.RecordBatch], pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
-    """The one extraction loop: (url, html) batches → extracted batches,
-    skipping empty input batches. Runs once per task partition, so it
-    also drops the worker's zip finders (:func:`_drop_zip_finders`)."""
+    """The one partition loop of every html operator: (url, html)
+    batches → ``build(rb)``, skipping empty input batches. Runs once per
+    task partition, so it also drops the worker's zip finders
+    (:func:`_drop_zip_finders`)."""
     _drop_zip_finders()
     for rb in batches:
         if rb.num_rows:
-            yield _extract_record_batch(rb, cfg)
+            yield build(rb)
+
+
+def map_page_rows(
+    pages: DataFrame,
+    schema: T.StructType,
+    page_rows: Callable[[str], Iterable[tuple]],
+    cfg: ExtractConfig,
+) -> DataFrame:
+    """pages(url, html, ...) → ``schema`` rows in ONE ``mapInArrow``
+    crossing. Each page's html goes through :func:`page_text`, the
+    prologue extraction uses, and ``page_rows(html_text)`` returns that
+    page's rows; each is emitted as ``(url, *row)``, so field 0 of
+    ``schema`` is the url. The Arrow schema is derived from ``schema``.
+    The fan-out happens inside the batch: no explode, no shuffle."""
+    pa_schema = to_arrow_schema(schema)
+
+    def build(rb: pa.RecordBatch) -> pa.RecordBatch:
+        rows = [
+            (url, *row)
+            for url, raw in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist())
+            for row in page_rows(page_text(raw, cfg)[0])
+        ]
+        cols = list(zip(*rows)) or [()] * len(pa_schema)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
+            schema=pa_schema,
+        )
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _page_batches(batches, build)
+
+    return pages.select("url", "html").mapInArrow(run, schema)
 
 
 def extract_pages(
@@ -193,7 +231,7 @@ def extract_pages(
         src = src.sortWithinPartitions(F.length("html"))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _extract_batches(batches, cfg)
+        return _page_batches(batches, lambda rb: _extract_record_batch(rb, cfg))
 
     return src.mapInArrow(run, EXTRACTED_SCHEMA)
 
@@ -226,7 +264,9 @@ def extract_pages_with_lineage(
         urls_in = 0
         bytes_in = 0
         blocks_kept = 0
-        for out in _extract_batches(batches, cfg):
+        for out in _page_batches(
+            batches, lambda rb: _extract_record_batch(rb, cfg)
+        ):
             n = out.num_rows
             urls_in += n
             bytes_in += int(pc.sum(out.column("bytes_in")).as_py() or 0)

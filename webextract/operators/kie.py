@@ -24,25 +24,23 @@ reading-order RE):
  - a ``dt`` never followed by a ``dd`` emits nothing;
  - ``pair_id`` is the per-page 1-based emission sequence.
 
-Scale shape: ONE ``mapInArrow`` crossing per operator (the same
-decode → tokenize front-end as extraction, so block order agrees
-exactly with the extraction spans); the walk is O(blocks) per page
-inside the batch — no shuffle at all, the output is url-partitioned
-exactly like its input. Everything downstream (grouping, joins
-against extraction) stays JVM-side.
+Scale shape: ONE ``mapInArrow`` crossing per operator, run by
+:func:`webextract.operators.extract.map_page_rows` — extraction's own
+page prologue and partition loop, so block order agrees exactly with
+the extraction spans; the walk is O(blocks) per page inside the
+batch — no shuffle at all, the output is url-partitioned exactly like
+its input. Everything downstream (grouping, joins against extraction)
+stays JVM-side.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
-from webextract.functions.htmlnorm import decode_html
 from webextract.functions.tokenizer import tokenize_blocks
+from webextract.operators.extract import map_page_rows
 
 KIE_PAIRS_SCHEMA = T.StructType(
     [
@@ -61,9 +59,6 @@ LIST_ITEMS_SCHEMA = T.StructType(
         T.StructField("text", T.StringType(), False),
     ]
 )
-
-# Spark type → the pyarrow type the RecordBatch columns are built with
-_PA_TYPES = {T.StringType(): pa.string(), T.IntegerType(): pa.int32()}
 
 
 def pair_blocks(tags: list[str], texts: list[str]) -> list[tuple[str, str]]:
@@ -113,64 +108,21 @@ def group_list_items(
     return out
 
 
-def _page_walk_operator(
-    pages: DataFrame,
-    walker: Callable[[list[str], list[str]], list[tuple]],
-    schema: T.StructType,
-    cfg: ExtractConfig,
-) -> DataFrame:
-    """THE shared page-walk shape: decode → tokenize each page inside
-    one ``mapInArrow`` crossing, run ``walker`` over the (tag, text)
-    block stream, and emit ``(url, *walker_row)`` under ``schema``
-    (field 0 must be the url; the pyarrow schema is DERIVED from the
-    Spark schema so the two can never drift). Both KIE extractors are
-    instances; the decode/truncate prologue is identical to
-    extraction's, so block order agrees with the extraction spans."""
-    src = pages.select("url", "html")
-    pa_schema = pa.schema(
-        [(f.name, _PA_TYPES[f.dataType]) for f in schema.fields]
-    )
-    n_out = len(schema.fields)
+def _pair_rows(html_text: str) -> list[tuple]:
+    blocks = tokenize_blocks(html_text)
+    pairs = pair_blocks(blocks["tag"], blocks["text"])
+    return [(i, k, v) for i, (k, v) in enumerate(pairs, start=1)]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            cols: list[list] = [[] for _ in range(n_out)]
-            for url, raw in zip(
-                rb.column(0).to_pylist(), rb.column(1).to_pylist()
-            ):
-                if raw is None:
-                    raw = b""
-                if len(raw) > cfg.max_html_bytes:
-                    raw = raw[: cfg.max_html_bytes]
-                blocks = tokenize_blocks(decode_html(raw))
-                for row in walker(blocks["tag"], blocks["text"]):
-                    cols[0].append(url)
-                    for i, v in enumerate(row, start=1):
-                        cols[i].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(c, type=f.type)
-                    for c, f in zip(cols, pa_schema)
-                ],
-                schema=pa_schema,
-            )
 
-    return src.mapInArrow(run, schema)
+def _list_rows(html_text: str) -> list[tuple]:
+    blocks = tokenize_blocks(html_text)
+    return group_list_items(blocks["tag"], blocks["text"])
 
 
 def kie_pairs(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """pages(url, html, ...) → (url, pair_id, key, value): every
     definition-list key with each of its reading-order values."""
-
-    def walk(tags: list[str], texts: list[str]) -> list[tuple]:
-        return [
-            (i, k, v)
-            for i, (k, v) in enumerate(pair_blocks(tags, texts), start=1)
-        ]
-
-    return _page_walk_operator(pages, walk, KIE_PAIRS_SCHEMA, cfg)
+    return map_page_rows(pages, KIE_PAIRS_SCHEMA, _pair_rows, cfg)
 
 
 def list_items(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -178,6 +130,4 @@ def list_items(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFra
     list item with its list membership and 1-based position — the
     PP-Structure list-REGION recovery at item granularity. Grouping
     semantics: :func:`group_list_items`."""
-    return _page_walk_operator(
-        pages, group_list_items, LIST_ITEMS_SCHEMA, cfg
-    )
+    return map_page_rows(pages, LIST_ITEMS_SCHEMA, _list_rows, cfg)

@@ -8,25 +8,27 @@ deterministic DOM evidence the tokenizer already produces — tag, link
 density, boilerplate status — so typing is a codegen CASE over block
 facts, not a second Python pass.
 
-Scale shape: ONE ``mapInArrow`` crossing per Arrow batch (the same
-budget as extraction — the HTML parse is the one unavoidable Python
-stage, SURVEY.md §2.10); everything downstream of the block facts
-(region CASE, rollups) is JVM built-ins inside whole-stage codegen.
+Scale shape: ONE ``mapInArrow`` crossing per Arrow batch, run by
+:func:`webextract.operators.extract.map_page_rows` — extraction's own
+page prologue and partition loop, so the block facts come from the
+same decoded text as the extraction spans (the HTML parse is the one
+unavoidable Python stage, SURVEY.md §2.10); everything downstream of
+the block facts (region CASE, rollups) is JVM built-ins inside
+whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
-from webextract.functions.htmlnorm import decode_html
 from webextract.functions.scorer import score_blocks
 from webextract.functions.tokenizer import tokenize_blocks
+from webextract.operators.extract import map_page_rows
 
 # raw per-block facts emitted by the UDF (region typing happens JVM-side)
 BLOCK_FACTS_SCHEMA = T.StructType(
@@ -45,6 +47,9 @@ BLOCK_FACTS_SCHEMA = T.StructType(
     ]
 )
 
+# the facts copied from the tokenizer's block table; score and is_kept
+# come from the scorer
+_TOKENIZER_COLS = BLOCK_FACTS_SCHEMA.fieldNames()[1:-2]
 _HEADINGS = ("h1", "h2", "h3", "h4", "h5", "h6")
 _TABLE_TAGS = ("table", "tr", "td", "th", "caption")
 
@@ -54,58 +59,20 @@ def block_facts(pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFr
     tokenizer/scorer facts (ALL blocks, boilerplate included — unlike
     the extraction spans, which carry only kept content blocks).
 
-    Same front-end as :func:`webextract.functions.extract.extract_page`
-    (decode → tokenize → score) so block ids, tags and keep decisions
-    agree exactly with extraction; the fan-out to block rows happens
-    inside the same Arrow batch, no second parse.
+    Runs on :func:`map_page_rows`, so the decode front-end is
+    extraction's :func:`page_text`; tokenize → score then matches
+    :func:`webextract.functions.extract.extract_page`, and block ids,
+    tags and keep decisions agree exactly with extraction.
     """
-    src = pages.select("url", "html")
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            urls: list[str] = []
-            cols: dict[str, list] = {
-                "block_id": [], "tag": [], "depth": [], "text_len": [],
-                "link_text_len": [], "n_links": [], "is_boiler": [],
-                "is_pre": [],
-            }
-            scores_out: list[float] = []
-            kept_out: list[bool] = []
-            for url, raw in zip(
-                rb.column(0).to_pylist(), rb.column(1).to_pylist()
-            ):
-                if raw is None:
-                    raw = b""
-                if len(raw) > cfg.max_html_bytes:
-                    raw = raw[: cfg.max_html_bytes]
-                blocks = tokenize_blocks(decode_html(raw))
-                scores, keep = score_blocks(blocks, cfg)
-                n = len(blocks["block_id"])
-                urls.extend([url] * n)
-                for k in cols:
-                    cols[k].extend(blocks[k])
-                scores_out.extend(float(s) for s in scores)
-                kept_out.extend(bool(k) for k in keep)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, type=pa.string()),
-                    pa.array(cols["block_id"], type=pa.int32()),
-                    pa.array(cols["tag"], type=pa.string()),
-                    pa.array(cols["depth"], type=pa.int32()),
-                    pa.array(cols["text_len"], type=pa.int32()),
-                    pa.array(cols["link_text_len"], type=pa.int32()),
-                    pa.array(cols["n_links"], type=pa.int32()),
-                    pa.array(cols["is_boiler"], type=pa.bool_()),
-                    pa.array(cols["is_pre"], type=pa.bool_()),
-                    pa.array(scores_out, type=pa.float64()),
-                    pa.array(kept_out, type=pa.bool_()),
-                ],
-                [f.name for f in BLOCK_FACTS_SCHEMA.fields],
-            )
+    def rows(html_text: str) -> Iterable[tuple]:
+        blocks = tokenize_blocks(html_text)
+        scores, keep = score_blocks(blocks, cfg)
+        return zip(
+            *(blocks[c] for c in _TOKENIZER_COLS), scores.tolist(), keep.tolist()
+        )
 
-    return src.mapInArrow(run, BLOCK_FACTS_SCHEMA)
+    return map_page_rows(pages, BLOCK_FACTS_SCHEMA, rows, cfg)
 
 
 def region_type_col(

@@ -3,7 +3,8 @@
 The distributed form of the reference's table pipeline
 (ppstructure/table/predict_table.py:82-106 + matcher.py:99-138): one
 ``mapInArrow`` stage parses each page's DOM tables and fans out one row
-per cell. Plan shape mirrors the extraction operator (extract.py:151):
+per cell. It runs on :func:`webextract.operators.extract.map_page_rows`,
+so the plan shape, page prologue and partition loop are extraction's:
 scan pruned to (url, html), one JVM↔Python crossing per Arrow batch,
 columnar pyarrow construction (no pandas objects). Fan-out happens
 INSIDE the UDF (a page yields 0..N cell rows in the same batch), so no
@@ -14,15 +15,14 @@ the page partitioning, which the caller controls via
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
-from webextract.functions.htmlnorm import decode_html
 from webextract.functions.tables import parse_tables
+from webextract.operators.extract import map_page_rows
 
 TABLE_CELLS_SCHEMA = T.StructType(
     [
@@ -37,17 +37,12 @@ TABLE_CELLS_SCHEMA = T.StructType(
     ]
 )
 
-_CELL_COLS = ("table_id", "row_id", "col_id", "cell_text", "is_header",
-              "colspan", "rowspan")
-_PA_TYPES = {
-    "table_id": pa.int32(),
-    "row_id": pa.int32(),
-    "col_id": pa.int32(),
-    "cell_text": pa.string(),
-    "is_header": pa.bool_(),
-    "colspan": pa.int32(),
-    "rowspan": pa.int32(),
-}
+_CELL_COLS = TABLE_CELLS_SCHEMA.fieldNames()[1:]
+
+
+def _cell_rows(html_text: str) -> Iterable[tuple]:
+    cells = parse_tables(html_text)
+    return zip(*(cells[c] for c in _CELL_COLS))
 
 
 def table_cells(
@@ -56,30 +51,4 @@ def table_cells(
     """pages(url, html, ...) → cells(url, table_id, row_id, col_id,
     cell_text, is_header, colspan, rowspan), one row per table cell in
     document order. Pages without tables contribute no rows."""
-    src = pages.select("url", "html")
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            urls: list[str] = []
-            out: dict[str, list] = {c: [] for c in _CELL_COLS}
-            for url, raw in zip(
-                rb.column(0).to_pylist(), rb.column(1).to_pylist()
-            ):
-                if raw is None:
-                    continue
-                if len(raw) > cfg.max_html_bytes:
-                    raw = raw[: cfg.max_html_bytes]
-                cells = parse_tables(decode_html(raw))
-                n = len(cells["table_id"])
-                urls.extend([url] * n)
-                for c in _CELL_COLS:
-                    out[c].extend(cells[c])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, type=pa.string())]
-                + [pa.array(out[c], type=_PA_TYPES[c]) for c in _CELL_COLS],
-                ["url", *_CELL_COLS],
-            )
-
-    return src.mapInArrow(run, TABLE_CELLS_SCHEMA)
+    return map_page_rows(pages, TABLE_CELLS_SCHEMA, _cell_rows, cfg)
