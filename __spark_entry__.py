@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from webextract.operators import (
     bpe,
     dedup,
-    events,
     kmeans,
     metrics,
     multimodal,
@@ -74,10 +73,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spread(_docs(spark, sf_dir), "doc_id")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1554,71 +1549,6 @@ def q_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_gif_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL GIF pixel decode under the oracle gate: full valid GIF89a
-    payloads (variable palette sizes 4/8/16 so the LZW minimum code
-    size varies; odd doc_ids INTERLACED so the four-pass reorder runs)
-    are synthesized from deterministic index/palette formulas, then
-    decoded by the hand-rolled variable-width LZW codec
-    (functions/gif.py — the ``check_and_read`` GIF branch,
-    ppocr/utils/utility.py:95-104). The oracle states the channel sums
-    straight from the planted arithmetic — ground truth the decoder
-    cannot mirror."""
-    from webextract.operators.multimodal import pixel_stats, synth_pixel_gif
-
-    return pixel_stats(synth_pixel_gif(_docs(spark, sf_dir)))
-
-
-def q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL animated-GIF frame fan-out: every image block of a
-    multi-frame container (doc_id%3+1 frames, frame f's index formula
-    offset by 7f) is LZW-decoded and emitted as one exact-integer
-    channel-sum row — the pixel-true analog of the reference's
-    multi-page explode (``check_and_read`` PDF branch,
-    ppocr/utils/utility.py:110-120)."""
-    from webextract.operators.multimodal import (
-        gif_frame_stats,
-        synth_pixel_gif,
-    )
-
-    return gif_frame_stats(synth_pixel_gif(_docs(spark, sf_dir),
-                                           multi_frame=True))
-
-
-def q_jpeg_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG pixel decode under the oracle gate (the
-    DecodeImage graft, ppocr/data/imaug/operators.py:30-68): full
-    valid JFIF streams — canonical Huffman entropy coding, 4:4:4 and
-    4:2:0 sampling, restart markers — are synthesized from
-    constant-block formulas that survive the lossy transform exactly
-    (one integer DC coefficient per block under flat quantization),
-    then decoded by the from-scratch T.81 codec (functions/jpeg.py:
-    Huffman → dequant → IDCT → YCbCr→RGB, no image library). The
-    oracle states the channel sums straight from the planted block
-    values — ground truth the decoder cannot mirror."""
-    from webextract.operators.multimodal import (
-        pixel_stats,
-        synth_pixel_jpeg,
-    )
-
-    return pixel_stats(synth_pixel_jpeg(_docs_spread(spark, sf_dir)))
-
-
-def q_pcm_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio SAMPLE decode: 16-bit-PCM WAV payloads (synth_wav —
-    spec-correct RIFF layout, doc text as the data chunk) have every
-    sample read back JVM-side as a little-endian signed int16 and
-    folded to (n_samples, sum, peak, mean) in ONE in-row aggregate —
-    no Python worker, no explode. The oracle recomputes the identical
-    statistics straight from the UTF-8 bytes of the text column
-    (per-byte hex arithmetic), i.e. from what was PLANTED, not from
-    the WAV container the operator must parse."""
-    from webextract.operators import multimodal
-
-    docs = _docs_spread(spark, sf_dir).filter(F.col("text").isNotNull())
-    return multimodal.pcm_samples(multimodal.synth_wav(docs))
-
-
 def q_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PDF text extraction under the oracle gate — the PDF branch
     of the reference's multi-format dispatch (``check_and_read``,
@@ -1869,18 +1799,6 @@ def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.redact_pii(planted)
 
 
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return events.hourly_rollup(_events(spark, sf_dir))
-
-
-def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return events.sessionize(_events(spark, sf_dir))
-
-
-def q_events_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return events.top_users_by_value(_events(spark, sf_dir))
-
-
 def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixed-format media table → Arrow-batched header decode. Two of
     the three formats are REAL byte layouts (PNG IHDR, GIF logical
@@ -1975,33 +1893,6 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mean_byte",
         F.posexplode("byte_hist").alias("bin", "bin_count"),
     ).withColumn("bin", F.col("bin").cast("long"))
-
-
-def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WAV header decode: spec-correct RIFF/WAVE payloads built
-    JVM-side, fields recovered by little-endian byte math in codegen.
-    The oracle states the planted channel/rate/duration arithmetic as
-    ground truth — the parser must recover it from the real bytes."""
-    media = multimodal.synth_wav(_docs(spark, sf_dir))
-    return multimodal.wav_metadata(media)
-
-
-def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling: header peek + every-10th-frame fan-out
-    with per-frame timestamps (the video analog of the PDF→pages
-    explode; the per-frame decode stage is codec-gated)."""
-    media = multimodal.synth_video(_docs(spark, sf_dir))
-    return multimodal.sample_frames(media, every_k=10)
-
-
-def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL RIFF/AVI header decode (the video sibling of audio_meta):
-    spec-correct containers built JVM-side, every consumed avih field
-    recovered by little-endian byte math in codegen. The oracle states
-    the planted frame/fps/dimension arithmetic as ground truth —
-    duration is one IEEE division of exact ints."""
-    media = multimodal.synth_video(_docs(spark, sf_dir))
-    return multimodal.avi_metadata(media)
 
 
 def q_pipeline_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2186,18 +2077,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # stdlib codec, ground-truth pixel-formula oracles)
         "png_decode": q_png_decode,
         "png_resize": q_png_resize,
-        # gif_pixels/gif_frames: new (REAL variable-width LZW decode,
-        # interlace + local-palette + multi-frame paths, ground-truth
-        # index/palette-formula oracles)
-        "gif_pixels": q_gif_pixels,
-        "gif_frames": q_gif_frames,
-        # jpeg_pixels: new (REAL baseline-JPEG decode — Huffman +
-        # dequant + IDCT + color convert — on constant-block fixtures
-        # that are exact under flat quantization)
-        "jpeg_pixels": q_jpeg_pixels,
-        # pcm_samples: new (REAL 16-bit PCM sample decode, one in-row
-        # JVM aggregate; oracle from the planted bytes)
-        "pcm_samples": q_pcm_samples,
         # bpe_*: learning loop refactored (shared rounds, strategies);
         # encode rerouted through the frozen-apply path
         "bpe_merges": q_bpe_merges,
@@ -2236,8 +2115,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nb_classify": q_nb_classify,
         "media_decode": q_media_decode,
         "media_features": q_media_features,
-        "audio_meta": q_audio_meta,
-        "frame_sample": q_frame_sample,
         "links": q_links,
         "host_graph": q_host_graph,
         "anchor_texts": q_anchor_texts,
@@ -2251,7 +2128,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "table_eval": q_table_eval,
         "ann_lsh": q_ann_lsh,
         "emb_near_dup": q_emb_near_dup,
-        # ---- position 51+: unchanged this round; every entry below
+        # ---- unchanged in round 5; every entry below
         # carries a hash-exact driver row from r1-r4 ----
         "ann_ivf": q_ann_ivf,
         "semdedup": q_semdedup,
@@ -2260,7 +2137,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_frontier": q_crawl_frontier,
         "fetch_schedule": q_fetch_schedule,
         "change_rate": q_change_rate,
-        "video_meta": q_video_meta,
         "kmeans_assign": q_kmeans_assign,
         "media_pages": q_media_pages,
         "union_sample": q_union_sample,
@@ -2268,8 +2144,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality": q_quality,
         "langid": q_langid,
         "fingerprints": q_fingerprints,
-        "events_hourly": q_events_hourly,
-        "events_sessions": q_events_sessions,
         "chunk_texts": q_chunk_texts,
         "extract": q_extract,
         "extract_markdown": q_extract_markdown,
@@ -3860,129 +3734,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
                    TRUE AS ok
             FROM s
         """,
-        # ground truth for the REAL GIF LZW decode: palette entry
-        # idx=(id+5x+3y)%nc maps to channels (id+17i, id+29i, id+43i)
-        # % 256 — the planted formulas summed over each image's grid;
-        # the decoder (sub-block walk + variable-width LZW + palette +
-        # interlace inversion) cannot mirror this.
-        "gif_pixels": """
-            WITH p AS (SELECT doc_id AS media_id,
-                              doc_id % 8 + 1 AS w, doc_id % 6 + 1 AS h,
-                              1 << (doc_id % 3 + 2) AS nc
-                       FROM documents),
-            g AS (SELECT media_id, w, h, nc, unnest(range(h)) AS y FROM p),
-            c AS (SELECT media_id, w, h, nc, y, unnest(range(w)) AS x FROM g),
-            i AS (SELECT media_id, w, h,
-                         (media_id + 5 * x + 3 * y) % nc AS idx
-                  FROM c),
-            s AS (SELECT media_id, MIN(w) AS w, MIN(h) AS h,
-                         COUNT(*) AS n_px,
-                         SUM((media_id + 17 * idx) % 256) AS sum_r,
-                         SUM((media_id + 29 * idx) % 256) AS sum_g,
-                         SUM((media_id + 43 * idx) % 256) AS sum_b
-                  FROM i GROUP BY media_id)
-            SELECT media_id,
-                   CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-                   CAST(n_px AS BIGINT) AS n_px,
-                   CAST(sum_r AS BIGINT) AS sum_r,
-                   CAST(sum_g AS BIGINT) AS sum_g,
-                   CAST(sum_b AS BIGINT) AS sum_b,
-                   CAST(sum_r + sum_g + sum_b AS DOUBLE) / (3 * n_px)
-                       AS mean_px,
-                   TRUE AS ok
-            FROM s
-        """,
-        # multi-frame fan-out: frame f of image id offsets the index
-        # formula by 7f; one row per (image, frame)
-        "gif_frames": """
-            WITH p AS (SELECT doc_id AS media_id,
-                              doc_id % 8 + 1 AS w, doc_id % 6 + 1 AS h,
-                              1 << (doc_id % 3 + 2) AS nc,
-                              doc_id % 3 + 1 AS nf
-                       FROM documents),
-            f AS (SELECT media_id, w, h, nc, unnest(range(nf)) AS fid
-                  FROM p),
-            g AS (SELECT media_id, w, h, nc, fid, unnest(range(h)) AS y
-                  FROM f),
-            c AS (SELECT media_id, w, h, nc, fid, y, unnest(range(w)) AS x
-                  FROM g),
-            i AS (SELECT media_id, fid, w, h,
-                         (media_id + 5 * x + 3 * y + 7 * fid) % nc AS idx
-                  FROM c),
-            s AS (SELECT media_id, fid, MIN(w) AS w, MIN(h) AS h,
-                         SUM((media_id + 17 * idx) % 256) AS sum_r,
-                         SUM((media_id + 29 * idx) % 256) AS sum_g,
-                         SUM((media_id + 43 * idx) % 256) AS sum_b
-                  FROM i GROUP BY media_id, fid)
-            SELECT media_id, CAST(fid AS INTEGER) AS frame_id,
-                   CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-                   CAST(sum_r AS BIGINT) AS sum_r,
-                   CAST(sum_g AS BIGINT) AS sum_g,
-                   CAST(sum_b AS BIGINT) AS sum_b,
-                   TRUE AS ok
-            FROM s
-        """,
-        # ground truth for the REAL baseline-JPEG decode: block (i,j)
-        # of image id is a constant 8x8 block of value
-        # v=(id+11i+5j)%256 on all channels — exact through the codec
-        # (flat quant => single integer DC coefficient per block), so
-        # the decoded sums are 64·Σv; the decoder (Huffman + dequant +
-        # IDCT + YCbCr->RGB) cannot mirror this.
-        "jpeg_pixels": """
-            WITH p AS (SELECT doc_id AS media_id,
-                              2 * (doc_id % 3 + 1) AS bw,
-                              2 * (doc_id % 2 + 1) AS bh
-                       FROM documents),
-            g AS (SELECT media_id, bw, bh, unnest(range(bh)) AS i FROM p),
-            c AS (SELECT media_id, bw, bh, i, unnest(range(bw)) AS j
-                  FROM g),
-            s AS (SELECT media_id, MIN(bw) AS bw, MIN(bh) AS bh,
-                         SUM(64 * ((media_id + 11 * i + 5 * j) % 256))
-                             AS sum_c
-                  FROM c GROUP BY media_id)
-            SELECT media_id,
-                   CAST(8 * bw AS INTEGER) AS width,
-                   CAST(8 * bh AS INTEGER) AS height,
-                   CAST(64 * bw * bh AS BIGINT) AS n_px,
-                   CAST(sum_c AS BIGINT) AS sum_r,
-                   CAST(sum_c AS BIGINT) AS sum_g,
-                   CAST(sum_c AS BIGINT) AS sum_b,
-                   CAST(3 * sum_c AS DOUBLE) / (3 * 64 * bw * bh)
-                       AS mean_px,
-                   TRUE AS ok
-            FROM s
-        """,
-        # ground truth for the PCM sample decode: the WAV data chunk
-        # IS the doc text's UTF-8 bytes, so the oracle folds the same
-        # signed-LE-int16 stream straight from the text column —
-        # byte j of sample i sits at hex chars 2*(2i+j)+1..+2
-        "pcm_samples": """
-            WITH d AS (SELECT doc_id AS media_id, encode(text) AS b
-                       FROM documents WHERE text IS NOT NULL),
-            p AS (SELECT media_id, hex(b) AS h,
-                         octet_length(b) // 2 AS n_samp
-                  FROM d),
-            k AS (SELECT media_id, h, unnest(range(n_samp)) AS i FROM p),
-            s AS (SELECT media_id,
-                         CAST(('0x' || substr(h, 4 * i + 1, 2)) AS BIGINT)
-                         + 256 * CAST(('0x' || substr(h, 4 * i + 3, 2))
-                                      AS BIGINT) AS raw
-                  FROM k),
-            v AS (SELECT media_id,
-                         CASE WHEN raw >= 32768 THEN raw - 65536
-                              ELSE raw END AS samp
-                  FROM s),
-            a AS (SELECT media_id, SUM(samp) AS sum_amp,
-                         MAX(ABS(samp)) AS peak
-                  FROM v GROUP BY media_id)
-            SELECT p.media_id,
-                   CAST(p.n_samp AS BIGINT) AS n_samples,
-                   CAST(a.sum_amp AS BIGINT) AS sum_amp,
-                   CAST(a.peak AS BIGINT) AS peak_amp,
-                   CAST(a.sum_amp AS DOUBLE) / p.n_samp AS mean_amp,
-                   TRUE AS ok
-            FROM p LEFT JOIN a USING (media_id)
-        """,
         "kmeans_assign": _kmeans_sql(),
         "semdedup": _semdedup_sql(),
         "ann_ivf": _ann_ivf_sql(),
@@ -4235,32 +3986,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
                    CAST(1 AS INTEGER) AS n_phones
             FROM documents
         """,
-        "events_hourly": """
-            SELECT date_trunc('hour', ts) AS hour, event_type,
-                   COUNT(*) AS n_events,
-                   COUNT(DISTINCT user_id) AS n_users,
-                   CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value,
-                   MIN(value) AS min_value, MAX(value) AS max_value
-            FROM events GROUP BY 1, 2
-        """,
-        "events_sessions": f"""
-            WITH g AS (
-              SELECT user_id, event_id, ts,
-                     CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                               OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                                  > {events.SESSION_GAP_MIN * 60 * 1_000_000}
-                          THEN 1 ELSE 0 END AS is_new
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            s AS (SELECT user_id, ts,
-                         CAST(SUM(is_new) OVER (PARTITION BY user_id
-                              ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-                  FROM g)
-            SELECT user_id, session_id, COUNT(*) AS n_events,
-                   MIN(ts) AS t_start, MAX(ts) AS t_end
-            FROM s GROUP BY user_id, session_id
-        """,
         # doc_id % 3 routes fakeimg/png/gif; header byte budgets are
         # 12/33/13 (see synth_mixed_media) and dimensions are the same
         # modular arithmetic in all three formats
@@ -4356,43 +4081,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
         """,
         "pagerank": _pagerank_sql(),
         "hits": _hits_sql(),
-        # ground truth of the planted WAV fields; the Spark side must
-        # recover them from the real RIFF byte layout
-        "audio_meta": """
-            SELECT doc_id AS media_id,
-                   CAST(doc_id % 2 + 1 AS INTEGER) AS n_channels,
-                   CAST((doc_id % 6 + 1) * 8000 AS INTEGER) AS sample_rate,
-                   CAST(16 AS INTEGER) AS bits,
-                   CAST(octet_length(encode(text)) AS BIGINT) AS n_data_bytes,
-                   CAST(octet_length(encode(text)) AS DOUBLE)
-                     / CAST((doc_id % 6 + 1) * 8000 * (doc_id % 2 + 1) * 2
-                            AS DOUBLE) AS duration_sec,
-                   true AS ok
-            FROM documents
-        """,
-        "video_meta": """
-            SELECT doc_id AS media_id,
-                   CAST(doc_id % 40 + 10 AS INTEGER) AS n_frames,
-                   CAST(doc_id % 2 * 15 + 25 AS INTEGER) AS fps,
-                   CAST((doc_id % 3 + 1) * 320 AS INTEGER) AS width,
-                   CAST((doc_id % 3 + 1) * 180 AS INTEGER) AS height,
-                   CAST((doc_id % 40 + 10)
-                        * (1000000 // (doc_id % 2 * 15 + 25)) AS DOUBLE)
-                       / 1000000e0 AS duration_sec,
-                   true AS ok
-            FROM documents
-        """,
-        "frame_sample": """
-            WITH v AS (SELECT doc_id AS media_id,
-                              CAST(doc_id % 40 + 10 AS INTEGER) AS n_frames,
-                              CAST(doc_id % 2 * 15 + 25 AS INTEGER) AS fps
-                       FROM documents)
-            SELECT media_id, n_frames, fps,
-                   CAST(unnest(range(0, n_frames, 10)) AS INTEGER) AS frame_no,
-                   CAST(CAST(unnest(range(0, n_frames, 10)) AS INTEGER) AS DOUBLE)
-                     / CAST(fps AS DOUBLE) AS t_sec
-            FROM v
-        """,
         "extract_eval": f"""
             WITH e AS (SELECT {_EXTRACTED} AS text FROM documents)
             SELECT COUNT(*) AS n_urls, COUNT(*) AS n_exact,

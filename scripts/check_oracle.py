@@ -16,7 +16,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "events documents embeddings".split()
+TABLES = "documents embeddings".split()
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:

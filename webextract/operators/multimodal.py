@@ -3,37 +3,30 @@
 The reference ingests images as raw bytes and decodes them in its first
 op (``DecodeImage``, ppocr/data/imaug/operators.py:30-68; GIF/PDF
 dispatch in ``check_and_read``, ppocr/utils/utility.py:94-124). This
-module reproduces that shape for a training-data pipeline: media rides
-as a ``binary`` column with typed metadata; format sniffing and byte
-accounting are JVM built-ins; decode / resize / frame-sample are
-Arrow-batched ``mapInPandas`` stages.
+module keeps the parts of that shape a text pipeline reads. Media rides
+as a ``binary`` column with typed metadata, and five paths remain:
 
-Metadata decode (format + dimensions) is REAL for png/jpeg/gif —
-:func:`parse_image_header` reads PNG IHDR, GIF logical-screen and JPEG
-SOFn headers from raw bytes, no codec library needed. FULL PIXEL
-decode and resampling are REAL for PNG (``functions/png.py``: stdlib
-zlib over public per-scanline filters — CRC'd chunk walk, inflate,
-all-five-filter unfiltering, nearest-neighbor resize, re-encode) AND
-for GIF (``functions/gif.py``: hand-rolled variable-width LZW over the
-87a/89a block structure, local/global palettes, interlace,
-multi-frame) AND for JPEG (``functions/jpeg.py``: from-scratch ITU T.81 baseline
-— canonical Huffman entropy decode, dequantize, IDCT, chroma
-upsample, YCbCr→RGB; encoder included). :func:`pixel_stats` /
-:func:`gif_frame_stats` / :func:`resize_media` dispatch on the magic
-bytes, with decoded stats ground-truth oracle-statable via
-:func:`synth_pixel_png` / :func:`synth_pixel_gif` /
-:func:`synth_pixel_jpeg` (deterministic pixel/palette/DC-block
-formulas; the JPEG fixture is exact because constant equal-channel
-blocks quantize to a single integer DC coefficient under flat
-tables). PDF documents are REAL too (``functions/pdf.py``: from-scratch
-writer/parser — xref walk, page tree, FlateDecode via stdlib zlib,
-text-operator tokenizer, reading-order assembly; :func:`synth_pdf` /
-:func:`pdf_text` / :func:`pdf_metadata` put the whole chain under
-ground-truth oracles). Audio/video PIXEL decode remains legitimately stubbed —
-a PCM synthesizer exists but compressed A/V codecs are the library
-this container lacks — while their header paths stay real. The
-Spark side (schema, batch shape, partitioning, UDF signature) is real
-and tested throughout.
+- **Header sniff.** :data:`MAGIC` is the one signature table.
+  :func:`media_metadata` applies it JVM-side (byte count, md5, format),
+  and :func:`parse_image_header` uses it to pick the PNG IHDR, GIF
+  logical-screen or JPEG SOFn walker that reads the dimensions. No
+  codec is involved.
+- **PNG pixels.** ``functions/png.py`` is a stdlib-zlib PNG codec
+  (CRC'd chunk walk, inflate, all-five-filter unfiltering,
+  nearest-neighbor resize, re-encode). :func:`png_pixel_stats` and
+  :func:`resize_media` decode PNG payloads; :func:`synth_pixel_png`
+  builds fixtures whose pixel sums the oracle states from formulas.
+- **Byte featurizer.** :func:`media_features` computes a byte count,
+  mean and histogram per payload with numpy, one Arrow batch at a time.
+- **PDF parser.** ``functions/pdf.py`` is a from-scratch writer/parser
+  (xref walk, page tree, FlateDecode via stdlib zlib, text-operator
+  tokenizer, reading-order assembly); :func:`synth_pdf` /
+  :func:`pdf_text` / :func:`pdf_metadata` / :func:`pdf_columns` put the
+  chain under ground-truth oracles.
+- **Mixed dispatch.** :func:`extract_any` sniffs each payload in one
+  Arrow stage and routes PDFs to the PDF parser and everything else to
+  the html block pipeline; :func:`explode_pages` fans a multi-page
+  container out to one row per page.
 """
 
 from __future__ import annotations
@@ -46,14 +39,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# magic-byte → format map (public file signatures), applied JVM-side
+# file-signature prefix → format (public file signatures): the one table
+# behind both sniffs, media_metadata (JVM-side) and parse_image_header.
+# JPEG is the bare SOI marker: the first segment after it may be APP0
+# (JFIF), APP1 (Exif), APP14 (Adobe) or DQT, and all of them are JPEG.
 MAGIC = {
-    "89504E47": "png",
-    "FFD8FFE0": "jpeg",
-    "FFD8FFE1": "jpeg",
-    "47494638": "gif",
-    "25504446": "pdf",
-    "52494646": "riff",  # wav/avi container
+    b"\x89PNG": "png",
+    b"\xff\xd8": "jpeg",
+    b"GIF8": "gif",
+    b"%PDF": "pdf",
+    b"RIFF": "riff",  # wav/avi container
 }
 
 MEDIA_SCHEMA = T.StructType(
@@ -80,12 +75,13 @@ def media_metadata(media: DataFrame) -> DataFrame:
     """JVM-side metadata: byte length, md5, magic-sniffed format.
 
     No Python worker — the format dispatch the reference does per-file
-    in ``check_and_read`` is a codegen CASE over the first 4 bytes.
+    in ``check_and_read`` is a codegen CASE over the :data:`MAGIC`
+    prefixes.
     """
-    magic_hex = F.upper(F.hex(F.substring(F.col("payload"), 1, 4)))
     fmt = F.lit("unknown")
     for sig, name in MAGIC.items():
-        fmt = F.when(magic_hex == sig, F.lit(name)).otherwise(fmt)
+        prefix = F.substring(F.col("payload"), 1, len(sig))
+        fmt = F.when(prefix == F.lit(sig), F.lit(name)).otherwise(fmt)
     return media.select(
         "media_id",
         F.length(F.col("payload")).alias("n_bytes"),
@@ -117,7 +113,7 @@ _JPEG_STANDALONE = frozenset(range(0xD0, 0xD8)) | {0x01, 0xD8}
 
 def _parse_png(b: bytes) -> tuple[str, int, int, bool]:
     # 8-byte signature, then the IHDR chunk: len(4) 'IHDR'(4) w(4) h(4)
-    if len(b) >= 24 and b[12:16] == b"IHDR":
+    if b[:8] == b"\x89PNG\r\n\x1a\n" and len(b) >= 24 and b[12:16] == b"IHDR":
         return ("png", int.from_bytes(b[16:20], "big"),
                 int.from_bytes(b[20:24], "big"), True)
     return ("png", 0, 0, False)
@@ -125,7 +121,7 @@ def _parse_png(b: bytes) -> tuple[str, int, int, bool]:
 
 def _parse_gif(b: bytes) -> tuple[str, int, int, bool]:
     # logical screen descriptor: width/height 2-byte LITTLE-endian at 6..10
-    if len(b) >= 10:
+    if b[:6] in (b"GIF87a", b"GIF89a") and len(b) >= 10:
         return ("gif", int.from_bytes(b[6:8], "little"),
                 int.from_bytes(b[8:10], "little"), True)
     return ("gif", 0, 0, False)
@@ -157,22 +153,23 @@ def _parse_jpeg(b: bytes) -> tuple[str, int, int, bool]:
     return ("jpeg", 0, 0, False)
 
 
+_HEADER_WALKERS = {"png": _parse_png, "gif": _parse_gif, "jpeg": _parse_jpeg}
+
+
 def parse_image_header(b: bytes | None) -> tuple[str, int, int, bool]:
     """REAL image metadata from raw bytes — PNG IHDR, GIF logical
     screen descriptor, JPEG SOFn marker walk. Pure public byte-format
     knowledge, no codec library; the analog of ``DecodeImage``
     (ppocr/data/imaug/operators.py:57-65) for the dimensions-only case.
+    The format comes from :data:`MAGIC`, the table the JVM sniff
+    applies, so the two report the same image format for the same bytes.
     Returns (format, width, height, ok); unknown/truncated bytes are
-    (format-or-unknown, 0, 0, False). Pixel DECODING (not just
-    dimensions) still needs a codec — see :func:`resize_media`."""
+    (format-or-unknown, 0, 0, False)."""
     if b is None or len(b) < 2:
         return ("unknown", 0, 0, False)
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        return _parse_png(b)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        return _parse_gif(b)
-    if b[:2] == b"\xff\xd8":
-        return _parse_jpeg(b)
+    for sig, fmt in MAGIC.items():
+        if b.startswith(sig) and fmt in _HEADER_WALKERS:
+            return _HEADER_WALKERS[fmt](b)
     if b[:4] == b"IMG!":
         return _parse_fake_header(b)
     return ("unknown", 0, 0, False)
@@ -326,38 +323,15 @@ def synth_pixel_png(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
 
 
-def decode_image(b: bytes):
-    """Raw bytes → (h, w, 3) uint8 by magic-byte dispatch: PNG via the
-    zlib/unfilter codec (functions/png.py), GIF via the LZW codec's
-    FIRST frame (functions/gif.py), JPEG via the baseline
-    Huffman+IDCT codec (functions/jpeg.py) — exactly the reference's
-    ``DecodeImage``/``check_and_read`` shape (ppocr/data/imaug/
-    operators.py:30-68, ppocr/utils/utility.py:95-104: a GIF
-    contributes frame 0, everything downstream sees one ndarray).
-    Unsupported formats raise ValueError.
-    """
-    from webextract.functions.gif import GIF_SIGS, decode_gif
-    from webextract.functions.jpeg import JPEG_SIG, decode_jpeg
-    from webextract.functions.png import PNG_SIG, decode_png
-
-    if b[: len(PNG_SIG)] == PNG_SIG:
-        return decode_png(b)
-    if b[:6] in GIF_SIGS:
-        return decode_gif(b)
-    if b[:2] == JPEG_SIG:
-        return decode_jpeg(b)
-    raise ValueError("no pixel codec for this format (png/gif/jpeg)")
-
-
-def pixel_stats(media: DataFrame) -> DataFrame:
-    """REAL pixel decode (:func:`decode_image`: PNG chunk walk + CRC-32
-    verification + zlib inflate + all-five-filter unfiltering, or GIF
-    LZW + palette — the ``DecodeImage`` analog,
-    ppocr/data/imaug/operators.py:30-68) → per-image channel sums and
-    mean. Sums are exact integers and the mean is ONE IEEE division of
-    exact ints (hash-portable); a payload that is not a decodable
-    PNG/GIF/JPEG yields ``ok=false`` with null stats instead of
+def png_pixel_stats(media: DataFrame) -> DataFrame:
+    """REAL PNG pixel decode (PNG chunk walk + CRC-32 verification +
+    zlib inflate + all-five-filter unfiltering — the ``DecodeImage``
+    analog, ppocr/data/imaug/operators.py:30-68) → per-image channel
+    sums and mean. Sums are exact integers and the mean is ONE IEEE
+    division of exact ints (hash-portable); a payload that is not a
+    decodable PNG yields ``ok=false`` with null stats instead of
     failing the job (total-function discipline)."""
+    from webextract.functions.png import decode_png
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -369,7 +343,7 @@ def pixel_stats(media: DataFrame) -> DataFrame:
             for mid, b in zip(pdf["media_id"], pdf["payload"]):
                 row = {"media_id": int(mid), "ok": False}
                 try:
-                    arr = decode_image(bytes(b))
+                    arr = decode_png(bytes(b))
                     s = arr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
                     n_px = arr.shape[0] * arr.shape[1]
                     row.update(
@@ -391,25 +365,16 @@ def pixel_stats(media: DataFrame) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(run, PIXELS_SCHEMA)
 
 
-# back-compat name from the round the codec was PNG-only; the GIF
-# dispatch is a strict extension (PNG payloads take the same path)
-png_pixel_stats = pixel_stats
-
-
 def resize_media(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """REAL resize for PNG/GIF payloads — decode (:func:`decode_image`
-    magic dispatch; GIF contributes its first frame, the
-    ``check_and_read`` convention), nearest-neighbor resample with the
-    exact-integer index map ``src = (dst · src_dim) // dst_dim``,
-    re-encode as a valid PNG (the normalize step: every format leaves
-    as truecolor, as the reference's BGR-ndarray convention does).
-    The index map is floor arithmetic, so the oracle states every
-    output pixel (and therefore the channel sums) straight from the
-    input-pixel formulas; the re-encoded payload is pinned by the
-    decode(encode(resize)) round-trip test rather than the oracle
-    (deflate bytes are library-dependent, the pixels are not).
-    Undecodable payloads yield ``ok=false`` rows."""
-    from webextract.functions.png import encode_png, resize_nearest
+    """REAL resize for PNG payloads — decode, nearest-neighbor resample
+    with the exact-integer index map ``src = (dst · src_dim) // dst_dim``,
+    re-encode as a valid PNG. The index map is floor arithmetic, so the
+    oracle states every output pixel (and therefore the channel sums)
+    straight from the input-pixel formulas; the re-encoded payload is
+    pinned by the decode(encode(resize)) round-trip test rather than
+    the oracle (deflate bytes are library-dependent, the pixels are
+    not). Undecodable payloads yield ``ok=false`` rows."""
+    from webextract.functions.png import decode_png, encode_png, resize_nearest
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -421,9 +386,7 @@ def resize_media(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
             for mid, b in zip(pdf["media_id"], pdf["payload"]):
                 row = {"media_id": int(mid), "ok": False}
                 try:
-                    arr = resize_nearest(
-                        decode_image(bytes(b)), target_w, target_h
-                    )
+                    arr = resize_nearest(decode_png(bytes(b)), target_w, target_h)
                     s = arr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
                     row.update(
                         width=target_w,
@@ -441,175 +404,6 @@ def resize_media(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.select("media_id", "payload").mapInPandas(run, RESIZED_SCHEMA)
-
-
-FRAME_PIXELS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_id", T.IntegerType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("ok", T.BooleanType(), False),
-    ]
-)
-
-
-def synth_pixel_gif(docs: DataFrame, multi_frame: bool = False) -> DataFrame:
-    """FULL valid GIF89a payloads with deterministic palette/index
-    formulas — the fixture behind the real-LZW-decode queries. Image
-    ``doc_id``: ``w = doc_id%8+1``, ``h = doc_id%6+1``, palette size
-    ``2^(doc_id%3+2)`` (4/8/16 colors, so the LZW minimum code size
-    varies), index at (x, y) is ``(doc_id + 5x + 3y) % n_colors`` and
-    palette entry ``i`` is ``((doc_id+17i)%256, (doc_id+29i)%256,
-    (doc_id+43i)%256)`` — pure integer arithmetic, so the DECODED
-    channel sums are ground-truth statable in SQL. Odd doc_ids are
-    written INTERLACED, so the four-pass reorder path runs on driver
-    data. With ``multi_frame``, image ``doc_id`` carries
-    ``doc_id%3 + 1`` frames and frame ``f``'s index formula adds
-    ``7f`` — a real animated-GIF container."""
-    from webextract.functions.gif import encode_gif
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for mid in pdf["doc_id"]:
-                mid = int(mid)
-                w, h = mid % 8 + 1, mid % 6 + 1
-                nc = 1 << (mid % 3 + 2)
-                i = np.arange(nc, dtype=np.int64)
-                pal = np.stack(
-                    [(mid + 17 * i) % 256, (mid + 29 * i) % 256,
-                     (mid + 43 * i) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                n_frames = mid % 3 + 1 if multi_frame else 1
-                frames = [
-                    (mid + 5 * x + 3 * y + 7 * f) % nc
-                    for f in range(n_frames)
-                ]
-                payloads.append(
-                    encode_gif(frames, pal, interlace=bool(mid % 2))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                    "mime": "image/gif",
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
-
-
-def synth_pixel_jpeg(docs: DataFrame) -> DataFrame:
-    """FULL valid baseline JPEGs whose DECODE is bit-exact and
-    SQL-statable — the fixture behind the real-DCT-decode query.
-
-    Image ``doc_id`` is a grid of ``bh = 2·(doc_id%2+1)`` ×
-    ``bw = 2·(doc_id%3+1)`` constant 8×8 blocks (so 16-multiple
-    dimensions cover the 4:2:0 MCU too); block (i, j) has all three
-    channels equal to ``v = (doc_id + 11i + 5j) % 256``. Encoded with
-    FLAT quantization tables, a constant equal-channel block yields
-    exactly one integer coefficient (Y DC = 8·(v-128); every AC and
-    chroma coefficient is a ~1e-12 float that rounds to zero), so the
-    full entropy-decode → dequant → IDCT → color-convert path
-    reproduces ``v`` exactly and the oracle states the channel sums
-    as ``64·Σv``. Odd doc_ids are encoded 4:2:0 (subsample + upsample
-    path, exact on constant chroma), and every 5th image carries
-    restart markers (DRI/RSTn under the oracle gate)."""
-    from webextract.functions.jpeg import QUANT_FLAT, encode_jpeg
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for mid in pdf["doc_id"]:
-                mid = int(mid)
-                bw, bh = 2 * (mid % 3 + 1), 2 * (mid % 2 + 1)
-                i = np.arange(bh, dtype=np.int64)[:, None]
-                j = np.arange(bw, dtype=np.int64)[None, :]
-                v = ((mid + 11 * i + 5 * j) % 256).astype(np.uint8)
-                plane = np.kron(v, np.ones((8, 8), dtype=np.uint8))
-                img = np.stack([plane] * 3, axis=-1)
-                payloads.append(
-                    encode_jpeg(
-                        img,
-                        QUANT_FLAT,
-                        QUANT_FLAT,
-                        subsample=bool(mid % 2),
-                        restart_interval=2 if mid % 5 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
-
-
-def gif_frame_stats(media: DataFrame) -> DataFrame:
-    """REAL animated-GIF frame fan-out: every image block in the
-    container is LZW-decoded (functions/gif.py) and emitted as one row
-    of exact-integer channel sums — the pixel-true analog of the
-    reference's multi-page explode (``check_and_read``'s PDF branch,
-    ppocr/utils/utility.py:110-120, one image per page) where
-    :func:`frame_sample` fans out only container METADATA. Undecodable
-    payloads yield one ``ok=false`` row (total-function discipline)."""
-    from webextract.functions.gif import decode_gif_frames
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {k.name: [] for k in FRAME_PIXELS_SCHEMA.fields}
-
-            def push(row):
-                for f in FRAME_PIXELS_SCHEMA.fields:
-                    out[f.name].append(row.get(f.name))
-
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    frames = decode_gif_frames(bytes(b))
-                except ValueError:
-                    push({"media_id": int(mid), "ok": False})
-                    continue
-                for fid, arr in enumerate(frames):
-                    s = arr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    push(
-                        {
-                            "media_id": int(mid),
-                            "frame_id": fid,
-                            "width": arr.shape[1],
-                            "height": arr.shape[0],
-                            "sum_r": int(s[0]),
-                            "sum_g": int(s[1]),
-                            "sum_b": int(s[2]),
-                            "ok": True,
-                        }
-                    )
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, FRAME_PIXELS_SCHEMA
-    )
 
 
 def explode_pages(media: DataFrame) -> DataFrame:
@@ -650,296 +444,6 @@ def synth_paged_media(docs: DataFrame) -> DataFrame:
         F.col("doc_id").alias("media_id"),
         payload.alias("payload"),
         F.lit("application/x-fakepdf").alias("mime"),
-    )
-
-
-def _le_bytes(c, n: int):
-    """n-byte little-endian binary from an int column (codegen: per-byte
-    shift/mask → hex → unhex concat)."""
-    parts = [
-        F.unhex(
-            F.lpad(F.hex(F.shiftright(c.cast("long"), 8 * i).bitwiseAND(F.lit(0xFF))), 2, "0")
-        )
-        for i in range(n)
-    ]
-    return F.concat(*parts)
-
-
-def _byte_at(col, pos: int):
-    """Unsigned byte value at 1-indexed position of a binary column."""
-    return F.conv(F.hex(F.substring(col, pos, 1)), 16, 10).cast("long")
-
-
-def _le_at(col, pos: int, n: int):
-    """n-byte little-endian unsigned int at 1-indexed position."""
-    v = None
-    for i in range(n):
-        term = _byte_at(col, pos + i) * F.lit(1 << (8 * i))
-        v = term if v is None else v + term
-    return v
-
-
-def synth_wav(docs: DataFrame) -> DataFrame:
-    """Deterministic REAL WAV payloads: a spec-correct RIFF/WAVE header
-    (fmt chunk with PCM audio format, doc_id-derived channel count /
-    sample rate / bit depth) followed by the doc text as stand-in
-    sample data. Pure JVM byte-building — every field is the public
-    RIFF byte layout, little-endian via :func:`_le_bytes`."""
-    doc_id = F.col("doc_id")
-    channels = (doc_id % 2 + 1).cast("int")           # 1..2
-    rate = ((doc_id % 6 + 1) * 8000).cast("int")      # 8k..48k
-    bits = F.lit(16)
-    data = F.encode(F.col("text"), "UTF-8")
-    data_len = F.length(data)
-    byte_rate = rate * channels * 2
-    block_align = channels * 2
-    payload = F.concat(
-        F.lit(b"RIFF"), _le_bytes(data_len + 36, 4), F.lit(b"WAVE"),
-        F.lit(b"fmt "), _le_bytes(F.lit(16), 4),
-        _le_bytes(F.lit(1), 2),            # PCM
-        _le_bytes(channels, 2),
-        _le_bytes(rate, 4),
-        _le_bytes(byte_rate, 4),
-        _le_bytes(block_align, 2),
-        _le_bytes(bits, 2),
-        F.lit(b"data"), _le_bytes(data_len, 4),
-        data,
-    )
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        payload.alias("payload"),
-        F.lit("audio/wav").alias("mime"),
-    )
-
-
-def wav_metadata(media: DataFrame) -> DataFrame:
-    """REAL RIFF/WAVE header decode, 100% JVM-side: magic check +
-    little-endian field extraction with substring/hex/conv byte math —
-    no Python worker, fuses into the scan (the audio analog of the
-    PNG/JPEG/GIF image-header parsers). Returns (media_id, n_channels,
-    sample_rate, bits, n_data_bytes, duration_sec, ok); non-WAV rows
-    get ok=false with NULL fields."""
-    p = F.col("payload")
-    is_wav = (F.substring(p, 1, 4) == F.lit(b"RIFF")) & (
-        F.substring(p, 9, 4) == F.lit(b"WAVE")
-    ) & (F.length(p) >= 44)
-    channels = _le_at(p, 23, 2).cast("int")
-    rate = _le_at(p, 25, 4).cast("int")
-    bits = _le_at(p, 35, 2).cast("int")
-    data_len = _le_at(p, 41, 4)
-    # duration = data / (rate × channels × bytes-per-sample): one IEEE
-    # division of exact ints (oracle bit-exact)
-    duration = data_len.cast("double") / (
-        rate * channels * F.shiftright(bits, 3)
-    ).cast("double")
-    return media.select(
-        "media_id",
-        F.when(is_wav, channels).alias("n_channels"),
-        F.when(is_wav, rate).alias("sample_rate"),
-        F.when(is_wav, bits).alias("bits"),
-        F.when(is_wav, data_len).alias("n_data_bytes"),
-        F.when(is_wav, duration).alias("duration_sec"),
-        is_wav.alias("ok"),
-    )
-
-
-def pcm_samples(media: DataFrame) -> DataFrame:
-    """REAL audio SAMPLE decode for 16-bit PCM WAV — the one audio
-    format whose decode needs no codec library (PCM data IS the
-    samples, RIFF spec / WAVE format 1). 100% JVM-side and in-row: a
-    single ``aggregate`` over ``sequence(0, n_samples-1)`` (the
-    constant-expression-size runtime-loop pattern) reads each
-    little-endian signed int16 with substring/hex/conv byte math and
-    folds (sum, peak) — no Python worker, no explode, no shuffle; the
-    parallelism axis stays media rows. Returns per-media
-    (n_samples, sum_amp, peak_amp, mean_amp, ok); ``mean_amp`` is ONE
-    IEEE division of exact ints (hash-portable). Non-WAV / non-16-bit
-    payloads yield ok=false with NULL stats (total-function
-    discipline). Reference analog: the raw-ndarray handoff after
-    ``DecodeImage`` (ppocr/data/imaug/operators.py:30-68) — decoded
-    samples, not container metadata."""
-    p = F.col("payload")
-    is_pcm16 = (
-        (F.substring(p, 1, 4) == F.lit(b"RIFF"))
-        & (F.substring(p, 9, 4) == F.lit(b"WAVE"))
-        & (F.length(p) >= 44)
-        & (_le_at(p, 21, 2) == 1)   # audio format: PCM
-        & (_le_at(p, 35, 2) == 16)  # bits per sample
-    )
-    data_len = F.least(_le_at(p, 41, 4), F.length(p) - 44)
-    n_samp = F.shiftright(data_len, 1)
-
-    def fold(acc, i):
-        pos = F.lit(45) + i.cast("long") * 2
-        b0 = F.conv(F.hex(F.substring(p, pos, F.lit(1))), 16, 10).cast(
-            "long"
-        )
-        b1 = F.conv(
-            F.hex(F.substring(p, pos + 1, F.lit(1))), 16, 10
-        ).cast("long")
-        raw = b0 + b1 * 256
-        samp = F.when(raw >= 32768, raw - 65536).otherwise(raw)
-        return F.struct(
-            (acc["s"] + samp).alias("s"),
-            F.greatest(acc["peak"], F.abs(samp)).alias("peak"),
-        )
-
-    init = F.struct(
-        F.lit(0).cast("long").alias("s"),
-        F.lit(0).cast("long").alias("peak"),
-    )
-    # sequence(0, -1) DESCENDS — gate the fold on n_samples >= 1
-    agg = F.aggregate(
-        F.sequence(F.lit(0), (n_samp - 1).cast("int")), init, fold
-    )
-    # Two-step projection: the interpreted higher-order fold is the
-    # whole cost of this operator, and referencing it three times in
-    # one Project evaluates it three times per row (no CSE for
-    # interpreted expressions). Alias it ONCE behind a projection
-    # boundary — CollapseProject keeps the split because an expensive
-    # producer with >1 consumer is never inlined.
-    mid = media.select(
-        "media_id",
-        F.when(is_pcm16, n_samp).alias("n_samples"),
-        F.when(is_pcm16 & (n_samp >= 1), agg).alias("_st"),
-        is_pcm16.alias("ok"),
-    )
-    st = F.col("_st")
-    return mid.select(
-        "media_id",
-        "n_samples",
-        st["s"].alias("sum_amp"),
-        st["peak"].alias("peak_amp"),
-        (
-            st["s"].cast("double") / F.col("n_samples").cast("double")
-        ).alias("mean_amp"),
-        "ok",
-    )
-
-
-def synth_video(docs: DataFrame) -> DataFrame:
-    """Deterministic REAL AVI containers (the video analog of
-    :func:`synth_wav`): a spec-correct RIFF/AVI layout — ``RIFF`` size
-    ``AVI `` + a ``LIST hdrl`` holding the 56-byte ``avih`` main
-    header (microseconds-per-frame, total frames, stream count,
-    width/height, all little-endian) + a ``LIST movi`` carrying the
-    doc text as stand-in stream data. Every field is the public
-    MainAVIHeader byte layout; pure JVM byte-building, no codec
-    needed. fps is stored the way AVI really stores it —
-    ``dwMicroSecPerFrame = 10^6 / fps`` — using fps values (25/40)
-    that divide 10^6 so the round-trip is exact integer arithmetic
-    (SQL-statable)."""
-    doc_id = F.col("doc_id")
-    n_frames = (doc_id % 40 + 10).cast("int")
-    fps = (doc_id % 2 * 15 + 25).cast("int")          # 25 or 40
-    uspf = (F.lit(1_000_000) / fps).cast("int")       # exact: fps | 10^6
-    scale = (doc_id % 3 + 1).cast("int")
-    width, height = scale * 320, scale * 180
-    zero4 = _le_bytes(F.lit(0), 4)
-    data = F.encode(F.col("text"), "UTF-8")
-    data_len = F.length(data)
-    payload = F.concat(
-        F.lit(b"RIFF"), _le_bytes(data_len + 92, 4), F.lit(b"AVI "),
-        F.lit(b"LIST"), _le_bytes(F.lit(68), 4), F.lit(b"hdrl"),
-        F.lit(b"avih"), _le_bytes(F.lit(56), 4),
-        _le_bytes(uspf, 4),                # dwMicroSecPerFrame
-        zero4,                             # dwMaxBytesPerSec
-        zero4,                             # dwPaddingGranularity
-        zero4,                             # dwFlags
-        _le_bytes(n_frames, 4),            # dwTotalFrames
-        zero4,                             # dwInitialFrames
-        _le_bytes(F.lit(1), 4),            # dwStreams
-        zero4,                             # dwSuggestedBufferSize
-        _le_bytes(width, 4),               # dwWidth
-        _le_bytes(height, 4),              # dwHeight
-        zero4, zero4, zero4, zero4,        # dwReserved[4]
-        F.lit(b"LIST"), _le_bytes(data_len + 4, 4), F.lit(b"movi"),
-        data,
-    )
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        payload.alias("payload"),
-        F.lit("video/x-msvideo").alias("mime"),
-    )
-
-
-def avi_metadata(media: DataFrame) -> DataFrame:
-    """REAL RIFF/AVI header decode, 100% JVM-side — the video sibling
-    of :func:`wav_metadata`: magic + LIST/avih walk at their fixed
-    offsets, little-endian field math with substring/hex/conv, no
-    Python worker. Returns (media_id, n_frames, fps, width, height,
-    duration_sec, ok); non-AVI or truncated payloads get ok=false
-    with NULL fields. fps = 10^6 div dwMicroSecPerFrame (exact for
-    the integer rates real muxers write); duration =
-    n_frames·µspf / 10^6 — the numerator is exact integer arithmetic,
-    so the one IEEE division is oracle-portable."""
-    p = F.col("payload")
-    is_avi = (
-        (F.length(p) >= 88)
-        & (F.substring(p, 1, 4) == F.lit(b"RIFF"))
-        & (F.substring(p, 9, 4) == F.lit(b"AVI "))
-        & (F.substring(p, 25, 4) == F.lit(b"avih"))
-    )
-    uspf = _le_at(p, 33, 4)                           # dwMicroSecPerFrame
-    n_frames = _le_at(p, 49, 4).cast("int")           # dwTotalFrames
-    width = _le_at(p, 65, 4).cast("int")              # dwWidth
-    height = _le_at(p, 69, 4).cast("int")             # dwHeight
-    fps = (F.lit(1_000_000) / uspf).cast("int")
-    duration = (n_frames.cast("long") * uspf).cast("double") / F.lit(
-        1_000_000.0
-    )
-    return media.select(
-        "media_id",
-        F.when(is_avi, n_frames).alias("n_frames"),
-        F.when(is_avi, fps).alias("fps"),
-        F.when(is_avi, width).alias("width"),
-        F.when(is_avi, height).alias("height"),
-        F.when(is_avi, duration).alias("duration_sec"),
-        is_avi.alias("ok"),
-    )
-
-
-def sample_frames(media: DataFrame, every_k: int = 10) -> DataFrame:
-    """Frame sampling for video columns: keep every k-th frame (frame 0
-    always included) plus the frame's timestamp from the container fps.
-    REAL RIFF/AVI header peek (magic + LIST/avih walk at their fixed
-    offsets, little-endian field math — the video sibling of
-    :func:`wav_metadata`) + ``explode(sequence(...))`` all JVM-side —
-    the frame DECODE would be the downstream Arrow stage (codec-gated,
-    like ``resize_media``); the sampling fan-out itself never leaves
-    codegen. At scale this is the video analog of ``explode_pages``:
-    cheap metadata peek → bounded fan-out → per-frame UDF. fps comes
-    back as ``10^6 div dwMicroSecPerFrame`` — exact for the integer
-    rates real muxers write."""
-    p = F.col("payload")
-    # length guard before any field read (the wav_metadata rule): a
-    # truncated RIFF/AVI must be skipped, not yield NULL-field rows
-    is_avi = (
-        (F.length(p) >= 88)
-        & (F.substring(p, 1, 4) == F.lit(b"RIFF"))
-        & (F.substring(p, 9, 4) == F.lit(b"AVI "))
-        & (F.substring(p, 25, 4) == F.lit(b"avih"))
-    )
-    n_frames = _le_at(p, 49, 4).cast("int")           # dwTotalFrames
-    uspf = _le_at(p, 33, 4)                           # dwMicroSecPerFrame
-    fps = (F.lit(1_000_000) / uspf).cast("int")
-    # dwTotalFrames = 0 is spec-legal (header-only / still-streaming
-    # capture): zero frames sampled, NOT a sequence(0, -1) crash
-    return (
-        media.filter(is_avi)
-        .filter(n_frames >= 1)
-        .select(
-            "media_id",
-            n_frames.alias("n_frames"),
-            fps.alias("fps"),
-            F.explode(
-                F.sequence(F.lit(0), n_frames - 1, F.lit(every_k))
-            ).alias("frame_no"),
-        )
-        .withColumn(
-            "t_sec",
-            F.col("frame_no").cast("double") / F.col("fps").cast("double"),
-        )
     )
 
 
