@@ -523,9 +523,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact integer squared distance with the frozen (d2, cluster)
     tie-break, so the candidate set is bit-identical across engines;
     the ranking tail is the proven-portable float-cosine
-    rank-not-sim contract shared with sim_topk/ann_lsh. The float
-    Spark-ML IVF (similarity.ivf_topk) stays for trained quantizers,
-    pinned by recall-vs-brute tests."""
+    rank-not-sim contract shared with sim_topk/ann_lsh. Recall against
+    brute force is pinned by test_ivf_topk_exact_recall_and_contract."""
     return similarity.ivf_topk_exact(_emb(spark, sf_dir), 5, 10).select(
         "query_id", "rank", "neighbor_id"
     )
@@ -573,9 +572,9 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold is a rational square decided in exact integer
     arithmetic, so the oracle restates the ENTIRE chain — unrolled
     k-means, pair dots, HUGEINT threshold test, recursive
-    reachability — and the result hash-matches bit-for-bit. The
-    float Spark-ML variant (similarity.semdedup) remains for trained
-    quantizers, pinned by planted-recall/brute-parity tests."""
+    reachability — and the result hash-matches bit-for-bit. Planted
+    recall and brute-force parity are pinned by the semdedup_exact
+    tests in test_ops.py."""
     emb = _emb(spark, sf_dir)
     dup = emb.filter(F.col("vec_id") < 50).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
@@ -588,8 +587,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer distributed k-means (quantized-centroid Lloyd,
     operators/kmeans.py): 8 clusters, 3 assignment passes over the
-    embeddings. Unlike the float Spark-ML quantizer (rows-only by
-    nature), every step here — floor(x·2^20) quantization, integer
+    embeddings. Every step — floor(x·2^20) quantization, integer
     squared distances, (d2, cluster) argmin ties, floor-divided
     centroid means, empty-cluster carry-over — is exact integer
     arithmetic, so the oracle unrolls the full iteration in long
@@ -1516,39 +1514,6 @@ def q_pretrain_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _select_packed(packed)
 
 
-def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG pixel decode under the oracle gate (the DecodeImage
-    graft, ppocr/data/imaug/operators.py:30-68): full valid PNGs are
-    synthesized with deterministic pixel formulas (r=(id+x)%256,
-    g=(id+3y)%256, b=(x·y)%256; rows filtered with type y%5 so ALL
-    FIVE PNG filter types hit the unfilter path, every chunk CRC'd),
-    then decoded by the pure-stdlib codec (zlib inflate + unfiltering,
-    functions/png.py — no image library). The oracle states the
-    channel sums from the pixel arithmetic — ground truth, the decoder
-    cannot mirror it."""
-    from webextract.operators.multimodal import (
-        png_pixel_stats,
-        synth_pixel_png,
-    )
-
-    return png_pixel_stats(synth_pixel_png(_docs(spark, sf_dir)))
-
-
-def q_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image resize (decode → nearest-neighbor → re-encode): the
-    exact-integer index map src=(dst·src_dim)//dst_dim lets the oracle
-    state every output pixel of the 4×3 thumbnail from the input
-    formulas. The re-encoded payload is excluded from the compare
-    (deflate bytes are library-dependent) and pinned instead by the
-    pytest round-trip; the SUMS prove the pixels."""
-    from webextract.operators.multimodal import resize_media, synth_pixel_png
-
-    out = resize_media(synth_pixel_png(_docs(spark, sf_dir)), 4, 3)
-    return out.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b", "ok"
-    )
-
-
 def q_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PDF text extraction under the oracle gate — the PDF branch
     of the reference's multi-format dispatch (``check_and_read``,
@@ -2073,10 +2038,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # bpe_apply/pretrain_pack: new (frozen-tokenizer seam + e2e path)
         "bpe_apply": q_bpe_apply,
         "pretrain_pack": q_pretrain_pack,
-        # png_decode/png_resize: new (REAL pixel decode/resample, pure
-        # stdlib codec, ground-truth pixel-formula oracles)
-        "png_decode": q_png_decode,
-        "png_resize": q_png_resize,
         # bpe_*: learning loop refactored (shared rounds, strategies);
         # encode rerouted through the frozen-apply path
         "bpe_merges": q_bpe_merges,
@@ -3684,56 +3645,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
         "bpe_encode": _bpe_encode_sql(),
         "bpe_apply": _bpe_apply_sql(),
         "pretrain_pack": _pretrain_pack_sql(),
-        # ground truth for the REAL PNG pixel decode: the planted
-        # per-pixel formulas summed over each image's grid — the
-        # decoder (CRC walk + inflate + unfilter) cannot mirror this.
-        "png_decode": """
-            WITH p AS (SELECT doc_id AS media_id,
-                              doc_id % 8 + 1 AS w, doc_id % 6 + 1 AS h
-                       FROM documents),
-            g AS (SELECT media_id, w, h, unnest(range(h)) AS y FROM p),
-            c AS (SELECT media_id, w, h, y, unnest(range(w)) AS x FROM g),
-            s AS (SELECT media_id, MIN(w) AS w, MIN(h) AS h,
-                         COUNT(*) AS n_px,
-                         SUM((media_id + x) % 256) AS sum_r,
-                         SUM((media_id + 3 * y) % 256) AS sum_g,
-                         SUM((x * y) % 256) AS sum_b
-                  FROM c GROUP BY media_id)
-            SELECT media_id,
-                   CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-                   CAST(n_px AS BIGINT) AS n_px,
-                   CAST(sum_r AS BIGINT) AS sum_r,
-                   CAST(sum_g AS BIGINT) AS sum_g,
-                   CAST(sum_b AS BIGINT) AS sum_b,
-                   CAST(sum_r + sum_g + sum_b AS DOUBLE) / (3 * n_px)
-                       AS mean_px,
-                   TRUE AS ok
-            FROM s
-        """,
-        # the 4x3 nearest-neighbor thumbnail: src=(dst*src_dim)//dst_dim
-        # exact-integer index map, so the resampled sums are statable
-        # from the same pixel formulas
-        "png_resize": """
-            WITH p AS (SELECT doc_id AS media_id,
-                              doc_id % 8 + 1 AS w, doc_id % 6 + 1 AS h
-                       FROM documents),
-            g AS (SELECT media_id, w, h, unnest(range(3)) AS y FROM p),
-            c AS (SELECT media_id, w, h, y, unnest(range(4)) AS x FROM g),
-            m AS (SELECT media_id, (x * w) // 4 AS sx, (y * h) // 3 AS sy
-                  FROM c),
-            s AS (SELECT media_id,
-                         SUM((media_id + sx) % 256) AS sum_r,
-                         SUM((media_id + 3 * sy) % 256) AS sum_g,
-                         SUM((sx * sy) % 256) AS sum_b
-                  FROM m GROUP BY media_id)
-            SELECT media_id,
-                   CAST(4 AS INTEGER) AS width, CAST(3 AS INTEGER) AS height,
-                   CAST(sum_r AS BIGINT) AS sum_r,
-                   CAST(sum_g AS BIGINT) AS sum_g,
-                   CAST(sum_b AS BIGINT) AS sum_b,
-                   TRUE AS ok
-            FROM s
-        """,
         "kmeans_assign": _kmeans_sql(),
         "semdedup": _semdedup_sql(),
         "ann_ivf": _ann_ivf_sql(),

@@ -111,23 +111,11 @@ def test_line_dedup_no_python_node(spark):
 
 
 def test_ivf_probe_plan_has_no_cartesian_on_corpus(spark):
-    # the corpus-side candidate join is an equi-join on list_id; only
-    # the tiny centroid table rides a broadcast nested-loop cross join
-    import webextract.operators.similarity as similarity
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    assigned, cents = similarity.ivf_assign(emb, 64, n_lists=4)
-    assigned = similarity.with_norm(assigned)
-    queries = assigned.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_embedding"),
-        F.col("norm").alias("q_norm"),
-    )
-    probes = similarity.ivf_probes(queries, cents, n_probe=2)
-    plan = plan_of(probes)
-    # centroid side is broadcast (bounded by n_lists), never shuffled
+    # the corpus-side candidate join is an equi-join on the probed
+    # cluster; only the tiny centroid and probe tables are broadcast
+    plan = plan_of(entrymod.q_ann_ivf(spark, SF))
     assert "BroadcastExchange" in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_vocab_topk_distributed_topk_with_partial_agg(spark):

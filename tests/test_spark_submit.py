@@ -10,7 +10,7 @@ from pathlib import Path
 
 import pytest
 
-REPO = Path("/root/repo")
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _submit(zip_path: Path, pages: Path, out: Path) -> dict:

@@ -1,13 +1,15 @@
 """The page loop under every html operator drops cached zip finders and
-imports still work.
+imports still work; and no package module imports Spark's ML library.
 
 In-process, no Spark: a zip archive on ``sys.path`` stands in for
 ``pyspark.zip`` on a worker's path.
 """
 
+import ast
 import sys
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pyarrow as pa
 
@@ -58,3 +60,26 @@ def test_extract_loop_drops_zip_finders_and_imports_still_work(tmp_path):
         for name in ("we_zip_a", "we_zip_b"):
             sys.modules.pop(name, None)
         sys.path_importer_cache.pop(str(archive), None)
+
+
+def test_no_module_imports_pyspark_ml():
+    """No operator needs Spark's ML library: the one k-means quantizer
+    is the exact-integer Lloyd of ``operators/kmeans.py``."""
+    package = Path(__file__).resolve().parents[1] / "webextract"
+    offenders = []
+    for py in sorted(package.rglob("*.py")):
+        for node in ast.walk(ast.parse(py.read_text(), str(py))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                # ``from pyspark import ml`` names the module in an alias
+                mod = node.module or ""
+                names = [mod] + [f"{mod}.{a.name}" for a in node.names]
+            else:
+                continue
+            offenders += [
+                f"{py.relative_to(package.parent)}:{node.lineno} {n}"
+                for n in names
+                if n.split(".")[:2] == ["pyspark", "ml"]
+            ]
+    assert offenders == []

@@ -1,9 +1,9 @@
 """Exact-integer distributed k-means (quantized-centroid Lloyd).
 
-The float k-means the IVF/SemDeDup quantizers ride (Spark ML) is not
-SQL-statable — float accumulation order changes the centroids — so
-those queries carried rows-only correctness checks. This module is the
-oracle-exact alternative: the SAME Lloyd iteration structure, but every
+A float k-means is not SQL-statable — float accumulation order
+changes the centroids — so a float quantizer could carry only
+rows-only correctness checks. This module is the one coarse quantizer
+the IVF and SemDeDup operators ride: a Lloyd iteration in which every
 arithmetic step is fully specified integer math, so the entire
 clustering (assignments, centroids, distances) is bit-identical across
 engines and statable as ANSI SQL (reference analog: the deterministic

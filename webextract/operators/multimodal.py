@@ -4,18 +4,13 @@ The reference ingests images as raw bytes and decodes them in its first
 op (``DecodeImage``, ppocr/data/imaug/operators.py:30-68; GIF/PDF
 dispatch in ``check_and_read``, ppocr/utils/utility.py:94-124). This
 module keeps the parts of that shape a text pipeline reads. Media rides
-as a ``binary`` column with typed metadata, and five paths remain:
+as a ``binary`` column with typed metadata, and four paths remain:
 
 - **Header sniff.** :data:`MAGIC` is the one signature table.
   :func:`media_metadata` applies it JVM-side (byte count, md5, format),
   and :func:`parse_image_header` uses it to pick the PNG IHDR, GIF
   logical-screen or JPEG SOFn walker that reads the dimensions. No
   codec is involved.
-- **PNG pixels.** ``functions/png.py`` is a stdlib-zlib PNG codec
-  (CRC'd chunk walk, inflate, all-five-filter unfiltering,
-  nearest-neighbor resize, re-encode). :func:`png_pixel_stats` and
-  :func:`resize_media` decode PNG payloads; :func:`synth_pixel_png`
-  builds fixtures whose pixel sums the oracle states from formulas.
 - **Byte featurizer.** :func:`media_features` computes a byte count,
   mean and histogram per payload with numpy, one Arrow batch at a time.
 - **PDF parser.** ``functions/pdf.py`` is a from-scratch writer/parser
@@ -31,7 +26,6 @@ as a ``binary`` column with typed metadata, and five paths remain:
 
 from __future__ import annotations
 
-import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -252,158 +246,6 @@ def media_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.select("media_id", "payload").mapInPandas(run, FEATURES_SCHEMA)
-
-
-PIXELS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_px", T.LongType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("mean_px", T.DoubleType(), True),
-        T.StructField("ok", T.BooleanType(), False),
-    ]
-)
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sum_r", T.LongType(), True),
-        T.StructField("sum_g", T.LongType(), True),
-        T.StructField("sum_b", T.LongType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("ok", T.BooleanType(), False),
-    ]
-)
-
-
-def synth_pixel_png(docs: DataFrame) -> DataFrame:
-    """FULL valid PNGs with deterministic pixel content — the fixture
-    behind the real-pixel-decode queries. Image ``doc_id``:
-    ``w = doc_id%8+1``, ``h = doc_id%6+1``; pixel (x, y) is
-    ``r=(doc_id+x)%256, g=(doc_id+3y)%256, b=(x·y)%256`` — pure
-    integer arithmetic, so the DECODED stats are ground-truth
-    statable in SQL. Rows are filtered with type ``y % 5``, so the
-    decoder exercises ALL FIVE PNG filter types (None/Sub/Up/Average/
-    Paeth) on driver-gate data, and every chunk carries its real
-    CRC-32. Synthesis runs in an Arrow batch stage (it is the
-    fixture, not the measured operator)."""
-    from webextract.functions.png import encode_png
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for mid in pdf["doc_id"]:
-                mid = int(mid)
-                w, h = mid % 8 + 1, mid % 6 + 1
-                x = np.arange(w, dtype=np.int64)
-                y = np.arange(h, dtype=np.int64)
-                r = np.broadcast_to((mid + x) % 256, (h, w))
-                g = np.broadcast_to(((mid + 3 * y) % 256)[:, None], (h, w))
-                b = (x[None, :] * y[:, None]) % 256
-                arr = np.stack([r, g, b], axis=2).astype(np.uint8)
-                payloads.append(encode_png(arr, row_filter=lambda yy: yy % 5))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                    "mime": "image/png",
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
-
-
-def png_pixel_stats(media: DataFrame) -> DataFrame:
-    """REAL PNG pixel decode (PNG chunk walk + CRC-32 verification +
-    zlib inflate + all-five-filter unfiltering — the ``DecodeImage``
-    analog, ppocr/data/imaug/operators.py:30-68) → per-image channel
-    sums and mean. Sums are exact integers and the mean is ONE IEEE
-    division of exact ints (hash-portable); a payload that is not a
-    decodable PNG yields ``ok=false`` with null stats instead of
-    failing the job (total-function discipline)."""
-    from webextract.functions.png import decode_png
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {k.name: [] for k in PIXELS_SCHEMA.fields}
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                row = {"media_id": int(mid), "ok": False}
-                try:
-                    arr = decode_png(bytes(b))
-                    s = arr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    n_px = arr.shape[0] * arr.shape[1]
-                    row.update(
-                        width=arr.shape[1],
-                        height=arr.shape[0],
-                        n_px=n_px,
-                        sum_r=int(s[0]),
-                        sum_g=int(s[1]),
-                        sum_b=int(s[2]),
-                        mean_px=float(int(s.sum()) / (3 * n_px)),
-                        ok=True,
-                    )
-                except (ValueError, zlib.error):
-                    pass
-                for f in PIXELS_SCHEMA.fields:
-                    out[f.name].append(row.get(f.name))
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(run, PIXELS_SCHEMA)
-
-
-def resize_media(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """REAL resize for PNG payloads — decode, nearest-neighbor resample
-    with the exact-integer index map ``src = (dst · src_dim) // dst_dim``,
-    re-encode as a valid PNG. The index map is floor arithmetic, so the
-    oracle states every output pixel (and therefore the channel sums)
-    straight from the input-pixel formulas; the re-encoded payload is
-    pinned by the decode(encode(resize)) round-trip test rather than
-    the oracle (deflate bytes are library-dependent, the pixels are
-    not). Undecodable payloads yield ``ok=false`` rows."""
-    from webextract.functions.png import decode_png, encode_png, resize_nearest
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {k.name: [] for k in RESIZED_SCHEMA.fields}
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                row = {"media_id": int(mid), "ok": False}
-                try:
-                    arr = resize_nearest(decode_png(bytes(b)), target_w, target_h)
-                    s = arr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    row.update(
-                        width=target_w,
-                        height=target_h,
-                        sum_r=int(s[0]),
-                        sum_g=int(s[1]),
-                        sum_b=int(s[2]),
-                        payload=encode_png(arr),
-                        ok=True,
-                    )
-                except (ValueError, zlib.error):
-                    pass
-                for f in RESIZED_SCHEMA.fields:
-                    out[f.name].append(row.get(f.name))
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(run, RESIZED_SCHEMA)
 
 
 def explode_pages(media: DataFrame) -> DataFrame:

@@ -16,7 +16,11 @@ Scale design:
  * the LSH path buckets vectors by sign-bit sketch first, so at 100 TB
    the candidate join is an equi-join on the sketch, touching only
    same-bucket pairs; brute force stays as the small-scale/recall
-   baseline.
+   baseline;
+ * the k-means paths (:func:`ivf_topk_exact`, :func:`semdedup_exact`)
+   run the exact-integer Lloyd of ``operators/kmeans.py`` — one
+   quantizer per operator, and every partition, probe and threshold
+   decision is integer arithmetic the DuckDB oracle restates.
 """
 
 from __future__ import annotations
@@ -264,125 +268,6 @@ def ann_lsh_topk(
     return _rank_topk(cand, k)
 
 
-def ivf_assign(
-    emb: DataFrame,
-    dim: int,
-    n_lists: int = 16,
-    seed: int = PLANE_SEED,
-    train_cap: int = 100_000,
-    sample_frac: float | None = None,
-    max_iter: int = 20,
-) -> tuple[DataFrame, list[list[float]]]:
-    """IVF coarse quantizer: k-means centroids (Spark ML, JVM-side),
-    trained on a bounded SAMPLE of the corpus; every vector then gets
-    its nearest-centroid ``list_id`` in one full assignment pass.
-
-    The 100 TB recipe, now actually implemented: k-means cost is in the
-    iteration passes, and 16-4096 centroids train fine on ~1e5-1e6
-    sampled rows, so the fit touches at most ``train_cap`` rows while
-    ``transform`` streams the full corpus once. The cap is enforced by
-    ``limit(train_cap)`` alone — NO corpus ``count()`` pass (at 100 TB
-    a count is a full extra scan just to pick a sampling fraction; the
-    limit short-circuits the scan as soon as the cap is hit instead).
-    Pass ``sample_frac`` when the leading partitions are not
-    representative (e.g. input sorted by class): a seeded fixed-
-    fraction ``sample`` then spreads the draw before the cap. In
-    production the corpus is then written bucketed by ``list_id`` so
-    probes touch only their lists' files. Returns the assigned frame
-    and the centroids.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = emb.withColumn("features", array_to_vector("embedding"))
-    train = feat
-    if sample_frac is not None:
-        train = train.sample(False, sample_frac, seed)
-    train = train.limit(train_cap)
-    km = KMeans(k=n_lists, seed=seed, featuresCol="features", maxIter=max_iter)
-    model = km.fit(train)
-    assigned = (
-        model.transform(feat)
-        .withColumnRenamed("prediction", "list_id")
-        .drop("features")
-    )
-    cents = [list(map(float, c)) for c in model.clusterCenters()]
-    return assigned, cents
-
-
-def ivf_probes(
-    queries: DataFrame,
-    cents: list[list[float]],
-    n_probe: int,
-) -> DataFrame:
-    """Per-query probe lists, computed IN THE PLAN: broadcast the (tiny)
-    centroid table against the query set, L2 distance via ``zip_with``
-    + ``aggregate`` (JVM-side), rank window per query over ``n_lists``
-    rows → keep the ``n_probe`` nearest. No driver-side collect of
-    query vectors; queries stay a DataFrame end to end.
-
-    ``queries`` must carry (query_id, q_embedding, q_norm)."""
-    spark = queries.sparkSession
-    cdf = F.broadcast(
-        spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], ["probe_list", "centroid"]
-        )
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("q_embedding"),
-            F.col("centroid"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("probe_list").asc()
-    )
-    return (
-        queries.crossJoin(cdf)
-        .withColumn("d2", d2)
-        .withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= n_probe)
-        .select("query_id", "q_embedding", "q_norm", "probe_list")
-    )
-
-
-def ivf_topk(
-    emb: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_queries: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """IVF ANN: each query searches only its ``n_probe`` nearest
-    centroid lists. Probe selection happens in the plan (broadcast
-    centroid join, :func:`ivf_probes`); the candidate join is an
-    equi-join on ``list_id``. The plan contains NO driver collect of
-    data rows — only the k centroids (bounded, model-sized) cross the
-    driver. Returns (query_id, rank, neighbor_id, sim)."""
-    assigned, cents = ivf_assign(emb, dim, n_lists)
-    assigned = with_norm(assigned)
-    queries = assigned.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_embedding"),
-        F.col("norm").alias("q_norm"),
-    )
-    q = F.broadcast(ivf_probes(queries, cents, n_probe))
-    sim = _dot(F.col("embedding"), F.col("q_embedding")) / (
-        F.col("norm") * F.col("q_norm")
-    )
-    cand = (
-        assigned.join(q, F.col("list_id") == F.col("probe_list"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
-    )
-    return _rank_topk(cand, k)
-
-
 def embedding_near_dup_pairs(
     emb: DataFrame,
     dim: int,
@@ -391,8 +276,8 @@ def embedding_near_dup_pairs(
     n_bands: int = 1,
     expected_n: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, LSH-bucketed and
-    (optionally) BANDED so recall survives wide sketches.
+    """Embedding-cosine near-duplicate pairs: candidates from a BANDED
+    sign-sketch equi-join, so recall survives wide sketches.
 
     Scale story: pair work inside a bucket is quadratic in bucket size,
     so the plane count must GROW with the corpus to stay linear overall
@@ -409,8 +294,9 @@ def embedding_near_dup_pairs(
     The exact cosine filter then removes false candidates, so banding
     only ever ADDS recall, never wrong pairs.
 
-    ``n_bands=1`` is the plain single-bucket join (the small-corpus
-    default). Requires ``n_planes % n_bands == 0``.
+    ``n_bands=1`` is one band of all ``n_planes`` bits, i.e. pairs
+    with identical sketches (the small-corpus default). Requires
+    ``n_planes % n_bands == 0``.
     """
     if n_planes is None:
         if expected_n is None:
@@ -424,37 +310,14 @@ def embedding_near_dup_pairs(
             f"n_planes={n_planes} must be divisible by n_bands={n_bands}"
         )
     r = n_planes // n_bands
-    sk = lsh_sketch(with_norm(emb), dim, n_planes=n_planes)
-    if n_bands == 1:
-        # single bucket key: one self-join carrying the vectors along
-        a = sk.alias("a")
-        b = sk.alias("b")
-        sim = _dot(F.col("a.embedding"), F.col("b.embedding")) / (
-            F.col("a.norm") * F.col("b.norm")
-        )
-        # threshold the RAW cosine (rounding before the compare would
-        # shift the decision boundary by up to 5e-7 — the repo-wide
-        # "never round() before comparing" portability rule); the
-        # rounded value is display-only
-        return (
-            a.join(
-                b,
-                (F.col("a.sketch") == F.col("b.sketch"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .filter(sim >= threshold)
-            .select(
-                F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"),
-                F.round(sim, 6).alias("sim"),
-            )
-        )
-    # banded: the candidate join shuffles only (vec_id, band_id, bits)
-    # rows — 16 bytes, not embedding arrays (the simhash-pairs shape);
-    # vectors join back once per side for the exact cosine filter.
+    # the candidate join shuffles only (vec_id, band_id, bits) rows —
+    # 16 bytes, not embedding arrays (the simhash-pairs shape); vectors
+    # join back once per side for the exact cosine filter.
     # Sketches feed three branches (band join both sides + both vector
     # lookups): compute them once.
-    sk = sk.localCheckpoint(eager=False)
+    sk = lsh_sketch(with_norm(emb), dim, n_planes=n_planes).localCheckpoint(
+        eager=False
+    )
     band_rows = [
         F.struct(
             F.lit(b).alias("band_id"),
@@ -491,115 +354,15 @@ def embedding_near_dup_pairs(
     sim = _dot(F.col("emb_a"), F.col("emb_b")) / (
         F.col("norm_a") * F.col("norm_b")
     )
-    # raw-cosine threshold, rounded value display-only (see the
-    # single-bucket branch)
+    # threshold the RAW cosine (rounding before the compare would
+    # shift the decision boundary by up to 5e-7 — the repo-wide
+    # "never round() before comparing" portability rule); the
+    # rounded value is display-only
     return (
         cand.join(ea, "vec_a")
         .join(eb, "vec_b")
         .filter(sim >= threshold)
         .select("vec_a", "vec_b", F.round(sim, 6).alias("sim"))
-    )
-
-
-# SemDeDup cluster sizing: target mean vectors per k-means cluster.
-# The paper scale is ~n/10^4 clusters (50k clusters on LAION), so the
-# within-cluster self-join does ~n·target/2 pair work — linear in n.
-SEMDEDUP_TARGET_CLUSTER = 10_000
-
-
-def lists_for_corpus(
-    expected_n: int, target_cluster: int = SEMDEDUP_TARGET_CLUSTER
-) -> int:
-    """Derive SemDeDup's ``n_lists`` from the EXPECTED corpus size (a
-    catalog stat, never a runtime ``count()`` — the same contract as
-    :func:`planes_for_corpus`): enough clusters that the mean cluster
-    holds ~``target_cluster`` vectors, floored at 2 so tiny corpora
-    still partition. 10^12 vectors → 10^8 clusters at the default
-    target; the paper's 50k on ~5·10^8 LAION images is the same
-    ratio."""
-    return max(2, -(-expected_n // target_cluster))  # ceil div
-
-
-def semdedup(
-    emb: DataFrame,
-    dim: int,
-    n_lists: int | None = None,
-    threshold: float = 0.95,
-    train_cap: int = 100_000,
-    sample_frac: float | None = None,
-    km_iter: int = 5,
-    expected_n: int | None = None,
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    deduplication by k-means partitioning — cluster the embedding
-    space with a sample-trained coarse quantizer, find cosine
-    near-duplicates WITHIN each cluster only, and keep one exemplar
-    per duplicate group → (vec_id, list_id, group_id, is_keeper).
-    Users delete ``is_keeper = false`` rows. The embedding-space
-    sibling of the MinHash pipeline: the cluster plays the LSH
-    bucket's role, catching paraphrase-level duplicates n-gram
-    sketches cannot see.
-
-    Scale shape: the k-means fit touches ≤ ``train_cap`` sampled rows
-    (never a corpus count — see :func:`ivf_assign`); assignment is one
-    streaming pass. Within-cluster pair work is quadratic in cluster
-    size, so the cluster count is THE scale knob — and the SAFE
-    behavior is the default: pass ``expected_n`` (a catalog stat) and
-    ``n_lists`` derives from :func:`lists_for_corpus` (~n/10^4
-    clusters, the paper's ratio), keeping the self-join's input
-    ~linear in n. With neither given, a small-corpus default of 16
-    applies. As with IVF, write the corpus bucketed by ``list_id`` so
-    each cluster's self-join reads only its own files and no exchange
-    precedes the join. Duplicate groups are closed transitively with
-    the same pointer-jumping connected-components used for MinHash
-    clusters (a dup chain may span pairs), keeper = smallest vec_id.
-
-    Rows-only vs the oracle by design (k-means on floats is not
-    SQL-statable); correctness is pinned by planted-duplicate recall
-    and brute-force-parity tests in test_ops.py.
-    """
-    from webextract.operators.dedup import connected_components
-
-    if n_lists is None:
-        n_lists = 16 if expected_n is None else lists_for_corpus(expected_n)
-    # a PARTITION is all the quantizer provides here — near-identical
-    # vectors co-cluster long before k-means converges, so the fit is
-    # capped at km_iter rounds (each Lloyd round is a full Spark job)
-    assigned, _ = ivf_assign(
-        emb, dim, n_lists=n_lists, train_cap=train_cap,
-        sample_frac=sample_frac, max_iter=km_iter,
-    )
-    sk = with_norm(assigned).localCheckpoint(eager=False)
-    a, b = sk.alias("a"), sk.alias("b")
-    sim = _dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.norm") * F.col("b.norm")
-    )
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.list_id") == F.col("b.list_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select(
-            F.col("a.vec_id").alias("doc_a"),
-            F.col("b.vec_id").alias("doc_b"),
-        )
-    )
-    comp = connected_components(pairs)
-    lbl = comp.select("doc_id", F.col("cluster_id").alias("grp"))
-    return (
-        sk.select("vec_id", "list_id")
-        .join(lbl, sk["vec_id"] == lbl["doc_id"], "left")
-        .select(
-            "vec_id",
-            "list_id",
-            F.coalesce("grp", F.col("vec_id")).alias("group_id"),
-            (F.coalesce("grp", F.col("vec_id")) == F.col("vec_id")).alias(
-                "is_keeper"
-            ),
-        )
     )
 
 
@@ -611,15 +374,18 @@ def semdedup_exact(
     threshold_sq_num: int = 9025,
     threshold_sq_den: int = 10_000,
 ) -> DataFrame:
-    """SemDeDup with the EXACT-INTEGER coarse quantizer
-    (:func:`webextract.operators.kmeans.kmeans_int`): the same
-    partition → within-cluster cosine pairs → connected components →
-    keeper chain as :func:`semdedup`, but every arithmetic step is
-    fully specified integer math, so the whole result — cluster ids,
+    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
+    deduplication by k-means partitioning → (vec_id, list_id,
+    group_id, is_keeper). Cluster the embedding space with the
+    EXACT-INTEGER coarse quantizer
+    (:func:`webextract.operators.kmeans.kmeans_int`), find cosine
+    near-duplicates WITHIN each cluster only, close duplicate groups
+    transitively with connected components (a dup chain may span
+    pairs) and keep the smallest vec_id per group; users delete
+    ``is_keeper = false`` rows. Every arithmetic step is fully
+    specified integer math, so the whole result — cluster ids,
     duplicate pairs, group labels, keepers — is bit-identical across
-    engines and statable as ANSI SQL. This is the oracle-backed
-    headline; the float Spark-ML variant stays for API parity with
-    trained quantizers.
+    engines and statable as ANSI SQL.
 
     The cosine threshold is stated as a RATIONAL square:
     ``sim ≥ t`` (t > 0) holds iff ``dot > 0`` and
@@ -631,12 +397,12 @@ def semdedup_exact(
     contract (ppocr/postprocess/db_postprocess.py:220-246) — quantize
     first, then only exact arithmetic.
 
-    Scale shape: identical to :func:`semdedup` — map-only assignment
-    against k broadcast centroids (see kmeans.assign), one
-    localCheckpoint on the thin (vec_id, qv, cluster, n2) table
-    reused by both sides of the pair join, within-cluster equi-join
-    (k is THE scale knob; derive it from a catalog stat like
-    :func:`lists_for_corpus`), pointer-jumping components.
+    Scale shape: map-only assignment against k broadcast centroids
+    (see kmeans.assign), one localCheckpoint on the thin (vec_id, qv,
+    cluster, n2) table reused by both sides of the pair join,
+    within-cluster equi-join, pointer-jumping components. Pair work is
+    quadratic in cluster size, so k is THE scale knob: ~n/10^4
+    clusters (the paper's 50k on LAION) keeps the self-join ~linear.
     """
     from webextract.operators import kmeans as km
     from webextract.operators.dedup import connected_components
@@ -711,11 +477,12 @@ def ivf_topk_exact(
     n_iter: int = 3,
 ) -> DataFrame:
     """IVF ANN over the EXACT-INTEGER coarse quantizer
-    (:func:`webextract.operators.kmeans.kmeans_fit`): the same
-    probe-then-rank shape as :func:`ivf_topk`, but the quantizer —
-    seeds, Lloyd rounds, assignments, centroid table — is fully
-    specified integer arithmetic, and probe selection is the exact
-    integer squared distance with the frozen (d2, cluster) tie-break.
+    (:func:`webextract.operators.kmeans.kmeans_fit`): each query
+    searches only its ``n_probe`` nearest centroid lists. The
+    quantizer — seeds, Lloyd rounds, assignments, centroid table — is
+    fully specified integer arithmetic, and probe selection is the
+    exact integer squared distance with the frozen (d2, cluster)
+    tie-break.
     The candidate set is therefore bit-identical across engines and
     the whole query is statable as ANSI SQL (the ranking tail is the
     same float cosine as sim_topk/ann_lsh — rank-not-sim output, the
@@ -726,10 +493,7 @@ def ivf_topk_exact(
     join is an equi-join of the assigned corpus against the broadcast
     probe table; the neighbor-embedding lookup is an equi-join on
     vec_id. Nothing but the k centroids is ever driver-bound, and the
-    corpus is scanned once per Lloyd round + once to search — at
-    10^12 vectors the fit would ride a bounded sample exactly like
-    :func:`ivf_assign` (``limit(train_cap)``), the one knob this
-    fixture-scale headline omits.
+    corpus is scanned once per Lloyd round + once to search.
     """
     from webextract.operators import kmeans as km
 

@@ -26,10 +26,9 @@ the real table format: :func:`run_extraction_iceberg` commits each
 wave with ``writeTo(...).overwritePartitions()`` (the table must be
 partitioned by ``bucket`` — overwrite is what keeps a crashed,
 unlogged wave idempotent on rerun) and records Iceberg's OWN snapshot
-id in the log (:func:`iceberg_available` gates it; it has never
-executed here — the jar does not exist in the sandbox — but the
-wave/commit/resume logic it shares with the parquet path is fully
-tested).
+id in the log (:func:`iceberg_available` gates it). Both entry points
+run the one wave loop, :func:`_run_waves`; they differ only in how a
+wave's pages are written and how the wave commits.
 
 The checkpoint unit mirrors the reference's resumable training
 checkpoints (tools/program.py:218-224, load via tools/train.py:174).
@@ -42,8 +41,10 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,7 +60,7 @@ def iceberg_available(spark: SparkSession) -> bool:
             "org.apache.iceberg.spark.SparkCatalog"
         )
         return True
-    except Exception:
+    except Py4JJavaError:
         return False
 
 
@@ -120,30 +121,62 @@ def _bucket_col(cfg: JobConfig):
     return F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)).cast("int")
 
 
-def _bucketed_waves(
-    pages: DataFrame, cfg: JobConfig, done: set[int]
-) -> tuple[DataFrame, list[list[int]]]:
-    """Shared wave planner (parquet AND Iceberg paths): url-hash
-    bucketing + the remaining buckets sliced into waves."""
+def _run_waves(
+    spark: SparkSession,
+    pages: DataFrame,
+    cfg: JobConfig,
+    done: set[int],
+    write_pages: Callable[[DataFrame], None],
+    commit: Callable[[list[int], dict], None],
+) -> dict:
+    """THE wave loop under both entry points: url-hash bucketing, the
+    remaining buckets sliced into waves, one extraction job per wave
+    with its lineage side-output. ``write_pages`` writes a wave's
+    extracted rows (carrying ``bucket``); ``commit`` then records the
+    wave with its ``{"urls", "sec"}`` stats. Returns summary stats."""
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     bucketed = pages.withColumn("bucket", _bucket_col(cfg))
     todo = sorted(set(range(cfg.n_buckets)) - done)
     waves = [
         todo[i : i + cfg.wave_size] for i in range(0, len(todo), cfg.wave_size)
     ]
-    return bucketed, waves
+    out_lineage = os.path.join(cfg.output_dir, "lineage")
 
-
-def _extract_wave(
-    bucketed: DataFrame, wave: list[int], cfg: JobConfig
-) -> DataFrame:
-    """One wave's unified extraction frame (pages + lineage rows)."""
-    wave_pages = bucketed.filter(F.col("bucket").isin(wave))
-    return extract_pages_with_lineage(
-        wave_pages.repartition(len(wave), "bucket").select(
-            "url", "html", "bucket"
-        ),
-        cfg.extract,
-    )
+    total = {"waves": 0, "buckets_done": len(done), "urls": 0}
+    for wave in waves:
+        t0 = time.perf_counter()
+        # one job: repartition by bucket so each output partition is
+        # written by the tasks that own it (no tiny-file explosion)
+        wave_pages = bucketed.filter(F.col("bucket").isin(wave))
+        uni = extract_pages_with_lineage(
+            wave_pages.repartition(len(wave), "bucket").select(
+                "url", "html", "bucket"
+            ),
+            cfg.extract,
+        ).persist()
+        try:
+            extracted, lineage = split_lineage(uni)
+            # re-derive the bucket from the url (the UDF consumed it)
+            write_pages(extracted.withColumn("bucket", _bucket_col(cfg)))
+            n_urls = int(
+                lineage.agg(F.sum("urls_in")).first()[0] or 0
+            )
+            # partitioned by wave + dynamic overwrite: a crash between
+            # this write and the commit reruns the wave and OVERWRITES
+            # its lineage partition instead of appending a duplicate
+            # set (same idempotency rule as the pages side)
+            lineage.withColumn(
+                "wave_start_bucket", F.lit(min(wave))
+            ).write.mode("overwrite").partitionBy("wave_start_bucket").parquet(
+                out_lineage
+            )
+        finally:
+            uni.unpersist()
+        commit(wave, {"urls": n_urls, "sec": round(time.perf_counter() - t0, 3)})
+        total["waves"] += 1
+        total["buckets_done"] += len(wave)
+        total["urls"] += n_urls
+    return total
 
 
 def run_extraction(
@@ -152,86 +185,61 @@ def run_extraction(
     """Run (or resume) the full extraction over ``pages``.
 
     Returns summary stats. Safe to re-invoke after any failure: only
-    un-manifested buckets are (re)processed.
+    un-manifested buckets are (re)processed. Each wave writes
+    ``extracted/bucket=K/`` parquet partitions and commits through
+    :func:`_commit_wave`.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    done = done_buckets(cfg)
-    bucketed, waves = _bucketed_waves(pages, cfg, done)
     out_pages = os.path.join(cfg.output_dir, "extracted")
-    out_lineage = os.path.join(cfg.output_dir, "lineage")
 
-    total = {"waves": 0, "buckets_done": len(done), "urls": 0}
-    for wave in waves:
-        t0 = time.perf_counter()
-        # one job: repartition by bucket so each output partition is
-        # written by the tasks that own it (no tiny-file explosion)
-        uni = _extract_wave(bucketed, wave, cfg).persist()
-        try:
-            extracted, lineage = split_lineage(uni)
-            # re-derive the bucket from the url (the UDF consumed it)
-            extracted = extracted.withColumn("bucket", _bucket_col(cfg))
-            (
-                extracted.write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(out_pages)
+    def write_pages(extracted: DataFrame) -> None:
+        extracted.write.mode("overwrite").partitionBy("bucket").parquet(out_pages)
+
+    def commit(wave: list[int], stats: dict) -> None:
+        _commit_wave(cfg, wave, _wave_files(out_pages, wave), stats)
+
+    return _run_waves(spark, pages, cfg, done_buckets(cfg), write_pages, commit)
+
+
+def _check_iceberg_log(log: SnapshotLog, known_ids: set) -> None:
+    """Snapshot-validated resume for :func:`run_extraction_iceberg`:
+    every committed wave must carry an Iceberg snapshot id, and that
+    id must still be in the table history (``known_ids``). A log
+    written by :func:`run_extraction`, or a table dropped or rolled
+    back under it, raises instead of resuming against missing data."""
+    for rec in log.entries():
+        if "iceberg_snapshot_id" not in rec:
+            raise RuntimeError(
+                f"snapshot {rec['seq']} (buckets {rec['buckets']}) was "
+                "committed by the parquet path (no iceberg_snapshot_id) — "
+                "mixed commit paths in one output_dir; resume with "
+                "run_extraction or restart from a clean output_dir"
             )
-            n_urls = int(
-                lineage.agg(F.sum("urls_in")).first()[0] or 0
+        if rec["iceberg_snapshot_id"] not in known_ids:
+            raise RuntimeError(
+                f"snapshot {rec['iceberg_snapshot_id']} in the log is "
+                "missing from the table's snapshots — table was rewritten; "
+                "restart from a clean output_dir"
             )
-            # partitioned by wave + dynamic overwrite: a crash between
-            # this write and the manifest commit reruns the wave and
-            # OVERWRITES its lineage partition instead of appending a
-            # duplicate set (same idempotency rule as the pages side)
-            lineage.withColumn(
-                "wave_start_bucket", F.lit(min(wave))
-            ).write.mode("overwrite").partitionBy("wave_start_bucket").parquet(
-                out_lineage
-            )
-        finally:
-            uni.unpersist()
-        _commit_wave(
-            cfg,
-            wave,
-            _wave_files(out_pages, wave),
-            {"urls": n_urls, "sec": round(time.perf_counter() - t0, 3)},
-        )
-        total["waves"] += 1
-        total["buckets_done"] += len(wave)
-        total["urls"] += n_urls
-    return total
 
 
 def run_extraction_iceberg(
     spark: SparkSession, pages: DataFrame, cfg: JobConfig, table: str
 ) -> dict:
-    """The Iceberg-catalog variant of :func:`run_extraction` (same
-    wave planner, same lineage side-output, same stats contract): each
-    wave commits with ``writeTo(table).overwritePartitions()`` — the
-    v2 dynamic-partition overwrite, so the ``table`` MUST be
-    partitioned by ``bucket``. Overwrite (not append) is what makes a
-    crash between the Iceberg commit and the snapshot-log append safe:
-    the rerun REPLACES the orphan wave's bucket partitions instead of
-    appending the same rows twice. The log records Iceberg's OWN
-    snapshot id, read back from ``<table>.snapshots``; resume
-    cross-checks that every recorded snapshot id still exists in the
-    table history — a dropped/rolled-back table raises instead of
-    resuming against missing data.
+    """The Iceberg-catalog variant of :func:`run_extraction`: the same
+    wave loop (:func:`_run_waves`), lineage side-output and stats
+    contract, but each wave writes with
+    ``writeTo(table).overwritePartitions()`` — the v2 dynamic-partition
+    overwrite, so the ``table`` MUST be partitioned by ``bucket``.
+    Overwrite (not append) is what makes a crash between the Iceberg
+    commit and the snapshot-log append safe: the rerun REPLACES the
+    orphan wave's bucket partitions instead of appending the same rows
+    twice. The log records Iceberg's OWN snapshot id, read back from
+    ``<table>.snapshots``, and resume cross-checks the log against the
+    table history (:func:`_check_iceberg_log`).
 
     GATED: requires the Iceberg Spark runtime on the classpath
-    (:func:`iceberg_available`); this sandbox has no jar and no way to
-    install one, so this path is untested here by construction — the
-    wave/commit/resume machinery it shares with the parquet path
-    (:func:`_bucketed_waves`, :func:`_extract_wave`, ``SnapshotLog``)
-    is the tested code.
-
-    Vendoring attempts, recorded per round: no iceberg artifact exists
-    anywhere on the image (`find / -name '*iceberg*'` empty, no jar in
-    the pyspark jars dir, no ivy cache), and the sandbox has no DNS —
-    both `urllib` against repo1.maven.org and `pip download` fail with
-    name resolution errors. The commit semantics this path needs
-    (atomic append, parent-chain validation, time travel, orphan
-    vacuum) are implemented and pytest-pinned by ``SnapshotLog``
-    (plans/snapshots.py), which this function treats as the contract.
+    (:func:`iceberg_available`); without it this raises
+    ``RuntimeError`` before touching ``cfg.output_dir``.
     """
     if not iceberg_available(spark):
         raise RuntimeError(
@@ -240,60 +248,23 @@ def run_extraction_iceberg(
         )
     log = SnapshotLog(cfg.output_dir)
     done = log.buckets_as_of()
-    # snapshot-validated resume: every committed wave's Iceberg
-    # snapshot must still exist in the table history
-    known = {
-        r["snapshot_id"]
-        for r in spark.sql(f"SELECT snapshot_id FROM {table}.snapshots").collect()
-    }
-    for rec in log.entries():
-        if "iceberg_snapshot_id" not in rec:
-            raise RuntimeError(
-                f"snapshot log entry for bucket {rec.get('bucket')} was "
-                "committed by the parquet path (no iceberg_snapshot_id) — "
-                "mixed commit paths in one output_dir; resume with "
-                "run_extraction or restart from a clean output_dir"
-            )
-        if rec["iceberg_snapshot_id"] not in known:
-            raise RuntimeError(
-                f"snapshot {rec.get('iceberg_snapshot_id')} in the log is "
-                f"missing from {table}.snapshots — table was rewritten; "
-                "restart from a clean output_dir"
-            )
-    bucketed, waves = _bucketed_waves(pages, cfg, done)
-    out_lineage = os.path.join(cfg.output_dir, "lineage")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    total = {"waves": 0, "buckets_done": len(done), "urls": 0}
-    for wave in waves:
-        t0 = time.perf_counter()
-        uni = _extract_wave(bucketed, wave, cfg).persist()
-        try:
-            extracted, lineage = split_lineage(uni)
-            (
-                extracted.withColumn("bucket", _bucket_col(cfg))
-                .writeTo(table)
-                .overwritePartitions()
-            )
-            n_urls = int(lineage.agg(F.sum("urls_in")).first()[0] or 0)
-            lineage.withColumn(
-                "wave_start_bucket", F.lit(min(wave))
-            ).write.mode("overwrite").partitionBy("wave_start_bucket").parquet(
-                out_lineage
-            )
-        finally:
-            uni.unpersist()
+    _check_iceberg_log(
+        log,
+        {
+            r["snapshot_id"]
+            for r in spark.sql(f"SELECT snapshot_id FROM {table}.snapshots").collect()
+        },
+    )
+
+    def write_pages(extracted: DataFrame) -> None:
+        extracted.writeTo(table).overwritePartitions()
+
+    def commit(wave: list[int], stats: dict) -> None:
         snap = spark.sql(
             f"SELECT snapshot_id FROM {table}.snapshots "
             "ORDER BY committed_at DESC LIMIT 1"
         ).first()[0]
-        log.append(
-            wave,
-            [],  # Iceberg owns the file manifest; the log keeps its id
-            iceberg_snapshot_id=snap,
-            urls=n_urls,
-            sec=round(time.perf_counter() - t0, 3),
-        )
-        total["waves"] += 1
-        total["buckets_done"] += len(wave)
-        total["urls"] += n_urls
-    return total
+        # Iceberg owns the file manifest; the log keeps its id
+        log.append(wave, [], iceberg_snapshot_id=snap, **stats)
+
+    return _run_waves(spark, pages, cfg, done, write_pages, commit)
