@@ -42,7 +42,7 @@ spark.stop()
 """
 
 # The measured job is the production shape: parquet scan -> one
-# mapInPandas extraction stage -> sink. No synthesis in the timed path.
+# mapInArrow extraction stage -> sink. No synthesis in the timed path.
 _WORKER = r"""
 import json, sys, time
 sys.path.insert(0, "/root/repo")

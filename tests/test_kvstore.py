@@ -6,6 +6,7 @@ import os
 import struct
 
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from webextract.sources.kvstore import (
@@ -106,6 +107,10 @@ def test_corruption_fails_loud(spark):
     unsorted = _MAGIC + struct.pack(">I", 2) + recs + _TRAILER + struct.pack(">I", 2)
     with pytest.raises(ValueError, match="out of order"):
         list(_parse_skv_buffer(unsorted))
+    # a NULL shard payload fails the job and names the shard
+    null = spark.createDataFrame([(7, None)], "shard_id long, payload binary")
+    with pytest.raises(PythonException, match="SKV shard 7 has a NULL payload"):
+        parse_kv(null).collect()
 
 
 def test_on_disk_store_roundtrip_and_file_skip(spark, tmp_path):

@@ -586,6 +586,9 @@ def test_media_features_known_values(spark):
     assert sum(r[1].byte_hist) == 2 and len(r[1].byte_hist) == 16
     assert r[2].ok is False and r[2].byte_hist is None
     assert r[3].byte_hist[0x80 >> 4] == 10 and r[3].mean_byte == 128.0
+    # 3 bins do not divide 256: refused, never silently 4 bins
+    with pytest.raises(ValueError, match="n_bins must divide 256"):
+        multimodal.media_features(df, n_bins=3)
 
 
 def test_media_features_histogram_conservation(spark, docs):

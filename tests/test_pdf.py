@@ -459,3 +459,32 @@ def test_pdf_columns_on_spark(spark):
                 interleaved.append("M%02d" % (mid % 50) + "y" * 57)
             interleaved += [lefts[r], rights[r]]
         assert row["text"] != " ".join(interleaved)
+
+
+@pytest.mark.parametrize("op", ["pdf_text", "pdf_metadata", "pdf_columns"])
+def test_pdf_operators_drop_null_payloads(spark, op):
+    """A NULL payload follows the malformed-input rule, no rows: next
+    to a valid PDF only the valid id's rows come back, and alone it
+    gives an empty frame with the operator's schema."""
+    from pyspark.sql import types as T
+
+    from webextract.operators import multimodal
+
+    fn = getattr(multimodal, op)
+    ddl = {
+        "pdf_text": multimodal.PDF_TEXT_SCHEMA,
+        "pdf_metadata": multimodal.PDF_META_SCHEMA,
+        "pdf_columns": multimodal.PDF_COLUMNS_SCHEMA,
+    }[op]
+    valid = multimodal.synth_pdf(
+        spark.createDataFrame([(3, "t")], "doc_id long, text string")
+    )
+    null = spark.createDataFrame([(9, None, None)], multimodal.MEDIA_SCHEMA)
+
+    mixed = fn(valid.unionByName(null)).collect()
+    assert {r["media_id"] for r in mixed} == {3}
+    assert sorted(mixed) == sorted(fn(valid).collect())
+
+    only_null = fn(null)
+    assert only_null.collect() == []
+    assert only_null.schema == T.StructType.fromDDL(ddl)

@@ -11,6 +11,7 @@ import datetime as dt
 import gzip
 
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from webextract.sources.warc import (
@@ -107,7 +108,7 @@ def test_read_warc_files(spark, tmp_path):
     assert (got.n, got.u) == (11, 10)
 
 
-def test_parse_fail_loud_on_bad_framing():
+def test_parse_fail_loud_on_bad_framing(spark):
     r = _record("https://x.example/", "2024-01-01T00:00:00Z", b"<p>hi</p>")
     with pytest.raises(ValueError):
         list(_parse_warc_buffer(r[:-10]))  # truncated body
@@ -116,3 +117,7 @@ def test_parse_fail_loud_on_bad_framing():
     no_len = b"WARC/1.0\r\nWARC-Type: response\r\n\r\nbody\r\n\r\n"
     with pytest.raises(ValueError):
         list(_parse_warc_buffer(no_len))
+    # a NULL segment payload fails the job and names the column
+    null = spark.createDataFrame([(None,)], "content binary")
+    with pytest.raises(PythonException, match="NULL 'content' payload"):
+        parse_warc(null, payload_col="content").collect()

@@ -1,5 +1,6 @@
 """The page loop under every html operator drops cached zip finders and
-imports still work; and no package module imports Spark's ML library.
+imports still work; no package module imports Spark's ML library; and
+only the partition loop's own module crosses into Python per batch.
 
 In-process, no Spark: a zip archive on ``sys.path`` stands in for
 ``pyspark.zip`` on a worker's path.
@@ -82,4 +83,22 @@ def test_no_module_imports_pyspark_ml():
                 for n in names
                 if n.split(".")[:2] == ["pyspark", "ml"]
             ]
+    assert offenders == []
+
+
+def test_only_the_partition_loop_module_calls_map_in():
+    """Every Python stage runs on ``operators/extract.py``'s partition
+    loop (``map_rows``, ``extract_pages``, ``extract_pages_with_lineage``):
+    no other module calls ``.mapInPandas(`` or ``.mapInArrow(``."""
+    package = Path(__file__).resolve().parents[1] / "webextract"
+    loop = package / "operators" / "extract.py"
+    offenders = [
+        f"{py.relative_to(package.parent)}:{node.lineno} {node.func.attr}"
+        for py in sorted(package.rglob("*.py"))
+        if py != loop
+        for node in ast.walk(ast.parse(py.read_text(), str(py)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("mapInPandas", "mapInArrow")
+    ]
     assert offenders == []

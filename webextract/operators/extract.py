@@ -17,10 +17,13 @@ Arrow batch → write. Design points (SURVEY.md §4):
    predict_system.py:68-119) are emitted from the same UDF as extra
    rows with a discriminator column and split afterwards — no second
    pass over the html;
- * the page loop is shared: :func:`_page_batches` is the one partition
-   loop and :func:`webextract.functions.extract.page_text` the one html
-   prologue of every html operator — layout, tables and KIE emit their
-   rows through :func:`map_page_rows`.
+ * the partition loop is shared: :func:`_page_batches` runs every
+   Python stage's Arrow batches. Extraction builds its own Arrow
+   arrays; every other stage (layout, tables, KIE, the PDF/media
+   operators, the SKV and WARC parsers) returns plain row tuples
+   through :func:`map_rows`, and the html ones take
+   :func:`webextract.functions.extract.page_text` as their prologue
+   via :func:`map_page_rows`.
 """
 
 from __future__ import annotations
@@ -176,36 +179,56 @@ def _page_batches(
             yield build(rb)
 
 
-def map_page_rows(
-    pages: DataFrame,
-    schema: T.StructType,
-    page_rows: Callable[[str], Iterable[tuple]],
-    cfg: ExtractConfig,
+def map_rows(
+    df: DataFrame,
+    cols: list[str],
+    schema: T.StructType | str,
+    rows: Callable[..., Iterable[tuple]],
 ) -> DataFrame:
-    """pages(url, html, ...) → ``schema`` rows in ONE ``mapInArrow``
-    crossing. Each page's html goes through :func:`page_text`, the
-    prologue extraction uses, and ``page_rows(html_text)`` returns that
-    page's rows; each is emitted as ``(url, *row)``, so field 0 of
-    ``schema`` is the url. The Arrow schema is derived from ``schema``.
-    The fan-out happens inside the batch: no explode, no shuffle."""
+    """df(cols) → ``schema`` rows in ONE ``mapInArrow`` crossing, the
+    partition loop of every Python stage. ``rows(*values)`` gets one
+    input row's ``cols`` values as Python objects and returns zero or
+    more output tuples in ``schema`` field order; the fan-out happens
+    inside the batch (no explode, no shuffle). ``schema`` is a
+    ``StructType`` or a DDL string; the Arrow schema is derived from it."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     pa_schema = to_arrow_schema(schema)
 
     def build(rb: pa.RecordBatch) -> pa.RecordBatch:
-        rows = [
-            (url, *row)
-            for url, raw in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist())
-            for row in page_rows(page_text(raw, cfg)[0])
+        out = [
+            row
+            for values in zip(*(c.to_pylist() for c in rb.columns))
+            for row in rows(*values)
         ]
-        cols = list(zip(*rows)) or [()] * len(pa_schema)
+        columns = list(zip(*out)) or [()] * len(pa_schema)
         return pa.RecordBatch.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
+            [pa.array(c, type=f.type) for c, f in zip(columns, pa_schema)],
             schema=pa_schema,
         )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         return _page_batches(batches, build)
 
-    return pages.select("url", "html").mapInArrow(run, schema)
+    return df.select(*cols).mapInArrow(run, schema)
+
+
+def map_page_rows(
+    pages: DataFrame,
+    schema: T.StructType,
+    page_rows: Callable[[str], Iterable[tuple]],
+    cfg: ExtractConfig,
+) -> DataFrame:
+    """pages(url, html, ...) → ``schema`` rows through :func:`map_rows`.
+    Each page's html goes through :func:`page_text`, the prologue
+    extraction uses, and ``page_rows(html_text)`` returns that page's
+    rows; each is emitted as ``(url, *row)``, so field 0 of ``schema``
+    is the url."""
+
+    def rows(url: str, raw: bytes) -> Iterator[tuple]:
+        return ((url, *row) for row in page_rows(page_text(raw, cfg)[0]))
+
+    return map_rows(pages, ["url", "html"], schema, rows)
 
 
 def extract_pages(

@@ -22,16 +22,30 @@ as a ``binary`` column with typed metadata, and four paths remain:
   Arrow stage and routes PDFs to the PDF parser and everything else to
   the html block pipeline; :func:`explode_pages` fans a multi-page
   container out to one row per page.
+
+Every Python-side operator here is a per-row function on
+:func:`~webextract.operators.extract.map_rows`: one ``mapInArrow``
+crossing on extraction's partition loop, Arrow batch in and Arrow batch
+out, with the payload logic only inside the row function.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from webextract.config import ExtractConfig
+from webextract.functions.extract import extract_page
+from webextract.functions.pdf import (
+    PdfError,
+    column_layout_order,
+    encode_pdf,
+    parse_pdf,
+    reading_order,
+)
+from webextract.operators.extract import map_rows
 
 # file-signature prefix → format (public file signatures): the one table
 # behind both sniffs, media_metadata (JVM-side) and parse_image_header.
@@ -170,27 +184,16 @@ def parse_image_header(b: bytes | None) -> tuple[str, int, int, bool]:
 
 
 def decode_media(media: DataFrame) -> DataFrame:
-    """Arrow-batched decode: one ``mapInPandas`` crossing, mirrors the
-    extraction operator's batching. Emits typed decode results; a real
-    codec drops in at :func:`_parse_fake_header` only."""
+    """Arrow-batched decode: one row per payload through
+    :func:`~webextract.operators.extract.map_rows`, the partition loop
+    extraction runs on. Emits typed decode results; a real codec drops
+    in at :func:`_parse_fake_header` only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            parsed = [parse_image_header(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "format": [p[0] for p in parsed],
-                    "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "n_bytes": [len(b) if b is not None else 0 for b in pdf["payload"]],
-                    "ok": [p[3] for p in parsed],
-                }
-            )
+    def rows(mid: int, payload: bytes | None) -> list[tuple]:
+        fmt, w, h, ok = parse_image_header(payload)
+        return [(mid, fmt, w, h, len(payload or b""), ok)]
 
-    return media.select("media_id", "payload").mapInPandas(run, DECODED_SCHEMA)
+    return map_rows(media, ["media_id", "payload"], DECODED_SCHEMA, rows)
 
 
 FEATURES_SCHEMA = T.StructType(
@@ -212,40 +215,24 @@ def media_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
 
     Per payload: byte count, mean byte value, and an ``n_bins``-bin
     byte-value histogram — computed with numpy ``frombuffer`` +
-    ``bincount`` per Arrow batch (no per-byte Python). Downstream
+    ``bincount`` per payload (no per-byte Python). ``n_bins`` must
+    divide 256 (a power of two), else ``ValueError``. Downstream
     these vectors feed the similarity/dedup operators like any other
     embedding column. Rows-only at the driver (blob-level aggregation
     is not portably SQL-statable); invariants are pytest-pinned.
     """
-    assert 256 % n_bins == 0
+    if n_bins < 1 or 256 % n_bins:
+        raise ValueError(f"n_bins must divide 256, got {n_bins}")
     shift = 8 - (n_bins - 1).bit_length()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(mid: int, payload: bytes | None) -> list[tuple]:
+        if not payload:
+            return [(mid, 0, None, None, False)]
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        hist = np.bincount(arr >> shift, minlength=n_bins)
+        return [(mid, len(arr), float(arr.mean()), hist.tolist(), True)]
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {
-                "media_id": pdf["media_id"].to_numpy(),
-                "n_bytes": [], "mean_byte": [], "byte_hist": [], "ok": [],
-            }
-            for b in pdf["payload"]:
-                if b is None or len(b) == 0:
-                    out["n_bytes"].append(0)
-                    out["mean_byte"].append(None)
-                    out["byte_hist"].append(None)
-                    out["ok"].append(False)
-                    continue
-                arr = np.frombuffer(b, dtype=np.uint8)
-                hist = np.bincount(arr >> shift, minlength=n_bins)
-                out["n_bytes"].append(len(arr))
-                out["mean_byte"].append(float(arr.mean()))
-                out["byte_hist"].append([int(x) for x in hist])
-                out["ok"].append(True)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(run, FEATURES_SCHEMA)
+    return map_rows(media, ["media_id", "payload"], FEATURES_SCHEMA, rows)
 
 
 def explode_pages(media: DataFrame) -> DataFrame:
@@ -405,31 +392,24 @@ def synth_pdf(docs: DataFrame) -> DataFrame:
     ``functions/pdf.py`` from the :func:`_pdf_plan` formulas. The PDF
     branch of the reference's ``check_and_read``
     (ppocr/utils/utility.py:102-120) made real for webtext."""
-    from webextract.functions.pdf import encode_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for mid in pdf["doc_id"]:
-                version, compress, pages = _pdf_plan(int(mid))
-                payloads.append(
-                    encode_pdf(
-                        [[f for f in pg] for pg in pages],
-                        compress=compress,
-                        version=version,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                    "mime": "application/pdf",
-                }
-            )
+    def rows(mid: int) -> list[tuple]:
+        version, compress, pages = _pdf_plan(mid)
+        payload = encode_pdf(pages, compress=compress, version=version)
+        return [(mid, payload, "application/pdf")]
 
-    return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
+    return map_rows(docs, ["doc_id"], MEDIA_SCHEMA, rows)
+
+
+def _parsed_pdf(payload: bytes | None, with_widths: bool = False):
+    """``parse_pdf(payload)``, or None for a NULL or malformed payload:
+    the PDF operators' rule for both is no rows (counted vs oracle)."""
+    if payload is None:
+        return None
+    try:
+        return parse_pdf(payload, with_widths=with_widths)
+    except PdfError:
+        return None
 
 
 PDF_TEXT_SCHEMA = (
@@ -444,37 +424,20 @@ def pdf_text(media: DataFrame) -> DataFrame:
     ``sorted_boxes`` analog — fragments sorted top-to-bottom,
     left-to-right (tools/infer/predict_system.py reading-order sort) —
     joined with single spaces. Arrow-batched per-row Python: the
-    document parse is the SURVEY §2.10-budgeted case, same as HTML."""
-    from webextract.functions.pdf import PdfError, parse_pdf, reading_order
+    document parse is the SURVEY §2.10-budgeted case, same as HTML.
+    A NULL or malformed payload yields no pages."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mids, pnos, nfr, txt, nch = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _, pages, _, _ = parse_pdf(bytes(payload))
-                except PdfError:
-                    continue  # malformed input → no pages (counted vs oracle)
-                for p, frags in enumerate(pages):
-                    joined = " ".join(t for _, _, t in reading_order(frags))
-                    mids.append(int(mid))
-                    pnos.append(p + 1)
-                    nfr.append(len(frags))
-                    txt.append(joined)
-                    nch.append(len(joined))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "page_no": pd.Series(pnos, dtype="int32"),
-                    "n_frags": pd.Series(nfr, dtype="int32"),
-                    "text": pd.Series(txt, dtype="object"),
-                    "n_chars": pd.Series(nch, dtype="int32"),
-                }
-            )
+    def rows(mid: int, payload: bytes | None) -> list[tuple]:
+        parsed = _parsed_pdf(payload)
+        if parsed is None:
+            return []
+        out = []
+        for p, frags in enumerate(parsed[1]):
+            joined = " ".join(t for _, _, t in reading_order(frags))
+            out.append((mid, p + 1, len(frags), joined, len(joined)))
+        return out
 
-    return media.select("media_id", "payload").mapInPandas(run, PDF_TEXT_SCHEMA)
+    return map_rows(media, ["media_id", "payload"], PDF_TEXT_SCHEMA, rows)
 
 
 PDF_META_SCHEMA = (
@@ -488,48 +451,22 @@ def pdf_metadata(media: DataFrame) -> DataFrame:
     version, page count from the page-tree walk, object count from the
     xref table, whether any content stream was filtered, and total
     extracted fragments/characters. The metadata-peek stage of the
-    multi-format dispatch (``check_and_read``), PDF edition."""
-    from webextract.functions.pdf import PdfError, parse_pdf, reading_order
+    multi-format dispatch (``check_and_read``), PDF edition. A NULL or
+    malformed payload yields no row."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = {k: [] for k in (
-                "media_id", "version", "n_pages", "n_objects",
-                "compressed", "total_frags", "total_chars",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    version, pages, compressed, n_objects = parse_pdf(
-                        bytes(payload)
-                    )
-                except PdfError:
-                    continue
-                total_chars = sum(
-                    len(" ".join(t for _, _, t in reading_order(fr)))
-                    for fr in pages
-                )
-                rows["media_id"].append(int(mid))
-                rows["version"].append(version)
-                rows["n_pages"].append(len(pages))
-                rows["n_objects"].append(n_objects)
-                rows["compressed"].append(bool(compressed))
-                rows["total_frags"].append(sum(len(fr) for fr in pages))
-                rows["total_chars"].append(total_chars)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    "version": pd.Series(rows["version"], dtype="object"),
-                    "n_pages": pd.Series(rows["n_pages"], dtype="int32"),
-                    "n_objects": pd.Series(rows["n_objects"], dtype="int32"),
-                    "compressed": pd.Series(rows["compressed"], dtype="bool"),
-                    "total_frags": pd.Series(rows["total_frags"], dtype="int32"),
-                    "total_chars": pd.Series(rows["total_chars"], dtype="int32"),
-                }
-            )
+    def rows(mid: int, payload: bytes | None) -> list[tuple]:
+        parsed = _parsed_pdf(payload)
+        if parsed is None:
+            return []
+        version, pages, compressed, n_objects = parsed
+        total_chars = sum(
+            len(" ".join(t for _, _, t in reading_order(fr))) for fr in pages
+        )
+        total_frags = sum(len(fr) for fr in pages)
+        return [(mid, version, len(pages), n_objects, bool(compressed),
+                 total_frags, total_chars)]
 
-    return media.select("media_id", "payload").mapInPandas(run, PDF_META_SCHEMA)
+    return map_rows(media, ["media_id", "payload"], PDF_META_SCHEMA, rows)
 
 
 def _pdf_col_plan(mid: int):
@@ -566,25 +503,12 @@ def synth_pdf_columns(docs: DataFrame) -> DataFrame:
     reference's ``sorted_layout_boxes`` recovery exists for
     (ppstructure/recovery/recovery_to_doc.py:81-140). Even doc_ids
     FlateDecode-compress the content stream."""
-    from webextract.functions.pdf import encode_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = [
-                encode_pdf(_pdf_col_plan(int(mid)), compress=int(mid) % 2 == 0)
-                for mid in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "payload": payloads,
-                    "mime": "application/pdf",
-                }
-            )
+    def rows(mid: int) -> list[tuple]:
+        payload = encode_pdf(_pdf_col_plan(mid), compress=mid % 2 == 0)
+        return [(mid, payload, "application/pdf")]
 
-    return docs.select("doc_id").mapInPandas(run, MEDIA_SCHEMA)
+    return map_rows(docs, ["doc_id"], MEDIA_SCHEMA, rows)
 
 
 PDF_COLUMNS_SCHEMA = (
@@ -601,66 +525,30 @@ def pdf_columns(media: DataFrame) -> DataFrame:
     recovery_to_doc.py:81-140; SURVEY §2 W2) — instead of the plain
     top-to-bottom sort. ``layout`` is ``'double'`` when both columns
     received fragments, else ``'single'``; spanner/column counts are
-    reported so the classification itself is oracle-checkable."""
-    from webextract.functions.pdf import (
-        PdfError,
-        column_layout_order,
-        parse_pdf,
-    )
+    reported so the classification itself is oracle-checkable. A NULL
+    or malformed payload yields no pages."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = {k: [] for k in (
-                "media_id", "page_no", "layout", "n_spanners",
-                "n_left", "n_right", "text", "n_chars",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _, pages, _, _, widths = parse_pdf(
-                        bytes(payload), with_widths=True
-                    )
-                except PdfError:
-                    continue
-                for p, frags in enumerate(pages):
-                    # classify against the page's ACTUAL MediaBox width
-                    # (A4 / landscape pages get their own quartiles,
-                    # like the reference passing the real image w)
-                    ordered = column_layout_order(
-                        frags, page_width=widths[p]
-                    )
-                    sides = [side for _, side in ordered]
-                    n_span = sides.count("single")
-                    n_left = sides.count("left")
-                    n_right = sides.count("right")
-                    joined = " ".join(f[2] for f, _ in ordered)
-                    rows["media_id"].append(int(mid))
-                    rows["page_no"].append(p + 1)
-                    rows["layout"].append(
-                        "double" if n_left and n_right else "single"
-                    )
-                    rows["n_spanners"].append(n_span)
-                    rows["n_left"].append(n_left)
-                    rows["n_right"].append(n_right)
-                    rows["text"].append(joined)
-                    rows["n_chars"].append(len(joined))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    "page_no": pd.Series(rows["page_no"], dtype="int32"),
-                    "layout": pd.Series(rows["layout"], dtype="object"),
-                    "n_spanners": pd.Series(rows["n_spanners"], dtype="int32"),
-                    "n_left": pd.Series(rows["n_left"], dtype="int32"),
-                    "n_right": pd.Series(rows["n_right"], dtype="int32"),
-                    "text": pd.Series(rows["text"], dtype="object"),
-                    "n_chars": pd.Series(rows["n_chars"], dtype="int32"),
-                }
-            )
+    def rows(mid: int, payload: bytes | None) -> list[tuple]:
+        parsed = _parsed_pdf(payload, with_widths=True)
+        if parsed is None:
+            return []
+        _, pages, _, _, widths = parsed
+        out = []
+        for p, frags in enumerate(pages):
+            # classify against the page's ACTUAL MediaBox width
+            # (A4 / landscape pages get their own quartiles,
+            # like the reference passing the real image w)
+            ordered = column_layout_order(frags, page_width=widths[p])
+            sides = [side for _, side in ordered]
+            n_left = sides.count("left")
+            n_right = sides.count("right")
+            joined = " ".join(f[2] for f, _ in ordered)
+            layout = "double" if n_left and n_right else "single"
+            out.append((mid, p + 1, layout, sides.count("single"),
+                        n_left, n_right, joined, len(joined)))
+        return out
 
-    return media.select("media_id", "payload").mapInPandas(
-        run, PDF_COLUMNS_SCHEMA
-    )
+    return map_rows(media, ["media_id", "payload"], PDF_COLUMNS_SCHEMA, rows)
 
 
 ANY_EXTRACT_SCHEMA = (
@@ -674,53 +562,26 @@ def extract_any(media: DataFrame, cfg=None) -> DataFrame:
     reader dispatches GIF/PDF/image per file): each payload is sniffed
     per element inside ONE Arrow stage and routed to the matching real
     parser. ``%PDF-`` → full structural PDF parse, reading-order page
-    texts joined by blank lines; anything else → the fused HTML block
-    pipeline (charset decode → tokenize → score → span-merge,
+    texts joined by blank lines (a malformed PDF is dropped); anything
+    else, a NULL payload included, → the fused HTML block pipeline
+    (charset decode → tokenize → score → span-merge,
     ``functions/extract.py::extract_page``). One JVM↔Python crossing
     for the whole mixed corpus — no per-format filter/union re-scan.
     """
-    from webextract.config import ExtractConfig
-    from webextract.functions.extract import extract_page
-    from webextract.functions.pdf import PdfError, parse_pdf, reading_order
-
     cfg = cfg or ExtractConfig()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mids, fmts, npg, txt = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                if b.startswith(b"%PDF-"):
-                    try:
-                        _, pages, _, _ = parse_pdf(b)
-                    except PdfError:
-                        continue  # malformed → dropped (counted vs oracle)
-                    text = "\n\n".join(
-                        " ".join(t for _, _, t in reading_order(fr))
-                        for fr in pages
-                    )
-                    fmt, n_pages = "pdf", len(pages)
-                else:
-                    text = extract_page(b, cfg)["text"]
-                    fmt, n_pages = "html", 1
-                mids.append(int(mid))
-                fmts.append(fmt)
-                npg.append(n_pages)
-                txt.append(text)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(mids, dtype="int64"),
-                    "fmt": pd.Series(fmts, dtype="object"),
-                    "n_pages": pd.Series(npg, dtype="int32"),
-                    "text": pd.Series(txt, dtype="object"),
-                    "n_chars": pd.Series(
-                        [len(t) for t in txt], dtype="int32"
-                    ),
-                }
-            )
+    def rows(mid: int, payload: bytes | None) -> list[tuple]:
+        b = payload or b""
+        if not b.startswith(b"%PDF-"):
+            text = extract_page(b, cfg)["text"]
+            return [(mid, "html", 1, text, len(text))]
+        parsed = _parsed_pdf(b)
+        if parsed is None:
+            return []
+        pages = parsed[1]
+        text = "\n\n".join(
+            " ".join(t for _, _, t in reading_order(fr)) for fr in pages
+        )
+        return [(mid, "pdf", len(pages), text, len(text))]
 
-    return media.select("media_id", "payload").mapInPandas(
-        run, ANY_EXTRACT_SCHEMA
-    )
+    return map_rows(media, ["media_id", "payload"], ANY_EXTRACT_SCHEMA, rows)

@@ -57,6 +57,8 @@ from typing import Iterator, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from webextract.operators.extract import map_rows
+
 _MAGIC = b"SKV1"
 _TRAILER = b"SKV$"
 
@@ -188,21 +190,19 @@ def _parse_skv_buffer(buf: bytes) -> Iterator[tuple[str, bytes]]:
 
 def parse_kv(shards: DataFrame, payload_col: str = "payload") -> DataFrame:
     """(shard_id, …, payload binary) → (shard_id, key, value). One
-    Arrow crossing; the per-record Python loop is amortized over every
-    record in the shard (``LMDBDataSet.__getitem__``'s per-index
-    ``txn.get`` pair, ``lmdb_dataset.py:123-148``, batched)."""
-    import pandas as pd
+    Arrow crossing through :func:`~webextract.operators.extract.map_rows`;
+    the per-record Python loop is amortized over every record in the
+    shard (``LMDBDataSet.__getitem__``'s per-index ``txn.get`` pair,
+    ``lmdb_dataset.py:123-148``, batched). A NULL payload fails the job
+    with a ``ValueError`` naming the shard, like any other framing
+    violation."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = [
-                (sid, k, v)
-                for sid, payload in zip(pdf["shard_id"], pdf[payload_col])
-                for k, v in _parse_skv_buffer(bytes(payload))
-            ]
-            yield pd.DataFrame(rows, columns=["shard_id", "key", "value"])
+    def rows(sid: int, payload: bytes | None) -> Iterator[tuple]:
+        if payload is None:
+            raise ValueError(f"SKV shard {sid} has a NULL payload")
+        return ((sid, k, v) for k, v in _parse_skv_buffer(payload))
 
-    return shards.select("shard_id", payload_col).mapInPandas(run, PARSED_SCHEMA)
+    return map_rows(shards, ["shard_id", payload_col], PARSED_SCHEMA, rows)
 
 
 def kv_range(shards: DataFrame, lo: str, hi: str) -> DataFrame:

@@ -17,9 +17,10 @@ Spark-first shape:
    — thousands of files spread across executors, no shuffle at all;
    parallelism is the file count (Common Crawl ships ~72k files per
    monthly snapshot, far above any executor count).
- * :func:`parse_warc` is ONE ``mapInPandas`` crossing per segment —
-   the per-record Python loop is amortized over the thousands of
-   records inside each payload, exactly the batching argument of the
+ * :func:`parse_warc` is ONE ``mapInArrow`` crossing on the partition
+   loop extraction runs on (``operators.extract.map_rows``) — the
+   per-record Python loop is amortized over the thousands of records
+   inside each payload, exactly the batching argument of the
    extraction stage (SURVEY §2.10). Everything downstream (extract,
    dedup, quality) stays on the already-parallel (url, ts, html) rows.
  * Synthesis (:func:`synth_warc_segments`) is 100% JVM built-ins:
@@ -41,6 +42,8 @@ from typing import Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from webextract.operators.extract import map_rows
 
 _CRLF = "\r\n"
 _DATE_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"  # Spark pattern
@@ -118,7 +121,7 @@ def synth_warc_segments(pages: DataFrame, n_segments: int = 8) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# parsing (one mapInPandas crossing): WARC bytes -> (url, ts_s, html)
+# parsing (one mapInArrow crossing): WARC bytes -> (url, ts_s, html)
 # ---------------------------------------------------------------------------
 
 
@@ -184,18 +187,17 @@ def _parse_warc_buffer(buf: bytes) -> Iterator[tuple[str, int, bytes]]:
 
 
 def parse_warc(segments: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """(…, payload binary) → (url, ts_s, html). One Arrow crossing;
-    plain or per-record-gzip payloads are auto-detected."""
-    import pandas as pd
+    """(…, payload binary) → (url, ts_s, html). One Arrow crossing
+    through :func:`~webextract.operators.extract.map_rows`; plain or
+    per-record-gzip payloads are auto-detected. A NULL payload fails
+    the job with a ``ValueError`` naming the segment column."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = [
-                rec for payload in pdf[payload_col] for rec in _parse_warc_buffer(bytes(payload))
-            ]
-            yield pd.DataFrame(rows, columns=["url", "ts_s", "html"])
+    def rows(payload: bytes | None) -> Iterator[tuple[str, int, bytes]]:
+        if payload is None:
+            raise ValueError(f"WARC segment with a NULL {payload_col!r} payload")
+        return _parse_warc_buffer(payload)
 
-    return segments.select(payload_col).mapInPandas(run, PARSED_SCHEMA)
+    return map_rows(segments, [payload_col], PARSED_SCHEMA, rows)
 
 
 def read_warc_files(spark: SparkSession, path: str) -> DataFrame:

@@ -45,17 +45,12 @@ def run_bloom_stream(
     """Drain a pages directory through the streaming filter builder
     (availableNow + complete output to a memory sink) and return the
     final word table as a batch DataFrame."""
-    from webextract.streaming.extract_stream import read_pages_stream
+    from webextract.streaming.extract_stream import (
+        _drain_to_memory,
+        read_pages_stream,
+    )
 
     sketch = streaming_bloom(
         read_pages_stream(spark, input_dir), m_bits=m_bits, k=k
     )
-    q = (
-        sketch.writeStream.format("memory")
-        .queryName("bloom_sketch")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("bloom_sketch")
+    return _drain_to_memory(sketch, "bloom_sketch")

@@ -36,17 +36,12 @@ def run_cm_stream(spark, input_dir: str, depth: int = 4, width: int = 4096):
     """Drain a pages directory through the streaming sketch builder
     (availableNow + complete output to a memory sink) and return the
     final cell table as a batch DataFrame."""
-    from webextract.streaming.extract_stream import read_pages_stream
+    from webextract.streaming.extract_stream import (
+        _drain_to_memory,
+        read_pages_stream,
+    )
 
     sketch = streaming_count_min(
         read_pages_stream(spark, input_dir), depth, width
     )
-    q = (
-        sketch.writeStream.format("memory")
-        .queryName("cm_sketch")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("cm_sketch")
+    return _drain_to_memory(sketch, "cm_sketch")

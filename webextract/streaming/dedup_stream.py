@@ -53,14 +53,10 @@ def run_dedup_stream(
 ) -> None:
     """Drain a pages directory through streaming dedup into parquet
     with exactly-once checkpointing (availableNow)."""
-    from webextract.streaming.extract_stream import read_pages_stream
+    from webextract.streaming.extract_stream import (
+        _drain_to_parquet,
+        read_pages_stream,
+    )
 
     deduped = streaming_dedup(read_pages_stream(spark, input_dir))
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_parquet(deduped, output_dir, checkpoint_dir)

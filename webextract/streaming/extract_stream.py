@@ -48,6 +48,37 @@ def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
+def _drain_to_parquet(
+    stream: DataFrame, output_dir: str, checkpoint_dir: str
+) -> None:
+    """The one parquet drain of every streaming runner: availableNow
+    into ``output_dir`` with exactly-once checkpointing; blocks until
+    the available input is processed."""
+    q = (
+        stream.writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def _drain_to_memory(stream: DataFrame, name: str) -> DataFrame:
+    """The one memory-sink drain of the streaming sketch builders:
+    availableNow with ``complete`` output into the in-memory table
+    ``name``, returned as a batch DataFrame."""
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream.sparkSession.table(name)
+
+
 def run_extract_stream(
     spark: SparkSession,
     input_dir: str,
@@ -58,16 +89,8 @@ def run_extract_stream(
     """Drain ``input_dir`` through extraction into ``output_dir`` with
     exactly-once checkpointing; blocks until the available data is
     processed (availableNow)."""
-    pages = read_pages_stream(spark, input_dir)
-    ext = extract_pages(pages, cfg)
-    q = (
-        ext.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ext = extract_pages(read_pages_stream(spark, input_dir), cfg)
+    _drain_to_parquet(ext, output_dir, checkpoint_dir)
 
 
 def run_tables_stream(
@@ -82,16 +105,8 @@ def run_tables_stream(
     availableNow with exactly-once checkpointing."""
     from webextract.operators.tables import table_cells
 
-    pages = read_pages_stream(spark, input_dir)
-    q = (
-        table_cells(pages, cfg)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    cells = table_cells(read_pages_stream(spark, input_dir), cfg)
+    _drain_to_parquet(cells, output_dir, checkpoint_dir)
 
 
 def streaming_hourly_hosts(pages: DataFrame, watermark: str = "2 hours") -> DataFrame:

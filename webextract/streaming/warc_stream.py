@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
 from webextract.operators.extract import extract_pages
 from webextract.sources.warc import parse_warc
+from webextract.streaming.extract_stream import _drain_to_parquet
 
 _BINARYFILE_SCHEMA = (
     "path string, modificationTime timestamp, length long, content binary"
@@ -57,13 +58,5 @@ def run_warc_extract_stream(
 ) -> None:
     """Drain a WARC directory through parse → extract into parquet with
     exactly-once checkpointing; blocks until available data is done."""
-    pages = read_warc_stream(spark, input_dir)
-    q = (
-        extract_pages(pages, cfg)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ext = extract_pages(read_warc_stream(spark, input_dir), cfg)
+    _drain_to_parquet(ext, output_dir, checkpoint_dir)
