@@ -208,6 +208,25 @@ def q_facade_rec_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("url", "text", "blocks_kept")
 
 
+def q_facade_det_only(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The facade's det-only mode — ``WebExtractor().extract(pages,
+    rec=False)``, the ``ocr(img, det=True, rec=False)`` analog
+    (paddleocr.py:513): the region set without text assembly, one row
+    per kept span projected to (block_id, start, end, tag), with the
+    page's block counts. The oracle states every offset from
+    ``documents`` alone — six blocks, the h1 kept as block 1 at offset
+    19 (after the nav's "Home About Contact") and the body paragraph as
+    block 2 — so the batch scorer's page-local span offsets are pinned
+    independently of the goldens."""
+    from webextract.api import WebExtractor
+
+    pages = pages_from_documents(spark, sf_dir)
+    out = WebExtractor().extract(pages, rec=False)
+    return out.select(
+        "url", F.inline("spans"), "blocks_total", "blocks_kept"
+    ).drop("score")
+
+
 def q_extract_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction joined back to page metadata (equi-join on url — the
     golden-compare join shape, SURVEY.md §2.3 J5), rolled up per lang."""
@@ -2022,6 +2041,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # facade_rec_only: new (API-parity facade, ocr(det=False)
         # analog — keep-all config path under the oracle)
         "facade_rec_only": q_facade_rec_only,
+        # facade_det_only: the det-only flag, span offsets under the oracle
+        "facade_det_only": q_facade_det_only,
         # pdf_text/pdf_meta: new (REAL PDF parse — xref walk, page
         # tree, FlateDecode, text-operator tokenize, reading-order
         # assembly; ground-truth planted-formula oracles)
@@ -2540,6 +2561,25 @@ def oracle_sql() -> dict[str, str]:
                    'Terms of Service Privacy Policy' AS text,
                    CAST(6 AS INTEGER) AS blocks_kept
             FROM documents
+        """,
+        "facade_det_only": f"""
+            WITH d AS (
+              SELECT {_URL} AS url,
+                     length('Document ' || CAST(doc_id AS VARCHAR) || ' from ' ||
+                            source) AS h1_len,
+                     length(text) AS p_len
+              FROM documents)
+            SELECT url, CAST(1 AS INTEGER) AS block_id,
+                   CAST(19 AS INTEGER) AS start,
+                   CAST(19 + h1_len AS INTEGER) AS "end", 'h1' AS tag,
+                   CAST(6 AS INTEGER) AS blocks_total,
+                   CAST(2 AS INTEGER) AS blocks_kept
+            FROM d
+            UNION ALL
+            SELECT url, CAST(2 AS INTEGER), CAST(20 + h1_len AS INTEGER),
+                   CAST(20 + h1_len + p_len AS INTEGER), 'p',
+                   CAST(6 AS INTEGER), CAST(2 AS INTEGER)
+            FROM d
         """,
         "extract_lang_stats": f"""
             WITH e AS (SELECT lang, {_EXTRACTED} AS text FROM documents)

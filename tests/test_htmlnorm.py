@@ -72,3 +72,33 @@ def test_decode_equals_sniff_then_decode():
     pages.append(b"\xef\xbb\xbfcaf\xe9")
     for raw in pages:
         assert decode_html(raw) == _two_step_decode(raw), raw[:80]
+
+
+def test_utf8_page_cut_inside_a_character_stays_utf8():
+    # 64 bytes of "<p>" + 200 "é" end on the first byte of the 31st "é":
+    # the cut character is dropped, the page does not turn latin-1
+    from webextract.config import ExtractConfig
+    from webextract.functions import extract_page
+
+    cfg = ExtractConfig(max_html_bytes=64)
+    r = extract_page(b"<p>" + "é".encode() * 200, cfg)
+    assert r["truncated"] is True
+    assert r["text"] == "é" * 30
+    # a cut between characters was already fine and stays so
+    assert extract_page(b"<p>a" + "é".encode() * 200, cfg)["text"] == "a" + "é" * 30
+
+
+def test_cut_decode_drops_only_a_partial_last_character():
+    from webextract.functions.htmlnorm import decode_cut_html
+
+    assert decode_cut_html("aé".encode()[:-1]) == "a"
+    assert decode_cut_html("a€".encode()[:-1]) == "a"
+    assert decode_cut_html(b"\xef\xbb\xbf" + "é".encode() * 2 + b"\xc3") == "éé"
+    # a lone lead byte at the end reads as a cut character, even on a
+    # page that would otherwise fall to its META charset
+    assert decode_cut_html(b'<meta charset="iso-8859-1">caf\xe9').endswith('">caf')
+    # whole characters, or bytes that are not utf-8 before the end,
+    # take the uncut rules
+    assert decode_cut_html("aé".encode()) == decode_html("aé".encode())
+    for raw in (b"caf\xe9 ok\xc3", b'<meta charset="iso-8859-1">caf\xe9 ok', b"ab\xff"):
+        assert decode_cut_html(raw) == decode_html(raw)

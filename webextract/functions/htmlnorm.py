@@ -12,6 +12,13 @@ Frozen decode rules, applied in order:
     the first 2048 bytes names a Python-known codec → that codec
     (errors → U+FFFD).
  4. Fallback: latin-1 (total function — never raises).
+
+Bytes cut at a size limit (``ExtractConfig.max_html_bytes``) first
+drop an incomplete utf-8 sequence at their very end when every byte
+before it is strict utf-8: the cut, not the page, broke that last
+character, so the page still takes rule 1 or 2 instead of falling to
+rule 3 or 4 (:func:`decode_cut_html`). Any other cut bytes go to the
+rules unchanged.
 """
 
 from __future__ import annotations
@@ -65,3 +72,15 @@ def decode_html(raw: bytes) -> str:
     # "replace", not "strict": a META declaration may name utf-8 for
     # bytes that aren't valid utf-8
     return raw.decode(_declared_charset(raw), "replace")
+
+
+def decode_cut_html(raw: bytes) -> str:
+    """:func:`decode_html` for bytes cut at a size limit: an incomplete
+    utf-8 sequence at the end is dropped first when the bytes before
+    it are strict utf-8 (see the module rules)."""
+    tail = codecs.getincrementaldecoder("utf-8")()
+    try:
+        tail.decode(raw, final=False)
+    except UnicodeDecodeError:
+        return decode_html(raw)
+    return decode_html(raw[: len(raw) - len(tail.getstate()[0])])

@@ -15,11 +15,16 @@ step, drops blanks, and joins (ppocr/postprocess/rec_postprocess.py:
    (block_id, start, end, tag, score) with offsets into ``doc_text``
    so ``sep.join(doc_text[s:e])`` reproduces the output byte-for-byte
    (span-slice invariant, FIXTURES.md).
+
+:func:`merge_pages` merges a block table of many pages back to back
+(an Arrow batch's) in one walk over the kept blocks and returns the
+batch's columns; :func:`merge_spans` is its batch of one page.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from collections.abc import Mapping, Sequence
+from typing import Any, NamedTuple
 
 import numpy as np
 
@@ -49,6 +54,29 @@ def md_decorate(tag: str, text: str) -> str:
     return text
 
 
+class MergedPages(NamedTuple):
+    """:func:`merge_pages`' columnar result. Entry p of ``text``,
+    ``mean_score`` and ``blocks_kept`` belongs to page p; page p's
+    spans are entries ``span_offsets[p]:span_offsets[p+1]`` of the
+    five ``span_columns`` (block_id, start, end, tag, score)."""
+
+    text: list[str]
+    mean_score: list[float]
+    blocks_kept: list[int]
+    span_offsets: list[int]
+    span_columns: tuple[list[int], list[int], list[int], list[str], list[float]]
+
+    def page(self, p: int) -> dict[str, Any]:
+        """Page p as :func:`merge_spans`' dict."""
+        lo, hi = self.span_offsets[p], self.span_offsets[p + 1]
+        return {
+            "text": self.text[p],
+            "spans": list(zip(*(c[lo:hi] for c in self.span_columns))),
+            "mean_score": self.mean_score[p],
+            "blocks_kept": self.blocks_kept[p],
+        }
+
+
 def merge_spans(
     blocks: dict[str, list],
     scores: np.ndarray,
@@ -60,30 +88,65 @@ def merge_spans(
     ``spans`` is a list of ``(block_id, start, end, tag, score)`` tuples
     in document order.
     """
+    return merge_pages(blocks, scores, keep, [0, len(blocks["block_id"])], cfg).page(0)
+
+
+def merge_pages(
+    blocks: Mapping[str, Sequence],
+    scores: np.ndarray,
+    keep: np.ndarray,
+    offsets: Sequence[int],
+    cfg: ExtractConfig,
+) -> MergedPages:
+    """Merge a block table of several pages, page p being rows
+    ``offsets[p]:offsets[p+1]``. ``blocks`` needs the columns
+    ``block_id, start, end, text, tag``, with page-local ids and
+    offsets. Adjacent duplicates are only dropped within a page."""
     texts = blocks["text"]
-    out_texts: list[str] = []
-    spans: list[tuple[int, int, int, str, float]] = []
-    span_scores: list[float] = []
-    prev_text: str | None = None
-    for i in np.flatnonzero(keep):
-        t = texts[i]
-        if prev_text is not None and t == prev_text:
-            continue  # CTC-style adjacent-duplicate drop (raw text)
-        out_texts.append(md_decorate(blocks["tag"][i], t) if cfg.markdown else t)
-        spans.append(
-            (
-                int(blocks["block_id"][i]),
-                int(blocks["start"][i]),
-                int(blocks["end"][i]),
-                blocks["tag"][i],
-                float(scores[i]),
-            )
-        )
-        span_scores.append(float(scores[i]))
-        prev_text = t
-    return {
-        "text": cfg.separator.join(out_texts),
-        "spans": spans,
-        "mean_score": float(np.mean(span_scores)) if span_scores else 0.0,
-        "blocks_kept": len(spans),
-    }
+    tags = blocks["tag"]
+    kept = keep.nonzero()[0]
+    bounds = np.searchsorted(kept, offsets).tolist()
+    kept = kept.tolist()
+    sep = cfg.separator
+    sel: list[int] = []
+    out_text: list[str] = []
+    span_offsets = [0]
+    by_count: dict[int, list[int]] = {}  # span count → pages with it
+    for p, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+        page: list[str] = []
+        prev_text = None
+        for i in kept[lo:hi]:
+            t = texts[i]
+            if t == prev_text:
+                continue  # CTC-style adjacent-duplicate drop (raw text)
+            sel.append(i)
+            page.append(md_decorate(tags[i], t) if cfg.markdown else t)
+            prev_text = t
+        out_text.append(sep.join(page))
+        span_offsets.append(len(sel))
+        if page:
+            by_count.setdefault(len(page), []).append(p)
+
+    span_scores = scores[sel].tolist()
+    # each page's mean span score, bit for bit np.mean's (its sum, then
+    # its division), taken row-wise over the pages with the same span
+    # count: one reduction per distinct count; 0.0 on a page with none
+    mean_score = [0.0] * len(out_text)
+    for n, pages in by_count.items():
+        rows = np.array([span_scores[span_offsets[p] : span_offsets[p] + n] for p in pages])
+        for p, m in zip(pages, (np.add.reduce(rows, axis=1) / n).tolist()):
+            mean_score[p] = m
+    b_ids, starts, ends = blocks["block_id"], blocks["start"], blocks["end"]
+    return MergedPages(
+        text=out_text,
+        mean_score=mean_score,
+        blocks_kept=[hi - lo for lo, hi in zip(span_offsets, span_offsets[1:])],
+        span_offsets=span_offsets,
+        span_columns=(
+            [b_ids[i] for i in sel],
+            [starts[i] for i in sel],
+            [ends[i] for i in sel],
+            [tags[i] for i in sel],
+            span_scores,
+        ),
+    )

@@ -6,7 +6,14 @@ scores each candidate region with a masked mean (``box_score_fast``,
 ppocr/postprocess/db_postprocess.py:182-197,220-246) and drops regions
 below ``box_thresh``. Here the "probability" is a frozen linear blend
 of text-density, link-density, tag-prior and depth features, computed
-with numpy over the whole block table at once (no per-block Python).
+with numpy over a whole block table at once (no per-block Python).
+
+The table may hold many pages back to back: :func:`score_pages` runs
+the blend ONCE over every block of an Arrow batch (page p owns rows
+``offsets[p]:offsets[p+1]``), so the ~15 numpy calls cost once per
+batch instead of once per page. Only neighbor smoothing and the top-K
+cap look across rows; both respect the page boundaries.
+:func:`score_blocks` is the batch of one page.
 
 Also implements:
  * score_mode "slow" — the ``box_score_slow`` analog
@@ -23,6 +30,8 @@ Also implements:
 
 from __future__ import annotations
 
+from collections.abc import Mapping, Sequence
+
 import numpy as np
 
 from webextract.config import DEFAULT_TAG_BONUS, TAG_BONUS, ExtractConfig
@@ -30,7 +39,23 @@ from webextract.config import DEFAULT_TAG_BONUS, TAG_BONUS, ExtractConfig
 
 def score_blocks(blocks: dict[str, list], cfg: ExtractConfig) -> tuple[np.ndarray, np.ndarray]:
     """Return ``(scores: float64[K], keep: bool[K])`` for one block table."""
-    k = len(blocks["block_id"])
+    return score_pages(blocks, [0, len(blocks["block_id"])], cfg)
+
+
+def score_pages(
+    blocks: Mapping[str, Sequence], offsets: Sequence[int], cfg: ExtractConfig
+) -> tuple[np.ndarray, np.ndarray]:
+    """Return ``(scores: float64[K], keep: bool[K])`` for a block table
+    of several pages, page p being rows ``offsets[p]:offsets[p+1]``.
+
+    ``blocks`` needs the columns ``text_len, link_text_len, depth,
+    is_boiler, tag``. Each block scores exactly as it would in a table
+    of its page alone: the blend is elementwise (its floating-point
+    operation order is frozen), and smoothing and the cap never look
+    past a page boundary.
+    """
+    offs = np.asarray(offsets, dtype=np.intp)
+    k = int(offs[-1])
     if k == 0:
         return np.zeros(0), np.zeros(0, dtype=bool)
 
@@ -65,19 +90,32 @@ def score_blocks(blocks: dict[str, list], cfg: ExtractConfig) -> tuple[np.ndarra
     keep = scores >= cfg.drop_score
 
     # neighbor smoothing (dilation analog): rescue near-misses between
-    # two kept blocks. One pass, computed on the pre-smoothing mask.
+    # two kept blocks of the same page. One pass, computed on the
+    # pre-smoothing mask. Every offset is a page's first block and
+    # every offset - 1 a page's last (a page with fewer than 3 blocks
+    # has no other), so neither is ever sandwiched; the mask has one
+    # spare slot at index k for the offset k and the offset 0 - 1.
     if k >= 3 and cfg.smooth_margin > 0.0:
         near = (~keep) & (scores >= cfg.drop_score - cfg.smooth_margin)
-        sandwiched = np.zeros(k, dtype=bool)
-        sandwiched[1:-1] = keep[:-2] & keep[2:]
-        keep = keep | (near & sandwiched)
+        sandwiched = np.zeros(k + 1, dtype=bool)
+        sandwiched[1 : k - 1] = keep[:-2] & keep[2:]
+        sandwiched[offs] = False
+        sandwiched[offs - 1] = False
+        keep = keep | (near & sandwiched[:k])
 
-    # top-K cap (max_candidates analog): keep the K highest-scoring,
-    # ties broken by document order (stable argsort on -score).
-    if int(keep.sum()) > cfg.max_blocks:
-        kept_idx = np.flatnonzero(keep)
-        order = kept_idx[np.argsort(-scores[kept_idx], kind="stable")]
-        keep = np.zeros(k, dtype=bool)
-        keep[order[: cfg.max_blocks]] = True
+    # top-K cap (max_candidates analog), only on pages keeping more
+    # than K: keep the K highest-scoring, ties broken by document order
+    # (stable argsort on -score). K+1-long prefix sums, so a trailing
+    # page with no blocks still has a count.
+    if np.count_nonzero(keep) > cfg.max_blocks:
+        kept_before = np.zeros(k + 1, dtype=np.intp)
+        np.cumsum(keep, out=kept_before[1:])
+        counts = kept_before[offs[1:]] - kept_before[offs[:-1]]
+        for p in np.flatnonzero(counts > cfg.max_blocks):
+            lo, hi = offs[p], offs[p + 1]
+            kept_idx = lo + np.flatnonzero(keep[lo:hi])
+            order = kept_idx[np.argsort(-scores[kept_idx], kind="stable")]
+            keep[lo:hi] = False
+            keep[order[: cfg.max_blocks]] = True
 
     return scores, keep

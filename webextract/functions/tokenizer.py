@@ -224,13 +224,11 @@ def _run_reference(html_text: str) -> _BlockSink:
     return sink
 
 
-def tokenize_blocks(html_text: str, engine: str = "auto") -> dict[str, list]:
-    """Canonical html text → columnar block table.
-
-    Returns a dict of parallel lists with keys ``block_id, tag, depth,
-    text, start, end, text_len, link_text_len, n_links, is_boiler,
-    is_pre``. ``start/end`` index into ``doc_text`` (block texts joined
-    by "\\n"), returned under key ``doc_text``.
+def scan_blocks(html_text: str, engine: str = "auto") -> _BlockSink:
+    """Canonical html text → the flushed block sink. Its parallel lists
+    ``tags, depths, texts, link_lens, n_links, boilers, pres`` are the
+    page's block columns; the batch extraction path appends them to
+    batch-level columns directly.
 
     ``engine``: "auto" (fast scanner, reference fallback) or
     "reference" (stdlib html.parser only — the frozen semantics).
@@ -245,7 +243,19 @@ def tokenize_blocks(html_text: str, engine: str = "auto") -> dict[str, list]:
     if sink is None:
         sink = _run_reference(html_text)
     sink._flush()
+    return sink
 
+
+def tokenize_blocks(html_text: str, engine: str = "auto") -> dict[str, list]:
+    """Canonical html text → columnar block table.
+
+    Returns a dict of parallel lists with keys ``block_id, tag, depth,
+    text, start, end, text_len, link_text_len, n_links, is_boiler,
+    is_pre``. ``start/end`` index into ``doc_text`` (block texts joined
+    by "\\n"), returned under key ``doc_text``. ``engine`` as in
+    :func:`scan_blocks`.
+    """
+    sink = scan_blocks(html_text, engine)
     starts: list[int] = []
     ends: list[int] = []
     off = 0

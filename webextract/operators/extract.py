@@ -42,7 +42,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
-from webextract.functions.extract import extract_page, page_text
+from webextract.functions.extract import extract_batch, page_text
 
 SPAN_TYPE = T.StructType(
     [
@@ -89,51 +89,37 @@ _SPANS_PA = _EXTRACTED_PA.field("spans").type
 _LINEAGE_PA = list(_UNIFIED_PA)[1 + len(_EXTRACTED_PA):]
 
 
-def _spans_array(results: list[dict]) -> pa.ListArray:
-    """spans as a ListArray built from flattened primitive columns —
-    one pass, no per-span dict objects (the hot-path shape: a 2M-page
-    batch job builds millions of spans)."""
-    offsets = [0]
-    b_ids: list[int] = []
-    starts: list[int] = []
-    ends: list[int] = []
-    tags: list[str] = []
-    scores: list[float] = []
-    n = 0
-    for r in results:
-        for (b, s, e, t, sc) in r["spans"]:
-            b_ids.append(b)
-            starts.append(s)
-            ends.append(e)
-            tags.append(t)
-            scores.append(sc)
-        n += len(r["spans"])
-        offsets.append(n)
+def _spans_array(offsets: list[int], columns: tuple) -> pa.ListArray:
+    """spans as a ListArray over the batch's flat span columns (block_id,
+    start, end, tag, score) and page offsets — no per-span Python
+    object (the hot-path shape: a 2M-page batch job builds millions of
+    spans)."""
     fields = list(_SPANS_PA.value_type)
     struct = pa.StructArray.from_arrays(
-        [
-            pa.array(col, type=f.type)
-            for col, f in zip((b_ids, starts, ends, tags, scores), fields)
-        ],
+        [pa.array(col, type=f.type) for col, f in zip(columns, fields)],
         fields=fields,
     )
     return pa.ListArray.from_arrays(offsets, struct, type=_SPANS_PA)
 
 
 def _extract_record_batch(rb: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
-    """One Arrow batch of (url, html) → extracted batch, all-pyarrow."""
-    results = [extract_page(h, cfg) for h in rb.column(1).to_pylist()]
+    """One Arrow batch of (url, html) → extracted batch. The html column
+    is read one page at a time, and the whole batch is scored and
+    merged in one pass (:func:`extract_batch`)."""
+    html = rb.column(1)
+    batch = extract_batch((html[i].as_py() for i in range(rb.num_rows)), cfg)
+    m = batch.merged
     t = _EXTRACTED_PA.types  # EXTRACTED_SCHEMA order
     return pa.RecordBatch.from_arrays(
         [
             rb.column(0),
-            pa.array([r["text"] for r in results], type=t[1]),
-            _spans_array(results),
-            pa.array([r["mean_score"] for r in results], type=t[3]),
-            pa.array([r["blocks_total"] for r in results], type=t[4]),
-            pa.array([r["blocks_kept"] for r in results], type=t[5]),
-            pa.array([r["bytes_in"] for r in results], type=t[6]),
-            pa.array([r["truncated"] for r in results], type=t[7]),
+            pa.array(m.text, type=t[1]),
+            _spans_array(m.span_offsets, m.span_columns),
+            pa.array(m.mean_score, type=t[3]),
+            pa.array(batch.blocks_total, type=t[4]),
+            pa.array(m.blocks_kept, type=t[5]),
+            pa.array(batch.bytes_in, type=t[6]),
+            pa.array(batch.truncated, type=t[7]),
         ],
         schema=_EXTRACTED_PA,
     )
@@ -169,7 +155,7 @@ def _page_batches(
     batches: Iterator[pa.RecordBatch],
     build: Callable[[pa.RecordBatch], pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
-    """The one partition loop of every html operator: (url, html)
+    """The one partition loop of every Python stage: input Arrow
     batches → ``build(rb)``, skipping empty input batches. Runs once per
     task partition, so it also drops the worker's zip finders
     (:func:`_drop_zip_finders`)."""
