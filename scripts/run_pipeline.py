@@ -13,10 +13,11 @@ The north-rule deployment shape:
 
 Reads a pages table (url, warc_ts, html, text, lang), runs the
 resumable bucketed-wave extraction (webextract.plans.pipeline) and
-writes extracted/ + lineage/ + _manifest/ under --output. Re-running
-after a failure resumes from the manifest. This is the analog of the
-reference's CLI batch runner (tools/infer/predict_system.py:147-254)
-with recovery the reference lacks.
+writes extracted/ + lineage/ + _snapshots/ + _manifest/ under
+--output. Re-running after a failure resumes from the snapshot log.
+This is the analog of the reference's CLI batch runner
+(tools/infer/predict_system.py:147-254) with recovery the reference
+lacks.
 """
 
 from __future__ import annotations

@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 
 from webextract.plans.pipeline import (
     JobConfig,
-    done_buckets,
     run_extraction,
 )
+from webextract.plans.snapshots import SnapshotLog
 from webextract.sources.pages import pages_from_documents
 
 SF = "/root/testdata/sf0.001"
@@ -44,14 +44,10 @@ def test_full_run_then_resume_noop(spark, pages, tmp_path):
 def test_resume_processes_only_missing_buckets(spark, pages, tmp_path):
     cfg = JobConfig(output_dir=str(tmp_path / "out"), n_buckets=8, wave_size=8)
     # simulate a prior partial run: pretend buckets 0-5 are committed
-    os.makedirs(os.path.join(cfg.output_dir, "_manifest"), exist_ok=True)
-    with open(
-        os.path.join(cfg.output_dir, "_manifest", "wave-00000.json"), "w"
-    ) as f:
-        json.dump({"buckets": [0, 1, 2, 3, 4, 5]}, f)
+    SnapshotLog(cfg.output_dir).append([0, 1, 2, 3, 4, 5], [])
     stats = run_extraction(spark, pages, cfg)
     assert stats["waves"] == 1
-    assert done_buckets(cfg) == set(range(8))
+    assert SnapshotLog(cfg.output_dir).buckets_as_of() == set(range(8))
     out = spark.read.parquet(os.path.join(cfg.output_dir, "extracted"))
     # only buckets 6,7 were written
     assert set(r["bucket"] for r in out.select("bucket").distinct().collect()) == {6, 7}
@@ -60,6 +56,25 @@ def test_resume_processes_only_missing_buckets(spark, pages, tmp_path):
         F.pmod(F.xxhash64("url"), F.lit(8)).cast("int") != F.col("bucket")
     ).count()
     assert n_bad == 0
+
+
+def test_resume_ignores_a_wave_manifest_without_a_snapshot(spark, pages, tmp_path):
+    """The snapshot log is the only commit record: a wave manifest
+    that no snapshot backs commits nothing, so its buckets are
+    processed and the snapshot scan holds the whole corpus."""
+    cfg = JobConfig(output_dir=str(tmp_path / "out"), n_buckets=8, wave_size=8)
+    os.makedirs(os.path.join(cfg.output_dir, "_manifest"))
+    with open(
+        os.path.join(cfg.output_dir, "_manifest", "wave-00000.json"), "w"
+    ) as f:
+        json.dump({"buckets": [0, 1, 2, 3, 4, 5]}, f)
+    stats = run_extraction(spark, pages, cfg)
+    assert stats["waves"] == 1 and stats["urls"] == 500
+    log = SnapshotLog(cfg.output_dir)
+    assert log.buckets_as_of() == set(range(8))
+    cur = log.read_as_of(spark)
+    assert cur.count() == 500
+    assert cur.select("url").distinct().count() == 500
 
 
 def test_rerun_overwrites_unmanifested_bucket(spark, pages, tmp_path):
@@ -80,6 +95,52 @@ def test_rerun_overwrites_unmanifested_bucket(spark, pages, tmp_path):
 
 
 # -- snapshot log (Iceberg commit semantics over parquet) -------------------
+
+def test_log_names_files_relative_to_the_table_root(tmp_path, monkeypatch):
+    """A file appended through a relative output_dir is stored relative
+    to the table root, so the log resolves it from any working
+    directory; a file outside the root is refused."""
+    work = tmp_path / "work"
+    data = work / "rel" / "out" / "extracted" / "bucket=0"
+    data.mkdir(parents=True)
+    (data / "part-0.parquet").write_bytes(b"PAR1")
+    monkeypatch.chdir(work)
+    log = SnapshotLog("rel/out")
+    log.append([0], ["rel/out/extracted/bucket=0/part-0.parquet"])
+    assert log.entries()[0]["files"] == [
+        os.path.join("extracted", "bucket=0", "part-0.parquet")
+    ]
+    with pytest.raises(ValueError, match="outside the table root"):
+        log.append([1], ["elsewhere/part-1.parquet"])
+
+    monkeypatch.chdir(tmp_path)
+    for reader in (log, SnapshotLog(str(work / "rel" / "out"))):
+        files = reader.files_as_of()
+        assert files == [str(data / "part-0.parquet")]
+        assert all(os.path.isabs(f) and os.path.exists(f) for f in files)
+
+
+def test_snapshot_append_fsyncs_before_it_renames(tmp_path, monkeypatch):
+    """A snapshot record is on disk before the rename makes it visible."""
+    calls = []
+    fsync, replace = os.fsync, os.replace
+
+    def rec_fsync(fd):
+        calls.append("fsync")
+        fsync(fd)
+
+    def rec_replace(src, dst):
+        calls.append(("replace", os.path.basename(dst)))
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", rec_fsync)
+    monkeypatch.setattr(os, "replace", rec_replace)
+    rec = SnapshotLog(str(tmp_path / "out")).append([0], [])
+    assert calls == [
+        "fsync",
+        ("replace", f"snap-00000-{rec['snapshot_id']}.json"),
+    ]
+
 
 def test_snapshot_chain_and_time_travel(spark, pages, tmp_path):
     from webextract.plans.snapshots import SnapshotLog

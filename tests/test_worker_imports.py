@@ -102,3 +102,30 @@ def test_only_the_partition_loop_module_calls_map_in():
         and node.func.attr in ("mapInPandas", "mapInArrow")
     ]
     assert offenders == []
+
+
+def test_plans_publish_every_commit_point_through_one_helper():
+    """Every JSON commit point under ``plans/`` (snapshot, wave manifest,
+    tokenizer manifest) goes through ``snapshots.publish_json``, which
+    fsyncs before it renames: no other code there calls ``os.replace(``."""
+    package = Path(__file__).resolve().parents[1] / "webextract"
+    offenders = []
+    for py in sorted((package / "plans").rglob("*.py")):
+        tree = ast.parse(py.read_text(), str(py))
+        helper = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "publish_json"
+            for n in ast.walk(fn)
+        }
+        offenders += [
+            f"{py.relative_to(package.parent)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "replace"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "os"
+            and id(node) not in helper
+        ]
+    assert offenders == []

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 MINHASH_K = 8          # minhash permutations
 LSH_BANDS = 4          # bands (rows per band = MINHASH_K // LSH_BANDS)
 SHINGLE_N = 3          # words per shingle
+CC_CHECK_EVERY = 3     # connected_components rounds per convergence check
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -102,6 +103,26 @@ def minhash_signatures(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
+def _band_hashes(sig: DataFrame, key: str, k: int, bands: int) -> DataFrame:
+    """(key, band_id, bh) from a frame of ``key`` and ``mh0..mh{k-1}``:
+    band b hashes its r = k / bands signature values. THE one
+    band-hash expression — :func:`lsh_band_table` and the streaming
+    in-row probe (streaming/neardup_stream.py) both call it, so their
+    bands agree by construction."""
+    assert k % bands == 0
+    r = k // bands
+    band_rows = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.md5(F.concat(*[F.col(f"mh{b * r + j}") for j in range(r)])).alias("bh"),
+        )
+        for b in range(bands)
+    ]
+    return sig.select(key, F.explode(F.array(*band_rows)).alias("band")).select(
+        key, "band.band_id", "band.bh"
+    )
+
+
 def lsh_band_table(
     docs: DataFrame,
     k: int = MINHASH_K,
@@ -114,19 +135,7 @@ def lsh_band_table(
     can probe the same buckets (e.g. the stream-static near-dup join
     in streaming/neardup_stream.py, where a live feed is matched
     against this table as the static index)."""
-    assert k % bands == 0
-    r = k // bands
-    sig = minhash_signatures(docs, k, n, sh=sh)
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(F.concat(*[F.col(f"mh{b * r + j}") for j in range(r)])).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_rows)).alias("band")
-    ).select("doc_id", "band.band_id", "band.bh")
+    return _band_hashes(minhash_signatures(docs, k, n, sh=sh), "doc_id", k, bands)
 
 
 def lsh_pairs(
@@ -519,9 +528,7 @@ def host_boilerplate_strip(
     )
 
 
-def connected_components(
-    pairs: DataFrame, max_iter: int = 25, check_every: int = 3
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Connected components over (doc_a, doc_b) pairs → (doc_id,
     cluster_id) with cluster_id = min doc_id in the component.
 
@@ -541,7 +548,7 @@ def connected_components(
     does not build an ever-deeper lineage. The convergence count is an
     aggregate (never a collect of data rows) and — because pointer
     jumping makes overshoot rounds cheap — it runs only every
-    ``check_every`` rounds plus the final round, cutting the
+    ``CC_CHECK_EVERY`` rounds plus the final round, cutting the
     driver-sync job count ~3× vs checking each round.
     """
     fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -596,7 +603,7 @@ def connected_components(
         # convergence check rides the checkpointed frame; run it only
         # on cadence (or the last permitted round) — skipped rounds
         # trade a cheap extra join round for a saved driver sync
-        if (it + 1) % check_every == 0 or it == max_iter - 1:
+        if (it + 1) % CC_CHECK_EVERY == 0 or it == max_iter - 1:
             if upd.filter(F.col("chg")).count() == 0:
                 return labels.select("doc_id", F.col("label").alias("cluster_id"))
     raise RuntimeError(

@@ -563,6 +563,14 @@ def cm_cells(
     )
 
 
+def count_min_sketch(cells: DataFrame) -> DataFrame:
+    """The ``(j, cell, c)`` count-min table over :func:`cm_cells` rows:
+    one groupBy count, ≤ depth·width rows at any corpus size. Shared by
+    :func:`count_min_hosts` and the streaming builder
+    (streaming/cm_stream.py), so their cells agree by construction."""
+    return cells.groupBy("j", "cell").agg(F.count("*").alias("c"))
+
+
 def count_min_hosts(
     pages: DataFrame,
     depth: int = 4,
@@ -582,14 +590,14 @@ def count_min_hosts(
 
     Determinism: :func:`cm_cell` — frozen md5 row hashes, no seed
     state. A streamed deployment keeps the SAME cell table and adds
-    to it (streaming/cm_stream.py builds bit-identical cells from the
-    same map-only rows)."""
+    to it (streaming/cm_stream.py runs :func:`count_min_sketch` over
+    the same map-only rows)."""
     # cells feed both the sketch and the truth side: checkpoint so the
     # corpus scans once (r2 lesson)
     rows = cm_cells(pages, depth, width, url_col).localCheckpoint(
         eager=False
     )
-    sketch = rows.groupBy("j", "cell").agg(F.count("*").alias("c"))
+    sketch = count_min_sketch(rows)
     truth = (
         rows.filter(F.col("j") == 0)
         .groupBy("host")

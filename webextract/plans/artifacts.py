@@ -10,9 +10,10 @@ produces — the merge table and the trained vocabulary — and the
 registry stores them the way the snapshot log stores table commits:
 
 - layout ``<store>/<name>/v00001/{merges.parquet, vocab.parquet,
-  manifest.json}``; the manifest is written LAST via tmp + atomic
-  rename, so a crashed save leaves an invisible (manifest-less)
-  version directory, never a half-published model;
+  manifest.json}``; the manifest is written LAST via the snapshot
+  log's commit primitive (``snapshots.publish_json``: fsync'd tmp file
+  + atomic rename), so a crashed save leaves an invisible
+  (manifest-less) version directory, never a half-published model;
 - the manifest carries order-independent content fingerprints
   (``bit_xor(xxhash64(row))`` — a distributed aggregate, no driver
   collect of the vocabulary) and row counts; :meth:`load_tokenizer`
@@ -35,6 +36,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from webextract.plans.snapshots import publish_json
 
 __all__ = ["ModelRegistry", "ArtifactError"]
 
@@ -177,10 +180,7 @@ class ModelRegistry:
             "vocab_fingerprint": fp_v,
             **meta,
         }
-        tmp = os.path.join(vdir, ".tmp-manifest")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(vdir, "manifest.json"))
+        publish_json(os.path.join(vdir, "manifest.json"), manifest)
         return manifest
 
     # -- load --------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Resumable extraction pipeline: bucketed waves + manifest checkpoint.
+"""Resumable extraction pipeline: bucketed waves + snapshot-log checkpoint.
 
 The production driver (the analog of the reference's CLI batch runner
 ``tools/infer/predict_system.py:147-270``, which shards statically and
@@ -12,11 +12,13 @@ has NO failure recovery) — ours is resumable and idempotent:
  * a wave COMMITS by appending one snapshot to the SNAPSHOT LOG
    (``plans/snapshots.py`` — atomic append, parent-chained snapshot
    ids, per-snapshot data-file manifest: Iceberg commit semantics,
-   executable without the Iceberg jar this sandbox cannot have); a
-   human-readable wave manifest mirrors each commit;
- * resume = VALIDATE the snapshot chain (gaps / broken parents /
-   double-committed buckets raise), skip committed buckets, reprocess
-   the rest. A half-written wave is safely overwritten (dynamic
+   executable without the Iceberg jar); a human-readable wave manifest
+   (``_manifest/wave-*.json``) mirrors each commit, and nothing reads
+   it back to decide what is committed;
+ * resume reads the snapshot log ONLY: VALIDATE the chain (gaps /
+   broken parents / double-committed buckets raise), skip the buckets
+   it commits, reprocess the rest — a bucket that only a wave manifest
+   names included. A half-written wave is safely overwritten (dynamic
    partition overwrite) because its snapshot was never appended — and
    snapshot readers (``SnapshotLog.read_as_of``) never see its files
    at all, because scans plan from the log, not directory listing.
@@ -37,10 +39,8 @@ checkpoints (tools/program.py:218-224, load via tools/train.py:174).
 from __future__ import annotations
 
 import glob
-import json
 import os
 import time
-import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
 from webextract.operators.extract import extract_pages_with_lineage, split_lineage
-from webextract.plans.snapshots import SnapshotLog
+from webextract.plans.snapshots import SnapshotLog, publish_json
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -72,48 +72,24 @@ class JobConfig:
     extract: ExtractConfig = DEFAULT_CONFIG
 
 
-def _manifest_dir(cfg: JobConfig) -> str:
-    return os.path.join(cfg.output_dir, "_manifest")
-
-
-def done_buckets(cfg: JobConfig) -> set[int]:
-    """Buckets already committed: the VALIDATED snapshot chain (a
-    corrupt chain raises rather than resuming wrong), unioned with the
-    legacy wave manifests so outputs from before the snapshot log
-    still resume."""
-    done = SnapshotLog(cfg.output_dir).buckets_as_of()
-    d = _manifest_dir(cfg)
-    if os.path.isdir(d):
-        for name in os.listdir(d):
-            if name.endswith(".json"):
-                with open(os.path.join(d, name)) as f:
-                    done.update(json.load(f)["buckets"])
-    return done
-
-
-def _wave_files(out_pages: str, buckets: list[int]) -> list[str]:
-    """Data files a wave just wrote (its snapshot's file manifest)."""
-    files: list[str] = []
-    for b in buckets:
-        files.extend(glob.glob(os.path.join(out_pages, f"bucket={b}", "*.parquet")))
-    return files
-
-
 def _commit_wave(
-    cfg: JobConfig, buckets: list[int], files: list[str], stats: dict
+    cfg: JobConfig, out_pages: str, buckets: list[int], stats: dict
 ) -> dict:
-    """THE wave commit: append one snapshot (atomic), then mirror a
-    human-readable wave manifest carrying the snapshot id. A crash
-    before the snapshot append leaves the wave uncommitted (rerun +
-    dynamic overwrite); a crash after it is a completed commit."""
+    """THE wave commit: append one snapshot (atomic) naming the data
+    files the wave just wrote, then mirror a human-readable wave
+    manifest carrying the snapshot id. A crash before the snapshot
+    append leaves the wave uncommitted (rerun + dynamic overwrite); a
+    crash after it is a completed commit."""
+    files = [
+        f
+        for b in buckets
+        for f in glob.glob(os.path.join(out_pages, f"bucket={b}", "*.parquet"))
+    ]
     rec = SnapshotLog(cfg.output_dir).append(buckets, files, **stats)
-    d = _manifest_dir(cfg)
-    os.makedirs(d, exist_ok=True)
-    payload = {"buckets": buckets, "snapshot_id": rec["snapshot_id"], **stats}
-    tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.replace(tmp, os.path.join(d, f"wave-{min(buckets):05d}.json"))
+    publish_json(
+        os.path.join(cfg.output_dir, "_manifest", f"wave-{min(buckets):05d}.json"),
+        {"buckets": buckets, "snapshot_id": rec["snapshot_id"], **stats},
+    )
     return rec
 
 
@@ -125,15 +101,16 @@ def _run_waves(
     spark: SparkSession,
     pages: DataFrame,
     cfg: JobConfig,
-    done: set[int],
     write_pages: Callable[[DataFrame], None],
     commit: Callable[[list[int], dict], None],
 ) -> dict:
     """THE wave loop under both entry points: url-hash bucketing, the
-    remaining buckets sliced into waves, one extraction job per wave
-    with its lineage side-output. ``write_pages`` writes a wave's
-    extracted rows (carrying ``bucket``); ``commit`` then records the
-    wave with its ``{"urls", "sec"}`` stats. Returns summary stats."""
+    buckets the snapshot log does not commit sliced into waves, one
+    extraction job per wave with its lineage side-output.
+    ``write_pages`` writes a wave's extracted rows (carrying
+    ``bucket``); ``commit`` then records the wave with its
+    ``{"urls", "sec"}`` stats. Returns summary stats."""
+    done = SnapshotLog(cfg.output_dir).buckets_as_of()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     bucketed = pages.withColumn("bucket", _bucket_col(cfg))
     todo = sorted(set(range(cfg.n_buckets)) - done)
@@ -185,7 +162,7 @@ def run_extraction(
     """Run (or resume) the full extraction over ``pages``.
 
     Returns summary stats. Safe to re-invoke after any failure: only
-    un-manifested buckets are (re)processed. Each wave writes
+    buckets the snapshot log does not commit are (re)processed. Each wave writes
     ``extracted/bucket=K/`` parquet partitions and commits through
     :func:`_commit_wave`.
     """
@@ -195,9 +172,9 @@ def run_extraction(
         extracted.write.mode("overwrite").partitionBy("bucket").parquet(out_pages)
 
     def commit(wave: list[int], stats: dict) -> None:
-        _commit_wave(cfg, wave, _wave_files(out_pages, wave), stats)
+        _commit_wave(cfg, out_pages, wave, stats)
 
-    return _run_waves(spark, pages, cfg, done_buckets(cfg), write_pages, commit)
+    return _run_waves(spark, pages, cfg, write_pages, commit)
 
 
 def _check_iceberg_log(log: SnapshotLog, known_ids: set) -> None:
@@ -247,7 +224,6 @@ def run_extraction_iceberg(
             "(parquet + snapshot log) instead"
         )
     log = SnapshotLog(cfg.output_dir)
-    done = log.buckets_as_of()
     _check_iceberg_log(
         log,
         {
@@ -267,4 +243,4 @@ def run_extraction_iceberg(
         # Iceberg owns the file manifest; the log keeps its id
         log.append(wave, [], iceberg_snapshot_id=snap, **stats)
 
-    return _run_waves(spark, pages, cfg, done, write_pages, commit)
+    return _run_waves(spark, pages, cfg, write_pages, commit)

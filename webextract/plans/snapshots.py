@@ -7,14 +7,18 @@ tools/train.py:174-175). No Iceberg runtime jar can exist in this
 sandbox, so this module implements the SAME commit semantics directly,
 executably, on the filesystem the pipeline already writes:
 
- * a commit is ONE atomic append of a snapshot record — readers never
-   see a half-commit (tmp file + ``os.replace``, the same primitive
-   Iceberg's HadoopCatalog uses for ``version-hint.text``);
+ * the log is the ONE commit record: resume, time travel and orphan
+   vacuum read it and nothing else;
+ * a commit is ONE atomic append of a snapshot record (:func:`publish_json`:
+   fsync a tmp file, then ``os.replace``, the primitive Iceberg's
+   HadoopCatalog uses for ``version-hint.text``) — readers never see a
+   half-commit, and a visible record is already on disk;
  * each snapshot carries a random ``snapshot_id``, its
    ``parent_id``, a monotonically increasing ``seq``, the bucket ids
    it commits, and the DATA FILE LIST those buckets produced (the
    manifest-file role — readers plan scans from the log, not by
-   listing directories);
+   listing directories), each file RELATIVE TO THE TABLE ROOT
+   (``output_dir``), so every reader resolves it the same way;
  * the snapshot chain is VALIDATED on resume: sequence gaps, broken
    parent links or a bucket committed twice all raise instead of
    silently resuming from a corrupt log;
@@ -36,36 +40,53 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
+def publish_json(path: str, payload: dict) -> None:
+    """THE commit-point primitive: write ``payload`` to a tmp file
+    beside ``path``, flush and fsync it, then atomically rename it over
+    ``path``. A reader sees no record or the whole record, and a
+    visible record is already on disk."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        json.dump(payload, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
 class SnapshotLog:
     """Append-only snapshot chain under ``<output_dir>/_snapshots``."""
 
     def __init__(self, output_dir: str):
-        self.dir = os.path.join(output_dir, "_snapshots")
+        self.root = os.path.abspath(output_dir)
+        self.dir = os.path.join(self.root, "_snapshots")
 
     # -- commit ------------------------------------------------------------
 
     def append(
         self, buckets: list[int], files: list[str], **stats
     ) -> dict:
-        """Commit one snapshot atomically; returns the record."""
-        cur = self.current()
+        """Commit one snapshot atomically; returns the record. Each of
+        ``files`` is stored relative to the table root; a file outside
+        the root raises ``ValueError``."""
+        root = os.path.realpath(self.root)
+        rel = sorted(os.path.relpath(os.path.realpath(f), root) for f in files)
+        outside = [f for f in rel if f.split(os.sep)[0] == os.pardir]
+        if outside:
+            raise ValueError(f"data file {outside[0]!r} lies outside the table root {root!r}")
+        recs = self.entries()
+        cur = recs[-1] if recs else None
         rec = {
             "snapshot_id": uuid.uuid4().hex,
             "parent_id": cur["snapshot_id"] if cur else None,
             "seq": (cur["seq"] + 1) if cur else 0,
             "buckets": sorted(buckets),
-            "files": sorted(files),
+            "files": rel,
             **stats,
         }
-        os.makedirs(self.dir, exist_ok=True)
-        tmp = os.path.join(self.dir, f".tmp-{rec['snapshot_id']}")
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(
-            tmp,
-            os.path.join(
-                self.dir, f"snap-{rec['seq']:05d}-{rec['snapshot_id']}.json"
-            ),
+        publish_json(
+            os.path.join(self.dir, f"snap-{rec['seq']:05d}-{rec['snapshot_id']}.json"),
+            rec,
         )
         return rec
 
@@ -81,10 +102,6 @@ class SnapshotLog:
                 with open(os.path.join(self.dir, name)) as f:
                     recs.append(json.load(f))
         return sorted(recs, key=lambda r: r["seq"])
-
-    def current(self) -> dict | None:
-        recs = self.entries()
-        return recs[-1] if recs else None
 
     def validate(self) -> list[dict]:
         """Raise if the chain is corrupt; return the validated entries.
@@ -133,7 +150,12 @@ class SnapshotLog:
         return {b for r in self._as_of(snapshot_id) for b in r["buckets"]}
 
     def files_as_of(self, snapshot_id: str | None = None) -> list[str]:
-        return [f for r in self._as_of(snapshot_id) for f in r["files"]]
+        """Absolute paths of the files committed up to ``snapshot_id``:
+        stored paths joined onto the table root (an older log's absolute
+        path joins to itself)."""
+        return [
+            os.path.join(self.root, f) for r in self._as_of(snapshot_id) for f in r["files"]
+        ]
 
     def read_as_of(
         self, spark: SparkSession, snapshot_id: str | None = None
@@ -149,46 +171,20 @@ class SnapshotLog:
 
     # -- maintenance --------------------------------------------------------
 
-    def _committed_locations(self) -> list[tuple[str, set[str]]]:
-        """Per committed file: its recorded path and the CANDIDATE
-        realpaths it may live at. Absolute paths resolve directly;
-        RELATIVE paths (a log written with a relative ``output_dir``)
-        are resolved against the current CWD AND by ALIGNING the
-        recorded path's leading components with the trailing
-        components of the log's real ``output_dir`` (a relative
-        config path starts with the output_dir string as written, so
-        'a/b/out/extracted/x.parquet' anchors at …/a/b/out) — a
-        maintenance process running from a different CWD must not
-        mistake the entire committed table for orphans."""
-        out_dir = os.path.dirname(os.path.realpath(self.dir))
-        out_parts = out_dir.split(os.sep)
-        locs: list[tuple[str, set[str]]] = []
-        for f in self.files_as_of():
-            cands = {os.path.realpath(f)}
-            if not os.path.isabs(f):
-                parts = f.split(os.sep)
-                for k in range(len(parts) - 1, 0, -1):
-                    if out_parts[-k:] == parts[:k]:
-                        cands.add(
-                            os.path.realpath(
-                                os.path.join(out_dir, *parts[k:])
-                            )
-                        )
-                        break
-            locs.append((f, cands))
-        return locs
-
-    @staticmethod
-    def _walk_parquet(data_dir: str) -> dict[str, str]:
-        """realpath → as-found path of every ``*.parquet`` under
-        ``data_dir`` (one walk, shared by detection and the guard)."""
-        found: dict[str, str] = {}
-        for root, _dirs, names in os.walk(data_dir):
+    def _orphans(self, data_dir: str) -> tuple[list[str], bool, list[str]]:
+        """(committed files, whether any of them is under ``data_dir``,
+        the orphans): ``*.parquet`` files under ``data_dir`` that no
+        committed snapshot references, as found by one walk."""
+        files = self.files_as_of()
+        committed = {os.path.realpath(f) for f in files}
+        on_disk: dict[str, str] = {}  # realpath -> as-found path
+        for top, _dirs, names in os.walk(data_dir):
             for name in names:
                 if name.endswith(".parquet"):
-                    p = os.path.join(root, name)
-                    found[os.path.realpath(p)] = p
-        return found
+                    p = os.path.join(top, name)
+                    on_disk[os.path.realpath(p)] = p
+        orphans = sorted(p for rp, p in on_disk.items() if rp not in committed)
+        return files, not committed.isdisjoint(on_disk), orphans
 
     def orphan_files(self, data_dir: str) -> list[str]:
         """Data files on disk under ``data_dir`` that NO committed
@@ -198,9 +194,7 @@ class SnapshotLog:
         view — the ``remove_orphan_files`` maintenance action of the
         real table format. Only ``*.parquet`` files are considered;
         the snapshot log itself is never a candidate."""
-        committed = {c for _, cands in self._committed_locations() for c in cands}
-        on_disk = self._walk_parquet(data_dir)
-        return sorted(p for rp, p in on_disk.items() if rp not in committed)
+        return self._orphans(data_dir)[2]
 
     def remove_orphans(self, data_dir: str) -> list[str]:
         """Delete (and return) the orphans. Safe at any point: a file
@@ -217,33 +211,23 @@ class SnapshotLog:
          * NOT ONE committed file under ``data_dir`` means the
            data_dir itself is wrong for this log;
          * EVERY committed file must resolve to an existing file —
-           one committed path that resolves nowhere means the path
-           anchoring is wrong (moved table, differently-spelled
-           relative output_dir) or the table is already corrupt, and
-           the "orphans" may be the live data."""
-        locs = self._committed_locations()
-        on_disk = self._walk_parquet(data_dir)
-        committed = {c for _, cands in locs for c in cands}
-        orphans = sorted(
-            p for rp, p in on_disk.items() if rp not in committed
-        )
-        if orphans and not locs:
+           one committed path that resolves nowhere means the log
+           belongs to another table or the table is already corrupt,
+           and the "orphans" may be the live data."""
+        files, any_under, orphans = self._orphans(data_dir)
+        if orphans and not files:
             raise RuntimeError(
                 "remove_orphans refused: the snapshot log is empty but "
                 f"{data_dir!r} contains data files — wrong output_dir or "
                 "missing log; deleting would destroy a live table"
             )
-        if orphans and locs and not (committed & set(on_disk)):
+        if orphans and not any_under:
             raise RuntimeError(
                 "remove_orphans refused: no committed file resolves "
                 f"under {data_dir!r} — wrong data_dir for this log; "
                 "deleting would destroy a live table"
             )
-        missing = [
-            rec
-            for rec, cands in locs
-            if not any(os.path.exists(c) for c in cands)
-        ]
+        missing = [f for f in files if not os.path.exists(f)]
         if orphans and missing:
             raise RuntimeError(
                 "remove_orphans refused: committed file(s) resolve "

@@ -16,9 +16,11 @@ expressions inside one projection — no groupBy (a streaming
 aggregation would need watermark/output-mode machinery), no Python,
 no shuffle on the stream until the probe join. ``row_minhash_bands``
 is pure column algebra and provably computes the same band hashes as
-the batch path (min over a row's shingle ARRAY equals the batch's min
-over its DISTINCT exploded shingles — duplicates never change a min;
-pinned by the parity test in tests/test_neardup_stream.py).
+the batch path: it shares the batch's shingle and band-hash
+expressions (``dedup.shingle_array``, ``dedup._band_hashes``), and the
+min over a row's shingle ARRAY equals the batch's min over its
+DISTINCT exploded shingles — duplicates never change a min (pinned by
+the parity test in tests/test_neardup_stream.py).
 
 At 10^12 docs the band index is large; the probe is still an
 equi-join on (band_id, bh) — bucketed/broadcast by the planner as
@@ -34,6 +36,7 @@ from webextract.operators.dedup import (
     LSH_BANDS,
     MINHASH_K,
     SHINGLE_N,
+    _band_hashes,
     shingle_array,
 )
 
@@ -51,8 +54,6 @@ def row_minhash_bands(
     ``dedup.lsh_band_table``'s for the same text. Rows with fewer than
     ``n`` tokens have no shingles and emit nothing (the batch filter
     restated)."""
-    assert k % bands == 0
-    r = k // bands
     sh = shingle_array(F.split(F.col(text_col), " "), n)
     mh = [
         F.array_min(
@@ -60,19 +61,8 @@ def row_minhash_bands(
         ).alias(f"mh{i}")
         for i in range(k)
     ]
-    staged = df.select(F.col(key).alias("key"), *mh).filter(
-        F.col("mh0").isNotNull()
-    )
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(F.concat(*[F.col(f"mh{b * r + j}") for j in range(r)])).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    return staged.select(
-        "key", F.explode(F.array(*band_rows)).alias("band")
-    ).select(F.col("key").alias(key), "band.band_id", "band.bh")
+    staged = df.select(key, *mh).filter(F.col("mh0").isNotNull())
+    return _band_hashes(staged, key, k, bands)
 
 
 def streaming_near_dup(
