@@ -227,6 +227,51 @@ def q_facade_det_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("score")
 
 
+# the non-ASCII paragraph tail planted by q_facade_cls_on (every
+# documents text is ASCII, so nothing else there could be repaired)
+_CLS_PHRASE = " Voilà un café bien serré." * 8
+
+
+def q_facade_cls_on(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The facade's cls-on mode — ``WebExtractor().extract(pages,
+    cls=True)``, the ``use_angle_cls`` analog (predict_cls.py): the
+    mojibake classifier repairs a double-encoded page before
+    tokenization. Pages with doc_id%3 != 2 get a fixed French tail on
+    their paragraph; those with doc_id%3 == 0 are then double-encoded
+    (utf-8 bytes read as latin-1, re-encoded as utf-8). The oracle
+    states every text from ``documents`` alone: repaired pages equal
+    their clean twins, clean planted pages pass the classifier
+    untouched, and unplanted pages equal the plain extraction."""
+    from webextract.api import WebExtractor
+    from webextract.sources.pages import page_url
+
+    docs = _docs(spark, sf_dir)
+    doc_id = F.col("doc_id")
+    body = F.when(
+        doc_id % 3 != 2, F.concat(F.col("text"), F.lit(_CLS_PHRASE))
+    ).otherwise(F.col("text"))
+    html = F.encode(
+        F.concat(
+            F.lit(_TPL_HEAD),
+            F.lit("Document "),
+            doc_id.cast("string"),
+            F.lit(" from "),
+            F.col("source"),
+            F.lit(_TPL_MID),
+            body,
+            F.lit(_TPL_TAIL),
+        ),
+        "UTF-8",
+    )
+    mangled = F.encode(F.decode(html, "ISO-8859-1"), "UTF-8")
+    pages = docs.select(
+        page_url(doc_id).alias("url"),
+        F.when(doc_id % 3 == 0, mangled).otherwise(html).alias("html"),
+    )
+    out = WebExtractor().extract(pages, cls=True)
+    return out.select("url", "text", "blocks_kept")
+
+
 def q_extract_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction joined back to page metadata (equi-join on url — the
     golden-compare join shape, SURVEY.md §2.3 J5), rolled up per lang."""
@@ -676,38 +721,6 @@ def q_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_change_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recrawl prioritization from observed change frequency: six
-    captures per url, content version bumped every ``period`` =
-    doc_id%3+1 captures — so the md5-fingerprint lag walk must
-    recover exactly floor(5/period) changes per url. The oracle
-    states that plant as GROUND TRUTH from doc_id arithmetic (not a
-    mirrored window), pinning fingerprinting, capture ordering, the
-    change count, the ratio, and the integer revisit policy at once."""
-    from webextract.operators.urlnorm import change_rate
-    from webextract.sources.pages import _EPOCH_2024, page_url
-
-    docs = _docs(spark, sf_dir)
-    doc_id = F.col("doc_id")
-    period = doc_id % 3 + 1
-    caps = docs.select(
-        "doc_id",
-        "text",
-        F.explode(F.sequence(F.lit(0), F.lit(5))).alias("c"),
-    ).select(
-        page_url(doc_id).alias("url"),
-        F.timestamp_seconds(
-            F.lit(_EPOCH_2024) + doc_id + F.col("c") * 86400
-        ).alias("warc_ts"),
-        F.concat(
-            F.col("text"),
-            F.lit(" v"),
-            F.floor(F.col("c") / period).cast("long").cast("string"),
-        ).alias("text"),
-    )
-    return change_rate(caps)
-
-
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: corpus (doc_id % 11 != 0) vs a
     held-out benchmark sample (doc_id % 11 = 0), flagging corpus docs
@@ -1017,124 +1030,6 @@ def q_host_boiler(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.host_boilerplate_strip(src)
 
 
-def q_robots_txt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """robots.txt parse + longest-match URL verdicts over planted
-    per-host policies: every host carries a googlebot stanza that must
-    NOT apply; host%3==0 adds a '*' stanza (Disallow /doc/1, Allow
-    /doc/12 — so ids starting '12' exercise allow-beats-disallow at
-    longer match), host%3==1 gets 'Disallow: /doc/*7$' (the RFC 9309
-    wildcard + end-anchor path — blocks exactly ids ending in 7)
-    PLUS 'Disallow: /*?utm=' (the §2.2.2 path+QUERY match),
-    host%3==2 stacks 'User-agent: bot' + 'User-agent: *' over
-    'Disallow: /' framed with CRLF line endings (stanza sharing + the
-    real-world line framing). Pages with doc_id%4==1 carry a planted
-    '?utm=mail' query string: on hmod-1 hosts they hit the query rule
-    — and an id ending in 7 WITH the query must flip to the query
-    rule, because the '$'-anchored '/doc/*7$' no longer matches a
-    target that ends in the query. The oracle states every verdict
-    from the doc_id arithmetic — ground truth, not a parser mirror."""
-    from webextract.operators.robots import parse_robots, robots_verdict
-    from webextract.sources.pages import page_url
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(
-            page_url(F.col("doc_id")),
-            F.when(F.col("doc_id") % 4 == 1, F.lit("?utm=mail")).otherwise(
-                F.lit("")
-            ),
-        ).alias("url")
-    )
-    return robots_verdict(pages, parse_robots(_synth_robots(spark, sf_dir)))
-
-
-def q_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap: directives extracted from the same planted robots.txt
-    files (RFC 9309 §2.3 — global lines outside any stanza; the
-    planted one sits above the googlebot stanza and must survive the
-    stanza walk untouched, while robots_txt's rule verdicts must not
-    see it). Oracle states one url per host from the arithmetic."""
-    from webextract.operators.robots import sitemap_urls
-
-    return sitemap_urls(_synth_robots(spark, sf_dir))
-
-
-def _synth_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from webextract.sources.pages import page_host
-
-    docs = _docs(spark, sf_dir)
-    hosts = docs.select(page_host(F.col("doc_id")).alias("h")).distinct()
-    hmod = F.col("h") % 3
-    body = F.concat(
-        F.lit("# crawl policy\nSitemap: https://host"),
-        F.col("h").cast("string"),
-        F.lit(
-            ".example/sitemap.xml\nUser-agent: googlebot\n"
-            "Disallow: /private\nCrawl-delay: 99\n\n"
-        ),
-        F.when(hmod == 0, F.lit("User-agent: *\nDisallow: /doc/1\nAllow: /doc/12\n"))
-        .when(
-            hmod == 1,
-            F.lit(
-                "User-agent: *\nDisallow: /doc/*7$\n"
-                "Disallow: /*?utm=\nCrawl-delay: 5\n"
-            ),
-        )
-        .otherwise(
-            F.lit(
-                "User-agent: bot\r\nUser-agent: *\r\nDisallow: /\r\n"
-                "Crawl-delay: 7\r\n"
-            )
-        ),
-    )
-    return hosts.select(
-        F.concat(F.lit("host"), F.col("h").cast("string"), F.lit(".example")).alias(
-            "host"
-        ),
-        F.encode(body, "UTF-8").alias("body"),
-    )
-
-
-def q_crawl_delays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host Crawl-delay from the `*` stanza of the planted
-    robots.txt: hmod 1 declares 5, hmod 2 declares 7 (CRLF framed),
-    hmod 0 declares none, and EVERY host carries a googlebot-stanza
-    decoy of 99 that must not apply. The oracle states the (host,
-    seconds) pairs from the host arithmetic — ground truth."""
-    from webextract.operators.robots import crawl_delays
-
-    return crawl_delays(_synth_robots(spark, sf_dir))
-
-
-def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full crawl-scheduling composition: fetchable frontier urls
-    (sitemap × robots verdict) run through the politeness enumeration
-    (fetch_waves) and the host's declared Crawl-delay →
-    (url, host, seq, wave, not_before_s = wave · delay, default 1 s).
-    Three planted families composed end to end; the oracle restates
-    all three ground truths plus the naive window."""
-    from webextract.operators.links import host_of
-    from webextract.operators.robots import crawl_delays
-    from webextract.operators.sampling import fetch_waves
-
-    fetchable = (
-        q_crawl_frontier(spark, sf_dir)
-        .filter(F.col("fetch"))
-        .select("url", host_of(F.col("url")).alias("host"))
-    )
-    waves = fetch_waves(fetchable, per_wave=2)
-    delays = crawl_delays(_synth_robots(spark, sf_dir))
-    return waves.join(delays, "host", "left").select(
-        "url",
-        "host",
-        "seq",
-        "wave",
-        (F.col("wave") * F.coalesce(F.col("crawl_delay_s"), F.lit(1)))
-        .cast("long")
-        .alias("not_before_s"),
-    )
-
-
 def q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 corpus word-bigrams with occurrence totals and doc
     frequencies (the n-gram-LM count table). The oracle replays the
@@ -1144,23 +1039,6 @@ def q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webextract.operators.vocab import ngram_counts
 
     return ngram_counts(_docs_spread(spark, sf_dir), n=2, k=20)
-
-
-def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crawler's actual fetch decision: sitemap-advertised urls
-    that need (re)crawling (status new/stale from the frontier) gated
-    by the host's robots.txt verdict — composition of the two
-    crawl-policy families over the SAME planted fixtures. The oracle
-    states every (status, blocked) from the doc_id/host arithmetic of
-    both plants — ground truth squared, not a replay."""
-    from webextract.operators.robots import parse_robots, robots_verdict
-
-    fr = q_sitemap_frontier(spark, sf_dir).filter(F.col("status") != "fresh")
-    rules = parse_robots(_synth_robots(spark, sf_dir))
-    v = robots_verdict(fr.select("url"), rules)
-    return fr.join(v.select("url", "blocked"), "url").select(
-        "url", "status", "blocked", (~F.col("blocked")).alias("fetch")
-    )
 
 
 def q_chunk_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1195,89 +1073,6 @@ def q_host_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webextract.operators.sampling import host_skew_report
 
     return host_skew_report(pages_from_documents(spark, sf_dir), rows_per_task=100)
-
-
-def q_fetch_waves(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Politeness scheduler over the planted host skew (half the corpus
-    on host0): every url gets its exact per-host fetch sequence and a
-    wave id (2 fetches per host per wave) via the 256-bucket md5
-    prefix-sum enumeration — the hot host's rank sort fans out 256
-    ways instead of landing on one task. The oracle is the naive
-    single window; equality proves the bucketed enumeration exact."""
-    from webextract.operators.links import host_of
-    from webextract.operators.sampling import fetch_waves
-
-    pages = pages_from_documents(spark, sf_dir)
-    inp = pages.select("url", host_of(F.col("url")).alias("host"))
-    return fetch_waves(inp, per_wave=2)
-
-
-def q_sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl frontier from planted per-host sitemap.xml files: every
-    host advertises its docs with doc_id%4!=3 (full ISO lastmod =
-    warc_ts + 86400 for doc_id%5==0 → STALE, warc_ts − 3600 otherwise
-    → FRESH) plus two never-crawled urls (/new/1 with a bare-date
-    lastmod — the second W3C form — and /new/2 with none → both NEW,
-    null lastmod surviving the classifier). The oracle states every
-    (url, status, lastmod) from the doc_id arithmetic — ground truth,
-    not a parser mirror."""
-    from webextract.operators.sitemap import parse_sitemap, sitemap_frontier
-    from webextract.sources.pages import _EPOCH_2024, page_host, page_url
-
-    docs = _docs(spark, sf_dir)
-    doc_id = F.col("doc_id")
-    ts = F.timestamp_seconds(
-        F.lit(_EPOCH_2024)
-        + doc_id
-        + F.when(doc_id % 5 == 0, F.lit(86400)).otherwise(F.lit(-3600))
-    )
-    entry = F.when(
-        doc_id % 4 != 3,
-        F.concat(
-            F.lit("<url><loc>"),
-            page_url(doc_id),
-            F.lit("</loc><lastmod>"),
-            F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'"),
-            F.lit("</lastmod><priority>0.8</priority></url>"),
-        ),
-    ).otherwise(F.lit(""))
-    per_host = (
-        docs.select(page_host(doc_id).alias("h"), doc_id.alias("doc_id"), entry.alias("e"))
-        .groupBy("h")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("doc_id", "e"))),
-                    lambda x: x["e"],
-                ),
-                "",
-            ).alias("mid")
-        )
-    )
-    h_str = F.col("h").cast("string")
-    body = F.concat(
-        F.lit(
-            '<?xml version="1.0" encoding="UTF-8"?>'
-            '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-        ),
-        F.col("mid"),
-        F.lit("<url><loc>https://host"),
-        h_str,
-        F.lit(".example/new/1</loc><lastmod>2024-06-01</lastmod></url>"),
-        F.lit("<url><loc>https://host"),
-        h_str,
-        F.lit(".example/new/2</loc></url></urlset>"),
-    )
-    sitemaps = per_host.select(
-        F.concat(F.lit("host"), h_str, F.lit(".example")).alias("host"),
-        F.encode(body, "UTF-8").alias("body"),
-    )
-    fr = sitemap_frontier(parse_sitemap(sitemaps), pages_from_documents(spark, sf_dir))
-    return fr.select(
-        "url",
-        "status",
-        F.coalesce(F.unix_timestamp("lastmod"), F.lit(-1)).alias("lastmod_s"),
-    )
 
 
 # frozen outline shapes for q_document_outline: doc_id%3 picks one;
@@ -2043,6 +1838,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "facade_rec_only": q_facade_rec_only,
         # facade_det_only: the det-only flag, span offsets under the oracle
         "facade_det_only": q_facade_det_only,
+        # facade_cls_on: the cls flag, mojibake repair under the oracle
+        "facade_cls_on": q_facade_cls_on,
         # pdf_text/pdf_meta: new (REAL PDF parse — xref walk, page
         # tree, FlateDecode, text-operator tokenize, reading-order
         # assembly; ground-truth planted-formula oracles)
@@ -2064,8 +1861,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_merges": q_bpe_merges,
         "bpe_vocab": q_bpe_vocab,
         "bpe_encode": q_bpe_encode,
-        # robots_txt: planted query-string rules (RFC 9309 path+query)
-        "robots_txt": q_robots_txt,
         # lsh_recall + the minhash/LSH/jaccard family: one shared
         # shingle-explode pass-through threaded this round
         "lsh_recall": q_lsh_recall,
@@ -2116,9 +1911,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "semdedup": q_semdedup,
         "host_boiler": q_host_boiler,
         "crawl_diff": q_crawl_diff,
-        "crawl_frontier": q_crawl_frontier,
-        "fetch_schedule": q_fetch_schedule,
-        "change_rate": q_change_rate,
         "kmeans_assign": q_kmeans_assign,
         "media_pages": q_media_pages,
         "union_sample": q_union_sample,
@@ -2152,12 +1944,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_buckets": q_lm_buckets,
         "lang_rebalance": q_lang_rebalance,
         "span_dedup": q_span_dedup,
-        "sitemap_discovery": q_sitemap_discovery,
         "ngram_counts": q_ngram_counts,
         "host_skew": q_host_skew,
-        "fetch_waves": q_fetch_waves,
-        "sitemap_frontier": q_sitemap_frontier,
-        "crawl_delays": q_crawl_delays,
         "document_outline": q_document_outline,
         "pipeline_dedup": q_pipeline_dedup,
         "extract_eval": q_extract_eval,
@@ -2580,6 +2368,16 @@ def oracle_sql() -> dict[str, str]:
                    CAST(20 + h1_len + p_len AS INTEGER), 'p',
                    CAST(6 AS INTEGER), CAST(2 AS INTEGER)
             FROM d
+        """,
+        # the planted tail survives every page: double-encoded pages
+        # (doc_id%3 = 0) are repaired to their clean twins (doc_id%3 = 1)
+        "facade_cls_on": f"""
+            SELECT {_URL} AS url,
+                   {_EXTRACTED} || CASE WHEN doc_id % 3 <> 2
+                                        THEN '{_CLS_PHRASE}' ELSE '' END
+                     AS text,
+                   CAST(2 AS INTEGER) AS blocks_kept
+            FROM documents
         """,
         "extract_lang_stats": f"""
             WITH e AS (SELECT lang, {_EXTRACTED} AS text FROM documents)
@@ -3037,19 +2835,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
                    CAST(n_snapshots AS BIGINT) AS n_snapshots
             FROM r WHERE rn = 1
         """,
-        "change_rate": f"""
-            WITH g AS (SELECT {_URL} AS url,
-                              CAST(5 // (doc_id % 3 + 1) AS BIGINT)
-                                AS n_changes
-                       FROM documents)
-            SELECT url,
-                   CAST(6 AS BIGINT) AS n_captures,
-                   n_changes,
-                   CAST(n_changes AS DOUBLE) / 5 AS change_ratio,
-                   CAST((86400 * 5) // (n_changes + 1) AS BIGINT)
-                     AS revisit_after_s
-            FROM g
-        """,
         "decontaminate": """
             WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
                           FROM documents),
@@ -3384,44 +3169,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
                        AS n_boiler
             FROM f GROUP BY doc_id
         """,
-        # hmod-1 ground truth with the planted '?utm=mail' queries
-        # (doc_id%4==1): the query rule '/*?utm=' blocks every such
-        # url, and it — not '/doc/*7$' — is the matched rule even for
-        # ids ending in 7, because the $-anchored rule cannot match a
-        # target that ends in the query string.
-        "robots_txt": f"""
-            SELECT {_URL} || CASE WHEN doc_id % 4 = 1
-                                  THEN '?utm=mail' ELSE '' END AS url,
-                   CASE WHEN ({_HOST}) % 3 = 1
-                             THEN CAST(doc_id AS VARCHAR) LIKE '%7'
-                                  OR doc_id % 4 = 1
-                        WHEN ({_HOST}) % 3 = 2 THEN TRUE
-                        ELSE CAST(doc_id AS VARCHAR) LIKE '1%'
-                             AND NOT CAST(doc_id AS VARCHAR) LIKE '12%'
-                   END AS blocked,
-                   CASE WHEN ({_HOST}) % 3 = 2 THEN 'disallow'
-                        WHEN ({_HOST}) % 3 = 1
-                             AND (CAST(doc_id AS VARCHAR) LIKE '%7'
-                                  OR doc_id % 4 = 1)
-                             THEN 'disallow'
-                        WHEN ({_HOST}) % 3 = 0
-                             AND CAST(doc_id AS VARCHAR) LIKE '12%' THEN 'allow'
-                        WHEN ({_HOST}) % 3 = 0
-                             AND CAST(doc_id AS VARCHAR) LIKE '1%' THEN 'disallow'
-                   END AS rule_verb,
-                   CASE WHEN ({_HOST}) % 3 = 2 THEN '/'
-                        WHEN ({_HOST}) % 3 = 1 AND doc_id % 4 = 1
-                             THEN '/*?utm='
-                        WHEN ({_HOST}) % 3 = 1
-                             AND CAST(doc_id AS VARCHAR) LIKE '%7'
-                             THEN '/doc/*7$'
-                        WHEN ({_HOST}) % 3 = 0
-                             AND CAST(doc_id AS VARCHAR) LIKE '12%' THEN '/doc/12'
-                        WHEN ({_HOST}) % 3 = 0
-                             AND CAST(doc_id AS VARCHAR) LIKE '1%' THEN '/doc/1'
-                   END AS rule_path
-            FROM documents
-        """,
         "ngram_counts": f"""
             WITH t AS (SELECT doc_id,
                               regexp_extract_all(lower(text),
@@ -3441,72 +3188,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
                   FROM tot)
             SELECT rank, gram, n_occurrences, n_docs FROM r
             WHERE rank <= 20
-        """,
-        "crawl_frontier": f"""
-            WITH hosts AS (SELECT DISTINCT {_HOST} AS h FROM documents),
-            st AS (SELECT {_URL} AS url, ({_HOST}) % 3 AS hm,
-                          CAST(doc_id AS VARCHAR) AS ds
-                   FROM documents
-                   WHERE doc_id % 4 <> 3 AND doc_id % 5 = 0),
-            stale AS (SELECT url, 'stale' AS status,
-                             CASE WHEN hm = 2 THEN TRUE
-                                  WHEN hm = 1 THEN ds LIKE '%7'
-                                  ELSE ds LIKE '1%'
-                                       AND NOT ds LIKE '12%' END AS blocked
-                      FROM st),
-            nw AS (SELECT 'https://host' || CAST(h AS VARCHAR)
-                            || '.example/new/' || CAST(i AS VARCHAR) AS url,
-                          'new' AS status, h % 3 = 2 AS blocked
-                   FROM hosts, (VALUES (1), (2)) AS t(i)),
-            u AS (SELECT * FROM stale UNION ALL SELECT * FROM nw)
-            SELECT url, status, blocked, NOT blocked AS fetch FROM u
-        """,
-        # ground truth: only hmod 1 (5 s) and hmod 2 (7 s) declare a
-        # `*`-stanza delay; the googlebot decoy (99) must never appear
-        "crawl_delays": f"""
-            SELECT 'host' || CAST(h AS VARCHAR) || '.example' AS host,
-                   CAST(CASE WHEN h % 3 = 1 THEN 5 ELSE 7 END AS BIGINT)
-                       AS crawl_delay_s
-            FROM (SELECT DISTINCT {_HOST} AS h FROM documents)
-            WHERE h % 3 <> 0
-        """,
-        # the crawl_frontier ground truth, windowed naively per host,
-        # with the planted delay arithmetic (hmod 2 is fully blocked so
-        # only hmod 1's 5 s and hmod 0's 1 s default can appear)
-        "fetch_schedule": f"""
-            WITH hosts AS (SELECT DISTINCT {_HOST} AS h FROM documents),
-            st AS (SELECT {_URL} AS url, ({_HOST}) % 3 AS hm,
-                          CAST(doc_id AS VARCHAR) AS ds
-                   FROM documents
-                   WHERE doc_id % 4 <> 3 AND doc_id % 5 = 0),
-            stale AS (SELECT url,
-                             CASE WHEN hm = 2 THEN TRUE
-                                  WHEN hm = 1 THEN ds LIKE '%7'
-                                  ELSE ds LIKE '1%'
-                                       AND NOT ds LIKE '12%' END AS blocked
-                      FROM st),
-            nw AS (SELECT 'https://host' || CAST(h AS VARCHAR)
-                            || '.example/new/' || CAST(i AS VARCHAR) AS url,
-                          h % 3 = 2 AS blocked
-                   FROM hosts, (VALUES (1), (2)) AS t(i)),
-            u AS (SELECT url FROM stale WHERE NOT blocked
-                  UNION ALL SELECT url FROM nw WHERE NOT blocked),
-            hh AS (SELECT url,
-                          regexp_extract(url, '^https://([^/]+)', 1) AS host
-                   FROM u),
-            r AS (SELECT url, host, row_number() OVER
-                         (PARTITION BY host
-                          ORDER BY md5(url) ASC, url ASC) AS seq
-                  FROM hh),
-            d AS (SELECT url, host, seq, (seq - 1) // 2 AS wave,
-                         CAST(regexp_extract(host, 'host([0-9]+)', 1)
-                              AS INTEGER) AS hn
-                  FROM r)
-            SELECT url, host, CAST(seq AS BIGINT) AS seq,
-                   CAST(wave AS BIGINT) AS wave,
-                   CAST(wave * (CASE WHEN hn % 3 = 1 THEN 5 ELSE 1 END)
-                        AS BIGINT) AS not_before_s
-            FROM d
         """,
         "chunk_texts": """
             WITH d AS (SELECT doc_id, doc_id % 8 AS shard,
@@ -3579,46 +3260,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
                        AS share_permille,
                    CAST((n_pages + 99) // 100 AS BIGINT) AS salt_factor
             FROM c, t
-        """,
-        # the naive one-window statement of the bucketed prefix-sum
-        # enumeration — equality proves the 256-way fan-out exact
-        "fetch_waves": f"""
-            WITH p AS (SELECT {_URL} AS url,
-                              'host' || CAST({_HOST} AS VARCHAR)
-                                  || '.example' AS host
-                       FROM documents),
-            r AS (SELECT url, host, row_number() OVER
-                         (PARTITION BY host
-                          ORDER BY md5(url) ASC, url ASC) AS seq
-                  FROM p)
-            SELECT url, host, CAST(seq AS BIGINT) AS seq,
-                   CAST((seq - 1) // 2 AS BIGINT) AS wave
-            FROM r
-        """,
-        "sitemap_discovery": f"""
-            SELECT 'host' || CAST(h AS VARCHAR) || '.example' AS host,
-                   'https://host' || CAST(h AS VARCHAR)
-                       || '.example/sitemap.xml' AS sitemap_url
-            FROM (SELECT DISTINCT {_HOST} AS h FROM documents)
-        """,
-        "sitemap_frontier": f"""
-            WITH hosts AS (SELECT DISTINCT {_HOST} AS h FROM documents),
-            ent AS (
-              SELECT {_URL} AS url,
-                     CASE WHEN doc_id % 5 = 0 THEN 'stale'
-                          ELSE 'fresh' END AS status,
-                     1704067200 + doc_id
-                       + CASE WHEN doc_id % 5 = 0 THEN 86400
-                              ELSE -3600 END AS lastmod_s
-              FROM documents WHERE doc_id % 4 <> 3
-              UNION ALL
-              SELECT 'https://host' || CAST(h AS VARCHAR)
-                       || '.example/new/1', 'new', 1717200000 FROM hosts
-              UNION ALL
-              SELECT 'https://host' || CAST(h AS VARCHAR)
-                       || '.example/new/2', 'new', -1 FROM hosts)
-            SELECT url, status, CAST(lastmod_s AS BIGINT) AS lastmod_s
-            FROM ent
         """,
         "document_outline": _document_outline_sql(),
         "heading_paths": _heading_paths_sql(),

@@ -1,14 +1,17 @@
-"""Full-registry local correctness sweep → CORRECTNESS_LOCAL_r{N}.json.
+"""Full-registry local correctness sweep → one JSON verdict file.
 
 The driver's per-round gate samples only the first 50 registry
 entries; this sweep runs EVERY ``queries()`` entry against its
 ``oracle_sql()`` twin (the check_oracle comparison: row count, column
-names, dtype kinds, exact values) at all three fixture scales and
-writes one committed JSON artifact::
+names, dtype kinds, exact values) at each fixture scale given (all
+three by default) and writes the verdicts to ``out.json``::
 
     {"<query>": {"sf0.001": "ok", "sf0.01": "ok", "sf0.1": "ok"}, ...}
 
-Usage: python scripts/local_sweep.py [out.json] [sf_dir ...]
+The output path is required, so a bare run cannot overwrite a
+committed record such as ``CORRECTNESS_LOCAL_r5.json``.
+
+Usage: python scripts/local_sweep.py out.json [sf_dir ...]
 """
 
 from __future__ import annotations
@@ -30,8 +33,14 @@ DEFAULT_SFS = [
 ]
 
 
+USAGE = "usage: python scripts/local_sweep.py out.json [sf_dir ...]"
+
+
 def main() -> int:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_LOCAL_r5.json"
+    if len(sys.argv) < 2:
+        print(USAGE, file=sys.stderr)
+        return 2
+    out_path = sys.argv[1]
     sf_dirs = sys.argv[2:] or DEFAULT_SFS
 
     import __spark_entry__ as e

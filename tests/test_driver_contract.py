@@ -67,3 +67,31 @@ def test_plans_md_covers_registry():
     with open(os.path.join(REPO, "bench", "PLANS.md")) as f:
         headings = [l[3:].strip() for l in f if l.startswith("## ")]
     assert headings == list(e.queries())
+
+
+def test_local_sweep_requires_an_output_path(monkeypatch, tmp_path, capsys):
+    """A bare ``scripts/local_sweep.py`` run prints its usage and exits
+    2 before any Spark session starts, so it cannot overwrite the
+    committed ``CORRECTNESS_LOCAL_r5.json`` in the working directory."""
+    import importlib.util
+    import sys
+
+    import webextract.session
+
+    scripts = os.path.join(REPO, "scripts")
+    monkeypatch.syspath_prepend(scripts)
+    spec = importlib.util.spec_from_file_location(
+        "local_sweep", os.path.join(scripts, "local_sweep.py")
+    )
+    local_sweep = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(local_sweep)
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(webextract.session, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "argv", ["local_sweep.py"])
+    monkeypatch.chdir(tmp_path)
+    assert local_sweep.main() == 2
+    assert "usage:" in capsys.readouterr().err
+    assert list(tmp_path.iterdir()) == []

@@ -145,31 +145,6 @@ def test_page_meta_is_pure_map_stage(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_robots_verdict_never_shuffles_the_corpus(spark):
-    # the ONLY hash exchange is the per-host groupBy of the KB-sized
-    # rule table; pages ride a broadcast left-join and the winner is
-    # picked in-row (array filter+sort) — no url-keyed exchange, no
-    # second pages scan, no Python node
-    import re
-
-    from webextract.operators.robots import robots_verdict
-
-    pages = pages_from_documents(spark, SF)
-    rules = spark.createDataFrame(
-        [("h.example", "disallow", "/doc/1"), ("h.example", "allow", "/doc/12")],
-        "host string, verb string, path string",
-    )
-    plan = plan_of(robots_verdict(pages, rules))
-    assert "BroadcastHashJoin" in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "hashpartitioning(url" not in plan
-    # exactly one hash exchange: the rule-table groupBy(host)
-    assert len(re.findall(r"hashpartitioning\(", plan)) == 1
-    # and the pages table is scanned exactly once
-    assert plan.count("Scan parquet") == pages._jdf.queryExecution(
-    ).executedPlan().toString().count("Scan parquet")
-
-
 def test_gopher_rules_is_pure_map_stage(spark):
     plan = plan_of(entrymod.q_gopher_rules(spark, SF))
     assert "Exchange" not in plan
@@ -193,19 +168,6 @@ def test_bm25_reuses_checkpointed_grid_and_prunes_topk(spark):
     assert "ExistingRDD" in plan
     assert "WindowGroupLimit" in plan
     assert "CartesianProduct" not in plan
-
-
-def test_fetch_waves_single_corpus_exchange(spark):
-    """The bucketed enumeration shuffles the corpus ONCE (the
-    (host, bucket) window); the offsets side table is the only other
-    exchange and joins back broadcast at fixture scale — never a
-    cartesian, never a Python node."""
-    plan = plan_of(entrymod.q_fetch_waves(spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # corpus-side exchanges: window shuffle (+ the tiny offsets agg);
-    # a regression to per-row joins would multiply these
-    assert plan.count("Exchange") <= 4
 
 
 def test_kie_pairs_single_arrow_stage_no_shuffle(spark):

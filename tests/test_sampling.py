@@ -307,73 +307,6 @@ def test_chunk_texts_roundtrips_the_stream(spark):
     assert got == want
 
 
-def test_fetch_waves_matches_single_window(spark):
-    """The 256-bucket prefix-sum enumeration must equal the naive
-    one-window per-host row_number exactly, including on the planted
-    hot host."""
-    from webextract.operators.sampling import fetch_waves
-
-    pages = _pages(spark)
-    got = fetch_waves(pages, per_wave=3).select(
-        "url", "host", "seq", "wave"
-    ).collect()
-    w = Window.partitionBy("host").orderBy(
-        F.md5(F.col("url")).asc(), F.col("url").asc()
-    )
-    want = (
-        pages.withColumn("seq", F.row_number().over(w).cast("long"))
-        .withColumn("wave", F.expr("(seq - 1) DIV 3"))
-        .select("url", "host", "seq", "wave")
-        .collect()
-    )
-    assert sorted(got) == sorted(want)
-
-
-def test_fetch_waves_is_total_and_dense(spark):
-    """Every input row is scheduled exactly once and each host's seq
-    is the dense sequence 1..n_host with ≤ per_wave rows per wave."""
-    from webextract.operators.sampling import fetch_waves
-
-    pages = _pages(spark, n=200)
-    rows = fetch_waves(pages, per_wave=2).collect()
-    assert len(rows) == 200
-    by_host = {}
-    for r in rows:
-        by_host.setdefault(r.host, []).append(r)
-    for host, rs in by_host.items():
-        seqs = sorted(r.seq for r in rs)
-        assert seqs == list(range(1, len(rs) + 1))
-        waves = {}
-        for r in rs:
-            waves[r.wave] = waves.get(r.wave, 0) + 1
-            assert r.wave == (r.seq - 1) // 2
-        assert all(v <= 2 for v in waves.values())
-
-
-def test_fetch_waves_total_with_null_keys(spark):
-    """NULL url/host rows must still be enumerated (the join back to
-    the offsets table is null-safe) — a dropped row would break the
-    total-enumeration contract."""
-    from pyspark.sql import Row
-    from webextract.operators.sampling import fetch_waves
-
-    pages = spark.createDataFrame(
-        [
-            Row(url="https://h/1", host=0),
-            Row(url="https://h/2", host=0),
-            Row(url=None, host=0),
-            Row(url="https://h/3", host=None),
-        ],
-        "url string, host int",
-    )
-    rows = fetch_waves(pages, per_wave=2).collect()
-    assert len(rows) == 4
-    h0 = sorted(r.seq for r in rows if r.host == 0)
-    assert h0 == [1, 2, 3]
-    null_host = [r for r in rows if r.host is None]
-    assert len(null_host) == 1 and null_host[0].seq == 1
-
-
 def test_count_min_overestimates_only_and_is_tight_when_sparse(spark):
     """CM property: est >= true for every key; with far fewer keys
     than cells the estimate is exact (no collisions possible to

@@ -161,33 +161,3 @@ def test_filter_indexable_drops_optouts(spark):
     ]
     df = spark.createDataFrame(rows, ["url", "html"])
     assert [r.url for r in filter_indexable(df).collect()] == ["keep"]
-
-
-def test_change_rate_counts_and_policy(spark):
-    """Three urls: changes-every-capture, changes-once, single
-    capture — pins the fingerprint lag walk, the ratio, the NULL
-    single-capture contract, and the integer revisit policy."""
-    import datetime as dt
-
-    def ts(day):
-        return dt.datetime(2024, 1, 1 + day)
-
-    from webextract.operators.urlnorm import change_rate
-
-    rows = [
-        ("a", ts(0), "x0"), ("a", ts(1), "x1"), ("a", ts(2), "x2"),
-        ("b", ts(0), "y"), ("b", ts(1), "y"), ("b", ts(2), "y2"),
-        ("c", ts(0), "z"),
-    ]
-    df = spark.createDataFrame(rows, ["url", "warc_ts", "text"])
-    got = {r.url: r for r in change_rate(df).collect()}
-    a, b, c = got["a"], got["b"], got["c"]
-    assert (a.n_captures, a.n_changes) == (3, 2)
-    assert a.change_ratio == 1.0
-    assert a.revisit_after_s == (86400 * 2) // 3
-    assert (b.n_captures, b.n_changes) == (3, 1)
-    assert abs(b.change_ratio - 0.5) < 1e-15
-    assert b.revisit_after_s == 86400
-    assert (c.n_captures, c.n_changes) == (1, 0)
-    assert c.change_ratio is None
-    assert c.revisit_after_s == 0

@@ -165,11 +165,11 @@ def pack_chunks(
     scale — and even the per-shard window puts 1/``n_shards`` of the
     corpus into ONE task's sort (tens of GB per task at 10^12 docs).
     The running offset is therefore a distributed two-phase prefix sum
-    (:func:`_stream_offsets`, the same partial-sums-plus-broadcast-
-    offsets pattern as :func:`fetch_waves`): a range exchange on
-    ``(shard, doc_id)`` splits every shard's stream into contiguous,
-    sampling-balanced runs, per-run token totals roll up into a tiny
-    broadcast offset table, and each run windows only its own rows.
+    (:func:`_stream_offsets`, partial sums plus broadcast offsets): a
+    range exchange on ``(shard, doc_id)`` splits every shard's stream
+    into contiguous, sampling-balanced runs, per-run token totals roll
+    up into a tiny broadcast offset table, and each run windows only
+    its own rows.
     Parallelism = the full shuffle width regardless of ``n_shards``;
     no task ever sorts more than ~corpus/parallelism rows, skew-
     balanced by the range sampler. Chunk ids are pure arithmetic on
@@ -442,84 +442,6 @@ def chunk_texts(
             F.count("*").alias("n_docs"),
             F.sum("np").alias("n_tokens"),
         )
-    )
-
-
-# md5 is hex, so its first two chars split any host's urls into 256
-# buckets whose lexicographic order IS the fingerprint order — the
-# property that makes the bucketed enumeration below exact.
-WAVE_BUCKETS_HEX = 2
-
-
-def fetch_waves(
-    df: DataFrame,
-    per_wave: int = 2,
-    host_col: str = "host",
-    key_col: str = "url",
-) -> DataFrame:
-    """Politeness scheduler: assign EVERY url a per-host fetch sequence
-    number and a wave id (``per_wave`` fetches per host per wave) →
-    input columns + (seq, wave). The step after the crawl frontier
-    decides WHAT to fetch: this decides WHEN, so no host sees more
-    than ``per_wave`` concurrent requests. Reference analog: the
-    batched executor that feeds candidate crops to recognition
-    ``rec_batch_num`` at a time (tools/infer/predict_rec.py:395-420,
-    tools/infer/utility.py:95).
-
-    Unlike :func:`host_quota` (a top-``cap`` PRUNE, where phase 1 may
-    discard), this is a total ENUMERATION — every row needs its exact
-    rank in the host's ``(md5(url), url)`` order, so nothing may be
-    dropped. The scale problem is the same (the fixture plants half
-    the corpus on one host; at 10^12 urls a naive
-    ``row_number() OVER (PARTITION BY host)`` sorts ~10^11 rows in ONE
-    task); the fix here is a bucketed prefix-sum instead of a prune:
-
-     1. bucket = the first two hex chars of ``md5(url)`` — 256 buckets
-        whose lexicographic order equals fingerprint order, so the
-        concatenation "bucket 00's rows, then 01's, …" IS the host's
-        total order. The hot host's sort fans out 256 ways.
-     2. per-(host, bucket) counts → a running prefix-sum window per
-        host over ≤256 tiny rows gives each bucket its starting
-        offset. This side table is hosts×256 rows — negligible next
-        to the corpus — and joins back on the (host, bucket) key.
-     3. seq = bucket offset + local row_number; wave = (seq−1) DIV
-        ``per_wave``. Pure codegen from there.
-
-    The oracle states the semantics as the naive single window —
-    equality proves the bucketed enumeration exact. The enumeration is
-    TOTAL: NULL keys fingerprint as md5('') and a NULL host is its own
-    (null-safely joined) partition, so no input row is ever dropped —
-    a plain inner equi-join here would silently lose NULL-keyed rows.
-    """
-    fp = F.md5(F.coalesce(F.col(key_col).cast("string"), F.lit("")))
-    rows = df.withColumn("_fp", fp).withColumn(
-        "_b", F.substring(F.col("_fp"), 1, WAVE_BUCKETS_HEX)
-    )
-    counts = rows.groupBy(host_col, "_b").agg(F.count("*").alias("_n"))
-    run = (
-        Window.partitionBy(host_col)
-        .orderBy(F.col("_b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        F.col(host_col).alias("_oh"),
-        F.col("_b").alias("_ob"),
-        F.coalesce(F.sum("_n").over(run), F.lit(0)).alias("_off"),
-    )
-    local = Window.partitionBy(host_col, "_b").orderBy(
-        F.col("_fp").asc(), F.col(key_col).asc()
-    )
-    seq = (F.col("_off") + F.col("_r")).cast("long")
-    return (
-        rows.withColumn("_r", F.row_number().over(local))
-        .join(
-            offsets,
-            F.col(host_col).eqNullSafe(F.col("_oh"))
-            & (F.col("_b") == F.col("_ob")),
-        )
-        .withColumn("seq", seq)
-        .withColumn("wave", F.expr(f"(seq - 1) DIV {int(per_wave)}"))
-        .drop("_fp", "_b", "_r", "_oh", "_ob", "_off")
     )
 
 

@@ -321,57 +321,3 @@ def domain_blocklist(
         blocked_domain.isNull().alias("keep"),
     )
 
-
-def change_rate(
-    pages: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    base_interval_s: int = 86400,
-) -> DataFrame:
-    """Per-url change-frequency estimate over a multi-capture crawl
-    table, feeding recrawl prioritization (Cho & Garcia-Molina's
-    change-rate-driven revisit policy, simplified to its exact-integer
-    core so the result is hash-portable): order each url's captures by
-    timestamp, fingerprint the content (md5), count adjacent-capture
-    changes, and derive
-
-    - ``change_ratio`` = n_changes / n_intervals (one IEEE division of
-      exact ints; NULL for single-capture urls), and
-    - ``revisit_after_s`` = base_interval · n_intervals DIV
-      (n_changes + 1) — an integer policy: a page that changed every
-      interval is revisited at the base cadence; a page that never
-      changed waits n_intervals times as long.
-
-    Scale shape: one shuffle on the url; the ordering window ranks
-    captures-per-url (bounded by crawl count, like
-    :func:`latest_snapshot` — never corpus-scale per key), and the
-    groupBy rides the same url partitioning so Catalyst plans a single
-    exchange. Content is reduced to its md5 at the scan; equal-ts
-    duplicates are ordered by the fingerprint for determinism.
-    """
-    w = Window.partitionBy(url_col).orderBy(
-        F.col("warc_ts").asc(), F.col("fp").asc()
-    )
-    per = pages.select(
-        url_col, "warc_ts", F.md5(F.col(text_col)).alias("fp")
-    ).withColumn(
-        "chg",
-        F.when(F.lag("fp").over(w).isNull(), F.lit(None).cast("int"))
-        .otherwise((F.col("fp") != F.lag("fp").over(w)).cast("int")),
-    )
-    agg = per.groupBy(url_col).agg(
-        F.count("*").alias("n_captures"),
-        F.coalesce(F.sum("chg"), F.lit(0)).cast("long").alias("n_changes"),
-    )
-    n_int = (F.col("n_captures") - 1).cast("long")
-    num = F.lit(base_interval_s).cast("long") * n_int
-    den = F.col("n_changes") + 1
-    return agg.select(
-        url_col,
-        F.col("n_captures").alias("n_captures"),
-        "n_changes",
-        F.when(
-            n_int > 0, F.col("n_changes").cast("double") / n_int
-        ).alias("change_ratio"),
-        ((num - num % den) / den).cast("long").alias("revisit_after_s"),
-    )
