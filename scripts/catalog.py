@@ -1,6 +1,7 @@
 """Generate CATALOG.md: one row per driver query — what it computes
-(first docstring line), where it lives, oracle status, and the latest
-clean-window bench time. Regenerate after adding queries:
+(first docstring paragraph, on one line), where it lives, oracle
+status, and the latest clean-window bench time. Regenerate after
+adding queries:
 
     python scripts/catalog.py
 """
@@ -40,7 +41,8 @@ def render() -> str:
     ]
     for name in sorted(qs):
         fn = qs[name]
-        doc = (inspect.getdoc(fn) or "").split("\n")[0].rstrip(".") or "—"
+        summary = (inspect.getdoc(fn) or "").split("\n\n")[0]
+        doc = " ".join(summary.split()).rstrip(".").replace("|", "\\|") or "—"
         mod = inspect.getmodule(fn).__name__
         src = f"`{mod}.{fn.__name__}`"
         oracle = "exact" if name in oracles else "rows-only"

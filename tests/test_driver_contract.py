@@ -61,6 +61,29 @@ def test_catalog_is_current():
     assert open(os.path.join(REPO, "CATALOG.md")).read() == catalog.render()
 
 
+def test_catalog_what_cells_close_their_code_spans():
+    """Each row's "what" cell is a whole docstring paragraph: a summary
+    that wraps inside a code span must not be cut open, and a ``|`` in
+    it must not split the row."""
+    import re
+
+    with open(os.path.join(REPO, "CATALOG.md")) as f:
+        rows = [l for l in f if l.startswith("| `")]
+    assert len(rows) == len(e.queries())
+    for row in rows:
+        cells = re.split(r"(?<!\\)\|", row.strip())[1:-1]
+        assert len(cells) == 4, row
+        # a run of n backticks opens a code span that only a run of
+        # exactly n backticks closes
+        open_run = 0
+        for run in re.findall(r"`+", cells[1]):
+            if not open_run:
+                open_run = len(run)
+            elif len(run) == open_run:
+                open_run = 0
+        assert not open_run, row
+
+
 def test_plans_md_covers_registry():
     """bench/PLANS.md (``python scripts/explain_audit.py``) holds one
     ``## <name>`` plan per registry query, in registry order."""

@@ -7,13 +7,15 @@ comments, declarations). Divergence on ANY input is a bug: either the
 scanner mis-parses, or it failed to bail."""
 
 import string
+import time
 
 import duckdb
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from webextract.functions.tokenizer import tokenize_blocks
+from webextract.functions import fastscan
+from webextract.functions.tokenizer import _BlockSink, tokenize_blocks
 from webextract.sources.pages import gen_fixture_pages
 from webextract.functions.htmlnorm import decode_html
 
@@ -31,7 +33,7 @@ def test_fixture_pages_identical():
         assert_same(decode_html(page["html"]))
 
 
-def test_synthesized_corpus_identical():
+def _synthesized_pages() -> list[str]:
     rows = duckdb.sql(
         "SELECT text, source, doc_id FROM "
         "'/root/testdata/sf0.01/documents.parquet'"
@@ -41,8 +43,21 @@ def test_synthesized_corpus_identical():
         '<header><nav><a href="/">Home</a></nav></header><article><h1>'
     )
     tail = "</p></article></body></html>"
-    for (t, s, d) in rows:
-        assert_same(f"{head}Document {d} from {s}</h1><p>{t}{tail}")
+    return [f"{head}Document {d} from {s}</h1><p>{t}{tail}" for (t, s, d) in rows]
+
+
+def test_synthesized_corpus_identical():
+    for page in _synthesized_pages():
+        assert_same(page)
+
+
+def test_corpus_pages_take_the_fast_path():
+    # the bail-rate ratchet: a grammar too narrow for real pages passes
+    # every differential test while sending pages to the slow path
+    pages = [decode_html(p["html"]) for p in gen_fixture_pages()]
+    pages += _synthesized_pages()
+    assert len(pages) > 500
+    assert [i for i, p in enumerate(pages) if not fastscan.scan(p, _BlockSink())] == []
 
 
 # -- adversarial fuzz --------------------------------------------------------
@@ -72,6 +87,15 @@ _adversarial = st.sampled_from(
         # plain structure
         "<p>", "</p>", "<pre>", "</pre>", "text", " ", "\n", "<", ">", "<3",
         "<p", "x>y",
+        # the fast grammar's edges: unicode whitespace in tags (html.parser's
+        # \s is unicode), namespaced names, self-closing vs bare values,
+        # raw-text closes, == attributes, PIs, '<' in text
+        "<p\xa0x>", "<a\x0bhref=x>", "<a href=x\xa0y>", "<a\u2003b=1>",
+        "</a\xa0>", "<o:p>", "</o:p>", '<a href="x"/>', "<br />", "<br/>",
+        "<a href=x/ >", "</SCRIPT >", "</ script>", "<script/>", "<style/>",
+        "<script src=x/>", "<style></styles></style>", "</scr\u0130pt>",
+        "</\u017fcript>", "<a b == c>", "<a b==c>", '<?xml version="1.0"?>',
+        "1 < 2", "<3", "<<p>", "<!DOCTYPE x [", "<!-- a -- b -->", "<!---->",
     ]
 )
 _chunk = st.one_of(
@@ -91,6 +115,42 @@ def test_fuzz_differential(soup: str) -> None:
 @given(st.text(max_size=300))
 @settings(max_examples=500, deadline=None)
 def test_fuzz_arbitrary_text(soup: str) -> None:
+    assert_same(soup)
+
+
+# tag bodies built from the grammar's own pieces, joined by ASCII or
+# unicode whitespace, so near-misses of the strict grammar are common
+_spaces = st.sampled_from([" ", "\t", "\n", "\r", "\f", "\x0b", "\xa0", "\x85",
+                           "\u2003", "\x1c", ""])
+_pieces = st.sampled_from(["a", "href", "o:p", "=", "==", '"x>y"', "'q'", "x/",
+                           "/", "script", "style", "SCRIPT", "\x00", "b-c", "<"])
+_tag_soup = st.lists(
+    st.one_of(
+        st.tuples(
+            st.sampled_from(["<", "</", "<!", "<?"]),
+            st.lists(st.tuples(_spaces, _pieces).map("".join), max_size=5).map("".join),
+            st.sampled_from([">", "/>", " >", ""]),
+        ).map("".join),
+        _adversarial,
+        st.text(alphabet="ab &;<>\xa0", max_size=6),
+    ),
+    max_size=25,
+).map("".join)
+
+
+@given(_tag_soup)
+@settings(max_examples=1500, deadline=None)
+def test_fuzz_grammar_edges(soup: str) -> None:
+    assert_same(soup)
+
+
+def test_attribute_soup_is_linear():
+    # ~1 MB start tag that never closes: every repetition in the grammar
+    # is possessive, so failing it is one pass, not a backtracking search
+    soup = "<p>x</p><a" + " b" * 500_000
+    t0 = time.perf_counter()
+    assert not fastscan.scan(soup, _BlockSink())
+    assert time.perf_counter() - t0 < 2.0
     assert_same(soup)
 
 
@@ -118,6 +178,22 @@ def test_fuzz_arbitrary_text(soup: str) -> None:
         '<a b "c>d" e>t</a>',
         '<div class"x>y">in</div>',
         '<a href = "x>y">q</a>',
+        # the fast grammar's edges
+        "<p\xa0x>in</p\xa0x>t",
+        "<p><a\x0bhref=x>l</a></p>",
+        "<p><a href=x\xa0y>l</a></p>",
+        "<p>a<o:p>b</o:p>c</p>",
+        '<p><a href=x/>1</a><a href="x"/>2<br />3</p>',
+        "<script>x</SCRIPT ><p>after</p>",
+        "<script>x</ script><p>after</p>",
+        "<script/><p>after</p>",
+        "<p>a<script>x</scr\u0130pt><p>hidden</p></script>b</p>",
+        "<p>a<script>x</\u017fcript><p>hidden</p></script>b</p>",
+        "<style>p{}</styles>q</style><p>after</p>",
+        "<p><a b == c>x</a></p>",
+        '<?xml version="1.0"?><p>x</p>',
+        "<p>1 < 2 and <3</p>",
+        "<p>a &amp <3 &lt;</p>",
     ],
 )
 def test_known_subtleties(case: str) -> None:

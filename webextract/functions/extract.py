@@ -68,12 +68,14 @@ def extract_page(raw: bytes | None, cfg: ExtractConfig) -> dict[str, Any]:
 
 class ExtractedPages(NamedTuple):
     """:func:`extract_batch`' columnar result, entry p per column
-    belonging to page p (``merged`` as :class:`MergedPages`)."""
+    belonging to page p (``merged`` as :class:`MergedPages`), and the
+    count of pages the reference tokenizer read."""
 
     merged: MergedPages
     blocks_total: list[int]
     bytes_in: list[int]
     truncated: list[bool]
+    reference_pages: int
 
 
 def extract_batch(raws: Iterable[bytes | None], cfg: ExtractConfig) -> ExtractedPages:
@@ -94,6 +96,7 @@ def extract_batch(raws: Iterable[bytes | None], cfg: ExtractConfig) -> Extracted
     offsets = [0]
     bytes_in: list[int] = []
     truncated: list[bool] = []
+    reference_pages = 0
     for raw in raws:
         html_text, n_bytes, cut = page_text(raw, cfg)
         sink = scan_blocks(html_text)
@@ -106,6 +109,7 @@ def extract_batch(raws: Iterable[bytes | None], cfg: ExtractConfig) -> Extracted
         offsets.append(len(texts))
         bytes_in.append(n_bytes)
         truncated.append(cut)
+        reference_pages += sink.reference
     if cfg.rtl_reverse:
         # per-block segment reversal BEFORE scoring/merge: lengths are
         # preserved, so starts/ends and the span-slice invariant hold
@@ -139,4 +143,5 @@ def extract_batch(raws: Iterable[bytes | None], cfg: ExtractConfig) -> Extracted
         blocks_total=sizes.tolist(),
         bytes_in=bytes_in,
         truncated=truncated,
+        reference_pages=reference_pages,
     )

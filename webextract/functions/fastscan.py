@@ -1,17 +1,33 @@
-"""Fast HTML event scanner — a drop-in front-end for the block
-tokenizer that replaces ``html.parser``'s per-character event loop with
-compiled-regex scanning, while guaranteeing IDENTICAL event streams.
+"""Fast HTML event scanner: a drop-in front-end for the block
+tokenizer that replaces ``html.parser``'s per-construct event loop with
+ONE compiled-regex ``findall`` per page, while guaranteeing IDENTICAL
+event streams.
 
 Strategy (the analog of the reference's fused preprocess fast path,
-SURVEY.md §4): handle the overwhelmingly common constructs — text runs,
-well-formed start/end/self-closing tags, comments, doctype, PIs,
-script/style CDATA — with one quote-aware regex per construct, and for
-any document containing a construct whose html.parser semantics are
-subtle (marked sections, doctype internal subsets, malformed tag
-bodies), BAIL OUT and parse that whole document with the reference
-``html.parser`` front-end instead. Byte-identity is therefore
-preserved by construction on the bail-out path and verified by
-differential fuzzing (tests/test_fastscan.py) on the fast path.
+SURVEY.md §4): the page is tokenized against a strict subset of HTML
+whose html.parser events are unambiguous, and each token goes straight
+to the sink. The grammar accepts
+
+ * text runs, including a lone ``<`` not followed by a name start,
+   ``/``, ``!`` or ``?`` (entities decoded only when the run holds
+   ``&``);
+ * start and self-closing tags: an ASCII name, then attributes that
+   are each preceded by ASCII whitespace, named without quotes, ``<``
+   or ``=``, and valued by one ``=`` and a quoted or a bare value. A
+   bare value runs to whitespace or ``>`` and may end in ``/``, so
+   ``<a href=x/>`` is a start tag, as html.parser reads it;
+ * strict end tags (html.parser's ``endtagfind``);
+ * comments, ``<!doctype ...>`` without ``[``, and ``<?...>``;
+ * ``script``/``style`` elements through their strict close. Their
+   content lies inside ``SKIP_TAGS``, so it emits no data.
+
+Anything else (unicode whitespace inside a tag, ``a==b``, a bogus end
+tag, a marked section, an unterminated construct) makes the last token
+the catch-all, and the WHOLE page is parsed by the reference
+``html.parser`` front-end instead. Byte-identity is therefore preserved
+by construction on the bail-out path and verified by differential
+fuzzing (tests/test_fastscan.py) on the fast path. Every repetition is
+possessive, so no alternative backtracks: a page is one linear pass.
 
 The event sink contract matches ``_BlockParser``:
 ``starttag(name) / endtag(name) / startendtag(name) / data(text)``
@@ -20,36 +36,54 @@ with lowercased names and entity-decoded text (convert_charrefs).
 
 from __future__ import annotations
 
-import html.parser as _hp
 import re
 from html import unescape
 
-# quote-aware start-tag match: attrs may contain '>' inside quoted
-# values (mirrors locatestarttagend_tolerant). The tag NAME charset is
-# exactly html.parser's tagfind_tolerant one (broad: quotes and '<'
-# are legal name chars!). Group 1: name, group 2: attr body
-# (everything up to the closing '>').
-_TAG = re.compile(
-    r"""<([a-zA-Z][^\t\n\r\f />\x00]*+)"""   # possessive: the name is the
-    r"""((?:[^<>"']|"[^"]*"|'[^']*')*)>"""   # longest run, as tagfind scans it
+_WS = r"[\t\n\r\f ]"  # html.parser's ``\s`` is unicode: other spaces bail
+_ATTR = (
+    r"""[^\s"'<=>/\x00]++"""
+    rf"""(?:{_WS}*+={_WS}*+(?:"[^"]*+"|'[^']*+'|[^\s"'<=>\x00][^\s"'<>\x00]*+))?+"""
 )
-# strict end tag — exactly html.parser's endtagfind
-_ENDTAG_STRICT = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
-# tolerant end-tag name — tagfind_tolerant's name group
-_ENDNAME = re.compile(r"[a-zA-Z][^\t\n\r\f />\x00]*")
-_COMMENT_END = re.compile(r"--\s*>")
+_ATTRS = rf"(?:{_WS}++{_ATTR})*+{_WS}*+"
 
-# html.parser's own attr machinery, reused verbatim so the
-# starttag-vs-startendtag-vs-data decision is bit-identical
-_TAGFIND_TOL = _hp.tagfind_tolerant
-_ATTRFIND_TOL = _hp.attrfind_tolerant
-# CDATA close per element (html.parser set_cdata_mode's interesting re)
-_CDATA_CLOSE = {
-    t: re.compile(rf"</\s*{t}", re.IGNORECASE) for t in ("script", "style")
-}
 
-# constructs whose exact html.parser behavior we do NOT replicate:
-# marked sections (<![...), declarations with internal subsets.
+def _ci(name: str) -> str:
+    """ASCII-only case-insensitive pattern for ``name``."""
+    return "".join(f"[{c}{c.upper()}]" for c in name)
+
+
+def _raw_element(name: str) -> str:
+    """``<name ...>`` through the first close html.parser's CDATA mode
+    searches for (``</\\s*name\\s*>``, unicode-case-insensitive), which
+    must then be the ASCII close its ``endtagfind`` accepts; or
+    ``<name .../>``. Both give starttag then endtag: the content would
+    be data inside ``SKIP_TAGS``, and the sink takes the pair exactly
+    as the startendtag html.parser gives ``<name/>``."""
+    return (
+        rf"({_ci(name)})(?=[\t\n\r\f />]){_ATTRS}(?:/>|>"
+        rf"(?:[^<]++|<(?!/\s*+(?i:{name})\s*+>))*+</\s*+{_ci(name)}\s*+>)"
+    )
+
+
+# one token per construct: the text run before it (group 1), then the
+# start tag name and its self-closing '/', the end tag name, the script
+# or style element; a comment, doctype or PI sets no group. Group 7,
+# the catch-all, takes the rest of the page from a '<' nothing else
+# reads: the page bails. A trailing text run ends at \Z, and no token
+# is empty.
+_GRAMMAR = re.compile(
+    r"(?!\Z)((?:[^<]++|<(?![a-zA-Z/!?]))*+)(?:<(?:"
+    rf"(?!(?:{_ci('script')}|{_ci('style')})[\t\n\r\f />])"
+    rf"([a-zA-Z][-.:a-zA-Z0-9_]*+){_ATTRS}(/?)>"
+    r"|/\s*+([a-zA-Z][-.a-zA-Z0-9:_]*+)\s*+>"
+    rf"|{_raw_element('script')}|{_raw_element('style')}"
+    r"|!--(?:[^-]++|-(?!-\s*+>))*+--\s*+>"
+    rf"|!{_ci('doctype')}[^>\[]*+>"
+    r"|\?[^>]*+>"
+    r")|((?s:.+))|\Z)"
+)
+
+
 class _Bail(Exception):
     pass
 
@@ -66,170 +100,21 @@ def scan(s: str, sink) -> bool:
 
 
 def _scan(s: str, sink) -> None:
-    n = len(s)
-    i = 0
-    find = s.find
-    while i < n:
-        j = find("<", i)
-        if j < 0:
-            d = s[i:]
-            sink.data(unescape(d) if "&" in d else d)
-            return
-        if j > i:
-            d = s[i:j]
-            sink.data(unescape(d) if "&" in d else d)
-        c = s[j + 1 : j + 2]
-        if c and (c.isalpha() and c.isascii()):
-            m = _TAG.match(s, j)
-            if m is None:
-                # unterminated or malformed start tag: html.parser takes
-                # a data-emission path with its own quirks — bail.
-                raise _Bail
-            if "\x00" in s[j : m.end()]:
-                raise _Bail  # NUL stalls html.parser's attr walk
-            end_kind = _tag_end(s, j + 1, m.end())
-            name = m.group(1).lower()
-            if end_kind == ">":
-                sink.starttag(name)
-                i = m.end()
-                if name in _CDATA_CLOSE:
-                    i = _cdata(s, i, name, sink)
-            elif end_kind == "/>":
-                sink.startendtag(name)
-                i = m.end()
+    tokens = _GRAMMAR.findall(s)
+    if tokens and tokens[-1][6]:
+        raise _Bail
+    data, start, end = sink.data, sink.starttag, sink.endtag
+    for text, tag, slash, etag, script, style, _ in tokens:
+        if text:
+            data(unescape(text) if "&" in text else text)
+        if tag:
+            if slash:
+                sink.startendtag(tag.lower())
             else:
-                raise _Bail  # parse_starttag's raw-data path
-        elif c == "/":
-            i = _endtag(s, j, sink)
-        elif c == "!":
-            if s.startswith("<!--", j):
-                m = _COMMENT_END.search(s, j + 4)
-                i = m.end() if m else _eof_incomplete(s, j, sink)
-            elif s.startswith("<![", j):
-                raise _Bail  # marked section: html.parser semantics subtle
-            else:
-                d = s[j + 2 : j + 3]
-                if d and d.isalpha() and d.isascii():
-                    # declaration (doctype): first '>' unless a '[' opens
-                    # an internal subset before it
-                    gt = find(">", j)
-                    if gt < 0:
-                        i = _eof_incomplete(s, j, sink)
-                    elif "[" in s[j:gt]:
-                        raise _Bail
-                    else:
-                        i = gt + 1
-                else:
-                    # bogus comment <!...> — consumed to first '>'
-                    gt = find(">", j)
-                    i = gt + 1 if gt >= 0 else _eof_incomplete(s, j, sink)
-        elif c == "?":
-            gt = find(">", j + 2)
-            i = gt + 1 if gt >= 0 else _eof_incomplete(s, j, sink)
-        elif c == "":
-            # lone trailing '<': goahead breaks, then close() emits the
-            # leftover tail as data
-            sink.data("<")
-            return
-        else:
-            sink.data("<")
-            i = j + 1
-
-
-def _tag_end(s: str, name_start: int, endpos: int) -> str:
-    """Reproduce parse_starttag's terminator classification using
-    html.parser's OWN regexes: walk the attrs exactly as it does and
-    strip what remains before ``endpos`` (which is just past '>').
-    Returns '>' (starttag), '/>' (startendtag) or the raw remainder
-    (→ html.parser would classify the tag differently — caller bails).
-
-    The walk runs whenever the body contains a QUOTE or ends with '/':
-    _TAG's quote-aware body regex accepts bare quoted runs
-    (``<a "x>y">``) that html.parser — which only honors quotes in
-    values after '=' — would terminate at the first '>'; only when the
-    attrfind walk lands exactly on our matched '>' do the two parsers
-    agree on the tag's extent. A quote-free body that does not end in
-    '/' cannot stall the walk (names stop only at [\\s/=>], bare values
-    only at [\\s>], so every attr boundary satisfies the lookbehind)
-    and is always a plain starttag."""
-    gt = endpos - 1          # position of '>'
-    if s[gt - 1] != "/":
-        body = s[name_start:gt]
-        if '"' not in body and "'" not in body:
-            return ">"
-    nm = _TAGFIND_TOL.match(s, name_start)
-    k = nm.end()
-    while k < gt:
-        am = _ATTRFIND_TOL.match(s, k)
-        if am is None or am.end() == k:
-            break
-        k = am.end()
-    return s[k:endpos].strip()
-
-
-def _eof_incomplete(s: str, j: int, sink) -> int:
-    """goahead's close-time handling of a construct that never
-    completes: emit raw data through the next '>' (inclusive), else up
-    to the next '<' (exclusive), else just '<'; scanning continues."""
-    k = s.find(">", j + 1)
-    if k >= 0:
-        k += 1
-    else:
-        k = s.find("<", j + 1)
-        if k < 0:
-            k = j + 1
-    d = s[j:k]
-    sink.data(unescape(d) if "&" in d else d)  # convert_charrefs applies
-    return k
-
-
-def _endtag(s: str, j: int, sink) -> int:
-    """Emulate parse_endtag (non-CDATA context)."""
-    gt = s.find(">", j + 1)
-    if gt < 0:
-        # incomplete endtag at EOF: goahead's close-time data emission
-        return _eof_incomplete(s, j, sink)
-    m = _ENDTAG_STRICT.match(s, j)
-    if m:
-        sink.endtag(m.group(1).lower())
-        return m.end()
-    if s[j : j + 3] == "</>":
-        return j + 3
-    nm = _ENDNAME.match(s, j + 2)
-    if nm:
-        # tolerant: name + junk until '>' (junk may contain quotes —
-        # html.parser's tolerant path re-finds '>' after the name)
-        sink.endtag(nm.group(0).lower())
-        return s.find(">", nm.end()) + 1
-    # '</' + non-letter → bogus comment to '>'
-    return gt + 1
-
-
-def _cdata(s: str, i: int, elem: str, sink) -> int:
-    """Raw-text mode for script/style: data (NO charref conversion)
-    until a STRICT matching close tag ``</elem\\s*>`` — html.parser's
-    parse_endtag emits anything else (``</scripty>``, ``</script x>``)
-    as data and stays in CDATA mode. Unterminated → data to EOF."""
-    pat = _CDATA_CLOSE[elem]
-    pos = i
-    n = len(s)
-    while True:
-        m = pat.search(s, pos)
-        if m is None:
-            if pos < n:
-                sink.data(s[pos:])
-            return n
-        j = m.start()
-        if j > pos:
-            sink.data(s[pos:j])
-        gt = s.find(">", j + 1)
-        if gt < 0:
-            # incomplete endtag at EOF: html.parser drops the remainder
-            return n
-        strict = _ENDTAG_STRICT.match(s, j)
-        if strict and strict.group(1).lower() == elem:
-            sink.endtag(elem)
-            return strict.end()
-        # bogus close inside cdata: raw data through the '>' inclusive
-        sink.data(s[j : gt + 1])
-        pos = gt + 1
+                start(tag.lower())
+        elif etag:
+            end(etag.lower())
+        elif script or style:
+            name = (script or style).lower()
+            start(name)
+            end(name)

@@ -13,10 +13,12 @@ Two interchangeable event front-ends drive ONE block state machine
 
  * the REFERENCE front-end — stdlib ``html.parser`` (tolerant,
    battle-tested, defines the frozen semantics);
- * the FAST front-end — ``webextract.functions.fastscan``, a
-   compiled-regex scanner ~2-4× faster that bails back to the
-   reference parser for any document containing a construct whose
-   html.parser semantics it does not replicate bit-for-bit.
+ * the FAST front-end — ``webextract.functions.fastscan``, one
+   compiled-regex ``findall`` per page over a strict HTML grammar:
+   text, start/self-closing tags with well-formed attributes, strict
+   end tags, comments, doctypes without ``[``, ``<?...>`` and
+   script/style elements through their strict close. A page holding
+   anything else bails, whole, to the reference front-end.
 
 ``tokenize_blocks(text)`` uses fast-with-fallback by default;
 ``engine="reference"`` forces the stdlib path (differential tests
@@ -69,6 +71,8 @@ class _BlockSink:
     """The block state machine. Consumes the html.parser-equivalent
     event stream (starttag/endtag/startendtag/data) from either
     front-end and accumulates the columnar block table."""
+
+    reference = False  # set by scan_blocks when html.parser drove the sink
 
     def __init__(self) -> None:
         self.stack: list[str] = []
@@ -224,24 +228,26 @@ def _run_reference(html_text: str) -> _BlockSink:
     return sink
 
 
+def _check_engine(fn: str, engine: str) -> None:
+    if engine not in ("auto", "reference"):
+        raise ValueError(f"{fn}: unknown engine {engine!r}")
+
+
 def scan_blocks(html_text: str, engine: str = "auto") -> _BlockSink:
     """Canonical html text → the flushed block sink. Its parallel lists
     ``tags, depths, texts, link_lens, n_links, boilers, pres`` are the
     page's block columns; the batch extraction path appends them to
-    batch-level columns directly.
+    batch-level columns directly. ``sink.reference`` is True when the
+    page took the reference path.
 
     ``engine``: "auto" (fast scanner, reference fallback) or
     "reference" (stdlib html.parser only — the frozen semantics).
     """
-    if engine not in ("auto", "reference"):
-        raise ValueError(f"tokenize_blocks: unknown engine {engine!r}")
-    sink: _BlockSink | None = None
-    if engine == "auto":
-        s = _BlockSink()
-        if fastscan.scan(html_text, s):
-            sink = s
-    if sink is None:
+    _check_engine("scan_blocks", engine)
+    sink = _BlockSink()
+    if engine == "reference" or not fastscan.scan(html_text, sink):
         sink = _run_reference(html_text)
+        sink.reference = True
     sink._flush()
     return sink
 
@@ -255,6 +261,7 @@ def tokenize_blocks(html_text: str, engine: str = "auto") -> dict[str, list]:
     by "\\n"), returned under key ``doc_text``. ``engine`` as in
     :func:`scan_blocks`.
     """
+    _check_engine("tokenize_blocks", engine)
     sink = scan_blocks(html_text, engine)
     starts: list[int] = []
     ends: list[int] = []

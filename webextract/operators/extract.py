@@ -42,7 +42,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from webextract.config import DEFAULT_CONFIG, ExtractConfig
-from webextract.functions.extract import extract_batch, page_text
+from webextract.functions.extract import ExtractedPages, extract_batch, page_text
 
 SPAN_TYPE = T.StructType(
     [
@@ -76,6 +76,7 @@ UNIFIED_SCHEMA = T.StructType(
         T.StructField("urls_in", T.LongType(), True),
         T.StructField("lineage_bytes_in", T.LongType(), True),
         T.StructField("lineage_blocks_kept", T.LongType(), True),
+        T.StructField("reference_pages", T.LongType(), True),
         T.StructField("extract_ms", T.DoubleType(), True),
     ]
 )
@@ -102,12 +103,16 @@ def _spans_array(offsets: list[int], columns: tuple) -> pa.ListArray:
     return pa.ListArray.from_arrays(offsets, struct, type=_SPANS_PA)
 
 
-def _extract_record_batch(rb: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
-    """One Arrow batch of (url, html) → extracted batch. The html column
-    is read one page at a time, and the whole batch is scored and
-    merged in one pass (:func:`extract_batch`)."""
+def _extract(rb: pa.RecordBatch, cfg: ExtractConfig) -> ExtractedPages:
+    """One Arrow batch of (url, html) → :func:`extract_batch`' result.
+    The html column is read one page at a time, and the whole batch is
+    scored and merged in one pass."""
     html = rb.column(1)
-    batch = extract_batch((html[i].as_py() for i in range(rb.num_rows)), cfg)
+    return extract_batch((html[i].as_py() for i in range(rb.num_rows)), cfg)
+
+
+def _extracted_record_batch(rb: pa.RecordBatch, batch: ExtractedPages) -> pa.RecordBatch:
+    """The extracted Arrow batch of ``rb``'s urls and their ``batch``."""
     m = batch.merged
     t = _EXTRACTED_PA.types  # EXTRACTED_SCHEMA order
     return pa.RecordBatch.from_arrays(
@@ -123,6 +128,11 @@ def _extract_record_batch(rb: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBa
         ],
         schema=_EXTRACTED_PA,
     )
+
+
+def _extract_record_batch(rb: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
+    """One Arrow batch of (url, html) → extracted batch."""
+    return _extracted_record_batch(rb, _extract(rb, cfg))
 
 
 def _drop_zip_finders() -> None:
@@ -264,7 +274,9 @@ def extract_pages_with_lineage(
     :func:`split_lineage` (persist the unified frame first if both
     halves are consumed). Page rows come from the same batch loop as
     :func:`extract_pages`, with ``rec_type='page'`` and null lineage
-    columns."""
+    columns. A lineage row counts its partition's pages, html bytes,
+    kept blocks and the pages the reference tokenizer read
+    (``reference_pages``: the fast scanner bailed on them)."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
@@ -273,9 +285,15 @@ def extract_pages_with_lineage(
         urls_in = 0
         bytes_in = 0
         blocks_kept = 0
-        for out in _page_batches(
-            batches, lambda rb: _extract_record_batch(rb, cfg)
-        ):
+        reference_pages = 0
+
+        def build(rb: pa.RecordBatch) -> pa.RecordBatch:
+            nonlocal reference_pages
+            batch = _extract(rb, cfg)
+            reference_pages += batch.reference_pages
+            return _extracted_record_batch(rb, batch)
+
+        for out in _page_batches(batches, build):
             n = out.num_rows
             urls_in += n
             bytes_in += int(pc.sum(out.column("bytes_in")).as_py() or 0)
@@ -292,6 +310,7 @@ def extract_pages_with_lineage(
                 "urls_in": urls_in,
                 "lineage_bytes_in": bytes_in,
                 "lineage_blocks_kept": blocks_kept,
+                "reference_pages": reference_pages,
                 "extract_ms": (time.perf_counter() - t0) * 1000.0,
             }
             yield pa.RecordBatch.from_pylist([lineage], schema=_UNIFIED_PA)
@@ -309,6 +328,7 @@ def split_lineage(unified: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col("urls_in"),
         F.col("lineage_bytes_in").alias("bytes_in"),
         F.col("lineage_blocks_kept").alias("blocks_kept"),
+        F.col("reference_pages"),
         F.col("extract_ms"),
     )
     return extracted, lineage
