@@ -559,41 +559,6 @@ def q_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.cluster_keeper(docs, pairs)
 
 
-def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for queries vec_id<10 (ids + rank only:
-    rankings are float-robust, raw sims are not engine-portable)."""
-    emb = _emb(spark, sf_dir)
-    q = similarity.make_queries(emb, 10)
-    return similarity.cosine_topk(emb, q, 5).select("query_id", "rank", "neighbor_id")
-
-
-def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH ANN, now fully oracle-backed: the sign buckets
-    are exact int64 arithmetic over integer-quantized components and
-    frozen integer planes (similarity.QUANT_BITS/_planes), so the
-    oracle restates the WHOLE pipeline — quantize → 6-plane sketch
-    (plane literals interpolated from the same matrix the UDF uses) →
-    22 XOR probe buckets at radius 2 → bucket equi-join → cosine
-    rank — and a bucketing bug anywhere breaks the hash."""
-    return similarity.ann_lsh_topk(_emb(spark, sf_dir), EMB_DIM, 5, 10).select(
-        "query_id", "rank", "neighbor_id"
-    )
-
-
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (k-means coarse lists, n_probe nearest lists searched).
-    ORACLE-BACKED since round 4: the coarse quantizer is the
-    exact-integer Lloyd (operators/kmeans.py) and probe selection is
-    the exact integer squared distance with the frozen (d2, cluster)
-    tie-break, so the candidate set is bit-identical across engines;
-    the ranking tail is the proven-portable float-cosine
-    rank-not-sim contract shared with sim_topk/ann_lsh. Recall against
-    brute force is pinned by test_ivf_topk_exact_recall_and_contract."""
-    return similarity.ivf_topk_exact(_emb(spark, sf_dir), 5, 10).select(
-        "query_id", "rank", "neighbor_id"
-    )
-
-
 def q_emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs — the BANDED scale path
     (similarity.embedding_near_dup_pairs): candidates come from
@@ -1421,21 +1386,6 @@ def _select_packed(packed: DataFrame) -> DataFrame:
     )
 
 
-def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional-index phrase query ("table hash"): term-filtered
-    positions + adjacency equi-joins on (doc_id, position). The
-    oracle is ground truth by a different method entirely — an
-    in-row lambda walk over each document's word array — so a bug in
-    the postings join cannot be mirrored."""
-    return vocab.phrase_search(_docs_spread(spark, sf_dir), "table hash")
-
-
-def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Posting lists capped at the 16 smallest doc_ids per word via a
-    pre-collection WindowGroupLimit — no unbounded collect_set."""
-    return vocab.inverted_index(_docs_spread(spark, sf_dir))
-
-
 def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc top-3 keywords ranked by integer-quantized TF-IDF
     (tf * ((1000 * N) DIV df)) so the rank order is hash-portable
@@ -1447,16 +1397,6 @@ def q_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style blocklist gate (token-exact, not substring): count of
     blocklisted occurrences + keep verdict, zero shuffles."""
     return vocab.blocklist_filter(_docs(spark, sf_dir))
-
-
-def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 ranked retrieval (k1=1.2, b=0.75) for the frozen benchmark
-    query set: top-10 docs per query by an integer-quantized score —
-    one DECIMAL(38,0) DIV per (doc, term), bit-lengths for the idf
-    log, so the full ranking hash-matches the oracle where float BM25
-    could not. Query-term isin pushed into the scan; per-query top-k
-    prunes via WindowGroupLimit."""
-    return vocab.bm25_search(_docs_spread(spark, sf_dir))
 
 
 def q_page_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1624,20 +1564,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = host_graph(extract_links(pages_with_links(spark, sf_dir)))
     return pagerank(edges, n_iter=5)
-
-
-def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kleinberg HITS hub/authority over the host graph: three
-    UN-normalized integer power iterations (rescaling only divides
-    every score by the same scalar, so ranking is invariant — and
-    the integer form is bit-identical across engines). Oracle =
-    the same three rounds unrolled as SQL CTEs over the shared
-    edge restatement."""
-    from webextract.operators.links import extract_links, hits, host_graph
-    from webextract.sources.pages import pages_with_links
-
-    edges = host_graph(extract_links(pages_with_links(spark, sf_dir)))
-    return hits(edges, n_iter=3)
 
 
 def q_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1876,11 +1802,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kie_pairs": q_kie_pairs,
         "list_items": q_list_items,
         "vocab_topk": q_vocab_topk,
-        "phrase_search": q_phrase_search,
-        "inverted_index": q_inverted_index,
         "tfidf_keywords": q_tfidf_keywords,
         "blocklist": q_blocklist,
-        "bm25": q_bm25,
         "page_meta": q_page_meta,
         "length_quantiles": q_length_quantiles,
         "script_stats": q_script_stats,
@@ -1896,18 +1819,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "host_graph": q_host_graph,
         "anchor_texts": q_anchor_texts,
         "pagerank": q_pagerank,
-        "hits": q_hits,
         "shingle_diversity": q_shingle_diversity,
         "pipeline_clean": q_pipeline_clean,
         "pipeline_funnel": q_pipeline_funnel,
         "corpus_report": q_corpus_report,
         "span_eval": q_span_eval,
         "table_eval": q_table_eval,
-        "ann_lsh": q_ann_lsh,
         "emb_near_dup": q_emb_near_dup,
         # ---- unchanged in round 5; every entry below
         # carries a hash-exact driver row from r1-r4 ----
-        "ann_ivf": q_ann_ivf,
         "semdedup": q_semdedup,
         "host_boiler": q_host_boiler,
         "crawl_diff": q_crawl_diff,
@@ -1933,7 +1853,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash": q_dedup_simhash,
         "dedup_simhash_pairs": q_dedup_simhash_pairs,
         "simhash_clusters": q_simhash_clusters,
-        "sim_topk": q_sim_topk,
         "url_dedup": q_url_dedup,
         "domain_blocklist": q_domain_blocklist,
         "latest_snapshot": q_latest_snapshot,
@@ -1974,13 +1893,6 @@ _PAGE_HTML = (
 )
 
 # --- integer-exact LSH sketch (mirrors similarity.lsh_sketch) -------------
-# the quantized component list: floor(x · 2^QUANT_BITS) — every step
-# exact and engine-portable (float32→double exact, ×2^k exponent-only,
-# FLOOR fully specified), so the sign buckets below are pure BIGINT
-_QV = (
-    "list_transform(CAST(embedding AS DOUBLE[]), "
-    f"x -> CAST(FLOOR(x * {1 << similarity.QUANT_BITS}) AS BIGINT))"
-)
 
 
 def _lsh_sketch_expr(n_planes: int, dim: int = EMB_DIM) -> str:
@@ -2720,44 +2632,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
 """,
         "dedup_simhash_pairs": _simhash64_pairs_sql(),
         "simhash_clusters": _simhash64_clusters_sql(),
-        "sim_topk": """
-            WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-                       FROM embeddings WHERE vec_id < 10),
-            s AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-                         list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qe) AS sim
-                  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-            r AS (SELECT query_id, neighbor_id,
-                         row_number() OVER (PARTITION BY query_id
-                                            ORDER BY sim DESC, neighbor_id ASC) AS rank
-                  FROM s)
-            SELECT query_id, rank, neighbor_id FROM r WHERE rank <= 5
-        """,
-        # the full multi-probe LSH pipeline restated: quantize →
-        # integer sign sketch (plane literals from the SAME matrix the
-        # UDF uses) → XOR probe buckets → bucket equi-join → cosine
-        # rank. Exact-integer buckets are what make this statable.
-        "ann_lsh": f"""
-            WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                              {_QV} AS qv
-                       FROM embeddings),
-            sk AS (SELECT vec_id, emb,
-                   {_lsh_sketch_expr(similarity.N_PLANES)} AS sketch
-                   FROM e),
-            q AS (SELECT vec_id AS query_id, emb AS qe, sketch AS qsk
-                  FROM sk WHERE vec_id < 10),
-            pr AS (SELECT query_id, qe, xor(qsk, CAST(m AS BIGINT)) AS probe
-                   FROM q, unnest({similarity._probe_masks(similarity.N_PLANES, 2)}) AS t(m)),
-            c AS (SELECT pr.query_id, sk.vec_id AS neighbor_id,
-                         list_cosine_similarity(sk.emb, pr.qe) AS sim
-                  FROM sk JOIN pr ON sk.sketch = pr.probe
-                  WHERE sk.vec_id <> pr.query_id),
-            r AS (SELECT query_id, neighbor_id,
-                         row_number() OVER (PARTITION BY query_id
-                                            ORDER BY sim DESC, neighbor_id ASC)
-                             AS rank
-                  FROM c)
-            SELECT query_id, rank, neighbor_id FROM r WHERE rank <= 5
-        """,
         # dup plant + 24-plane quantized sketch + 3-band split (8 bits
         # per band) + band equi-join + cosine threshold, all restated
         "emb_near_dup": f"""
@@ -3328,39 +3202,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
         "pretrain_pack": _pretrain_pack_sql(),
         "kmeans_assign": _kmeans_sql(),
         "semdedup": _semdedup_sql(),
-        "ann_ivf": _ann_ivf_sql(),
-        "phrase_search": f"""
-            WITH t AS (SELECT doc_id,
-                              regexp_extract_all(lower(text),
-                                                 '{vocab.WORD_REGEX}') AS w
-                       FROM documents),
-            m AS (SELECT doc_id,
-                         list_filter(range(1, len(w)),
-                                     i -> w[i] = 'table'
-                                          AND w[i + 1] = 'hash') AS l
-                  FROM t)
-            SELECT doc_id, CAST(len(l) AS BIGINT) AS n_matches,
-                   CAST(l[1] AS BIGINT) AS first_pos
-            FROM m WHERE len(l) > 0
-        """,
-        "inverted_index": f"""
-            WITH g AS (SELECT doc_id,
-                              unnest(regexp_extract_all(lower(text),
-                                     '{vocab.WORD_REGEX}')) AS word
-                       FROM documents),
-            grid AS (SELECT doc_id, word, COUNT(*) AS tf
-                     FROM g GROUP BY doc_id, word),
-            dfs AS (SELECT word, COUNT(*) AS df FROM grid GROUP BY word),
-            capped AS (SELECT word, doc_id, row_number() OVER
-                              (PARTITION BY word ORDER BY doc_id ASC) AS pos
-                       FROM grid),
-            posts AS (SELECT word,
-                             array_to_string(list_sort(list(doc_id)), ',')
-                                 AS postings
-                      FROM capped WHERE pos <= 16 GROUP BY word)
-            SELECT dfs.word, dfs.df, posts.postings
-            FROM dfs JOIN posts USING (word)
-        """,
         "tfidf_keywords": f"""
             WITH g AS (SELECT doc_id,
                               unnest(regexp_extract_all(lower(text),
@@ -3393,50 +3234,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
                        ({", ".join(repr(s) for s in vocab.BLOCKLIST)}))) = 0
                        AS keep
             FROM t
-        """,
-        # query set / constants interpolated from vocab.BM25_* so the
-        # two sides cannot drift; arithmetic in HUGEINT mirrors the
-        # Spark DECIMAL(38,0) products exactly (both 38-digit exact)
-        "bm25": f"""
-            WITH toks AS (SELECT doc_id,
-                                 regexp_extract_all(lower(text),
-                                     '{vocab.WORD_REGEX}') AS words
-                          FROM documents),
-            base AS (SELECT doc_id, len(words) AS dl, unnest(words) AS word
-                     FROM toks),
-            qterms(query_id, word) AS (VALUES {", ".join(
-                f"({qid}, {w!r})"
-                for qid, ws in vocab.BM25_QUERIES for w in ws)}),
-            grid AS (SELECT doc_id, word, COUNT(*) AS tf, MIN(dl) AS dl
-                     FROM base
-                     WHERE word IN ({", ".join(repr(w) for w in sorted(
-                         {w for _, ws in vocab.BM25_QUERIES for w in ws}))})
-                     GROUP BY doc_id, word),
-            dfs AS (SELECT word, COUNT(*) AS df FROM grid GROUP BY word),
-            stats AS (SELECT COUNT(*) AS n_docs,
-                             CAST(SUM(len(regexp_extract_all(lower(text),
-                                 '{vocab.WORD_REGEX}'))) AS BIGINT)
-                                 AS total_dl
-                      FROM documents),
-            scored AS (SELECT q.query_id, g.doc_id,
-                CAST((CAST({vocab.BM25_SCALE} AS HUGEINT)
-                      * (length(bin(s.n_docs)) - length(bin(d.df)) + 1)
-                      * 22 * g.tf * s.total_dl)
-                // (CAST(10 AS HUGEINT) * g.tf * s.total_dl
-                    + CAST(3 AS HUGEINT) * s.total_dl
-                    + CAST(9 AS HUGEINT) * g.dl * s.n_docs)
-                    AS BIGINT) AS term_score
-              FROM grid g JOIN qterms q USING (word)
-                   JOIN dfs d USING (word) CROSS JOIN stats s),
-            agg AS (SELECT query_id, doc_id,
-                           CAST(SUM(term_score) AS BIGINT) AS score
-                    FROM scored GROUP BY query_id, doc_id),
-            r AS (SELECT *, row_number() OVER
-                         (PARTITION BY query_id
-                          ORDER BY score DESC, doc_id ASC) AS rank
-                  FROM agg)
-            SELECT query_id, rank, doc_id, score
-            FROM r WHERE rank <= {vocab.BM25_TOPK}
         """,
         "page_meta": f"""
             SELECT {_URL} AS url,
@@ -3672,7 +3469,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
             FROM tot t JOIN top p ON t.dst_host = p.dst_host AND p.rk = 1
         """,
         "pagerank": _pagerank_sql(),
-        "hits": _hits_sql(),
         "extract_eval": f"""
             WITH e AS (SELECT {_EXTRACTED} AS text FROM documents)
             SELECT COUNT(*) AS n_urls, COUNT(*) AS n_exact,
@@ -4055,49 +3851,6 @@ FROM bins JOIN stats s USING (media_id)
 LEFT JOIN counts c ON c.media_id = bins.media_id AND c.bin = bins.bin"""
 
 
-def _ann_ivf_sql(
-    k: int = 5,
-    n_queries: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    n_iter: int = 3,
-) -> str:
-    """ann_ivf oracle: the shared unrolled-Lloyd CTEs give the final
-    assignment a{n} AND the final centroid table c{n-1} it ran
-    against; probe selection is the exact integer d2 of each query
-    against those centroids with the frozen (d2, cluster) tie-break;
-    candidates are the probe-list members; the rank tail is the same
-    float cosine as sim_topk (rank-not-sim output)."""
-    return f"""WITH {_kmeans_ctes(n_lists, n_iter)},
-  qs AS (SELECT DISTINCT vec_id AS query_id FROM q
-         WHERE vec_id < {n_queries}),
-  pd AS (SELECT qs.query_id, c.cluster,
-                CAST(SUM((q.qx - c.cx) * (q.qx - c.cx)) AS BIGINT) AS d2
-         FROM qs JOIN q ON q.vec_id = qs.query_id
-         JOIN c{n_iter - 1} c ON c.i = q.i
-         GROUP BY 1, 2),
-  pr AS (SELECT query_id, cluster AS probe FROM
-           (SELECT query_id, cluster,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY d2, cluster) AS rn
-            FROM pd)
-         WHERE rn <= {n_probe}),
-  e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-        FROM embeddings),
-  cand AS (SELECT pr.query_id, a.vec_id AS neighbor_id
-           FROM pr JOIN a{n_iter} a ON a.cluster = pr.probe
-           WHERE a.vec_id <> pr.query_id),
-  s AS (SELECT c.query_id, c.neighbor_id,
-               list_cosine_similarity(ea.emb, eq.emb) AS sim
-        FROM cand c JOIN e ea ON ea.vec_id = c.neighbor_id
-                    JOIN e eq ON eq.vec_id = c.query_id),
-  r AS (SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY sim DESC, neighbor_id ASC) AS rank
-        FROM s)
-SELECT query_id, rank, neighbor_id FROM r WHERE rank <= {k}"""
-
-
 def _semdedup_sql(
     k: int = 16, n_iter: int = 3, num: int = 9025, den: int = 10_000
 ) -> str:
@@ -4141,50 +3894,6 @@ SELECT v.vec_id, CAST(v.cluster AS BIGINT) AS list_id,
        COALESCE(c.grp, v.vec_id) AS group_id,
        COALESCE(c.grp, v.vec_id) = v.vec_id AS is_keeper
 FROM v LEFT JOIN comp c USING (vec_id)"""
-
-
-def _hits_sql(n_iter: int = 3) -> str:
-    """Unrolled exact-integer HITS: hub0 = 1 everywhere; per round k,
-    raw authority_k[v] = Σ_in w·hub_{k-1}[u], rescaled by the shared
-    divisor greatest(1, max DIV 2^20); then the hub half-step the same
-    way — pure BIGINT sums + floor divisions over the shared edge
-    restatement, absent nodes coalesced to 0 exactly like the Spark
-    left joins."""
-    its = []
-    for k in range(1, n_iter + 1):
-        its.append(f"""
-  ar{k} AS (
-    SELECT n.host, COALESCE(s.a, CAST(0 AS BIGINT)) AS authority
-    FROM nodes n LEFT JOIN (
-      SELECT e.dst_host AS host,
-             CAST(SUM(e.weight * h.hub) AS BIGINT) AS a
-      FROM ew e JOIN h{k - 1} h ON h.host = e.src_host
-      GROUP BY e.dst_host) s ON s.host = n.host),
-  a{k} AS (
-    SELECT host, CAST(authority // GREATEST(CAST(1 AS BIGINT),
-               (SELECT MAX(authority) FROM ar{k}) // 1048576)
-           AS BIGINT) AS authority
-    FROM ar{k}),
-  hr{k} AS (
-    SELECT n.host, COALESCE(s.h, CAST(0 AS BIGINT)) AS hub
-    FROM nodes n LEFT JOIN (
-      SELECT e.src_host AS host,
-             CAST(SUM(e.weight * a.authority) AS BIGINT) AS h
-      FROM ew e JOIN a{k} a ON a.host = e.dst_host
-      GROUP BY e.src_host) s ON s.host = n.host),
-  h{k} AS (
-    SELECT host, CAST(hub // GREATEST(CAST(1 AS BIGINT),
-               (SELECT MAX(hub) FROM hr{k}) // 1048576)
-           AS BIGINT) AS hub
-    FROM hr{k})""")
-    return f"""
-WITH {_EDGES_CTE},
-  nodes AS (SELECT src_host AS host FROM ew
-            UNION SELECT dst_host FROM ew),
-  h0 AS (SELECT host, CAST(1 AS BIGINT) AS hub FROM nodes),{",".join(its)}
-SELECT h.host, h.hub, a.authority
-FROM h{n_iter} h JOIN a{n_iter} a USING (host)
-"""
 
 
 def _pagerank_sql(n_iter: int = 5, damping: float = 0.85) -> str:

@@ -92,6 +92,33 @@ def test_plans_md_covers_registry():
     assert headings == list(e.queries())
 
 
+def test_benchmark_queries_are_in_the_registry():
+    """The traced benchmark run times registry queries by name: the
+    names in ``perfbench/layers.py::QUERIES`` and the ``query.<name>_s``
+    metrics of ``BENCHMARK.json`` must each be a key of both
+    ``queries()`` and ``oracle_sql()``, or ``--trace 1`` breaks."""
+    import ast
+    import re
+
+    with open(os.path.join(REPO, "perfbench", "layers.py")) as f:
+        tree = ast.parse(f.read())
+    traced = next(
+        ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "QUERIES" for t in node.targets)
+    )
+    with open(os.path.join(REPO, "BENCHMARK.json")) as f:
+        per_layer = [m["name"] for m in json.load(f)["per_layer"]]
+    timed = [
+        m.group(1) for n in per_layer if (m := re.fullmatch(r"query\.(\w+)_s", n))
+    ]
+    assert traced and timed
+    qs, osql = e.queries(), e.oracle_sql()
+    missing = [n for n in (*traced, *timed) if n not in qs or n not in osql]
+    assert not missing, f"benchmark queries missing from the registry: {missing}"
+
+
 def test_local_sweep_requires_an_output_path(monkeypatch, tmp_path, capsys):
     """A bare ``scripts/local_sweep.py`` run prints its usage and exits
     2 before any Spark session starts, so it cannot overwrite the

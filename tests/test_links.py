@@ -141,27 +141,3 @@ def test_anchor_fixture_profile(spark):
     assert sum(r.n_inlinks for r in res) == 3 * 500
     words = {"ref", "see also", "source", "details"}
     assert all(r.top_anchor in words for r in res)
-
-
-def test_hits_star_graph_ranking(spark):
-    """Star graph: the page every host links to tops authority; the
-    host linking everywhere tops hubs; rescale keeps ranking."""
-    from webextract.operators.links import hits
-
-    edges = spark.createDataFrame(
-        [
-            ("hub.com", "star.com", 5),
-            ("a.com", "star.com", 1),
-            ("b.com", "star.com", 1),
-            ("hub.com", "a.com", 2),
-            ("hub.com", "b.com", 1),
-        ],
-        ["src_host", "dst_host", "weight"],
-    )
-    rows = {r.host: r for r in hits(edges, n_iter=3).collect()}
-    top_auth = max(rows.values(), key=lambda r: r.authority).host
-    top_hub = max(rows.values(), key=lambda r: r.hub).host
-    assert top_auth == "star.com"
-    assert top_hub == "hub.com"
-    assert rows["star.com"].hub == 0          # no outlinks
-    assert all(r.authority >= 0 and r.hub >= 0 for r in rows.values())

@@ -3,6 +3,7 @@ table, and the stream-static probe matching batch lsh_pairs."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from webextract.operators import dedup
@@ -34,6 +35,17 @@ def test_row_minhash_drops_short_rows(spark):
     )
     keys = {r.doc_id for r in row_minhash_bands(df, key="doc_id").collect()}
     assert keys == {2}  # <SHINGLE_N tokens → no shingles → no probes
+
+
+@pytest.mark.parametrize("k,bands", [(10, 3), (10, 0)])
+def test_band_count_must_divide_signature(spark, k, bands):
+    """k=10, bands=3 would silently drop mh9 from every band; the check
+    is a ValueError (not an assert) so it holds under ``python -O``."""
+    df = spark.createDataFrame([(1, "a b c d e f")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="divisible"):
+        dedup.lsh_band_table(df, k=k, bands=bands)
+    with pytest.raises(ValueError, match="divisible"):
+        row_minhash_bands(df, key="doc_id", k=k, bands=bands)
 
 
 def test_streaming_near_dup_drain_matches_batch_pairs(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Vocabulary / indexing / relevance operators (operators/vocab.py)
+"""Corpus vocabulary statistics (operators/vocab.py)
 and page-metadata extraction (operators/pagemeta.py)."""
 
 from pyspark.sql import Row
@@ -28,14 +28,6 @@ def test_vocab_topk_counts_and_rank_ties(spark):
 def test_vocab_topk_limits_to_k(spark):
     docs = _docs(spark, ["a b c d e f"])
     assert vocab.vocab_topk(docs, k=3).count() == 3
-
-
-def test_inverted_index_caps_and_sorts_postings(spark):
-    docs = _docs(spark, ["common"] * 6 + ["common rare"])
-    out = {r["word"]: r for r in vocab.inverted_index(docs, postings_cap=3).collect()}
-    assert out["common"]["df"] == 7          # exact df, beyond the cap
-    assert out["common"]["postings"] == "0,1,2"  # 3 smallest doc_ids
-    assert out["rare"]["df"] == 1 and out["rare"]["postings"] == "6"
 
 
 def test_tfidf_ranks_rare_words_first(spark):
@@ -168,81 +160,3 @@ def test_ngram_counts_short_docs_and_topk_plan(spark):
     assert [r.gram for r in rows] == ["x y"]  # 1-token doc contributes nothing
     plan = ngram_counts(docs, n=2, k=5)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan and "partial_count" in plan
-
-
-def test_bm25_rare_term_and_length_norm(spark):
-    # doc 0: 'hash' AND 'join' (short) — both terms, best score
-    # doc 1: 'join' only, padded long — length norm must demote it
-    # doc 2: 'join' only, short
-    # doc 3: neither query term — must not appear at all
-    docs = _docs(
-        spark,
-        [
-            "hash join table",
-            "join " + "filler " * 40,
-            "join scan",
-            "scan table row",
-        ],
-    )
-    rows = vocab.bm25_search(docs, queries=((1, ("hash", "join")),), k=10).collect()
-    by_rank = {r["rank"]: r["doc_id"] for r in rows}
-    assert by_rank[1] == 0            # both terms wins
-    assert set(by_rank.values()) == {0, 1, 2}  # doc 3 never retrieved
-    # equal-tf single-term docs: the shorter one scores higher
-    assert by_rank[2] == 2 and by_rank[3] == 1
-    scores = {r["doc_id"]: r["score"] for r in rows}
-    assert scores[2] > scores[1]
-
-
-def test_bm25_tf_saturates(spark):
-    # k1-style saturation: tf 1→2 gains more than tf 9→10
-    docs = _docs(
-        spark,
-        ["q x x x x x x x x x",       # tf=1, dl=10
-         "q q x x x x x x x x",       # tf=2, dl=10
-         "q q q q q q q q q x",       # tf=9, dl=10
-         "q q q q q q q q q q"],      # tf=10, dl=10
-    )
-    rows = vocab.bm25_search(docs, queries=((1, ("q",)),), k=10).collect()
-    s = {r["doc_id"]: r["score"] for r in rows}
-    assert s[1] - s[0] > s[3] - s[2] > 0
-
-
-def test_bm25_multiple_queries_ranked_independently(spark):
-    docs = _docs(spark, ["alpha alpha", "beta beta", "alpha beta"])
-    rows = vocab.bm25_search(
-        docs, queries=((1, ("alpha",)), (2, ("beta",))), k=2
-    ).collect()
-    got = {(r["query_id"], r["rank"]): r["doc_id"] for r in rows}
-    assert got[(1, 1)] == 0 and got[(1, 2)] == 2
-    assert got[(2, 1)] == 1 and got[(2, 2)] == 2
-
-
-def test_phrase_search_positions_and_overlaps(spark):
-    """3-term chain, overlapping occurrences, and 1-based first_pos."""
-    from webextract.operators.vocab import phrase_search
-
-    rows = [
-        (1, "a b c x a b c"),      # two matches of "a b c" at 1 and 5
-        (2, "a a a a"),            # overlapping "a a a": starts 1 and 2
-        (3, "a b x c"),            # no match
-        (4, "c b a"),              # order matters: no match
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {
-        r.doc_id: (r.n_matches, r.first_pos)
-        for r in phrase_search(df, "a b c").collect()
-    }
-    assert got == {1: (2, 1)}
-    got2 = {
-        r.doc_id: (r.n_matches, r.first_pos)
-        for r in phrase_search(df, "a a a").collect()
-    }
-    assert got2 == {2: (2, 1)}
-    # query tokenized with the corpus regex: punctuation never makes
-    # a phrase silently unmatchable
-    got3 = {
-        r.doc_id: (r.n_matches, r.first_pos)
-        for r in phrase_search(df, "A, b -- c!").collect()
-    }
-    assert got3 == got

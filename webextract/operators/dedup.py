@@ -109,7 +109,8 @@ def _band_hashes(sig: DataFrame, key: str, k: int, bands: int) -> DataFrame:
     band-hash expression — :func:`lsh_band_table` and the streaming
     in-row probe (streaming/neardup_stream.py) both call it, so their
     bands agree by construction."""
-    assert k % bands == 0
+    if bands < 1 or k % bands != 0:
+        raise ValueError(f"k={k} must be divisible by bands={bands} (bands >= 1)")
     r = k // bands
     band_rows = [
         F.struct(
@@ -153,7 +154,6 @@ def lsh_pairs(
 
     Returns distinct (doc_a, doc_b) with doc_a < doc_b.
     """
-    assert k % bands == 0
     # both self-join sides read the band table; checkpoint so the
     # minhash aggregation underneath runs once, not twice
     bt = lsh_band_table(docs, k, bands, n, sh=sh).localCheckpoint(eager=False)

@@ -3,12 +3,13 @@
 A float k-means is not SQL-statable — float accumulation order
 changes the centroids — so a float quantizer could carry only
 rows-only correctness checks. This module is the one coarse quantizer
-the IVF and SemDeDup operators ride: a Lloyd iteration in which every
-arithmetic step is fully specified integer math, so the entire
-clustering (assignments, centroids, distances) is bit-identical across
-engines and statable as ANSI SQL (reference analog: the deterministic
-postprocess contract everywhere, ppocr/postprocess/db_postprocess.py:
-220-246 — quantize first, then only exact arithmetic).
+the k-means assignment and SemDeDup operators ride: a Lloyd iteration
+in which every arithmetic step is fully specified integer math, so the
+entire clustering (assignments, centroids, distances) is bit-identical
+across engines and statable as ANSI SQL (reference analog: the
+deterministic postprocess contract everywhere,
+ppocr/postprocess/db_postprocess.py:220-246 — quantize first, then
+only exact arithmetic).
 
 Determinism contract:
 - Components quantize as ``floor(x · 2^QUANT_BITS)`` — exact (float32
@@ -161,8 +162,8 @@ def kmeans_fit(
     fitted state: ``(q, assigned, cent)`` — the quantized corpus
     (vec_id, qv), the final assignment (vec_id, qv, cluster, d2), and
     the FINAL centroid table (cluster, cv) that assignment ran
-    against. Both convenience wrappers and the exact IVF path share
-    this so the chain is computed once."""
+    against. Both convenience wrappers share this so the chain is
+    computed once."""
     q = quantize(emb, col).select("vec_id", "qv").localCheckpoint(eager=False)
     cent = seed_centroids(q, k).localCheckpoint()
     assigned = assign(q, cent)
@@ -189,5 +190,5 @@ def kmeans_centroids(
 ) -> DataFrame:
     """The FINAL centroid table (cluster, cv) the last ``kmeans_int``
     assignment ran against — the trained-quantizer artifact a 100 TB
-    deployment persists and reuses across probe queries."""
+    deployment persists and reuses to assign new vectors."""
     return kmeans_fit(emb, k, n_iter, col)[2]

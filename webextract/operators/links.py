@@ -195,91 +195,3 @@ def pagerank(
             .localCheckpoint()
         )
     return ranks
-
-
-def _rescaled(scores: DataFrame, col: str, shift_pow: int = 20) -> DataFrame:
-    """Block-floating-point rescale: divide every score by the SAME
-    integer divisor max(1, max_score DIV 2^shift_pow). Floor division
-    by a positive constant is monotone non-decreasing, so the ranking
-    is preserved exactly (only ties can be introduced), everything
-    stays exact-integer, and after the rescale the max score is ~2^20
-    — the next weighted sum then fits int64 for total edge weight up
-    to ~2^43 per node, comfortably past web scale. The divisor is ONE
-    broadcast scalar per round — the integer analog of HITS' classic
-    norm step."""
-    # integer DIV throughout: routing the floor division through
-    # long/long `/` (double) rounds above 2^53 — inside the int64
-    # envelope this function exists to protect (review finding)
-    m = scores.agg(F.max(col).alias("m")).select(
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.expr(f"m DIV {1 << shift_pow}").cast("long"),
-        ).alias("_div")
-    )
-    return scores.join(F.broadcast(m), F.lit(True), "left").select(
-        "host",
-        F.expr(f"{col} DIV _div").cast("long").alias(col),
-    )
-
-
-def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
-    """Hub/authority scores (Kleinberg's HITS) over the weighted host
-    graph, run as ``n_iter`` exact-integer power iterations →
-    (host, hub, authority).
-
-    Instead of HITS' float L2 normalization, each half-step is
-    followed by a block-floating-point rescale (:func:`_rescaled`):
-    all scores divide by the same integer max-derived divisor. A
-    shared positive divisor preserves the ranking exactly (floor
-    division is monotone), keeps every update a weighted integer sum
-    — bit-identical across engines, no float path — and bounds each
-    round's sums inside int64 at any graph size (ANSI mode fails
-    loudly if a single node's in-weight ever exceeds ~2^43).
-
-    Scale shape: identical to :func:`pagerank` — the edge table is
-    loop-invariant and checkpointed once, each iteration is two
-    equi-joins + partial-agg sums on host keys + one broadcast scalar,
-    scores checkpoint per round so the plan stays O(1)."""
-    if n_iter < 1:
-        raise ValueError("hits needs n_iter >= 1")
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    ew = edges.select("src_host", "dst_host", "weight").localCheckpoint(
-        eager=False
-    )
-    zero = F.lit(0).cast("long")
-    hub = nodes.withColumn("hub", F.lit(1).cast("long"))
-    for _ in range(n_iter):
-        auth_s = (
-            ew.join(
-                hub.select(F.col("host").alias("src_host"), "hub"),
-                "src_host",
-            )
-            .groupBy(F.col("dst_host").alias("host"))
-            .agg(F.sum(F.col("weight") * F.col("hub")).alias("authority"))
-        )
-        auth = _rescaled(
-            nodes.join(auth_s, "host", "left").select(
-                "host", F.coalesce("authority", zero).alias("authority")
-            ),
-            "authority",
-        ).localCheckpoint()
-        hub_s = (
-            ew.join(
-                auth.select(F.col("host").alias("dst_host"), "authority"),
-                "dst_host",
-            )
-            .groupBy(F.col("src_host").alias("host"))
-            .agg(F.sum(F.col("weight") * F.col("authority")).alias("hub"))
-        )
-        hub = _rescaled(
-            nodes.join(hub_s, "host", "left").select(
-                "host", F.coalesce("hub", zero).alias("hub")
-            ),
-            "hub",
-        ).localCheckpoint()
-    return hub.join(auth, "host").select("host", "hub", "authority")

@@ -1,33 +1,28 @@
-"""Similarity search over ``embeddings(vec_id, embedding: array<float>, label)``.
+"""Embedding-space near-duplicate detection over
+``embeddings(vec_id, embedding: array<float>, label)``.
 
-Approximate-nearest-neighbor operators for embedding-space dedup and
-retrieval. The reference's closest op is the nearest-neighbor matcher
-that assigns each OCR box to its argmin-distance table cell
-(ppstructure/table/matcher.py:76-97 — a broadcast-style NN join); here
-the metric is cosine over embedding vectors.
+The reference's closest op is the nearest-neighbor matcher that
+assigns each OCR box to its argmin-distance table cell
+(ppstructure/table/matcher.py:76-97); here the metric is cosine over
+embedding vectors and the output is duplicate pairs and keepers.
 
 Scale design:
- * the QUERY side is broadcast (small by construction) — the corpus
-   side streams through codegen, no shuffle of the big table for the
-   brute-force path;
  * dot products run JVM-side via ``zip_with`` + ``aggregate`` (double
    accumulation in array order — deterministic, matches the DuckDB
    oracle's list arithmetic);
- * the LSH path buckets vectors by sign-bit sketch first, so at 100 TB
-   the candidate join is an equi-join on the sketch, touching only
-   same-bucket pairs; brute force stays as the small-scale/recall
-   baseline;
- * the k-means paths (:func:`ivf_topk_exact`, :func:`semdedup_exact`)
-   run the exact-integer Lloyd of ``operators/kmeans.py`` — one
-   quantizer per operator, and every partition, probe and threshold
-   decision is integer arithmetic the DuckDB oracle restates.
+ * the banded path buckets vectors by sign-bit sketch first, so at
+   100 TB the candidate join is an equi-join on sketch bands, touching
+   only same-bucket pairs;
+ * the k-means path (:func:`semdedup_exact`) runs the exact-integer
+   Lloyd of ``operators/kmeans.py``, and every partition and
+   threshold decision is integer arithmetic the DuckDB oracle
+   restates.
 """
-
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 N_PLANES = 6           # default sign bits in the LSH sketch (2^6
@@ -63,11 +58,11 @@ def bands_for_corpus(
     :func:`planes_for_corpus` and splitting it would leave every band
     2^bands× too coarse — the candidate join degenerates toward n².)
 
-    The default ``target_bucket`` is far smaller than the ANN probing
-    default: a SELF-join pays ~bucket²/2 pairs per bucket, i.e.
-    ~n·target/2 candidate pairs per band overall, so the target IS the
-    per-vector candidate budget (16 → ~24 exact-cosine checks per
-    vector at 3 bands), not a scan batch size."""
+    The default ``target_bucket`` is far smaller than
+    :data:`TARGET_BUCKET`: a SELF-join pays ~bucket²/2 pairs per
+    bucket, i.e. ~n·target/2 candidate pairs per band overall, so the
+    target IS the per-vector candidate budget (16 → ~24 exact-cosine
+    checks per vector at 3 bands), not a scan batch size."""
     return n_bands * planes_for_corpus(expected_n, target_bucket)
 
 
@@ -80,60 +75,10 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
-    """Shared ranking tail for every search path: per-query window
-    ordered by sim desc with neighbor_id tie-break (load-bearing for
-    oracle portability — change HERE, nowhere else), top-k, sim
-    rounded to 6 decimals."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("sim", 6).alias("sim"))
-    )
-
-
 def with_norm(emb: DataFrame, col: str = "embedding") -> DataFrame:
-    """Attach the L2 norm (computed once, reused across every query)."""
+    """Attach the L2 norm (computed once, reused by every pair)."""
     c = F.col(col)
     return emb.withColumn("norm", F.sqrt(_dot(c, c)))
-
-
-def cosine_topk(
-    emb: DataFrame, queries: DataFrame, k: int = 5
-) -> DataFrame:
-    """Brute-force cosine top-k: every query vs the full corpus.
-
-    ``queries(query_id, q_embedding)`` is broadcast; the corpus streams
-    through one codegen stage computing the dot product; ranking is a
-    per-query window (ties broken by vec_id for determinism). Returns
-    (query_id, rank, neighbor_id, sim) with sim rounded to 6 decimals.
-    """
-    q = F.broadcast(queries)
-    corpus = with_norm(emb)
-    sim = _dot(F.col("embedding"), F.col("q_embedding")) / (
-        F.col("norm") * F.col("q_norm")
-    )
-    scored = (
-        corpus.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            sim.alias("sim"),
-        )
-    )
-    return _rank_topk(scored, k)
-
-
-def make_queries(emb: DataFrame, n: int = 10) ->  DataFrame:
-    """Deterministic query set: the n smallest vec_ids, with norms."""
-    q = emb.filter(F.col("vec_id") < n).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    return q.withColumn("q_norm", F.sqrt(_dot(F.col("q_embedding"), F.col("q_embedding"))))
 
 
 # embedding components are quantized as floor(x * 2^QUANT_BITS) before
@@ -170,10 +115,10 @@ def lsh_sketch(
     quantizes each component as ``floor(x · 2^QUANT_BITS)`` and the
     planes are frozen small integers — the whole bucket decision is
     exact int64 arithmetic, bit-identical across engines (which is
-    what lets the ANN bucket queries carry full SQL oracles instead of
-    rows-only checks). The sketch is one integer per vector — the ANN
-    bucket key at scale. ``n_planes`` scales with the corpus (see
-    :func:`planes_for_corpus`).
+    what lets the sketch-bucketed queries carry full SQL oracles
+    instead of rows-only checks). The sketch is one integer per vector
+    — the near-dup bucket key at scale. ``n_planes`` scales with the
+    corpus (see :func:`planes_for_corpus`).
 
     Implementation: ONE vectorized Arrow-batch matmul (a Pandas UDF —
     the planes matrix rides in the closure, the batch of vectors hits
@@ -188,8 +133,8 @@ def lsh_sketch(
 
     if not 0 < n_planes <= 62:
         # long sketch: bit 62 is the last safely-positive weight (bit 63
-        # would sign-flip and break shiftright band extraction / probe
-        # equality); planes_for_corpus(10^12) = 32 sits well inside
+        # would sign-flip and break shiftright band extraction);
+        # planes_for_corpus(10^12) = 32 sits well inside
         raise ValueError(f"n_planes={n_planes} not in 1..62")
     planes_t = _planes(dim, n_planes).T  # (dim, n_planes)
     weights = (1 << np.arange(n_planes, dtype=np.int64))
@@ -204,68 +149,6 @@ def lsh_sketch(
         return pd.Series(bits @ weights)
 
     return emb.withColumn("sketch", sk(F.col(col)))
-
-
-def _probe_masks(n_planes: int = N_PLANES, radius: int = 2) -> list[int]:
-    """XOR masks enumerating all sketches within Hamming ``radius``."""
-    masks = [0]
-    if radius >= 1:
-        masks += [1 << i for i in range(n_planes)]
-    if radius >= 2:
-        masks += [
-            (1 << i) | (1 << j)
-            for i in range(n_planes)
-            for j in range(i + 1, n_planes)
-        ]
-    return masks
-
-
-def ann_lsh_topk(
-    emb: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_queries: int = 10,
-    radius: int = 2,
-    n_planes: int = N_PLANES,
-) -> DataFrame:
-    """Multi-probe LSH ANN: each query probes every bucket within
-    Hamming ``radius`` of its own sign-bit sketch (sign-LSH loses near
-    neighbors that straddle one or two hyperplanes; probing the
-    adjacent buckets buys the recall back at bounded cost — with 6
-    planes and radius 2 a query touches 22 of 64 buckets).
-
-    At 10^12 scale the bucket join replaces the full scan: the corpus
-    is hash-partitioned by sketch once (write-time bucketing in
-    production) and the probe set is an equi-join on the sketch key.
-    ``n_planes`` scales with the corpus (:func:`planes_for_corpus`);
-    probe count grows only quadratically in planes (1 + p + p(p-1)/2
-    at radius 2), so wider sketches stay affordable. Recall vs
-    :func:`cosine_topk` is measured in tests. Returns
-    (query_id, rank, neighbor_id, sim).
-    """
-    sk = lsh_sketch(with_norm(emb), dim, n_planes=n_planes)
-    masks = F.array(*[F.lit(m) for m in _probe_masks(n_planes, radius)])
-    q = F.broadcast(
-        sk.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_embedding"),
-            F.col("norm").alias("q_norm"),
-            F.explode(masks).alias("mask"),
-            F.col("sketch").alias("q_sketch"),
-        )
-        .withColumn("probe", F.col("q_sketch").bitwiseXOR(F.col("mask")))
-        .drop("mask", "q_sketch")
-    )
-    sim = _dot(F.col("embedding"), F.col("q_embedding")) / (
-        F.col("norm") * F.col("q_norm")
-    )
-    cand = (
-        sk.join(q, F.col("sketch") == F.col("probe"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
-    )
-    return _rank_topk(cand, k)
 
 
 def embedding_near_dup_pairs(
@@ -466,71 +349,3 @@ def semdedup_exact(
             ),
         )
     )
-
-
-def ivf_topk_exact(
-    emb: DataFrame,
-    k: int = 5,
-    n_queries: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    n_iter: int = 3,
-) -> DataFrame:
-    """IVF ANN over the EXACT-INTEGER coarse quantizer
-    (:func:`webextract.operators.kmeans.kmeans_fit`): each query
-    searches only its ``n_probe`` nearest centroid lists. The
-    quantizer — seeds, Lloyd rounds, assignments, centroid table — is
-    fully specified integer arithmetic, and probe selection is the
-    exact integer squared distance with the frozen (d2, cluster)
-    tie-break.
-    The candidate set is therefore bit-identical across engines and
-    the whole query is statable as ANSI SQL (the ranking tail is the
-    same float cosine as sim_topk/ann_lsh — rank-not-sim output, the
-    proven-portable contract in :func:`_rank_topk`).
-
-    Scale shape: the centroid table is k rows → broadcast everywhere
-    it appears; probe scoring is (n_queries × k) rows; the candidate
-    join is an equi-join of the assigned corpus against the broadcast
-    probe table; the neighbor-embedding lookup is an equi-join on
-    vec_id. Nothing but the k centroids is ever driver-bound, and the
-    corpus is scanned once per Lloyd round + once to search.
-    """
-    from webextract.operators import kmeans as km
-
-    q, assigned, cent = km.kmeans_fit(emb, k=n_lists, n_iter=n_iter)
-    queries = q.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("q_qv")
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("q_qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("cluster").asc()
-    )
-    probes = (
-        queries.join(F.broadcast(cent), F.lit(True), "left")
-        .withColumn("d2", d2)
-        .withColumn("crank", F.row_number().over(wp))
-        .filter(F.col("crank") <= n_probe)
-        .select("query_id", F.col("cluster").alias("probe"))
-    )
-    wn = with_norm(emb)
-    qe = wn.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_embedding"),
-        F.col("norm").alias("q_norm"),
-    )
-    pq = F.broadcast(probes.join(qe, "query_id"))
-    sim = _dot(F.col("embedding"), F.col("q_embedding")) / (
-        F.col("norm") * F.col("q_norm")
-    )
-    cand = (
-        assigned.select("vec_id", "cluster")
-        .join(pq, F.col("cluster") == F.col("probe"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(wn.select("vec_id", "embedding", "norm"), "vec_id")
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
-    )
-    return _rank_topk(cand, k)

@@ -1,12 +1,11 @@
-"""Corpus vocabulary / indexing / relevance operators over
-``documents(doc_id, text, ...)``.
+"""Corpus vocabulary statistics over ``documents(doc_id, text, ...)``.
 
 The LLM-training-data companions to textstats: corpus-level word
-frequency (the tokenizer-vocabulary build step), an inverted index
-(posting lists for corpus search/inspection), per-document TF-IDF
-keywords, and a C4-style blocklist gate. The corpus-frequency table is
-the web-scale analog of the reference's character-dict construction —
-the frozen token inventory every downstream decode step indexes into
+frequency (the tokenizer-vocabulary build step), word-n-gram counts,
+per-document TF-IDF keywords, and a C4-style blocklist gate. The
+corpus-frequency table is the web-scale analog of the reference's
+character-dict construction — the frozen token inventory every
+downstream decode step indexes into
 (ppocr/postprocess/rec_postprocess.py:29-55 loads the dict;
 ppocr/utils/dict/*.txt are its artifacts) — rebuilt here from the
 corpus itself, the way a BPE/unigram tokenizer's vocab is cut from a
@@ -21,10 +20,8 @@ not.
 Scale notes (10^12 docs):
 - word-grid aggregations partial-combine before their shuffle
   (groupBy word / (doc_id, word) — plan-asserted partial aggs);
-- posting lists are capped BEFORE collection via a per-word
-  row_number window (Spark 4 inserts WindowGroupLimit, so the sort
-  prunes early) — never an unbounded collect_set that a stopword
-  would explode;
+- per-document top-k keywords use a per-doc row_number window
+  (Spark 4 inserts WindowGroupLimit, so the sort prunes early);
 - the doc-frequency table joins back to the grid on ``word`` — an
   equi-shuffle both sides; the corpus size N enters as a 1-row
   broadcast aggregate, never a driver-side ``count()``.
@@ -96,34 +93,6 @@ def vocab_topk(docs: DataFrame, k: int = 20) -> DataFrame:
         F.count("*").alias("n_docs"),
     )
     return _ranked_topk(totals, "word", k)
-
-
-def inverted_index(docs: DataFrame, postings_cap: int = 16) -> DataFrame:
-    """(word, df, postings) — posting lists capped at the
-    ``postings_cap`` SMALLEST doc_ids per word (deterministic), plus
-    the exact doc frequency.
-
-    The cap is applied with a per-word row_number BEFORE any list is
-    materialized, so a stopword with 10^9 postings never passes
-    through an aggregation buffer — Spark 4 rewrites the
-    rank-then-filter into partial/final WindowGroupLimit, pruning at
-    the map side. df comes from the same grid via a second partial
-    agg, joined back on ``word``.
-    """
-    grid = word_grid(docs)
-    df_tbl = grid.groupBy("word").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("word").orderBy(F.col("doc_id").asc())
-    capped = (
-        grid.withColumn("pos", F.row_number().over(w))
-        .filter(F.col("pos") <= postings_cap)
-        .groupBy("word")
-        .agg(
-            F.concat_ws(
-                ",", F.transform(F.sort_array(F.collect_list("doc_id")), lambda d: d.cast("string"))
-            ).alias("postings")
-        )
-    )
-    return df_tbl.join(capped, "word").select("word", "df", "postings")
 
 
 def tfidf_keywords(docs: DataFrame, k: int = 3) -> DataFrame:
@@ -203,177 +172,3 @@ def ngram_counts(docs: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
         F.count("*").alias("n_docs"),
     )
     return _ranked_topk(totals, "gram", k)
-
-
-# -- BM25 ranked retrieval -------------------------------------------
-
-# Frozen benchmark query set: terms drawn from the synthetic corpus
-# vocabulary so every query has real postings at fixture scale.
-BM25_QUERIES: tuple[tuple[int, tuple[str, ...]], ...] = (
-    (1, ("hash", "join")),
-    (2, ("window", "sort", "merge")),
-    (3, ("stream", "vector", "group")),
-)
-# score quantization: term scores are integer micropoints — large
-# enough that the DIV floor never collapses distinct BM25 values that
-# differ by more than ~1e-6 of a point.
-BM25_SCALE = 1_000_000
-BM25_TOPK = 10
-
-
-def bm25_search(
-    docs: DataFrame,
-    queries: tuple[tuple[int, tuple[str, ...]], ...] = BM25_QUERIES,
-    k: int = BM25_TOPK,
-) -> DataFrame:
-    """BM25 ranked retrieval over ``documents``: for each benchmark
-    query, the top-``k`` documents by an integer-quantized BM25 score
-    → (query_id, rank, doc_id, score). The retrieval stage the
-    vocabulary / inverted-index / tf-idf family has been building
-    toward — the corpus-inspection search a data curator runs ("show
-    me the documents this term set actually retrieves"). Reference
-    analog: the rec-score ranking that orders candidate boxes before
-    the keep-gate (tools/infer/utility.py:104).
-
-    Engine-portable scoring (the reason no float appears): with
-    k1 = 1.2 and b = 0.75, the classic per-term score
-
-        idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
-
-    is multiplied through by ``10·total_dl`` (avgdl = total_dl/n_docs
-    stays a ratio of exact integers, never a rounded double):
-
-        term_score = (SCALE · idf_bits · 22 · tf · total_dl)
-                 DIV (10·tf·total_dl + 3·total_dl + 9·dl·n_docs)
-
-    — one integral division of exact DECIMAL(38,0) products, identical
-    in Spark and the DuckDB oracle (HUGEINT). ``idf_bits`` is lm.py's
-    scale-free quantized log: ``len(bin(n_docs)) − len(bin(df)) + 1``
-    ≈ ⌈log2(N/df)⌉ ∈ [1, 64] at any corpus size. The magnitudes
-    bound the products: SCALE(1e6) · 64 · 22 · tf(≤1e4) · total_dl
-    (1e15 at 10^12 docs ·1k words) ≈ 1e28 < 10^38 — inside
-    DECIMAL(38,0)/HUGEINT exactly; the DIV result ≤ SCALE·2.2·64
-    fits comfortably in BIGINT, as does any query's term-score sum.
-
-    Scale shape (10^12 docs): the query-term filter is a literal
-    ``isin`` pushed into the scan — only postings of query terms ever
-    reach a shuffle. The (doc, word) grid partial-combines map-side
-    and is checkpointed once (it feeds the df branch AND the scoring
-    branch). df and corpus stats are query-vocabulary-sized /
-    one-row broadcasts. The final per-query top-k is the
-    rank-then-filter pattern Spark 4 rewrites into partial/final
-    WindowGroupLimit — map-side pruning, never a global sort.
-    """
-    spark = docs.sparkSession
-    qlist = [(qid, w) for qid, ws in queries for w in ws]
-    qterms = F.broadcast(
-        spark.createDataFrame(qlist, "query_id INT, word STRING")
-    )
-    qwords = sorted({w for _, w in qlist})
-
-    toks = docs.select("doc_id", _words().alias("words"))
-    grid = (
-        toks.select(
-            "doc_id",
-            F.size("words").alias("dl"),
-            F.explode("words").alias("word"),
-        )
-        .filter(F.col("word").isin(*qwords))
-        .groupBy("doc_id", "word")
-        .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
-        .localCheckpoint(eager=False)
-    )
-    df_tbl = F.broadcast(grid.groupBy("word").agg(F.count("*").alias("df")))
-    stats = F.broadcast(
-        docs.agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.size(_words())).cast("long").alias("total_dl"),
-        )
-    )
-
-    dec = "DECIMAL(38,0)"
-    term_score = F.expr(
-        f"""(CAST({BM25_SCALE} AS {dec}) * CAST(idf_bits AS {dec})
-             * CAST(22 AS {dec}) * CAST(tf AS {dec})
-             * CAST(total_dl AS {dec}))
-            DIV
-            (CAST(10 AS {dec}) * CAST(tf AS {dec}) * CAST(total_dl AS {dec})
-             + CAST(3 AS {dec}) * CAST(total_dl AS {dec})
-             + CAST(9 AS {dec}) * CAST(dl AS {dec}) * CAST(n_docs AS {dec}))"""
-    ).cast("long")
-    scored = (
-        grid.join(qterms, "word")
-        .join(df_tbl, "word")
-        .crossJoin(stats)
-        .withColumn(
-            "idf_bits",
-            F.length(F.bin("n_docs")) - F.length(F.bin("df")) + F.lit(1),
-        )
-        .withColumn("term_score", term_score)
-    )
-    doc_scores = scored.groupBy("query_id", "doc_id").agg(
-        F.sum("term_score").alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        doc_scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
-
-
-def phrase_search(
-    docs: DataFrame, phrase: str, text_col: str = "text"
-) -> DataFrame:
-    """Exact word-level phrase matching via positional postings — the
-    retrieval counterpart of :func:`inverted_index` (which stores
-    docs-per-word; phrase queries additionally need word positions,
-    the classic positional-index design). Output per matching doc:
-    ``n_matches`` (occurrences, overlapping allowed) and ``first_pos``
-    (1-based word index of the earliest match).
-
-    Scale shape: the positions table is corpus-sized, but the
-    ``isin(terms)`` filter runs INSIDE the explode stage (no shuffle —
-    only rows carrying query terms survive to any exchange), and each
-    adjacency step is an equi-join on (doc_id, position), a perfectly
-    spread key even for stopword-hot terms. The filtered positions
-    table feeds every join branch, so it is checkpointed once. At
-    10^12 docs the same plan runs against a PERSISTED positions table
-    (write ``words`` bucketed by doc_id) — the query-time joins are
-    then co-partitioned and exchange-free.
-    """
-    import re
-
-    # tokenize the QUERY with the same regex as the corpus — a naive
-    # .split() would keep punctuation/digit-bearing terms the corpus
-    # side can never produce and silently return zero matches
-    # (review finding)
-    terms = re.findall(WORD_REGEX, phrase.lower())
-    assert terms, "phrase must contain at least one [a-z]+ word"
-    words = (
-        docs.select(
-            "doc_id",
-            F.posexplode(
-                F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(WORD_REGEX), 0
-                )
-            ).alias("pos", "word"),
-        )
-        .filter(F.col("word").isin(terms))
-        .localCheckpoint(eager=False)
-    )
-    base = words.filter(F.col("word") == terms[0]).select("doc_id", "pos")
-    for i, t in enumerate(terms[1:], start=1):
-        nxt = words.filter(F.col("word") == t).select(
-            F.col("doc_id").alias("d2"), (F.col("pos") - i).alias("p2")
-        )
-        base = base.join(
-            nxt,
-            (F.col("doc_id") == F.col("d2")) & (F.col("pos") == F.col("p2")),
-        ).select("doc_id", "pos")
-    return base.groupBy("doc_id").agg(
-        F.count("*").alias("n_matches"),
-        (F.min("pos") + 1).cast("long").alias("first_pos"),
-    )
