@@ -144,6 +144,60 @@ def test_fuzz_grammar_edges(soup: str) -> None:
     assert_same(soup)
 
 
+class _CallCounter:
+    """A sink that only counts the events the scanner sends it."""
+
+    def __init__(self) -> None:
+        self.calls = 0
+
+    def _count(self, *args) -> None:
+        self.calls += 1
+
+    starttag = endtag = startendtag = data = leaf = _count
+
+
+def test_giant_page_takes_one_sink_call_per_block():
+    # the leaf-rate ratchet: the differential tests cannot see the leaf
+    # path switch off (the events still match, three calls per block)
+    giant = next(p for p in gen_fixture_pages() if p["case"] == "giant_page")
+    page = decode_html(giant["html"])
+    counter = _CallCounter()
+    assert fastscan.scan(page, counter)
+    blocks = len(tokenize_blocks(page)["text"])
+    assert blocks == 12_000
+    # one leaf per <p>, plus <html><body> ... </body></html>
+    assert counter.calls == blocks + 4
+
+
+class _EventsOnly:
+    """An html.parser-shaped sink: the four events, no ``leaf``."""
+
+    def __init__(self) -> None:
+        self.sink = _BlockSink()
+
+    def starttag(self, tag): self.sink.starttag(tag)
+    def endtag(self, tag): self.sink.endtag(tag)
+    def startendtag(self, tag): self.sink.startendtag(tag)
+    def data(self, d):
+        assert d, "html.parser never sends empty data"
+        self.sink.data(d)
+
+
+def test_sink_without_leaf_gets_the_three_events():
+    # a caller's sink may know only html.parser's four events: a leaf
+    # reaches it as starttag, data, endtag, and the page does not bail
+    pages = [decode_html(p["html"]) for p in gen_fixture_pages()]
+    pages += ["<p>x</p>", "<p></p>", "<a href=x/>t</a>", "<nav><p>t</p></nav>"]
+    for page in pages:
+        full, events = _BlockSink(), _EventsOnly()
+        fast = fastscan.scan(page, full)
+        assert fastscan.scan(page, events) == fast
+        if fast:
+            full._flush()
+            events.sink._flush()
+            assert vars(full) == vars(events.sink), page[:80]
+
+
 def test_attribute_soup_is_linear():
     # ~1 MB start tag that never closes: every repetition in the grammar
     # is possessive, so failing it is one pass, not a backtracking search
@@ -194,6 +248,18 @@ def test_attribute_soup_is_linear():
         '<?xml version="1.0"?><p>x</p>',
         "<p>1 < 2 and <3</p>",
         "<p>a &amp <3 &lt;</p>",
+        # leaves: one text run between a start tag and its own close
+        "<P>x</p>",                  # close in another case: three events
+        "<p>x</p >",
+        "<p>a&amp;b</p>",
+        "<pre>\nx\n</pre>",
+        "<a href=x/>t</a>",          # a start tag, so a leaf
+        "<br>t</br>",
+        "<nav><p>t</p></nav>",
+        "<a><p>t</p></a>",
+        "<noscript><p>t</p></noscript>",
+        "<p></p>",
+        "<title>t</title>",
     ],
 )
 def test_known_subtleties(case: str) -> None:

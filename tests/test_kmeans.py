@@ -13,7 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
 
-from webextract.operators.kmeans import kmeans_centroids, kmeans_int
+from webextract.operators.kmeans import kmeans_fit, kmeans_int
 
 Q = 1 << 20
 
@@ -89,7 +89,7 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
     # cluster 1 must still exist with its seed centroid carried over
     cents = {
         r.cluster: list(r.cv)
-        for r in kmeans_centroids(_df(spark, emb), k=2, n_iter=3).collect()
+        for r in kmeans_fit(_df(spark, emb), k=2, n_iter=3)[2].collect()
     }
     assert cents[1] == ref_cent[1]
 

@@ -94,7 +94,7 @@ from webextract.functions.tokenizer import _BlockSink, _SPACING_VOID
 _EVT_TAGS = ["div", "p", "td", "tr", "table", "a", "pre", "script",
              "nav", "span", "b", "br", "ul", "li", "body"]
 _events = st.lists(
-    st.tuples(st.sampled_from(["start", "end", "startend", "data"]),
+    st.tuples(st.sampled_from(["start", "end", "startend", "data", "leaf"]),
               st.sampled_from(_EVT_TAGS)),
     max_size=60,
 )
@@ -114,6 +114,8 @@ def test_sink_bookkeeping_matches_stack(events):
             sink.endtag(tag)
         elif kind == "startend":
             sink.startendtag(tag)
+        elif kind == "leaf":
+            sink.leaf(tag, "x ")
         else:
             sink.data("x ")
         # invariant 1: open_counts is exactly the multiset of stack —
@@ -128,6 +130,45 @@ def test_sink_bookkeeping_matches_stack(events):
         assert sink.skip_depth >= 0 and sink.boiler_depth >= 0
         assert sink.pre_depth >= 0 and sink.link_depth >= 0
     sink._flush()  # and the sink can always flush
+
+
+def _replay(events) -> _BlockSink:
+    sink = _BlockSink()
+    for kind, tag in events:
+        if kind == "leaf":
+            sink.leaf(tag, "x ")
+        elif kind == "data":
+            sink.data("x ")
+        else:
+            getattr(sink, {"start": "starttag", "end": "endtag",
+                           "startend": "startendtag"}[kind])(tag)
+    return sink
+
+
+# every kind of leaf: block, boiler block, pre, link, inline, spacing
+# void (hr is also a block tag), skip subtree, unknown
+_LEAF_TAGS = _EVT_TAGS + ["h1", "header", "footer", "hr", "img", "noscript",
+                          "head", "title", "i", "o:p"]
+_LEAF_TEXTS = ["", "t", "  two words ", "\nline\n", "\xa0", " "]
+
+
+@given(_events, st.sampled_from(_LEAF_TAGS), st.sampled_from(_LEAF_TEXTS))
+@settings(max_examples=600, deadline=None)
+def test_leaf_is_start_data_end(events, tag, text):
+    """From any state an event prefix builds, ``leaf(tag, text)`` leaves
+    every field of the sink (stack, open_counts, block_stack, the four
+    depths, frags, link_frags, the block fields and the seven output
+    lists) exactly as ``starttag; data; endtag`` does, and so does the
+    final flush."""
+    one, three = _replay(events), _replay(events)
+    one.leaf(tag, text)
+    three.starttag(tag)
+    three.data(text)
+    three.endtag(tag)
+    assert vars(one) == vars(three)
+    one._flush()
+    three._flush()
+    assert vars(one) == vars(three)
 
 
 @given(_events)

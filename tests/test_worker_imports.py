@@ -1,12 +1,15 @@
 """The page loop under every html operator drops cached zip finders and
-imports still work; no package module imports Spark's ML library; and
-only the partition loop's own module crosses into Python per batch.
+imports still work, and it freezes the warm heap while the cycles a
+task makes stay collectable; no package module imports Spark's ML
+library; and only the partition loop's own module crosses into Python
+per batch.
 
 In-process, no Spark: a zip archive on ``sys.path`` stands in for
 ``pyspark.zip`` on a worker's path.
 """
 
 import ast
+import gc
 import sys
 import zipfile
 import zipimport
@@ -57,10 +60,47 @@ def test_extract_loop_drops_zip_finders_and_imports_still_work(tmp_path):
 
         assert we_zip_b.VALUE == "b"
     finally:
+        gc.unfreeze()  # the loop froze the pytest heap
         sys.path[:] = saved_path
         for name in ("we_zip_a", "we_zip_b"):
             sys.modules.pop(name, None)
         sys.path_importer_cache.pop(str(archive), None)
+
+
+def test_page_loop_freezes_the_warm_heap_and_task_cycles_are_collected():
+    rb = pa.RecordBatch.from_pydict(
+        {
+            "url": ["https://h.example/doc/1"],
+            "html": [b"<html><body><p>Some main text here.</p></body></html>"],
+        }
+    )
+    n_cycles = 50
+
+    def build(b: pa.RecordBatch) -> pa.RecordBatch:
+        for _ in range(n_cycles):
+            cycle: list = []
+            cycle.append(cycle)
+        return _extract_record_batch(b, DEFAULT_CONFIG)
+
+    enabled = gc.isenabled()
+    gc.disable()  # no automatic collection between the loop and the check
+    try:
+        gc.collect()
+        warm = gc.get_objects()  # holding them keeps every one alive
+        out = list(_page_batches(iter([rb]), build))
+        assert [b.num_rows for b in out] == [1]
+        # everything tracked before the task is frozen ...
+        assert gc.get_freeze_count() >= len(warm)
+        tracked = {id(o) for o in gc.get_objects()}
+        assert not [o for o in warm if id(o) in tracked]
+        del warm, tracked
+        # ... and the cycles the task built are not: the collection a
+        # PySpark worker runs after the task reclaims them
+        assert gc.collect() >= n_cycles
+    finally:
+        gc.unfreeze()
+        if enabled:
+            gc.enable()
 
 
 def test_no_module_imports_pyspark_ml():

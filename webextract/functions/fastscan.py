@@ -19,7 +19,15 @@ to the sink. The grammar accepts
  * strict end tags (html.parser's ``endtagfind``);
  * comments, ``<!doctype ...>`` without ``[``, and ``<?...>``;
  * ``script``/``style`` elements through their strict close. Their
-   content lies inside ``SKIP_TAGS``, so it emits no data.
+   content lies inside ``SKIP_TAGS``, so it emits no data;
+ * leaves: ``<name ATTRS>text</name>``, an element whose whole content
+   is one text run with no ``<``, closed by the same name in the same
+   case (``\\s*`` before its ``>``, as ``endtagfind`` allows). A leaf is
+   ONE event, ``sink.leaf(name, text)``, which must leave the sink
+   exactly as ``starttag(name); data(text); endtag(name)`` would. It is
+   tried before the start-tag alternative and never matches script or
+   style; a self-closing tag, another case in the close, or a ``<`` in
+   the text leaves the element to the separate events.
 
 Anything else (unicode whitespace inside a tag, ``a==b``, a bogus end
 tag, a marked section, an unterminated construct) makes the last token
@@ -31,7 +39,10 @@ possessive, so no alternative backtracks: a page is one linear pass.
 
 The event sink contract matches ``_BlockParser``:
 ``starttag(name) / endtag(name) / startendtag(name) / data(text)``
-with lowercased names and entity-decoded text (convert_charrefs).
+with lowercased names and entity-decoded text (convert_charrefs), plus
+``leaf(name, text)``, which html.parser never calls. A sink without
+``leaf`` gets a leaf as those three events (``data`` only for non-empty
+text), so any html.parser-shaped sink still reads the fast path.
 """
 
 from __future__ import annotations
@@ -65,16 +76,17 @@ def _raw_element(name: str) -> str:
     )
 
 
-# one token per construct: the text run before it (group 1), then the
-# start tag name and its self-closing '/', the end tag name, the script
-# or style element; a comment, doctype or PI sets no group. Group 7,
-# the catch-all, takes the rest of the page from a '<' nothing else
-# reads: the page bails. A trailing text run ends at \Z, and no token
-# is empty.
+# one token per construct: the text run before it (group 1), then a
+# leaf's tag name and text (groups 2, 3), the start tag name and its
+# self-closing '/', the end tag name, the script or style element; a
+# comment, doctype or PI sets no group. Group 9, the catch-all, takes
+# the rest of the page from a '<' nothing else reads: the page bails. A
+# trailing text run ends at \Z, and no token is empty.
 _GRAMMAR = re.compile(
     r"(?!\Z)((?:[^<]++|<(?![a-zA-Z/!?]))*+)(?:<(?:"
     rf"(?!(?:{_ci('script')}|{_ci('style')})[\t\n\r\f />])"
-    rf"([a-zA-Z][-.:a-zA-Z0-9_]*+){_ATTRS}(/?)>"
+    rf"(?:(?P<leaf>[a-zA-Z][-.:a-zA-Z0-9_]*+){_ATTRS}>([^<]*+)</(?P=leaf)\s*+>"
+    rf"|([a-zA-Z][-.:a-zA-Z0-9_]*+){_ATTRS}(/?)>)"
     r"|/\s*+([a-zA-Z][-.a-zA-Z0-9:_]*+)\s*+>"
     rf"|{_raw_element('script')}|{_raw_element('style')}"
     r"|!--(?:[^-]++|-(?!-\s*+>))*+--\s*+>"
@@ -99,15 +111,30 @@ def scan(s: str, sink) -> bool:
         return False
 
 
+def _three_events(sink):
+    """``sink.leaf`` for a sink that only takes html.parser's events."""
+
+    def leaf(tag: str, text: str) -> None:
+        sink.starttag(tag)
+        if text:
+            sink.data(text)
+        sink.endtag(tag)
+
+    return leaf
+
+
 def _scan(s: str, sink) -> None:
     tokens = _GRAMMAR.findall(s)
-    if tokens and tokens[-1][6]:
+    if tokens and tokens[-1][8]:
         raise _Bail
     data, start, end = sink.data, sink.starttag, sink.endtag
-    for text, tag, slash, etag, script, style, _ in tokens:
+    leaf = getattr(sink, "leaf", None) or _three_events(sink)
+    for text, leaf_tag, leaf_text, tag, slash, etag, script, style, _ in tokens:
         if text:
             data(unescape(text) if "&" in text else text)
-        if tag:
+        if leaf_tag:
+            leaf(leaf_tag.lower(), unescape(leaf_text) if "&" in leaf_text else leaf_text)
+        elif tag:
             if slash:
                 sink.startendtag(tag.lower())
             else:

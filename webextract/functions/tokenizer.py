@@ -20,6 +20,15 @@ Two interchangeable event front-ends drive ONE block state machine
    script/style elements through their strict close. A page holding
    anything else bails, whole, to the reference front-end.
 
+The fast front-end also reads a leaf, ``<name ...>text</name>`` with no
+``<`` in the text, as one event: ``_BlockSink.leaf(name, text)``, which
+leaves the sink exactly as ``starttag; data; endtag`` would. A block
+leaf outside a skip subtree flushes the enclosing block, emits its own
+and restores the enclosing one; ``<a>`` counts one link whose text is
+link text; another inline leaf is its text; spacing voids and
+``SKIP_TAGS`` take the three events. A page of ``<p>`` paragraphs thus
+costs one sink call per block instead of three.
+
 ``tokenize_blocks(text)`` uses fast-with-fallback by default;
 ``engine="reference"`` forces the stdlib path (differential tests
 compare the two on fixtures + fuzz, tests/test_fastscan.py).
@@ -51,6 +60,8 @@ from webextract.functions import fastscan
 
 # self-closing whitespace-ish tags: contribute a space, never open blocks
 _SPACING_VOID = {"br", "wbr", "hr", "img"}
+# tags whose leaf takes the three events: no shortcut pays for them
+_EVENT_LEAF = frozenset(_SPACING_VOID | SKIP_TAGS)
 
 
 def _canon(fragments: list[str]) -> str:
@@ -192,6 +203,43 @@ class _BlockSink:
         self.frags.append(d)
         if self.link_depth:
             self.link_frags.append(d)
+
+    def leaf(self, tag: str, text: str) -> None:
+        """``starttag(tag); data(text); endtag(tag)`` in one call, for an
+        element whose whole content is one text run: the state after it
+        is exactly the state after the three events."""
+        if tag in _EVENT_LEAF:
+            self.starttag(tag)
+            self.data(text)
+            self.endtag(tag)
+            return
+        # a push and its pop leave the tag's count as it was, key present
+        self.open_counts.setdefault(tag, 0)
+        if tag == "a":
+            self.n_links_in_block += 1
+            if text and not self.skip_depth:
+                self.frags.append(text)
+                self.link_frags.append(text)
+        elif tag in BLOCK_TAGS:
+            if self.skip_depth:
+                return
+            # the leaf's own block, between the enclosing block's flush
+            # and its resumption (BOILER_TAGS and pre are block tags)
+            self._flush()
+            boiler = self.boiler_depth > 0
+            was_pre = self.pre_depth > 0
+            self.block_tag = tag
+            self.block_depth = len(self.stack) + 1
+            self.block_boiler = boiler or tag in BOILER_TAGS
+            self.block_was_pre = was_pre or tag == "pre"
+            self.data(text)
+            self._flush()
+            self.block_tag = self.block_stack[-1] if self.block_stack else "body"
+            self.block_depth = len(self.stack)
+            self.block_boiler = boiler
+            self.block_was_pre = was_pre
+        else:
+            self.data(text)
 
 
 class _BlockParser(HTMLParser):

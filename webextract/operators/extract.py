@@ -28,6 +28,7 @@ Arrow batch → write. Design points (SURVEY.md §4):
 
 from __future__ import annotations
 
+import gc
 import sys
 import time
 import zipimport
@@ -168,8 +169,25 @@ def _page_batches(
     """The one partition loop of every Python stage: input Arrow
     batches → ``build(rb)``, skipping empty input batches. Runs once per
     task partition, so it also drops the worker's zip finders
-    (:func:`_drop_zip_finders`)."""
+    (:func:`_drop_zip_finders`) and freezes the warm heap.
+
+    Why the freeze: a reused PySpark worker runs ``gc.collect()`` after
+    every task (the worker loop of ``pyspark/daemon.py``). A warm
+    extraction worker tracks ~74k objects (modules, pyarrow, numpy,
+    compiled grammars), and a full collection that visits them all
+    costs 21–79 ms per task on a 4-core x86 host, most of the gap
+    between one task's end and the next task's start. ``gc.freeze()``
+    moves every object tracked now to the permanent generation, so that
+    collection visits only what the task creates (≤ 0.1 ms).
+
+    Why it is safe: a frozen object is still freed when its last
+    reference goes; only a reference cycle frozen while unreachable is
+    never collected. The cycles one task leaves behind are collected by
+    the daemon's ``gc.collect()`` before the next task starts and
+    freezes, so the frozen count stays flat across tasks.
+    """
     _drop_zip_finders()
+    gc.freeze()
     for rb in batches:
         if rb.num_rows:
             yield build(rb)

@@ -162,8 +162,7 @@ def kmeans_fit(
     fitted state: ``(q, assigned, cent)`` — the quantized corpus
     (vec_id, qv), the final assignment (vec_id, qv, cluster, d2), and
     the FINAL centroid table (cluster, cv) that assignment ran
-    against. Both convenience wrappers share this so the chain is
-    computed once."""
+    against. :func:`kmeans_int` keeps only the assignment."""
     q = quantize(emb, col).select("vec_id", "qv").localCheckpoint(eager=False)
     cent = seed_centroids(q, k).localCheckpoint()
     assigned = assign(q, cent)
@@ -183,12 +182,3 @@ def kmeans_int(
     to the unrolled SQL restatement."""
     _, assigned, _ = kmeans_fit(emb, k, n_iter, col)
     return assigned.select("vec_id", "cluster", "d2")
-
-
-def kmeans_centroids(
-    emb: DataFrame, k: int = 8, n_iter: int = 3, col: str = "embedding"
-) -> DataFrame:
-    """The FINAL centroid table (cluster, cv) the last ``kmeans_int``
-    assignment ran against — the trained-quantizer artifact a 100 TB
-    deployment persists and reuses to assign new vectors."""
-    return kmeans_fit(emb, k, n_iter, col)[2]
