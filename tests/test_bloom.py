@@ -66,23 +66,3 @@ def test_duplicate_probe_hits_and_null_keys_dropped(spark):
 def test_filter_row_count_bounded(spark):
     sketch = bloom_build(_keys(spark, 0, 5000), "url", m_bits=M, k=K)
     assert sketch.count() <= M // 32
-
-
-def test_streaming_bloom_matches_batch_filter(spark, tmp_path):
-    """The stream-drained word table equals the batch filter exactly
-    (same frozen md5 bit positions, word-wise bit_or) — the
-    mergeability the incremental-crawl deployment relies on."""
-    from webextract.sources.pages import pages_from_documents
-    from webextract.streaming.bloom_stream import run_bloom_stream
-
-    inp = str(tmp_path / "in")
-    pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-    pages.repartition(4).write.parquet(inp)
-
-    streamed = run_bloom_stream(spark, inp)
-    batch = bloom_build(
-        spark.read.parquet(inp), "url", m_bits=16384, k=4
-    )
-    s = {r.word_idx: r.bits for r in streamed.collect()}
-    b = {r.word_idx: r.bits for r in batch.collect()}
-    assert s == b and len(s) > 0

@@ -1,8 +1,7 @@
 """SKV key-value store source (LMDB-scan analog,
 ``ppocr/data/lmdb_dataset.py:26-151``): synth → parse roundtrip,
-range pruning, fail-loud corruption checks, on-disk store."""
+range pruning, fail-loud corruption checks."""
 
-import os
 import struct
 
 import pytest
@@ -13,19 +12,16 @@ from webextract.sources.kvstore import (
     _MAGIC,
     _TRAILER,
     _parse_skv_buffer,
-    kv_count,
     kv_range,
     parse_kv,
-    read_kv,
     synth_kv_shards,
-    write_kv,
 )
 
 
-def _fixture(spark, n=100, width=16, body="doc"):
+def _fixture(spark, n=100, width=16):
     df = spark.range(n).select(
         F.format_string("page-%09d", F.col("id")).alias("key"),
-        F.encode(F.concat(F.lit(f"<html>{body} "), F.col("id")), "UTF-8").alias("val"),
+        F.encode(F.concat(F.lit("<html>doc "), F.col("id")), "UTF-8").alias("val"),
         F.col("id"),
     )
     return synth_kv_shards(
@@ -51,8 +47,6 @@ def test_manifest_and_count(spark):
     assert man[0].min_key == "page-000000000"
     assert man[0].max_key == "page-000000015"
     assert man[6].n_records == 4  # 96..99
-    c = kv_count(shards).collect()[0]
-    assert (c.num_samples, c.n_shards) == (100, 7)
 
 
 def test_range_prunes_shards_before_parse(spark):
@@ -113,20 +107,6 @@ def test_corruption_fails_loud(spark):
         parse_kv(null).collect()
 
 
-def test_on_disk_store_roundtrip_and_file_skip(spark, tmp_path):
-    store = str(tmp_path / "kv")
-    write_kv(_fixture(spark, n=100, width=16), store)
-    full = read_kv(spark, store)
-    assert full.count() == 100
-    ranged = read_kv(spark, store, "page-000000090", "page-000000099")
-    rows = ranged.collect()
-    assert len(rows) == 10
-    # only shards 5 and 6 intersect the range → only 2 files listed
-    assert sorted({r.shard_id for r in rows}) == [5, 6]
-    empty = read_kv(spark, store, "zzz", "zzzz")
-    assert empty.count() == 0
-
-
 def test_roundtrip_property_unicode_keys_empty_values(spark):
     """Adversarial record shapes: unicode keys, empty and binary-ish
     values, single-record shards — framing must round-trip all of
@@ -158,53 +138,3 @@ def test_duplicate_keys_fail_at_synth(spark):
     for cols in (["payload"], ["shard_id", "n_records"]):
         with pytest.raises(Exception, match="duplicate SKV key in shard 0"):
             shards.select(*cols).collect()
-
-
-def test_manifest_published_after_every_shard_file(spark, tmp_path):
-    store = tmp_path / "kv"
-    write_kv(_fixture(spark, n=100, width=16), str(store))
-    shard_ns = [p.stat().st_mtime_ns for p in store.glob("shard-*.skv")]
-    manifest_ns = [p.stat().st_mtime_ns for p in (store / "_manifest").iterdir()]
-    assert len(shard_ns) == 7
-    assert max(shard_ns) <= min(manifest_ns)
-
-    # a shard write that fails leaves no manifest behind
-    broken = tmp_path / "broken"
-    os.makedirs(broken / "shard-000003.skv")
-    with pytest.raises(Exception, match="IsADirectoryError"):
-        write_kv(_fixture(spark, n=100, width=16), str(broken))
-    assert not (broken / "_manifest").exists()
-
-
-def _store_rows(spark, store):
-    return sorted((r.key, bytes(r.value)) for r in read_kv(spark, store).collect())
-
-
-def test_failed_overwrite_leaves_old_store_intact(spark, tmp_path):
-    store = str(tmp_path / "kv")
-    write_kv(_fixture(spark, n=100, width=16), store)
-    before = _store_rows(spark, store)
-    # store B: different payloads, written in shard order by one task
-    # that fails at shard 3 (a NULL payload) after shards 0-2 are on disk
-    broken = (
-        _fixture(spark, n=100, width=16, body="B")
-        .repartition(1)
-        .sortWithinPartitions("shard_id")
-        .withColumn("payload", F.when(F.col("shard_id") != 3, F.col("payload")))
-    )
-    with pytest.raises(Exception, match="NoneType"):
-        write_kv(broken, store)
-    assert _store_rows(spark, store) == before
-
-
-def test_smaller_overwrite_keeps_only_manifest_files(spark, tmp_path):
-    store = tmp_path / "kv"
-    write_kv(_fixture(spark, n=100, width=16), str(store))
-    write_kv(_fixture(spark, n=40, width=16), str(store))
-    on_disk = {p.name for p in store.iterdir() if p.name != "_manifest"}
-    assert len(on_disk) == 3
-    manifest = spark.read.parquet(str(store / "_manifest"))
-    assert {r.file for r in manifest.collect()} == on_disk
-    assert _store_rows(spark, str(store)) == sorted(
-        (f"page-{i:09d}", f"<html>doc {i}".encode()) for i in range(40)
-    )

@@ -58,6 +58,15 @@ def test_lsh_pairs_catch_near_duplicates(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
+@pytest.mark.parametrize("k,bands", [(10, 3), (10, 0)])
+def test_band_count_must_divide_signature(spark, k, bands):
+    """k=10, bands=3 would silently drop mh9 from every band; the check
+    is a ValueError (not an assert) so it holds under ``python -O``."""
+    df = spark.createDataFrame([(1, "a b c d e f")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="divisible"):
+        dedup.lsh_band_table(df, k=k, bands=bands)
+
+
 def test_ngram_jaccard_exact_value(spark):
     # doc1: shingles of "a b c d" (3-grams): {a b c, b c d} ; doc2: "a b c e": {a b c, b c e}
     # inter=1, union=3 → jaccard 1/3

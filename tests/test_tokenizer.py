@@ -50,6 +50,27 @@ def test_inline_tags_do_not_split():
     assert b["n_links"] == [1]
 
 
+def test_links_in_skipped_subtree_are_not_counted(spark):
+    """An ``<a>`` under a SKIP_TAGS element drops its text and so is no
+    link of the enclosing block: fast scanner, reference engine and the
+    Spark block facts all count 0 links."""
+    from webextract.functions import fastscan
+    from webextract.functions.tokenizer import _BlockSink
+    from webextract.operators.layout import block_facts
+
+    page = (
+        "<p>plain words here <noscript><a href=x>hidden</a>"
+        "<a href=y>h2</a></noscript> more</p>"
+    )
+    assert fastscan.scan(page, _BlockSink())  # no bail: the fast path runs
+    for engine in ("auto", "reference"):
+        b = tokenize_blocks(page, engine)
+        assert b["text"] == ["plain words here more"]
+        assert (b["n_links"], b["link_text_len"]) == ([0], [0])
+    pages = spark.createDataFrame([("u", page.encode())], ["url", "html"])
+    assert [r.n_links for r in block_facts(pages).collect()] == [0]
+
+
 def test_br_contributes_space():
     b = tokenize_blocks("<p>one<br>two</p>")
     assert b["text"] == ["one two"]

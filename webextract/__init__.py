@@ -14,7 +14,6 @@ HTML/web-text pipeline over Common-Crawl-style page tables:
   * ``plans/`` — pipeline wiring (salted repartition, lineage side-output,
     checkpoint/resume manifest) mirroring the reference's drivers
     ``tools/infer/predict_system.py``.
-  * ``streaming/`` — Structured Streaming reading of the same operators.
 
 Everything here derives from public knowledge only (Apache Spark API and
 the reference repo's observable behavior).

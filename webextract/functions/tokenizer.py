@@ -158,7 +158,8 @@ class _BlockSink:
             self.pre_depth += 1
         if tag == "a":
             self.link_depth += 1
-            self.n_links_in_block += 1
+            if not self.skip_depth:
+                self.n_links_in_block += 1
         if tag in BLOCK_TAGS:
             self.block_stack.append(tag)
             if not self.skip_depth:
@@ -216,10 +217,11 @@ class _BlockSink:
         # a push and its pop leave the tag's count as it was, key present
         self.open_counts.setdefault(tag, 0)
         if tag == "a":
-            self.n_links_in_block += 1
-            if text and not self.skip_depth:
-                self.frags.append(text)
-                self.link_frags.append(text)
+            if not self.skip_depth:
+                self.n_links_in_block += 1
+                if text:
+                    self.frags.append(text)
+                    self.link_frags.append(text)
         elif tag in BLOCK_TAGS:
             if self.skip_depth:
                 return

@@ -52,10 +52,8 @@ def shingle_array(toks, n: int):
     (``transform`` over ``sequence`` — codegen; a row shorter than
     ``n`` tokens yields the EMPTY array, never a descending
     ``sequence``). THE one shingle/gram construction — dedup's
-    exploded shingles, vocab.ngram_counts' occurrence grams and the
-    streaming in-row minhash (whose band parity with the batch path
-    depends on this expression being shared, not copied) all build on
-    it."""
+    exploded shingles, vocab.ngram_counts' occurrence grams and
+    importance's gram features all build on it."""
     return F.when(
         F.size(toks) >= n,
         F.transform(
@@ -103,12 +101,16 @@ def minhash_signatures(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _band_hashes(sig: DataFrame, key: str, k: int, bands: int) -> DataFrame:
-    """(key, band_id, bh) from a frame of ``key`` and ``mh0..mh{k-1}``:
-    band b hashes its r = k / bands signature values. THE one
-    band-hash expression — :func:`lsh_band_table` and the streaming
-    in-row probe (streaming/neardup_stream.py) both call it, so their
-    bands agree by construction."""
+def lsh_band_table(
+    docs: DataFrame,
+    k: int = MINHASH_K,
+    bands: int = LSH_BANDS,
+    n: int = SHINGLE_N,
+    sh: DataFrame | None = None,
+) -> DataFrame:
+    """(doc_id, band_id, bh): the LSH band-bucket index of a corpus —
+    the join key space of :func:`lsh_pairs`. Band b hashes its
+    r = k / bands signature values."""
     if bands < 1 or k % bands != 0:
         raise ValueError(f"k={k} must be divisible by bands={bands} (bands >= 1)")
     r = k // bands
@@ -119,24 +121,10 @@ def _band_hashes(sig: DataFrame, key: str, k: int, bands: int) -> DataFrame:
         )
         for b in range(bands)
     ]
-    return sig.select(key, F.explode(F.array(*band_rows)).alias("band")).select(
-        key, "band.band_id", "band.bh"
+    sig = minhash_signatures(docs, k, n, sh=sh)
+    return sig.select("doc_id", F.explode(F.array(*band_rows)).alias("band")).select(
+        "doc_id", "band.band_id", "band.bh"
     )
-
-
-def lsh_band_table(
-    docs: DataFrame,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-    n: int = SHINGLE_N,
-    sh: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, band_id, bh): the LSH band-bucket index of a corpus —
-    the join key space of :func:`lsh_pairs`, exposed so OTHER lookups
-    can probe the same buckets (e.g. the stream-static near-dup join
-    in streaming/neardup_stream.py, where a live feed is matched
-    against this table as the static index)."""
-    return _band_hashes(minhash_signatures(docs, k, n, sh=sh), "doc_id", k, bands)
 
 
 def lsh_pairs(

@@ -447,9 +447,9 @@ def chunk_texts(
 
 def cm_cell(host: Column, j: Column, width: int) -> Column:
     """The frozen count-min row hash: md5 of ``j || ':' || host``,
-    first 8 hex chars as int, mod width — engine-portable, seedless,
-    shared by the batch operator and the streaming builder so their
-    cell tables are mergeable by construction."""
+    first 8 hex chars as int, mod width — engine-portable and
+    seedless, so cell tables built from separate inputs are mergeable
+    by construction."""
     return (
         F.conv(
             F.substring(
@@ -466,9 +466,7 @@ def cm_cells(
     pages: DataFrame, depth: int = 4, width: int = 4096, url_col: str = "url"
 ) -> DataFrame:
     """Map-only (host, j, cell) rows, ``depth`` per page — stateless,
-    so it runs IDENTICALLY on a batch frame or a stream (the streaming
-    sketch builder groups these same rows; see
-    streaming/cm_stream.py)."""
+    so cells computed from any split of the input agree."""
     from webextract.operators.links import host_of
 
     j = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("j")
@@ -485,14 +483,6 @@ def cm_cells(
     )
 
 
-def count_min_sketch(cells: DataFrame) -> DataFrame:
-    """The ``(j, cell, c)`` count-min table over :func:`cm_cells` rows:
-    one groupBy count, ≤ depth·width rows at any corpus size. Shared by
-    :func:`count_min_hosts` and the streaming builder
-    (streaming/cm_stream.py), so their cells agree by construction."""
-    return cells.groupBy("j", "cell").agg(F.count("*").alias("c"))
-
-
 def count_min_hosts(
     pages: DataFrame,
     depth: int = 4,
@@ -501,7 +491,7 @@ def count_min_hosts(
 ) -> DataFrame:
     """Count-min sketch estimate of per-host page counts, compared
     against truth → (host, true_n, est_n, overestimate). The sketch
-    is the streaming/limited-memory face of host counting: a
+    is the limited-memory face of host counting: a
     ``depth × width`` cell table built in ONE pass (explode depth
     rows per page, partial-agg groupBy — the whole sketch is ≤
     depth·width rows regardless of corpus size, mergeable across
@@ -511,15 +501,13 @@ def count_min_hosts(
     bounded by 2·N/width per row with probability 1 − 2^-depth.
 
     Determinism: :func:`cm_cell` — frozen md5 row hashes, no seed
-    state. A streamed deployment keeps the SAME cell table and adds
-    to it (streaming/cm_stream.py runs :func:`count_min_sketch` over
-    the same map-only rows)."""
+    state, so a sketch over new pages adds cell-wise to an old one."""
     # cells feed both the sketch and the truth side: checkpoint so the
     # corpus scans once (r2 lesson)
     rows = cm_cells(pages, depth, width, url_col).localCheckpoint(
         eager=False
     )
-    sketch = count_min_sketch(rows)
+    sketch = rows.groupBy("j", "cell").agg(F.count("*").alias("c"))
     truth = (
         rows.filter(F.col("j") == 0)
         .groupBy("host")
@@ -587,8 +575,8 @@ def bloom_positions(
     count stays ≤ m_bits/32, still negligible)."""
     # NULL keys have no bit positions (md5 of NULL is NULL): they would
     # plant a (NULL, NULL) word in a built filter and can never be
-    # probed, so they are dropped here, for build, probe and stream
-    # alike (the cm_cells rule)
+    # probed, so they are dropped here, for build and probe alike (the
+    # cm_cells rule)
     rows = df.filter(F.col(key_col).isNotNull()).select(
         key_col,
         F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j"),
@@ -617,7 +605,7 @@ def bloom_build(
     ONE corpus pass: k map-only position rows per key, partial-agg
     ``bit_or`` groupBy on word_idx — the filter is ≤ m_bits/32 rows
     no matter the corpus size, and mergeable across
-    partitions/crawls/streams by word-wise OR (the same
+    partitions/crawls by word-wise OR (the same
     cell-mergeability argument as count-min). No false negatives by
     construction; false-positive rate ≈ (1 - e^(-k·n/m))^k, so size
     m_bits ~ 10·n for ~1–2% at k=4. At 10^12 urls the filter is

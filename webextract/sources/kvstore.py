@@ -11,19 +11,18 @@ recast keeps the *semantics* (a sorted, indexed, binary key-value
 dataset with a known record count and cheap key-range access) and swaps
 the *layout* for one Spark can parallelize:
 
- * The store is a set of **range-sharded files** plus a tiny
+ * The store is a set of **range-sharded payloads** plus a tiny
    **manifest** of ``(shard_id, min_key, max_key, n_records)`` rows —
    the analog of LMDB's B-tree interior pages (and of an Iceberg
    manifest). A key-range lookup filters the manifest FIRST, so only
    the shards whose ``[min_key, max_key]`` interval intersects the
-   probe range are ever opened — file skipping instead of a B-tree
+   probe range are ever opened — shard skipping instead of a B-tree
    descent, and it is a plain Catalyst ``Filter`` on manifest columns,
    evaluated before the one Arrow crossing that parses payload bytes.
- * One shard = ONE binary payload row (or one ``.skv`` file on disk,
-   read back via ``binaryFile`` like the WARC segments). At 100 TB the
-   parallelism is the shard count; records inside a shard amortize the
-   per-record Python loop over thousands of entries per batch
-   (SURVEY §2.10, same argument as :mod:`webextract.sources.warc`).
+ * One shard = ONE binary payload row. At 100 TB the parallelism is
+   the shard count; records inside a shard amortize the per-record
+   Python loop over thousands of entries per batch (SURVEY §2.10,
+   same argument as :mod:`webextract.sources.warc`).
  * LMDB's ``num-samples`` key (``lmdb_dataset.py:62``) becomes the
    manifest's ``n_records`` column: dataset size is a manifest-only
    aggregation, no payload scan.
@@ -48,13 +47,10 @@ truncation at crawl scale.
 
 from __future__ import annotations
 
-import os
-import shutil
 import struct
-import uuid
 from typing import Iterator, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from webextract.operators.extract import map_rows
@@ -216,101 +212,3 @@ def kv_range(shards: DataFrame, lo: str, hi: str) -> DataFrame:
         (F.col("max_key") >= F.lit(lo)) & (F.col("min_key") <= F.lit(hi))
     )
     return parse_kv(pruned).filter(F.col("key").between(F.lit(lo), F.lit(hi)))
-
-
-# ---------------------------------------------------------------------------
-# on-disk store: one .skv file per shard + parquet manifest
-# ---------------------------------------------------------------------------
-
-
-def write_kv(shards: DataFrame, path: str) -> None:
-    """Persist a synth_kv_shards output as a directory store: one
-    ``.skv`` file per shard + a ``_manifest`` parquet whose ``file``
-    column names them. The payload writes run ON EXECUTORS
-    (``foreachPartition``) against shared storage — the same pattern as
-    any Spark file sink; nothing is collected to the driver.
-
-    The manifest is the commit point, and nothing the live manifest
-    names is touched before the new one replaces it:
-     * shard files go first. Into a directory without a manifest they
-       take the plain name ``shard-<id>.skv``; over a live store every
-       name carries a fresh write id (``shard-<id>.<write-id>.skv``);
-     * the new manifest is staged beside the live one, then swapped in
-       by two renames (a reader between them finds no manifest and
-       fails loudly);
-     * only then are the shard files no manifest names deleted: the
-       old store's, and any a failed earlier write left behind.
-    A write that fails before the swap leaves the old store exactly as
-    it was."""
-    manifest = os.path.join(path, "_manifest")
-    tag = "." + uuid.uuid4().hex[:12] if os.path.exists(manifest) else ""
-    os.makedirs(path, exist_ok=True)
-    named = shards.withColumn(
-        "file", F.format_string(f"shard-%06d{tag}.skv", "shard_id")
-    )
-
-    def write_partition(rows) -> None:
-        for r in rows:
-            fname = os.path.join(path, r.file)
-            tmp = fname + ".tmp"
-            with open(tmp, "wb") as f:
-                f.write(bytes(r.payload))
-            os.replace(tmp, fname)  # atomic publish, no torn shards
-
-    named.select("file", "payload").foreachPartition(write_partition)
-    staged, old = manifest + ".staged", manifest + ".old"
-    named.select(*MANIFEST_COLS, "file").write.mode("overwrite").parquet(staged)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(manifest):
-        os.rename(manifest, old)
-    os.rename(staged, manifest)
-    shutil.rmtree(old, ignore_errors=True)
-    keep = {
-        r.file
-        for r in shards.sparkSession.read.parquet(manifest).select("file").collect()
-    }
-    for name in os.listdir(path):
-        if name.startswith("shard-") and name not in keep:
-            os.remove(os.path.join(path, name))
-
-
-def read_kv(
-    spark: SparkSession,
-    path: str,
-    lo: Optional[str] = None,
-    hi: Optional[str] = None,
-) -> DataFrame:
-    """Open a directory store. With a key range, the manifest is
-    filtered first and ONLY the surviving shard files are listed to
-    ``binaryFile`` — file skipping driven by manifest metadata (the
-    Iceberg-manifest pattern; the collect below is bounded manifest
-    metadata, one row per shard, never data)."""
-    manifest = spark.read.parquet(os.path.join(path, "_manifest"))
-    if lo is not None and hi is not None:
-        manifest = manifest.filter(
-            (F.col("max_key") >= F.lit(lo)) & (F.col("min_key") <= F.lit(hi))
-        )
-    files = [os.path.join(path, r.file) for r in manifest.select("file").collect()]
-    if not files:
-        return spark.createDataFrame([], PARSED_SCHEMA)
-    blobs = spark.read.format("binaryFile").load(files)
-    shards = blobs.select(
-        F.regexp_extract(F.input_file_name(), r"/shard-(\d+)[^/]*$", 1)
-        .cast("long")
-        .alias("shard_id"),
-        F.col("content").alias("payload"),
-    )
-    parsed = parse_kv(shards)
-    if lo is not None and hi is not None:
-        parsed = parsed.filter(F.col("key").between(F.lit(lo), F.lit(hi)))
-    return parsed
-
-
-def kv_count(shards_or_manifest: DataFrame) -> DataFrame:
-    """Dataset size from the manifest alone (``num-samples`` analog,
-    ``lmdb_dataset.py:62`` — there a dedicated key, here a metadata
-    aggregation that never opens a payload)."""
-    return shards_or_manifest.agg(
-        F.sum("n_records").cast("long").alias("num_samples"),
-        F.count("*").cast("long").alias("n_shards"),
-    )
