@@ -106,11 +106,11 @@ def test_depth_recorded():
 
 # -- sink bookkeeping invariants (the O(1) refactor's contract) -------------
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from webextract.config import BLOCK_TAGS
-from webextract.functions.tokenizer import _BlockSink, _SPACING_VOID
+from webextract.functions.tokenizer import _BlockSink, _SPACING_VOID, _canon
 
 _EVT_TAGS = ["div", "p", "td", "tr", "table", "a", "pre", "script",
              "nav", "span", "b", "br", "ul", "li", "body"]
@@ -174,6 +174,7 @@ _LEAF_TEXTS = ["", "t", "  two words ", "\nline\n", "\xa0", " "]
 
 
 @given(_events, st.sampled_from(_LEAF_TAGS), st.sampled_from(_LEAF_TEXTS))
+@example(events=[("start", "a")], tag="pre", text="  two words ")
 @settings(max_examples=600, deadline=None)
 def test_leaf_is_start_data_end(events, tag, text):
     """From any state an event prefix builds, ``leaf(tag, text)`` leaves
@@ -202,6 +203,70 @@ def test_sink_spacing_voids_never_enter_stack(events):
         elif kind == "end":
             sink.endtag(tag)
     assert not any(t in _SPACING_VOID for t in sink.stack)
+
+
+# -- the canonical fast check in _canon ------------------------------------
+
+def test_only_the_ascii_space_is_printable_whitespace():
+    """The premise of ``_canon``'s shortcut: a printable string's only
+    whitespace is U+0020, so ``split()`` cuts nowhere else."""
+    assert [
+        hex(c) for c in range(0x110000)
+        if chr(c).isspace() and chr(c).isprintable() and c != 0x20
+    ] == []
+
+
+# pieces heavy in the whitespace split() cuts at and the check must
+# send to the slow path: unprintable spaces, double and edge spaces
+_SPACEY = st.lists(
+    st.sampled_from(
+        [" ", "  ", "\xa0", "\u2028", "\u2003", "\u3000", "\x85", "\x1c",
+         "\t", "\n", "a", "bc", "\u00e9", "\u200b", "x y"]
+    ),
+    max_size=30,
+).map("".join)
+
+
+@given(st.one_of(st.text(), _SPACEY))
+@example(" edge")
+@example("edge ")
+@example("two  spaces")
+@example("")
+@settings(max_examples=1000, deadline=None)
+def test_canon_equals_split_join(s):
+    assert _canon([s]) == " ".join(s.split())
+
+
+def test_block_boundaries_never_flush_an_empty_block(monkeypatch):
+    """Ratchet: a block start, end or leaf calls ``_flush`` only when
+    the enclosing block holds text, on every fixture page and bulk
+    template page and on both engines."""
+    from webextract.functions import tokenizer
+    from webextract.functions.htmlnorm import decode_html
+    from webextract.sources.pages import (
+        _TPL_HEAD, _TPL_MID, _TPL_TAIL, gen_fixture_pages,
+    )
+
+    pages = [decode_html(p["html"]) for p in gen_fixture_pages()]
+    body = "alpha beta gamma delta epsilon zeta eta theta"
+    pages += [
+        f"{_TPL_HEAD}Document {i} from src{i}{_TPL_MID}"
+        f"{'</p><p>'.join([body[: 10 + 4 * i]] * 8)}{_TPL_TAIL}"
+        for i in range(8)
+    ]
+    flushes = {"empty": 0, "full": 0}
+    flush = tokenizer._BlockSink._flush
+
+    def counted(self):
+        flushes["full" if self.frags else "empty"] += 1
+        flush(self)
+
+    monkeypatch.setattr(tokenizer._BlockSink, "_flush", counted)
+    for engine in ("auto", "reference"):
+        for page in pages:
+            tokenize_blocks(page, engine)
+    assert flushes["empty"] == 0
+    assert flushes["full"] > 0
 
 
 def test_sink_bug_propagates_from_reference_path(monkeypatch):

@@ -31,6 +31,7 @@ Also implements:
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from itertools import repeat
 
 import numpy as np
 
@@ -63,8 +64,8 @@ def score_pages(
     link_len = np.asarray(blocks["link_text_len"], dtype=np.float64)
     depth = np.asarray(blocks["depth"], dtype=np.float64)
     boiler = np.asarray(blocks["is_boiler"], dtype=np.float64)
-    tag_bonus = np.array(
-        [TAG_BONUS.get(t, DEFAULT_TAG_BONUS) for t in blocks["tag"]], dtype=np.float64
+    tag_bonus = np.fromiter(
+        map(TAG_BONUS.get, blocks["tag"], repeat(DEFAULT_TAG_BONUS)), np.float64, count=k
     )
 
     # score_mode analog (db_postprocess.py:40-43,131-133): "fast"

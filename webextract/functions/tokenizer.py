@@ -23,11 +23,14 @@ Two interchangeable event front-ends drive ONE block state machine
 The fast front-end also reads a leaf, ``<name ...>text</name>`` with no
 ``<`` in the text, as one event: ``_BlockSink.leaf(name, text)``, which
 leaves the sink exactly as ``starttag; data; endtag`` would. A block
-leaf outside a skip subtree flushes the enclosing block, emits its own
-and restores the enclosing one; ``<a>`` counts one link whose text is
-link text; another inline leaf is its text; spacing voids and
-``SKIP_TAGS`` take the three events. A page of ``<p>`` paragraphs thus
-costs one sink call per block instead of three.
+leaf outside a skip subtree flushes the enclosing block if it holds
+text, appends its own row straight to the columns and restores the
+enclosing block's fields; ``<a>`` counts one link whose text is link
+text; another inline leaf is its text; spacing voids and ``SKIP_TAGS``
+take the three events. A page of ``<p>`` paragraphs thus costs one sink
+call per block instead of three. Every block boundary (a block start,
+end or leaf) calls ``_flush`` only when the enclosing block holds text;
+otherwise it only resets the block's link count.
 
 ``tokenize_blocks(text)`` uses fast-with-fallback by default;
 ``engine="reference"`` forces the stdlib path (differential tests
@@ -38,7 +41,13 @@ Frozen canonicalization rules (byte-identity depends on them):
    numeric refs → the codepoint;
  * within a non-``<pre>`` block, every run of unicode whitespace
    (including NBSP) collapses to one ASCII space; leading/trailing
-   stripped;
+   stripped. That is ``" ".join(s.split())``, which ``_canon`` skips
+   when ``s`` is printable, holds no ``"  "`` and neither starts nor
+   ends with a space. The shortcut is exact: every ``isspace()``
+   character but U+0020 is in category Cc, Zs, Zl or Zp and so not
+   printable (checked over all code points in tests/test_tokenizer.py),
+   and ``split()`` then only cuts at single interior spaces, which the
+   join puts back;
  * within ``<pre>``, whitespace is verbatim except one leading and one
    trailing newline are stripped;
  * blocks that canonicalize to "" are dropped (the analog of the ≤3px
@@ -52,6 +61,7 @@ Frozen canonicalization rules (byte-identity depends on them):
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from html.parser import HTMLParser
 from typing import Any
 
@@ -64,12 +74,17 @@ _SPACING_VOID = {"br", "wbr", "hr", "img"}
 _EVENT_LEAF = frozenset(_SPACING_VOID | SKIP_TAGS)
 
 
-def _canon(fragments: list[str]) -> str:
-    """Frozen whitespace canonicalization for non-pre blocks."""
-    return " ".join("".join(fragments).split())
+def _canon(fragments: Iterable[str]) -> str:
+    """Frozen whitespace canonicalization for non-pre blocks. Text that
+    is already canonical (printable, no double, leading or trailing
+    space) is returned as joined: it is what the split/join gives."""
+    s = "".join(fragments)
+    if s.isprintable() and "  " not in s and s[:1] != " " and s[-1:] != " ":
+        return s
+    return " ".join(s.split())
 
 
-def _canon_pre(fragments: list[str]) -> str:
+def _canon_pre(fragments: Iterable[str]) -> str:
     s = "".join(fragments)
     if s.startswith("\n"):
         s = s[1:]
@@ -111,10 +126,9 @@ class _BlockSink:
 
     # -- block lifecycle -------------------------------------------------
     def _flush(self) -> None:
-        if not self.frags:           # empty block: nothing canonicalizes
-            self.link_frags = []
-            self.n_links_in_block = 0
-            return
+        """Emit the open block's row, if its text canonicalizes to
+        anything, and start an empty block. The sink's block boundaries
+        call it only when ``frags`` holds text."""
         if self.block_was_pre:
             text = _canon_pre(self.frags)
         else:
@@ -134,7 +148,10 @@ class _BlockSink:
         self.n_links_in_block = 0
 
     def _begin_block(self, tag: str) -> None:
-        self._flush()
+        if self.frags:
+            self._flush()
+        else:                        # link_frags is empty when frags is
+            self.n_links_in_block = 0
         self.block_tag = tag
         self.block_depth = len(self.stack)
         self.block_boiler = self.boiler_depth > 0
@@ -187,7 +204,10 @@ class _BlockSink:
                     break
         if tag in BLOCK_TAGS and not self.skip_depth:
             # closing a block flushes it; enclosing block tag resumes
-            self._flush()
+            if self.frags:
+                self._flush()
+            else:
+                self.n_links_in_block = 0
             self.block_tag = self.block_stack[-1] if self.block_stack else "body"
             self.block_depth = len(self.stack)
             self.block_boiler = self.boiler_depth > 0
@@ -226,16 +246,28 @@ class _BlockSink:
             if self.skip_depth:
                 return
             # the leaf's own block, between the enclosing block's flush
-            # and its resumption (BOILER_TAGS and pre are block tags)
-            self._flush()
+            # and its resumption (BOILER_TAGS and pre are block tags),
+            # goes straight into the columns
+            if self.frags:
+                self._flush()
+            else:
+                self.n_links_in_block = 0
             boiler = self.boiler_depth > 0
             was_pre = self.pre_depth > 0
-            self.block_tag = tag
-            self.block_depth = len(self.stack) + 1
-            self.block_boiler = boiler or tag in BOILER_TAGS
-            self.block_was_pre = was_pre or tag == "pre"
-            self.data(text)
-            self._flush()
+            pre = was_pre or tag == "pre"
+            block_text = _canon_pre((text,)) if pre else _canon((text,))
+            if block_text:
+                self.tags.append(tag)
+                self.depths.append(len(self.stack) + 1)
+                self.texts.append(block_text)
+                # link text is measured non-pre, even in a pre block
+                self.link_lens.append(
+                    (len(_canon((text,))) if pre else len(block_text))
+                    if self.link_depth else 0
+                )
+                self.n_links.append(0)
+                self.boilers.append(boiler or tag in BOILER_TAGS)
+                self.pres.append(pre)
             self.block_tag = self.block_stack[-1] if self.block_stack else "body"
             self.block_depth = len(self.stack)
             self.block_boiler = boiler
@@ -298,7 +330,8 @@ def scan_blocks(html_text: str, engine: str = "auto") -> _BlockSink:
     if engine == "reference" or not fastscan.scan(html_text, sink):
         sink = _run_reference(html_text)
         sink.reference = True
-    sink._flush()
+    if sink.frags:
+        sink._flush()
     return sink
 
 
