@@ -138,6 +138,31 @@ _tag_soup = st.lists(
 ).map("".join)
 
 
+# pages of leaf runs: same-name siblings, bare or with attributes, in
+# either case, apart or with whitespace, comments or other tags between
+def _element(name: str, attrs: str, text: str, close: str | None) -> str:
+    return f"<{name}{attrs}>{text}" + ("" if close is None else f"</{name}{close}>")
+
+
+_run_piece = st.one_of(
+    st.builds(
+        _element,
+        st.sampled_from(["p", "P", "li", "td", "a", "pre", "b", "hr", "noscript"]),
+        st.sampled_from(["", "", "", " class=x", ' href="/"']),
+        st.text(alphabet="ab &;\xa0\n", max_size=5),
+        st.sampled_from(["", "", "", " ", "\n", None]),
+    ),
+    st.sampled_from(["", " ", "\n", "\t \r\n", "<!-- c -->", "<div>", "</div>",
+                     "<pre>", "</pre>", "<a>", "</a>", "<nav>", "<script></script>"]),
+)
+
+
+@given(st.lists(_run_piece, max_size=30).map("".join))
+@settings(max_examples=1500, deadline=None)
+def test_fuzz_leaf_runs(soup: str) -> None:
+    assert_same(soup)
+
+
 @given(_tag_soup)
 @settings(max_examples=1500, deadline=None)
 def test_fuzz_grammar_edges(soup: str) -> None:
@@ -167,6 +192,21 @@ def test_giant_page_takes_one_sink_call_per_block():
     assert blocks == 12_000
     # one leaf per <p>, plus <html><body> ... </body></html>
     assert counter.calls == blocks + 4
+
+
+class _RunCounter(_CallCounter):
+    """A counting sink that also takes a leaf run in one call."""
+
+    leaves = _CallCounter._count
+
+
+def test_giant_page_takes_a_handful_of_sink_calls():
+    # the run-rate ratchet: <html><body>, one run of 12,000 paragraphs,
+    # </body></html>
+    giant = next(p for p in gen_fixture_pages() if p["case"] == "giant_page")
+    counter = _RunCounter()
+    assert fastscan.scan(decode_html(giant["html"]), counter)
+    assert counter.calls <= 5
 
 
 class _EventsOnly:
@@ -260,6 +300,29 @@ def test_attribute_soup_is_linear():
         "<noscript><p>t</p></noscript>",
         "<p></p>",
         "<title>t</title>",
+        # leaf runs: adjacent bare same-name siblings after a leaf are
+        # one token; whitespace between items ends a run
+        "<P>x</P><p>y</p><p>z</p>",  # a change of case ends a run
+        "<p>a</p> <p>b</p>\n<p>c</p>\t\r\n <p>d</p>",
+        "<ul>\n<li>a</li>\n<li>b</li>\n</ul>",
+        "<table><tr><td>1</td><td>2</td><td>3</td></tr></table>",
+        "<pre><p>a</p>\n<p> b </p></pre>",
+        "<pre>x<a>1</a>\n<a>2</a></pre>",
+        "<a href=x><p>a</p> <p>b</p></a>",
+        "<noscript><p>a</p><p>b</p></noscript>",
+        "<p>a</p><!-- c --><p>b</p><p>c</p>",
+        "<div>x</div><p>a</p><p>b</p>",  # a run at the end of the page
+        "<p>t <a>x</a> <a>y</a><a></a> u</p>",
+        "<p>a</p><p class=x>b</p><p>c</p><p>d</p>",  # attributes end a run
+        "<p class=x>a</p><p>b</p>",
+        "<p>a</p ><p>b</p><p>c</p >",  # a spaced close ends a run
+        "<p>a</p><p>b</p\n>\n<p>c</p>",
+        "<p>&amp;</p><p>&nbsp;</p><p>a&lt;b</p>",
+        "<p></p><p> </p><p>x  y</p>",
+        "<li>a</li><li>b</li><li>c",
+        "<hr></hr><hr></hr>",
+        "<p>a<p>b</p><p>c</p></p>",
+        "<nav><li>a</li><li>b</li></nav><li>c</li><li>d</li>",
     ],
 )
 def test_known_subtleties(case: str) -> None:

@@ -27,14 +27,6 @@ def test_exact_dedup_finds_planted_duplicates(spark):
     assert res == {1: 2, 3: 1}
 
 
-def test_dedup_keep_first(spark):
-    df = spark.createDataFrame(
-        [(5, "a"), (2, "a"), (9, "b")], ["doc_id", "text"]
-    )
-    kept = sorted(r["doc_id"] for r in dedup.dedup_keep_first(df).collect())
-    assert kept == [2, 9]
-
-
 def test_minhash_identical_docs_share_signature(spark):
     df = spark.createDataFrame(
         [(1, "w1 w2 w3 w4 w5"), (2, "w1 w2 w3 w4 w5"), (3, "x1 x2 x3 x4 x5")],

@@ -193,6 +193,42 @@ def test_leaf_is_start_data_end(events, tag, text):
     assert vars(one) == vars(three)
 
 
+# raw leaf texts as the scanner passes them (entities not yet decoded)
+_RUN_TEXTS = _LEAF_TEXTS + ["x  y", "a &amp; b", "&nbsp;", "&nbsp;x&lt;", "long text."]
+
+
+@given(
+    _events,
+    st.sampled_from(_LEAF_TAGS),
+    st.lists(st.sampled_from(_RUN_TEXTS), min_size=2, max_size=6),
+)
+@example(events=[("start", "pre")], tag="p", texts=["a ", " b"])
+@example(events=[("start", "script")], tag="li", texts=["a", "b"])
+@example(events=[("start", "a")], tag="p", texts=["a", "b"])
+@example(events=[("start", "nav")], tag="li", texts=["a", "b"])
+@example(events=[("start", "div"), ("data", "div")], tag="p", texts=["a", "b"])
+@example(events=[("start", "p")], tag="a", texts=["x", "&amp;y", ""])
+@example(events=[("start", "a")], tag="a", texts=["x", "y"])
+@example(events=[], tag="p", texts=["a &amp; b", "&nbsp;x"])
+@example(events=[], tag="p", texts=["", " ", "x  y"])
+@example(events=[], tag="td", texts=["", "x"])
+@settings(max_examples=600, deadline=None)
+def test_leaves_is_the_per_leaf_events(events, tag, texts):
+    """From any state an event prefix builds, ``leaves(tag, texts)``
+    leaves every field of the sink exactly as ``leaf`` on each decoded
+    text does; and so does the final flush."""
+    from html import unescape
+
+    one, per = _replay(events), _replay(events)
+    one.leaves(tag, texts)
+    for text in texts:
+        per.leaf(tag, unescape(text))
+    assert vars(one) == vars(per)
+    one._flush()
+    per._flush()
+    assert vars(one) == vars(per)
+
+
 @given(_events)
 @settings(max_examples=200, deadline=None)
 def test_sink_spacing_voids_never_enter_stack(events):

@@ -150,14 +150,3 @@ def test_page_policies_token_exact(spark):
         "u4": (False, False),
         "u5": (False, False),  # indexable by default
     }
-
-
-def test_filter_indexable_drops_optouts(spark):
-    from webextract.operators.urlnorm import filter_indexable
-
-    rows = [
-        _page("keep", "<head></head>"),
-        _page("drop", '<meta name="robots" content="noindex">'),
-    ]
-    df = spark.createDataFrame(rows, ["url", "html"])
-    assert [r.url for r in filter_indexable(df).collect()] == ["keep"]

@@ -1,4 +1,4 @@
-"""WARC source: framing roundtrip, gzip members, file reads, fail-loud.
+"""WARC source: framing roundtrip, gzip members, fail-loud.
 
 The format analog of the reference's container fan-out tests
 (ppocr/utils/utility.py:94-124 GIF/PDF dispatch): records are
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from webextract.sources.warc import (
     _parse_warc_buffer,
     parse_warc,
-    read_warc_files,
     synth_warc_segments,
 )
 
@@ -93,19 +92,6 @@ def test_parse_gzip_members():
     out = list(_parse_warc_buffer(buf))
     assert [u for u, _, _ in out] == [f"https://g.example/{i}" for i in range(5)]
     assert out[3][2] == b"<i>3</i>"
-
-
-def test_read_warc_files(spark, tmp_path):
-    recs = b"".join(
-        _record(f"https://f.example/{i}", "2024-02-01T00:00:00Z", b"<b>%d</b>" % i)
-        for i in range(10)
-    )
-    (tmp_path / "part-0.warc").write_bytes(recs[: len(_record('https://f.example/0', '2024-02-01T00:00:00Z', b'<b>0</b>'))])
-    (tmp_path / "part-1.warc.gz").write_bytes(gzip.compress(recs))
-    got = read_warc_files(spark, str(tmp_path)).groupBy().agg(
-        F.count("*").alias("n"), F.count_distinct("url").alias("u")
-    ).collect()[0]
-    assert (got.n, got.u) == (11, 10)
 
 
 def test_parse_fail_loud_on_bad_framing(spark):

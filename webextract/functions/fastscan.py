@@ -27,7 +27,15 @@ to the sink. The grammar accepts
    exactly as ``starttag(name); data(text); endtag(name)`` would. It is
    tried before the start-tag alternative and never matches script or
    style; a self-closing tag, another case in the close, or a ``<`` in
-   the text leaves the element to the separate events.
+   the text leaves the element to the separate events;
+ * leaf runs: a leaf followed directly by same-name sibling leaves,
+   each a bare ``<name>text</name>`` (no attributes, the name in the
+   same case, nothing between the items, the close exact), is ONE token
+   and ONE event, ``sink.leaves(name, texts)`` with the raw texts. It
+   must leave the sink exactly as ``each_leaf`` does, a ``leaf`` per
+   decoded text. One ``str.split`` at ``</name><name>`` cuts the run.
+   Anything else after a leaf (whitespace, attributes, a spaced close)
+   ends the run, and the next element is its own token.
 
 Anything else (unicode whitespace inside a tag, ``a==b``, a bogus end
 tag, a marked section, an unterminated construct) makes the last token
@@ -40,14 +48,18 @@ possessive, so no alternative backtracks: a page is one linear pass.
 The event sink contract matches ``_BlockParser``:
 ``starttag(name) / endtag(name) / startendtag(name) / data(text)``
 with lowercased names and entity-decoded text (convert_charrefs), plus
-``leaf(name, text)``, which html.parser never calls. A sink without
-``leaf`` gets a leaf as those three events (``data`` only for non-empty
-text), so any html.parser-shaped sink still reads the fast path.
+``leaf(name, text)`` and ``leaves(name, texts)``, which html.parser
+never calls; ``leaves`` gets its texts raw, to decode only those that
+hold ``&``. A sink without ``leaf`` gets a leaf as those three events
+(``data`` only for non-empty text), and a sink without ``leaves`` gets a
+run as ``each_leaf`` gives it, so any html.parser-shaped sink still
+reads the fast path and sees the events it always saw.
 """
 
 from __future__ import annotations
 
 import re
+from functools import partial
 from html import unescape
 
 _WS = r"[\t\n\r\f ]"  # html.parser's ``\s`` is unicode: other spaces bail
@@ -77,15 +89,17 @@ def _raw_element(name: str) -> str:
 
 
 # one token per construct: the text run before it (group 1), then a
-# leaf's tag name and text (groups 2, 3), the start tag name and its
+# leaf's tag name and text (groups 2, 3) and the run of same-name
+# sibling leaves after it (group 4), the start tag name and its
 # self-closing '/', the end tag name, the script or style element; a
-# comment, doctype or PI sets no group. Group 9, the catch-all, takes
+# comment, doctype or PI sets no group. Group 10, the catch-all, takes
 # the rest of the page from a '<' nothing else reads: the page bails. A
 # trailing text run ends at \Z, and no token is empty.
 _GRAMMAR = re.compile(
     r"(?!\Z)((?:[^<]++|<(?![a-zA-Z/!?]))*+)(?:<(?:"
     rf"(?!(?:{_ci('script')}|{_ci('style')})[\t\n\r\f />])"
     rf"(?:(?P<leaf>[a-zA-Z][-.:a-zA-Z0-9_]*+){_ATTRS}>([^<]*+)</(?P=leaf)\s*+>"
+    rf"((?:<(?P=leaf)>[^<]*+</(?P=leaf)>)*+)"
     rf"|([a-zA-Z][-.:a-zA-Z0-9_]*+){_ATTRS}(/?)>)"
     r"|/\s*+([a-zA-Z][-.a-zA-Z0-9:_]*+)\s*+>"
     rf"|{_raw_element('script')}|{_raw_element('style')}"
@@ -94,6 +108,14 @@ _GRAMMAR = re.compile(
     r"|\?[^>]*+>"
     r")|((?s:.+))|\Z)"
 )
+
+
+def _run_texts(name: str, first: str, run: str) -> list[str]:
+    """The raw texts of the leaf run whose first text is ``first`` and
+    whose tail of adjacent ``<name>text</name>`` items is ``run``."""
+    texts = run[len(name) + 2 : -len(name) - 3].split(f"</{name}><{name}>")
+    texts.insert(0, first)
+    return texts
 
 
 class _Bail(Exception):
@@ -123,17 +145,29 @@ def _three_events(sink):
     return leaf
 
 
+def each_leaf(leaf, tag: str, texts: list[str]) -> None:
+    """A leaf run as per-item events: each raw text, decoded, as
+    ``leaf(tag, text)``. ``sink.leaves`` must leave the sink as this
+    does."""
+    for text in texts:
+        leaf(tag, unescape(text) if "&" in text else text)
+
+
 def _scan(s: str, sink) -> None:
     tokens = _GRAMMAR.findall(s)
-    if tokens and tokens[-1][8]:
+    if tokens and tokens[-1][9]:
         raise _Bail
     data, start, end = sink.data, sink.starttag, sink.endtag
     leaf = getattr(sink, "leaf", None) or _three_events(sink)
-    for text, leaf_tag, leaf_text, tag, slash, etag, script, style, _ in tokens:
+    leaves = getattr(sink, "leaves", None) or partial(each_leaf, leaf)
+    for text, leaf_tag, leaf_text, run, tag, slash, etag, script, style, _ in tokens:
         if text:
             data(unescape(text) if "&" in text else text)
         if leaf_tag:
-            leaf(leaf_tag.lower(), unescape(leaf_text) if "&" in leaf_text else leaf_text)
+            if run:
+                leaves(leaf_tag.lower(), _run_texts(leaf_tag, leaf_text, run))
+            else:
+                leaf(leaf_tag.lower(), unescape(leaf_text) if "&" in leaf_text else leaf_text)
         elif tag:
             if slash:
                 sink.startendtag(tag.lower())

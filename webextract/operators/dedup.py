@@ -622,18 +622,6 @@ def cluster_keeper(docs: DataFrame, pairs: DataFrame, max_iter: int = 25) -> Dat
     )
 
 
-def dedup_keep_first(docs: DataFrame) -> DataFrame:
-    """The end-to-end exact-dedup operator: returns the surviving rows
-    (first doc_id per distinct text). Window row_number over the hash —
-    one shuffle, no driver collect."""
-    w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
 SPAN_K = 8  # window length (tokens) for cross-doc substring removal
 
 

@@ -152,16 +152,6 @@ def page_policies(pages: DataFrame) -> DataFrame:
     )
 
 
-def filter_indexable(pages: DataFrame) -> DataFrame:
-    """Drop pages declaring ``noindex`` (LEFT-SEMI join the thin
-    policy table back on url — semi, not inner, so a url captured
-    more than once (the recrawl case) filters without multiplying
-    rows; at the scan both branches prune to the used columns, and
-    the survivors proceed to extraction)."""
-    keep = page_policies(pages).filter(~F.col("noindex")).select("url")
-    return pages.join(keep, "url", "left_semi")
-
-
 def latest_snapshot(pages: DataFrame, url_col: str = "url") -> DataFrame:
     """Latest-crawl-wins per url: keep exactly the newest snapshot row
     of every url (the CDX "latest capture" semantics a recrawled

@@ -12,7 +12,7 @@ members so byte ranges stay seekable.
 Spark-first shape:
 
  * One WARC file (or synthesized segment) = ONE row carrying a binary
-   payload. At 100 TB that row set comes from
+   payload. At 100 TB the caller reads that row set with
    ``spark.read.format("binaryFile")`` over ~1 GB ``.warc.gz`` objects
    — thousands of files spread across executors, no shuffle at all;
    parallelism is the file count (Common Crawl ships ~72k files per
@@ -40,7 +40,7 @@ import time
 import zlib
 from typing import Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from webextract.operators.extract import map_rows
@@ -198,14 +198,3 @@ def parse_warc(segments: DataFrame, payload_col: str = "payload") -> DataFrame:
         return _parse_warc_buffer(payload)
 
     return map_rows(segments, [payload_col], PARSED_SCHEMA, rows)
-
-
-def read_warc_files(spark: SparkSession, path: str) -> DataFrame:
-    """Directory/glob of ``.warc`` / ``.warc.gz`` files → parsed pages.
-
-    ``binaryFile`` gives one row per file with zero shuffle; at crawl
-    scale the file count (tens of thousands per snapshot) IS the
-    parallelism, so no repartition is needed before the parse.
-    """
-    files = spark.read.format("binaryFile").load(path).select(F.col("content"))
-    return parse_warc(files, payload_col="content")
