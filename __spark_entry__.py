@@ -23,7 +23,6 @@ from webextract.operators import (
     dedup,
     kmeans,
     metrics,
-    multimodal,
     pagemeta,
     similarity,
     tables,
@@ -1518,20 +1517,8 @@ def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.redact_pii(planted)
 
 
-def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed-format media table → Arrow-batched header decode. Two of
-    the three formats are REAL byte layouts (PNG IHDR, GIF logical
-    screen descriptor) parsed by the real header walkers; dimensions
-    and byte counts are doc_id arithmetic, so the oracle states them."""
-    media = multimodal.synth_mixed_media(_docs(spark, sf_dir))
-    return multimodal.decode_media(media)
 
 
-def q_media_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-page container fan-out (PDF→pages explode analog): page
-    count parsed from the binary header JVM-side."""
-    media = multimodal.synth_paged_media(_docs(spark, sf_dir))
-    return multimodal.explode_pages(media)
 
 
 def q_links(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1577,27 +1564,6 @@ def q_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return anchor_summary(extract_anchors(pages_with_links(spark, sf_dir)))
 
 
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature extraction from media bytes (numpy-vectorized byte
-    histogram + mean per Arrow batch — the embedding-from-media
-    plumbing). ORACLE-BACKED since round 4: synth_mixed_media builds
-    payloads as header-hex + utf-8 text bytes, both statable in SQL,
-    so the oracle reconstructs the identical byte stream in DuckDB
-    (hex string + per-byte unnest) and recomputes count / mean /
-    16-bin histogram from first principles — any disagreement in the
-    byte synthesis OR the numpy featurizer breaks the hash. The
-    histogram array is posexploded to (bin, bin_count) rows for
-    hash portability; mean_byte is exact-int sum + one IEEE division
-    on both engines (np.mean pairwise float64 partial sums stay
-    integral below 2^53)."""
-    media = multimodal.synth_mixed_media(_docs(spark, sf_dir))
-    feats = multimodal.media_features(media)
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        "mean_byte",
-        F.posexplode("byte_hist").alias("bin", "bin_count"),
-    ).withColumn("bin", F.col("bin").cast("long"))
 
 
 def q_pipeline_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1813,8 +1779,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "count_min": q_count_min,
         "dsir_weights": q_dsir_weights,
         "nb_classify": q_nb_classify,
-        "media_decode": q_media_decode,
-        "media_features": q_media_features,
         "links": q_links,
         "host_graph": q_host_graph,
         "anchor_texts": q_anchor_texts,
@@ -1832,7 +1796,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "host_boiler": q_host_boiler,
         "crawl_diff": q_crawl_diff,
         "kmeans_assign": q_kmeans_assign,
-        "media_pages": q_media_pages,
         "union_sample": q_union_sample,
         "token_stats": q_token_stats,
         "quality": q_quality,
@@ -3375,24 +3338,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
                    CAST(1 AS INTEGER) AS n_phones
             FROM documents
         """,
-        # doc_id % 3 routes fakeimg/png/gif; header byte budgets are
-        # 12/33/13 (see synth_mixed_media) and dimensions are the same
-        # modular arithmetic in all three formats
-        "media_decode": """
-            SELECT doc_id AS media_id,
-                   CASE doc_id % 3 WHEN 0 THEN 'fakeimg'
-                                   WHEN 1 THEN 'png'
-                                   ELSE 'gif' END AS format,
-                   CAST(doc_id % 64 + 1 AS INTEGER) AS width,
-                   CAST(doc_id % 48 + 1 AS INTEGER) AS height,
-                   CAST(CASE doc_id % 3 WHEN 0 THEN 12
-                                        WHEN 1 THEN 33
-                                        ELSE 13 END
-                        + octet_length(encode(text)) AS BIGINT) AS n_bytes,
-                   true AS ok
-            FROM documents
-        """,
-        "media_features": _media_features_sql(),
         "pipeline_dedup": f"""
             WITH e AS (SELECT {_URL} AS url, {_EXTRACTED} AS text FROM documents),
             f AS (SELECT url,
@@ -3411,12 +3356,6 @@ SELECT doc_id, band0, band1, band2, band3 FROM sig
             WHERE doc_id % 2 = 1
               AND CAST(('0x' || substr(md5('1:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
                   < {int(0.5 * (1 << 32))}
-        """,
-        "media_pages": """
-            SELECT doc_id AS media_id,
-                   CAST(doc_id % 5 + 1 AS INTEGER) AS total_pages,
-                   CAST(unnest(range(1, CAST(doc_id % 5 + 1 AS INTEGER) + 1)) AS INTEGER) AS page_no
-            FROM documents
         """,
         "corpus_report": _corpus_report_sql(),
         "links": f"""
@@ -3801,54 +3740,6 @@ def _kmeans_sql(k: int = 8, n_iter: int = 3) -> str:
 SELECT vec_id, cluster, d2 FROM a{n_iter}"""
 
 
-def _media_features_sql(n_bins: int = 16) -> str:
-    """media_features oracle: rebuild the EXACT payload byte stream of
-    ``synth_mixed_media`` as a hex string (header literals + planted
-    w/h arithmetic + ``hex(encode(text))``), explode one row per byte,
-    and restate count / mean / histogram from first principles. All
-    hex is parsed back through CAST('0x'||…), so engine hex-case never
-    matters; mean_byte is one IEEE division of exact integers (the
-    portability contract); absent histogram bins are restored as
-    explicit zero rows to mirror numpy ``bincount(minlength)``."""
-    shift_div = 256 // n_bins
-    return f"""WITH m AS (
-  SELECT doc_id AS media_id, doc_id % 3 AS r,
-         CAST(doc_id % 64 + 1 AS BIGINT) AS w,
-         CAST(doc_id % 48 + 1 AS BIGINT) AS h,
-         hex(encode(text)) AS th
-  FROM documents),
-hx AS (
-  SELECT media_id,
-         CASE r
-           WHEN 0 THEN '494D4721' || lpad(hex(w), 8, '0')
-                       || lpad(hex(h), 8, '0')
-           WHEN 1 THEN '89504E470D0A1A0A0000000D49484452'
-                       || lpad(hex(w), 8, '0') || lpad(hex(h), 8, '0')
-                       || '080200000000000000'
-           ELSE '474946383961' || lpad(hex(w), 2, '0') || '00'
-                || lpad(hex(h), 2, '0') || '00' || '910000'
-         END || th AS fh
-  FROM m),
-sz AS (SELECT media_id, fh, CAST(length(fh) // 2 AS BIGINT) AS n_bytes
-       FROM hx),
-b AS (SELECT media_id, n_bytes, fh,
-             unnest(range(1, n_bytes + 1)) AS i
-      FROM sz),
-v AS (SELECT media_id, n_bytes,
-             CAST(('0x' || substr(fh, 2 * i - 1, 2)) AS BIGINT) AS val
-      FROM b),
-stats AS (SELECT media_id, n_bytes,
-                 CAST(CAST(SUM(val) AS BIGINT) AS DOUBLE) / n_bytes
-                   AS mean_byte
-          FROM v GROUP BY media_id, n_bytes),
-counts AS (SELECT media_id, val // {shift_div} AS bin, COUNT(*) AS c
-           FROM v GROUP BY 1, 2),
-bins AS (SELECT media_id, unnest(range(0, {n_bins})) AS bin FROM hx)
-SELECT s.media_id, s.n_bytes, s.mean_byte,
-       CAST(bins.bin AS BIGINT) AS bin,
-       CAST(COALESCE(c.c, 0) AS BIGINT) AS bin_count
-FROM bins JOIN stats s USING (media_id)
-LEFT JOIN counts c ON c.media_id = bins.media_id AND c.bin = bins.bin"""
 
 
 def _semdedup_sql(

@@ -72,7 +72,7 @@ def test_catalog_what_cells_close_their_code_spans():
     assert len(rows) == len(e.queries())
     for row in rows:
         cells = re.split(r"(?<!\\)\|", row.strip())[1:-1]
-        assert len(cells) == 4, row
+        assert len(cells) == 3, row
         # a run of n backticks opens a code span that only a run of
         # exactly n backticks closes
         open_run = 0

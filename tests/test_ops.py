@@ -1,12 +1,12 @@
 """Unit/integration tests for the training-data-pipeline operators:
-dedup family, embedding near-dup pairs, text stats,
-multimodal plumbing. Correctness-by-construction cases on tiny
-hand-made frames + invariants on the driver testdata."""
+dedup family, embedding near-dup pairs, text stats. Correctness-by-
+construction cases on tiny hand-made frames + invariants on the driver
+testdata."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from webextract.operators import dedup, multimodal, similarity, textstats
+from webextract.operators import dedup, similarity, textstats
 
 SF = "/root/testdata/sf0.001"
 
@@ -455,110 +455,6 @@ def test_fingerprint_whitespace_canon(spark):
     assert fps[0] == fps[1]
 
 
-# -- multimodal -------------------------------------------------------------
-
-def test_media_roundtrip(spark, docs):
-    media = multimodal.synth_media(docs)
-    dec = multimodal.decode_media(media)
-    bad = dec.filter(
-        (~F.col("ok"))
-        | (F.col("width") != (F.col("media_id") % 64 + 1).cast("int"))
-        | (F.col("height") != (F.col("media_id") % 48 + 1).cast("int"))
-    ).count()
-    assert bad == 0
-    meta = multimodal.media_metadata(media)
-    assert meta.filter(F.col("format") != "unknown").count() == 0
-    assert meta.filter(F.col("n_bytes") <= 12).count() == 0
-
-
-def test_magic_sniffing(spark):
-    rows = [
-        (1, bytes.fromhex("89504E47") + b"rest"),
-        (2, bytes.fromhex("FFD8FFE0") + b"rest"),
-        (3, b"plain bytes"),
-        # JFIF-less JPEGs: the first marker after SOI is DQT / Adobe APP14
-        (4, bytes.fromhex("FFD8FFDB") + b"rest"),
-        (5, bytes.fromhex("FFD8FFEE") + b"rest"),
-    ]
-    df = spark.createDataFrame(rows, ["media_id", "payload"])
-    fmts = {
-        r["media_id"]: r["format"]
-        for r in multimodal.media_metadata(df).collect()
-    }
-    assert fmts == {1: "png", 2: "jpeg", 3: "unknown", 4: "jpeg", 5: "jpeg"}
-    # the Python header walk reads the same signature table
-    for mid, payload in rows:
-        assert multimodal.parse_image_header(payload)[0] == fmts[mid], mid
-
-
-def test_mixed_media_real_headers(spark, docs):
-    """synth_mixed_media builds REAL png/gif byte layouts: the Python
-    header walkers and the JVM magic sniff both agree with the doc_id
-    arithmetic for every format lane."""
-    media = multimodal.synth_mixed_media(docs)
-    dec = multimodal.decode_media(media)
-    expected_fmt = (
-        F.when(F.col("media_id") % 3 == 0, "fakeimg")
-        .when(F.col("media_id") % 3 == 1, "png")
-        .otherwise("gif")
-    )
-    bad = dec.filter(
-        (~F.col("ok"))
-        | (F.col("format") != expected_fmt)
-        | (F.col("width") != (F.col("media_id") % 64 + 1).cast("int"))
-        | (F.col("height") != (F.col("media_id") % 48 + 1).cast("int"))
-    ).count()
-    assert bad == 0
-    # JVM-side magic sniff sees the real signatures (fake → unknown)
-    sniff_fmt = (
-        F.when(F.col("media_id") % 3 == 0, "unknown")
-        .when(F.col("media_id") % 3 == 1, "png")
-        .otherwise("gif")
-    )
-    meta = multimodal.media_metadata(media)
-    assert meta.filter(F.col("format") != sniff_fmt).count() == 0
-    # one local sanity pass through the pure-Python parser
-    row = media.filter(F.col("media_id") % 3 == 1).first()
-    fmt, w, h, ok = multimodal.parse_image_header(bytes(row.payload))
-    assert (fmt, ok) == ("png", True) and w == row.media_id % 64 + 1
-
-
-def test_media_features_known_values(spark):
-    rows = [(1, b"\x00\xff"), (2, None), (3, b"\x80" * 10)]
-    df = spark.createDataFrame(rows, ["media_id", "payload"])
-    r = {row.media_id: row for row in multimodal.media_features(df).collect()}
-    assert r[1].n_bytes == 2 and r[1].mean_byte == 127.5
-    assert r[1].byte_hist[0] == 1 and r[1].byte_hist[-1] == 1
-    assert sum(r[1].byte_hist) == 2 and len(r[1].byte_hist) == 16
-    assert r[2].ok is False and r[2].byte_hist is None
-    assert r[3].byte_hist[0x80 >> 4] == 10 and r[3].mean_byte == 128.0
-    # 3 bins do not divide 256: refused, never silently 4 bins
-    with pytest.raises(ValueError, match="n_bins must divide 256"):
-        multimodal.media_features(df, n_bins=3)
-
-
-def test_media_features_histogram_conservation(spark, docs):
-    feats = multimodal.media_features(multimodal.synth_mixed_media(docs))
-    bad = feats.filter(
-        F.aggregate("byte_hist", F.lit(0).cast("long"), lambda a, x: a + x)
-        != F.col("n_bytes")
-    ).count()
-    assert bad == 0
-
-
-def test_explode_pages_fanout(spark, docs):
-    media = multimodal.synth_paged_media(docs)
-    pages = multimodal.explode_pages(media)
-    # Σ (doc_id % 5 + 1) rows; page_no within [1, total_pages]
-    expected = docs.select(
-        F.sum(F.col("doc_id") % 5 + 1).alias("s")
-    ).first()["s"]
-    assert pages.count() == expected
-    assert pages.filter(
-        (F.col("page_no") < 1) | (F.col("page_no") > F.col("total_pages"))
-    ).count() == 0
-
-
 def test_connected_components_chain_and_islands(spark):
     # chain 1-2-3-4 (diameter forces multi-round propagation),
     # pair {10,11}, singleton 99 untouched by pairs
@@ -615,61 +511,6 @@ def test_simhash_near_dup_pairs_planted(spark):
         dedup.simhash_near_dup_pairs(d, max_hamming=dedup.SIMHASH64_BANDS)
 
 
-def _png_bytes(w, h):
-    import struct, zlib
-    ihdr = struct.pack(">II5B", w, h, 8, 2, 0, 0, 0)
-    chunk = b"IHDR" + ihdr
-    return (b"\x89PNG\r\n\x1a\n"
-            + struct.pack(">I", len(ihdr)) + chunk
-            + struct.pack(">I", zlib.crc32(chunk)))
-
-
-def _gif_bytes(w, h):
-    import struct
-    return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00"
-
-
-def _jpeg_bytes(w, h):
-    import struct
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = (b"\xff\xc0" + struct.pack(">H", 11) + b"\x08"
-            + struct.pack(">HH", h, w) + b"\x01\x11\x00")
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def test_parse_image_header_real_formats():
-    from webextract.operators.multimodal import parse_image_header
-
-    assert parse_image_header(_png_bytes(640, 480)) == ("png", 640, 480, True)
-    assert parse_image_header(_gif_bytes(320, 200)) == ("gif", 320, 200, True)
-    assert parse_image_header(_jpeg_bytes(1024, 768)) == ("jpeg", 1024, 768, True)
-    # truncated png: format known, not ok
-    assert parse_image_header(b"\x89PNG\r\n\x1a\n\x00\x00\x00\x0d") == ("png", 0, 0, False)
-    assert parse_image_header(b"\xff\xd8\xff\xd9") == ("jpeg", 0, 0, False)
-    assert parse_image_header(None) == ("unknown", 0, 0, False)
-    assert parse_image_header(b"garbage bytes here") == ("unknown", 0, 0, False)
-
-
-def test_decode_media_real_formats_spark(spark):
-    rows = [
-        (1, _png_bytes(640, 480), "image/png"),
-        (2, _gif_bytes(320, 200), "image/gif"),
-        (3, _jpeg_bytes(1024, 768), "image/jpeg"),
-        (4, b"IMG!" + (5).to_bytes(4, "big") + (7).to_bytes(4, "big") + b"px", "x-fake"),
-    ]
-    media = spark.createDataFrame(rows, ["media_id", "payload", "mime"])
-    got = {r.media_id: (r.format, r.width, r.height, r.ok)
-           for r in multimodal.decode_media(media).collect()}
-    assert got[1] == ("png", 640, 480, True)
-    assert got[2] == ("gif", 320, 200, True)
-    assert got[3] == ("jpeg", 1024, 768, True)
-    assert got[4] == ("fakeimg", 5, 7, True)
-    # media_metadata's JVM magic sniff agrees on the real formats
-    meta = {r.media_id: r.format
-            for r in multimodal.media_metadata(media).collect()}
-    assert meta[1] == "png" and meta[2] == "gif" and meta[3] == "jpeg"
-
-
 def test_line_dedup_first_occurrence_wins(spark):
     rows = [
         (1, "alpha beta. gamma delta. alpha beta"),   # self-dup line
@@ -705,16 +546,6 @@ def test_connected_components_long_chain_pointer_jumping(spark):
     labels = {r.doc_id: r.cluster_id for r in comp.collect()}
     assert set(labels.values()) == {1}
     assert len(labels) == 31
-
-
-def test_jpeg_stops_at_eoi_marker():
-    from webextract.operators.multimodal import parse_image_header
-
-    # SOI + EOI + trailing garbage that LOOKS like an SOF segment:
-    # the walk must stop at EOI, not parse dimensions from the tail
-    import struct
-    tail = b"\xff\xc0" + struct.pack(">H", 11) + b"\x08" + struct.pack(">HH", 256, 512) + b"\x01\x11\x00"
-    assert parse_image_header(b"\xff\xd8\xff\xd9" + tail) == ("jpeg", 0, 0, False)
 
 
 def test_line_dedup_hash_shuffle_identical(spark):

@@ -382,7 +382,10 @@ def test_pdf_operators_on_spark(spark):
 
 
 def test_extract_any_dispatch(spark):
-    """One Arrow stage routes html → block pipeline, pdf → real parse."""
+    """One Arrow stage routes html → block pipeline, pdf → real parse.
+    Only a ``%PDF-`` prefix routes to the PDF parser: a NULL or PNG
+    payload takes the html pipeline, and a PDF with no xref table is
+    dropped."""
     from webextract.config import ExtractConfig
     from webextract.functions.extract import extract_page
     from webextract.operators.multimodal import (
@@ -397,8 +400,16 @@ def test_extract_any_dispatch(spark):
         b"enough to be kept by the scorer as main content."
         b"</p></article></body></html>"
     )
-    html_df = spark.createDataFrame(
-        [(100, bytearray(html), "text/html")],
+    # a PNG header this short leaves no block the scorer keeps
+    png = b"\x89PNG\r\n\x1a\n\x00\x00\x00\x0dIHDR\x00\x00\x02\x80\x00\x00"
+    truncated_pdf = b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+    media_df = spark.createDataFrame(
+        [
+            (100, bytearray(html), "text/html"),
+            (101, None, None),
+            (102, bytearray(png), "image/png"),
+            (103, bytearray(truncated_pdf), "application/pdf"),
+        ],
         "media_id long, payload binary, mime string",
     )
     pdf_df = synth_pdf(
@@ -406,10 +417,14 @@ def test_extract_any_dispatch(spark):
     )
     rows = {
         r["media_id"]: r
-        for r in extract_any(html_df.unionByName(pdf_df)).collect()
+        for r in extract_any(media_df.unionByName(pdf_df)).collect()
     }
     assert rows[100]["fmt"] == "html" and rows[100]["n_pages"] == 1
     assert rows[100]["text"] == extract_page(html, ExtractConfig())["text"]
+    for mid in (101, 102):
+        assert (rows[mid]["fmt"], rows[mid]["n_pages"]) == ("html", 1), mid
+        assert (rows[mid]["text"], rows[mid]["n_chars"]) == ("", 0), mid
+    assert 103 not in rows and len(rows) == 4
     _, _, pages = _pdf_plan(7)
     expect = "\n\n".join(
         " ".join(t for _, _, t in reading_order([f[:3] for f in pg]))

@@ -212,6 +212,24 @@ def test_snapshot_corruption_refuses_resume(spark, pages, tmp_path):
         log.validate()
 
 
+def test_two_writers_on_one_log_fail_loudly(spark, pages, tmp_path, monkeypatch):
+    """The log has a single writer: two appends that read the same head
+    both take seq 1, and validate() and resume then refuse, naming the
+    second writer rather than a missing file."""
+    cfg = JobConfig(output_dir=str(tmp_path / "out"), n_buckets=8, wave_size=4)
+    first, second = SnapshotLog(cfg.output_dir), SnapshotLog(cfg.output_dir)
+    first.append([0], [])
+    head = second.entries()  # the state both writers read
+    first.append([1], [])
+    monkeypatch.setattr(second, "entries", lambda: head)
+    second.append([2], [])
+    assert sorted(r["seq"] for r in first.entries()) == [0, 1, 1]
+    with pytest.raises(RuntimeError, match="seq 1 appears twice.*second writer"):
+        first.validate()
+    with pytest.raises(RuntimeError, match="seq 1 appears twice"):
+        run_extraction(spark, pages, cfg)
+
+
 def test_snapshot_reader_ignores_uncommitted_files(spark, pages, tmp_path):
     """A file written but never committed is invisible to snapshot
     reads (scan planning comes from the log, not directory listing)."""

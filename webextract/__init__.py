@@ -9,7 +9,7 @@ HTML/web-text pipeline over Common-Crawl-style page tables:
     (ppocr/data/imaug/operators.py, ppocr/postprocess/db_postprocess.py,
     ppocr/postprocess/rec_postprocess.py).
   * ``operators/`` — Spark DataFrame operators (Arrow-batched extraction,
-    dedup, similarity, text stats, multimodal plumbing).
+    dedup, similarity, text stats, PDF text and mixed html/pdf dispatch).
   * ``sources/`` — page-table synthesis + parquet/Iceberg-style IO.
   * ``plans/`` — pipeline wiring (salted repartition, lineage side-output,
     checkpoint/resume manifest) mirroring the reference's drivers

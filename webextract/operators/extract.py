@@ -19,8 +19,8 @@ Arrow batch → write. Design points (SURVEY.md §4):
    pass over the html;
  * the partition loop is shared: :func:`_page_batches` runs every
    Python stage's Arrow batches. Extraction builds its own Arrow
-   arrays; every other stage (layout, tables, KIE, the PDF/media
-   operators, the SKV and WARC parsers) returns plain row tuples
+   arrays; every other stage (layout, tables, KIE, the PDF operators,
+   the SKV and WARC parsers) returns plain row tuples
    through :func:`map_rows`, and the html ones take
    :func:`webextract.functions.extract.page_text` as their prologue
    via :func:`map_page_rows`.

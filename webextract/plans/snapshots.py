@@ -22,6 +22,11 @@ executably, on the filesystem the pipeline already writes:
  * the snapshot chain is VALIDATED on resume: sequence gaps, broken
    parent links or a bucket committed twice all raise instead of
    silently resuming from a corrupt log;
+ * a table has a SINGLE writer. ``append`` reads the chain's head and
+   then publishes ``snap-{seq}-{uuid}.json``, with no lock between the
+   two, so a second run appending to the same ``output_dir`` at the
+   same time leaves two records with one seq. Nothing is overwritten,
+   and the next ``validate()`` raises;
  * time travel: ``read_as_of(spark, snapshot_id)`` reads exactly the
    files committed up to that snapshot.
 
@@ -106,7 +111,8 @@ class SnapshotLog:
     def validate(self) -> list[dict]:
         """Raise if the chain is corrupt; return the validated entries.
 
-        Checks: contiguous sequence numbers from 0, every parent link
+        Checks: contiguous sequence numbers from 0 (a repeated one
+        means two writers appended at once), every parent link
         matches the previous snapshot, no bucket committed twice (a
         correct resume skips committed buckets, so a duplicate means
         the log and the data diverged).
@@ -115,6 +121,12 @@ class SnapshotLog:
         seen_buckets: set[int] = set()
         prev_id = None
         for i, r in enumerate(recs):
+            if r["seq"] < i:
+                raise RuntimeError(
+                    f"snapshot log corrupt: seq {r['seq']} appears twice "
+                    "(a second writer appended concurrently — the log has "
+                    "a single writer)"
+                )
             if r["seq"] != i:
                 raise RuntimeError(
                     f"snapshot log corrupt: seq {r['seq']} at position {i} "
