@@ -385,7 +385,11 @@ def test_extract_any_dispatch(spark):
     """One Arrow stage routes html → block pipeline, pdf → real parse.
     Only a ``%PDF-`` prefix routes to the PDF parser: a NULL or PNG
     payload takes the html pipeline, and a PDF with no xref table is
-    dropped."""
+    dropped. A real PNG's text is what ``extract_page`` makes of its
+    bytes, which is not empty."""
+    import struct
+    import zlib
+
     from webextract.config import ExtractConfig
     from webextract.functions.extract import extract_page
     from webextract.operators.multimodal import (
@@ -400,8 +404,20 @@ def test_extract_any_dispatch(spark):
         b"enough to be kept by the scorer as main content."
         b"</p></article></body></html>"
     )
-    # a PNG header this short leaves no block the scorer keeps
-    png = b"\x89PNG\r\n\x1a\n\x00\x00\x00\x0dIHDR\x00\x00\x02\x80\x00\x00"
+    def chunk(kind: bytes, data: bytes) -> bytes:
+        crc = struct.pack(">I", zlib.crc32(kind + data))
+        return struct.pack(">I", len(data)) + kind + data + crc
+
+    # a minimal valid 8x8 RGB PNG: signature, IHDR, one IDAT, IEND
+    rows = b"".join(
+        b"\x00" + bytes((x * 37 + y * 11) % 256 for x in range(24)) for y in range(8)
+    )
+    png = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", 8, 8, 8, 2, 0, 0, 0))
+        + chunk(b"IDAT", zlib.compress(rows, 9))
+        + chunk(b"IEND", b"")
+    )
     truncated_pdf = b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
     media_df = spark.createDataFrame(
         [
@@ -423,7 +439,10 @@ def test_extract_any_dispatch(spark):
     assert rows[100]["text"] == extract_page(html, ExtractConfig())["text"]
     for mid in (101, 102):
         assert (rows[mid]["fmt"], rows[mid]["n_pages"]) == ("html", 1), mid
-        assert (rows[mid]["text"], rows[mid]["n_chars"]) == ("", 0), mid
+    assert (rows[101]["text"], rows[101]["n_chars"]) == ("", 0)
+    png_text = extract_page(png, ExtractConfig())["text"]
+    assert png_text != "" and "\x00" in png_text
+    assert (rows[102]["text"], rows[102]["n_chars"]) == (png_text, len(png_text))
     assert 103 not in rows and len(rows) == 4
     _, _, pages = _pdf_plan(7)
     expect = "\n\n".join(

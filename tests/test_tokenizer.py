@@ -110,7 +110,10 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from webextract.config import BLOCK_TAGS
-from webextract.functions.tokenizer import _BlockSink, _SPACING_VOID, _canon
+from webextract.functions import tokenizer
+from webextract.functions.tokenizer import (
+    _NP_CANON_MIN, _BlockSink, _SPACING_VOID, _canon, _is_canonical,
+)
 
 _EVT_TAGS = ["div", "p", "td", "tr", "table", "a", "pre", "script",
              "nav", "span", "b", "br", "ul", "li", "body"]
@@ -212,6 +215,14 @@ _RUN_TEXTS = _LEAF_TEXTS + ["x  y", "a &amp; b", "&nbsp;", "&nbsp;x&lt;", "long 
 @example(events=[], tag="p", texts=["a &amp; b", "&nbsp;x"])
 @example(events=[], tag="p", texts=["", " ", "x  y"])
 @example(events=[], tag="td", texts=["", "x"])
+# joined runs past the numpy floor: canonical, a double space, an edge
+# space, an entity and a control character
+@example(events=[], tag="p", texts=["ab cd" * 900, "ef gh" * 900])
+@example(events=[], tag="p", texts=["ab cd" * 900, "ef  gh" * 900])
+@example(events=[], tag="li", texts=["ab cd" * 900, "ef gh" * 900 + " "])
+@example(events=[], tag="p", texts=[" ab cd" * 900, "ef gh" * 900])
+@example(events=[], tag="p", texts=["a &amp; b" * 600, "ef gh" * 900])
+@example(events=[], tag="td", texts=["ab cd" * 900, "ef\x01gh" * 900])
 @settings(max_examples=600, deadline=None)
 def test_leaves_is_the_per_leaf_events(events, tag, texts):
     """From any state an event prefix builds, ``leaves(tag, texts)``
@@ -263,7 +274,22 @@ _SPACEY = st.lists(
 ).map("".join)
 
 
-@given(st.one_of(st.text(), _SPACEY))
+def _planted(fill: str, piece: str, at: int) -> str:
+    s = fill * (_NP_CANON_MIN // len(fill) + 1)
+    return s[:at] + piece + s[at:]
+
+
+# text at least the numpy floor long: a short drawn text repeated past
+# the floor, with one drawn piece planted at a drawn offset
+_LONG = st.builds(
+    _planted,
+    st.one_of(st.text(min_size=1, max_size=12), st.sampled_from(["ab cd", "x", "w "])),
+    st.one_of(st.text(max_size=4), _SPACEY),
+    st.integers(0, _NP_CANON_MIN),
+)
+
+
+@given(st.one_of(st.text(), _SPACEY, _LONG))
 @example(" edge")
 @example("edge ")
 @example("two  spaces")
@@ -271,6 +297,85 @@ _SPACEY = st.lists(
 @settings(max_examples=1000, deadline=None)
 def test_canon_equals_split_join(s):
     assert _canon([s]) == " ".join(s.split())
+
+
+def _old_check(s: str) -> bool:
+    return s.isprintable() and "  " not in s and s[:1] != " " and s[-1:] != " "
+
+
+def test_is_canonical_every_ascii_code_point(monkeypatch):
+    """The numpy branch's premise: an ASCII character is printable
+    exactly when its byte is in 0x20-0x7E. Every ASCII code point, and
+    three non-ASCII ones, planted at the start, middle and end of text
+    one short of, at and one past the floor, gives the str check's
+    answer; ASCII text takes the numpy branch from the floor on."""
+    assert [c for c in range(128) if chr(c).isprintable()] == list(range(0x20, 0x7F))
+    numpy_check = tokenizer._ascii_canonical
+    lengths: list[int] = []
+    monkeypatch.setattr(
+        tokenizer, "_ascii_canonical", lambda s: lengths.append(len(s)) or numpy_check(s)
+    )
+    for n in (_NP_CANON_MIN - 1, _NP_CANON_MIN, _NP_CANON_MIN + 1):
+        fill = ("abc d" * (n // 5 + 1))[:n]
+        del lengths[:]
+        assert _is_canonical(fill) and _old_check(fill)
+        assert lengths == ([] if n < _NP_CANON_MIN else [n])
+        for c in [chr(i) for i in range(128)] + ["\xa0", "\x85", "\u00e9"]:
+            for at in (0, n // 2, n - 1):
+                s = fill[:at] + c + fill[at + 1 :]
+                assert len(s) == n
+                assert _is_canonical(s) == _old_check(s), (n, hex(ord(c)), at)
+
+
+def test_is_canonical_double_space_at_even_and_odd_offsets():
+    """A ``"  "`` is caught whichever byte alignment it has: the uint16
+    views at even and at odd offsets each see half the pairs."""
+    for n in (_NP_CANON_MIN, _NP_CANON_MIN + 1):
+        fill = ("abcdefg" * (n // 7 + 1))[:n]
+        assert _is_canonical(fill)
+        for at in (1, 2, 3, n // 2, n // 2 + 1, n - 4, n - 3):
+            s = fill[:at] + "  " + fill[at + 2 :]
+            assert len(s) == n and s.index("  ") == at
+            assert not _is_canonical(s), (n, at)
+        one = fill[:100] + " " + fill[101:]  # a single interior space
+        assert _is_canonical(one)
+
+
+def test_numpy_check_branch_by_workload(monkeypatch):
+    """Ratchet on the floor: the giant fixture page reaches the numpy
+    check exactly once (its paragraph run), no other fixture page
+    reaches it, nor does a bulk benchmark page of the most words of the
+    longest vocabulary word, and the check's answers are those of the
+    str check."""
+    from perfbench.inputs import BODY_REPEAT, VOCAB, page_html
+    from webextract.functions.htmlnorm import decode_html
+    from webextract.sources.pages import gen_fixture_pages
+
+    seen: list[int] = []
+    numpy_check = tokenizer._ascii_canonical
+
+    def spy(s):
+        seen.append(len(s))
+        got = numpy_check(s)
+        assert got == _old_check(s)
+        return got
+
+    monkeypatch.setattr(tokenizer, "_ascii_canonical", spy)
+    reached = {}
+    for p in gen_fixture_pages():
+        del seen[:]
+        tokenize_blocks(decode_html(p["html"]))
+        reached[p["case"]] = len(seen)
+    assert reached.pop("giant_page") == 1
+    assert set(reached.values()) == {0}
+    del seen[:]
+    # documents hold 10 to 100 words: the longest is 100 of the longest
+    longest = max(VOCAB, key=len)
+    for words in (10, 100):
+        body = " ".join([longest] * words)
+        html = page_html(0, "src0", "</p><p>".join([body] * BODY_REPEAT))
+        tokenize_blocks(decode_html(html))
+    assert seen == []
 
 
 def test_block_boundaries_never_flush_an_empty_block(monkeypatch):

@@ -61,9 +61,9 @@ def score_pages(
         return np.zeros(0), np.zeros(0, dtype=bool)
 
     text_len = np.asarray(blocks["text_len"], dtype=np.float64)
-    link_len = np.asarray(blocks["link_text_len"], dtype=np.float64)
-    depth = np.asarray(blocks["depth"], dtype=np.float64)
-    boiler = np.asarray(blocks["is_boiler"], dtype=np.float64)
+    link_len = np.fromiter(blocks["link_text_len"], np.float64, count=k)
+    depth = np.fromiter(blocks["depth"], np.float64, count=k)
+    boiler = np.fromiter(blocks["is_boiler"], np.float64, count=k)
     tag_bonus = np.fromiter(
         map(TAG_BONUS.get, blocks["tag"], repeat(DEFAULT_TAG_BONUS)), np.float64, count=k
     )

@@ -263,6 +263,12 @@ def extract_any(media: DataFrame, cfg=None) -> DataFrame:
     (charset decode → tokenize → score → span-merge,
     ``functions/extract.py::extract_page``). One JVM↔Python crossing
     for the whole mixed corpus — no per-format filter/union re-scan.
+
+    The rule for a payload that is neither: it is read as html. A
+    binary payload, an image say, comes back as ``fmt`` "html" with the
+    text ``extract_page`` gives for its bytes: the decoded bytes
+    themselves, control bytes included, whenever the scorer keeps a
+    block of them, and "" only when it keeps none.
     """
     cfg = cfg or ExtractConfig()
 
