@@ -299,7 +299,7 @@ def test_canon_equals_split_join(s):
     assert _canon([s]) == " ".join(s.split())
 
 
-def _old_check(s: str) -> bool:
+def _str_check(s: str) -> bool:
     return s.isprintable() and "  " not in s and s[:1] != " " and s[-1:] != " "
 
 
@@ -318,13 +318,13 @@ def test_is_canonical_every_ascii_code_point(monkeypatch):
     for n in (_NP_CANON_MIN - 1, _NP_CANON_MIN, _NP_CANON_MIN + 1):
         fill = ("abc d" * (n // 5 + 1))[:n]
         del lengths[:]
-        assert _is_canonical(fill) and _old_check(fill)
+        assert _is_canonical(fill) and _str_check(fill)
         assert lengths == ([] if n < _NP_CANON_MIN else [n])
         for c in [chr(i) for i in range(128)] + ["\xa0", "\x85", "\u00e9"]:
             for at in (0, n // 2, n - 1):
                 s = fill[:at] + c + fill[at + 1 :]
                 assert len(s) == n
-                assert _is_canonical(s) == _old_check(s), (n, hex(ord(c)), at)
+                assert _is_canonical(s) == _str_check(s), (n, hex(ord(c)), at)
 
 
 def test_is_canonical_double_space_at_even_and_odd_offsets():
@@ -357,7 +357,7 @@ def test_numpy_check_branch_by_workload(monkeypatch):
     def spy(s):
         seen.append(len(s))
         got = numpy_check(s)
-        assert got == _old_check(s)
+        assert got == _str_check(s)
         return got
 
     monkeypatch.setattr(tokenizer, "_ascii_canonical", spy)
