@@ -22,7 +22,7 @@ from webextract.functions import merger, scorer
 from webextract.functions.extract import extract_page
 from webextract.functions.merger import merge_spans
 from webextract.functions.scorer import score_blocks, score_pages
-from webextract.functions.tokenizer import tokenize_blocks
+from webextract.functions.tokenizer import block_offsets, tokenize_blocks
 from webextract.operators.extract import _extract_record_batch
 from webextract.sources.pages import gen_fixture_pages
 
@@ -122,6 +122,22 @@ def test_smoothing_stops_at_page_boundary():
     assert keep.tolist() == [True, True, False, True]
     _, keep_flat = score_pages(table, [0, 4], DEFAULT_CONFIG)
     assert keep_flat.tolist() == [True, True, True, True]
+
+
+@given(st.lists(st.lists(st.text(max_size=6), max_size=5), max_size=6))
+def test_block_offsets_equal_the_per_page_loop(pages):
+    # the prefix-sum offsets of a block table of several pages, empty
+    # pages anywhere, against each page's own running offset
+    texts = [t for page in pages for t in page]
+    offsets = np.cumsum([0] + [len(page) for page in pages])
+    start, text_len = block_offsets(texts, offsets)
+    expected = []
+    for page in pages:
+        off = 0
+        for t in page:
+            expected.append((off, len(t)))
+            off += len(t) + 1  # the "\n" joiner
+    assert list(zip(start.tolist(), text_len.tolist())) == expected
 
 
 @pytest.mark.parametrize(

@@ -1,16 +1,20 @@
 """The page loop under every html operator drops cached zip finders and
 imports still work, and it freezes the warm heap while the cycles a
-task makes stay collectable; no package module imports Spark's ML
-library; only the partition loop's own module crosses into Python per
-batch; one helper publishes every commit point; and every package
-function has a production caller.
+task makes stay collectable; an extraction worker never imports pandas
+or ``pyarrow.compute``; no package module imports Spark's ML library;
+only the partition loop's own module crosses into Python per batch;
+one helper publishes every commit point; and every package function
+has a production caller.
 
 In-process, no Spark: a zip archive on ``sys.path`` stands in for
-``pyspark.zip`` on a worker's path.
+``pyspark.zip`` on a worker's path, and a fresh interpreter for a fresh
+Python worker.
 """
 
 import ast
 import gc
+import json
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -102,6 +106,64 @@ def test_page_loop_freezes_the_warm_heap_and_task_cycles_are_collected():
         gc.unfreeze()
         if enabled:
             gc.enable()
+
+
+# Run in a fresh interpreter: the input batch is built over numpy
+# buffers, because ``pa.array`` would itself import pandas.
+_FRESH_WORKER = """
+import json, sys
+import numpy as np
+import pyarrow as pa
+from webextract.config import DEFAULT_CONFIG
+from webextract.operators import extract as E
+from webextract.sources.pages import gen_fixture_pages
+
+def column(type_, values):
+    ends = np.zeros(len(values) + 1, np.int32)
+    np.cumsum([len(v) for v in values], out=ends[1:])
+    buffers = [None, pa.py_buffer(ends), pa.py_buffer(b"".join(values))]
+    return pa.Array.from_buffers(type_, len(values), buffers)
+
+pages = gen_fixture_pages()
+rb = pa.RecordBatch.from_arrays(
+    [
+        column(pa.string(), [p["url"].encode() for p in pages]),
+        column(pa.binary(), [p["html"] for p in pages]),
+    ],
+    names=["url", "html"],
+)
+
+def seen(step, batches=()):
+    rows = [b.num_rows for b in batches]  # runs the loop before the check
+    loaded = sorted({"pandas", "pyarrow.compute"} & set(sys.modules))
+    print(json.dumps([step, rows, loaded]), flush=True)
+
+seen("import")
+build = lambda b: E._extract_record_batch(b, DEFAULT_CONFIG)
+seen("extract", E._page_batches(iter([rb]), build))
+seen("lineage", E._lineage_batches(iter([rb]), DEFAULT_CONFIG))
+"""
+
+
+def test_extraction_worker_imports_neither_pandas_nor_pyarrow_compute():
+    """Extraction builds its Arrow arrays over numpy buffers, so a
+    Python worker running extraction or its lineage loop over the
+    fixture matrix never loads pandas (~32 MB per worker, pulled in by
+    the first ``pa.array`` call) or ``pyarrow.compute``."""
+    root = Path(__file__).resolve().parents[1]
+    done = subprocess.run(
+        [sys.executable, "-c", _FRESH_WORKER],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    steps = [json.loads(line) for line in done.stdout.splitlines()]
+    assert steps == [
+        ["import", [], []],
+        ["extract", [38], []],
+        ["lineage", [38, 1], []],
+    ], done.stderr
 
 
 def test_no_module_imports_pyspark_ml():

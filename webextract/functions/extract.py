@@ -21,7 +21,7 @@ from webextract.config import ExtractConfig
 from webextract.functions.htmlnorm import decode_cut_html, decode_html
 from webextract.functions.merger import MergedPages, merge_pages
 from webextract.functions.scorer import score_pages
-from webextract.functions.tokenizer import scan_blocks
+from webextract.functions.tokenizer import block_offsets, scan_blocks
 
 
 def page_text(raw: bytes | None, cfg: ExtractConfig) -> tuple[str, int, bool]:
@@ -117,15 +117,8 @@ def extract_batch(raws: Iterable[bytes | None], cfg: ExtractConfig) -> Extracted
 
         texts = [rtl_segment_reverse(t) for t in texts]
 
-    # page-local doc_text offsets: a block starts where the K+1-long
-    # prefix sum of (length + joiner) stands minus its page's base, so
-    # a trailing page with no blocks still indexes inside the sums
     offs = np.asarray(offsets, dtype=np.intp)
-    sizes = offs[1:] - offs[:-1]
-    text_len = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
-    before = np.zeros(len(texts) + 1, dtype=np.int64)
-    np.cumsum(text_len + 1, out=before[1:])
-    start = before[:-1] - np.repeat(before[offs[:-1]], sizes)
+    start, text_len = block_offsets(texts, offs)
     blocks = {
         "block_id": block_ids,
         "tag": tags,
@@ -140,7 +133,7 @@ def extract_batch(raws: Iterable[bytes | None], cfg: ExtractConfig) -> Extracted
     scores, keep = score_pages(blocks, offs, cfg)
     return ExtractedPages(
         merged=merge_pages(blocks, scores, keep, offs, cfg),
-        blocks_total=sizes.tolist(),
+        blocks_total=(offs[1:] - offs[:-1]).tolist(),
         bytes_in=bytes_in,
         truncated=truncated,
         reference_pages=reference_pages,

@@ -424,6 +424,23 @@ def scan_blocks(html_text: str, engine: str = "auto") -> _BlockSink:
     return sink
 
 
+def block_offsets(
+    texts: list[str], offsets: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(start, text_len)`` int64 arrays of a block table of several
+    pages, page p being blocks ``offsets[p]:offsets[p+1]``: block i's
+    length and its start in its page's ``doc_text`` (the page's block
+    texts joined by "\\n"). One prefix sum of (length + joiner) over
+    the table, minus each page's base; a trailing page with no blocks
+    still indexes inside the sums."""
+    sizes = offsets[1:] - offsets[:-1]
+    text_len = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+    before = np.zeros(len(texts) + 1, dtype=np.int64)
+    np.add.accumulate(text_len + 1, out=before[1:])
+    start = before[:-1] - np.repeat(before[offsets[:-1]], sizes)
+    return start, text_len
+
+
 def tokenize_blocks(html_text: str, engine: str = "auto") -> dict[str, list]:
     """Canonical html text → columnar block table.
 
@@ -435,22 +452,16 @@ def tokenize_blocks(html_text: str, engine: str = "auto") -> dict[str, list]:
     """
     _check_engine("tokenize_blocks", engine)
     sink = scan_blocks(html_text, engine)
-    starts: list[int] = []
-    ends: list[int] = []
-    off = 0
-    for t in sink.texts:
-        starts.append(off)
-        off += len(t)
-        ends.append(off)
-        off += 1  # the "\n" joiner
+    n = len(sink.texts)
+    start, text_len = block_offsets(sink.texts, np.array([0, n]))
     return {
-        "block_id": list(range(len(sink.texts))),
+        "block_id": list(range(n)),
         "tag": sink.tags,
         "depth": sink.depths,
         "text": sink.texts,
-        "start": starts,
-        "end": ends,
-        "text_len": [len(t) for t in sink.texts],
+        "start": start.tolist(),
+        "end": (start + text_len).tolist(),
+        "text_len": text_len.tolist(),
         "link_text_len": sink.link_lens,
         "n_links": sink.n_links,
         "is_boiler": sink.boilers,

@@ -23,7 +23,24 @@ Arrow batch → write. Design points (SURVEY.md §4):
    the SKV and WARC parsers) returns plain row tuples
    through :func:`map_rows`, and the html ones take
    :func:`webextract.functions.extract.page_text` as their prologue
-   via :func:`map_page_rows`.
+   via :func:`map_page_rows`;
+ * extraction's Arrow arrays are built over numpy buffers
+   (``pa.Array.from_buffers``, :func:`_fixed_array`,
+   :func:`_bool_array`, :func:`_string_array`), never from Python
+   objects. The first ``pa.array`` call in a process imports pandas
+   (pyarrow's pandas shim inspects every input, lists and ndarrays
+   alike), and so do ``pa.repeat``, ``pa.scalar``,
+   ``RecordBatch.from_pylist`` and ``ListArray.from_arrays`` over a
+   list; ``pyarrow.compute`` is a further import. Measured in a fresh
+   interpreter after ``pyspark.daemon``'s imports on a 4-core x86
+   host, the first ``pa.array`` takes ~0.17 s and adds 32 MB of RSS,
+   and ``import pyarrow.compute`` adds 6.5 MB, once per Python worker.
+   ``from_buffers``, ``pa.nulls``, ``StructArray.from_arrays`` and
+   ``ListArray.from_arrays`` over arrays and ``RecordBatch.from_arrays``
+   import neither, so an :func:`extract_pages` or lineage worker never
+   loads pandas. The :func:`map_rows` stages (tables, layout, KIE, PDF,
+   WARC, SKV) still build with ``pa.array`` and load pandas on their
+   first batch; no benchmark workload times them.
 """
 
 from __future__ import annotations
@@ -34,8 +51,8 @@ import time
 import zipimport
 from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -91,17 +108,71 @@ _SPANS_PA = _EXTRACTED_PA.field("spans").type
 _LINEAGE_PA = list(_UNIFIED_PA)[1 + len(_EXTRACTED_PA):]
 
 
+# numpy twins of the fixed-width Arrow types the operator builds
+_NUMPY_TYPES = {pa.int32(): np.int32, pa.int64(): np.int64, pa.float64(): np.float64}
+_INT32 = np.iinfo(np.int32)
+
+
+def _fixed_array(values, type_: pa.DataType) -> pa.Array:
+    """A list or numpy array of numbers → an int32, int64 or float64
+    Arrow array over one numpy buffer, no nulls. Ints convert through
+    int64 and int32 is range-checked, so a value that does not fit
+    raises as ``pa.array`` does rather than wrap as numpy's cast
+    would: ``ArrowInvalid`` past int32, numpy's ``OverflowError`` past
+    int64."""
+    dtype = _NUMPY_TYPES[type_]
+    a = np.asarray(values, np.float64 if dtype is np.float64 else np.int64)
+    if dtype is np.int32:
+        if a.size and (a.min() < _INT32.min or a.max() > _INT32.max):
+            bad = a[(a < _INT32.min) | (a > _INT32.max)][0]
+            raise pa.ArrowInvalid(f"Value {bad} too large to fit in {type_}")
+        a = a.astype(np.int32)
+    return pa.Array.from_buffers(type_, len(a), [None, pa.py_buffer(a)])
+
+
+def _bool_array(values: list[bool]) -> pa.Array:
+    """A list of bools → an Arrow bool array over one packed bitmap."""
+    bits = np.packbits(np.asarray(values, np.bool_), bitorder="little")
+    return pa.Array.from_buffers(pa.bool_(), len(values), [None, pa.py_buffer(bits)])
+
+
+def _string_array(values: list[str]) -> pa.Array:
+    """A list of str → an Arrow utf-8 string array: int32 offsets over
+    one joined data buffer. The offsets go through :func:`_fixed_array`,
+    so a column past 2**31 - 1 bytes raises before the data is joined.
+    In an all-ASCII column (``str.isascii`` reads a flag) a value's
+    byte length is its ``len``; otherwise each value is encoded once."""
+    is_ascii = all(map(str.isascii, values))
+    parts = values if is_ascii else [v.encode() for v in values]
+    ends = np.zeros(len(parts) + 1, np.int64)
+    np.cumsum(np.fromiter(map(len, parts), np.int64, count=len(parts)), out=ends[1:])
+    offsets = _fixed_array(ends, pa.int32()).buffers()[1]
+    data = "".join(parts).encode() if is_ascii else b"".join(parts)
+    buffers = [None, offsets, pa.py_buffer(data)]
+    return pa.Array.from_buffers(pa.string(), len(parts), buffers)
+
+
 def _spans_array(offsets: list[int], columns: tuple) -> pa.ListArray:
     """spans as a ListArray over the batch's flat span columns (block_id,
-    start, end, tag, score) and page offsets — no per-span Python
-    object (the hot-path shape: a 2M-page batch job builds millions of
-    spans)."""
+    start, end, tag, score) and page offsets, each column one numpy
+    buffer: no per-span Python object (the hot-path shape: a 2M-page
+    batch job builds millions of spans) and no ``pa.array`` call."""
+    block_id, start, end, tag, score = columns
     fields = list(_SPANS_PA.value_type)
+    t = [f.type for f in fields]
     struct = pa.StructArray.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(columns, fields)],
+        [
+            _fixed_array(block_id, t[0]),
+            _fixed_array(start, t[1]),
+            _fixed_array(end, t[2]),
+            _string_array(tag),
+            _fixed_array(score, t[4]),
+        ],
         fields=fields,
     )
-    return pa.ListArray.from_arrays(offsets, struct, type=_SPANS_PA)
+    return pa.ListArray.from_arrays(
+        _fixed_array(offsets, pa.int32()), struct, type=_SPANS_PA
+    )
 
 
 def _extract(rb: pa.RecordBatch, cfg: ExtractConfig) -> ExtractedPages:
@@ -119,13 +190,13 @@ def _extracted_record_batch(rb: pa.RecordBatch, batch: ExtractedPages) -> pa.Rec
     return pa.RecordBatch.from_arrays(
         [
             rb.column(0),
-            pa.array(m.text, type=t[1]),
+            _string_array(m.text),
             _spans_array(m.span_offsets, m.span_columns),
-            pa.array(m.mean_score, type=t[3]),
-            pa.array(batch.blocks_total, type=t[4]),
-            pa.array(m.blocks_kept, type=t[5]),
-            pa.array(batch.bytes_in, type=t[6]),
-            pa.array(batch.truncated, type=t[7]),
+            _fixed_array(m.mean_score, t[3]),
+            _fixed_array(batch.blocks_total, t[4]),
+            _fixed_array(m.blocks_kept, t[5]),
+            _fixed_array(batch.bytes_in, t[6]),
+            _bool_array(batch.truncated),
         ],
         schema=_EXTRACTED_PA,
     )
@@ -204,7 +275,9 @@ def map_rows(
     input row's ``cols`` values as Python objects and returns zero or
     more output tuples in ``schema`` field order; the fan-out happens
     inside the batch (no explode, no shuffle). ``schema`` is a
-    ``StructType`` or a DDL string; the Arrow schema is derived from it."""
+    ``StructType`` or a DDL string; the Arrow schema is derived from it.
+    The output columns are built with ``pa.array``, so a worker running
+    one of these stages imports pandas on its first batch."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     pa_schema = to_arrow_schema(schema)
@@ -284,6 +357,47 @@ def to_json_lines(extracted: DataFrame) -> DataFrame:
     return extracted.select("url", payload.alias("result_json"))
 
 
+def _lineage_batches(
+    batches: Iterator[pa.RecordBatch], cfg: ExtractConfig
+) -> Iterator[pa.RecordBatch]:
+    """The partition loop of :func:`extract_pages_with_lineage`: each
+    input batch's extracted batch as ``rec_type='page'`` rows with null
+    lineage columns, then one lineage row if the partition had pages.
+    The counters are summed from each batch's Python lists."""
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx is not None else -1
+    t0 = time.perf_counter()
+    urls_in = 0
+    bytes_in = 0
+    blocks_kept = 0
+    reference_pages = 0
+
+    def build(rb: pa.RecordBatch) -> pa.RecordBatch:
+        nonlocal urls_in, bytes_in, blocks_kept, reference_pages
+        batch = _extract(rb, cfg)
+        n = rb.num_rows
+        urls_in += n
+        bytes_in += sum(batch.bytes_in)
+        blocks_kept += sum(batch.merged.blocks_kept)
+        reference_pages += batch.reference_pages
+        return pa.RecordBatch.from_arrays(
+            [_string_array(["page"] * n), *_extracted_record_batch(rb, batch).columns]
+            + [pa.nulls(n, type=f.type) for f in _LINEAGE_PA],
+            schema=_UNIFIED_PA,
+        )
+
+    yield from _page_batches(batches, build)
+    if urls_in:
+        extract_ms = (time.perf_counter() - t0) * 1000.0
+        row = (pid, urls_in, bytes_in, blocks_kept, reference_pages, extract_ms)
+        yield pa.RecordBatch.from_arrays(
+            [_string_array(["lineage"])]
+            + [pa.nulls(1, type=f.type) for f in _EXTRACTED_PA]
+            + [_fixed_array([v], f.type) for v, f in zip(row, _LINEAGE_PA)],
+            schema=_UNIFIED_PA,
+        )
+
+
 def extract_pages_with_lineage(
     pages: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> DataFrame:
@@ -297,41 +411,7 @@ def extract_pages_with_lineage(
     (``reference_pages``: the fast scanner bailed on them)."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        t0 = time.perf_counter()
-        urls_in = 0
-        bytes_in = 0
-        blocks_kept = 0
-        reference_pages = 0
-
-        def build(rb: pa.RecordBatch) -> pa.RecordBatch:
-            nonlocal reference_pages
-            batch = _extract(rb, cfg)
-            reference_pages += batch.reference_pages
-            return _extracted_record_batch(rb, batch)
-
-        for out in _page_batches(batches, build):
-            n = out.num_rows
-            urls_in += n
-            bytes_in += int(pc.sum(out.column("bytes_in")).as_py() or 0)
-            blocks_kept += int(pc.sum(out.column("blocks_kept")).as_py() or 0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.repeat("page", n), *out.columns]
-                + [pa.nulls(n, type=f.type) for f in _LINEAGE_PA],
-                schema=_UNIFIED_PA,
-            )
-        if urls_in:
-            lineage = {
-                "rec_type": "lineage",
-                "partition_id": pid,
-                "urls_in": urls_in,
-                "lineage_bytes_in": bytes_in,
-                "lineage_blocks_kept": blocks_kept,
-                "reference_pages": reference_pages,
-                "extract_ms": (time.perf_counter() - t0) * 1000.0,
-            }
-            yield pa.RecordBatch.from_pylist([lineage], schema=_UNIFIED_PA)
+        return _lineage_batches(batches, cfg)
 
     return pages.select("url", "html").mapInArrow(run, UNIFIED_SCHEMA)
 
